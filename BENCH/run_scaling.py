@@ -227,16 +227,6 @@ All trial walls: local[{args.n}] {r8['all_walls']}, local[{args.n4}] {r32['all_w
 (first value = discarded warm-up{warm_note}).
 """
     suffix = {"scaled": "", "flat": "_flat", "heap": "_heap"}[args.resources]
-    # non-default fused C-boundary persist level (KGPIPE_FUSED_PERSIST,
-    # see pipeline._fused_c_level) in the name + md so a disk-mode run
-    # cannot clobber the deser evidence and the config is disclosed
-    persist = os.environ.get("KGPIPE_FUSED_PERSIST", "deser")
-    if args.mode == "fused" and persist != "deser":
-        suffix += f"_{persist}"
-        md += (
-            f"\nFused Stage-C boundary persist: KGPIPE_FUSED_PERSIST="
-            f"{persist} (default deser; see pipeline._fused_c_level).\n"
-        )
     # non-default IO codec (KGPIPE_IO_CODEC, see session.get_spark) in the
     # name + md: a codec A/B run must not clobber the default-config
     # evidence file. (Round 4 briefly flipped the default to zstd, then

@@ -11,7 +11,8 @@ Layout:
   session.py     SparkSession factory with scale-tuned configs
   schemas.py     explicit StructType for every dataset (never inferSchema)
   rules.py       declarative extraction rule set — single source of truth
-                 executed by BOTH the Spark pipeline and the pandas oracle
+                 executed by BOTH the Spark pipeline and the pandas oracle —
+                 plus the union-find clustering both use for Stage D
   synth.py       deterministic synthetic transcript/entity-dict generator
   oracle.py      single-process pandas oracle (golden-fixture producer)
   extract.py     Stage B: mention detection + triple extraction (Arrow UDFs)

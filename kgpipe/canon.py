@@ -24,7 +24,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import nhash
-from .rules import JACCARD_THRESHOLD, LSH_BANDS, MINHASH_HASHES, SHINGLE_K
+from .rules import (
+    JACCARD_THRESHOLD,
+    LSH_BANDS,
+    MINHASH_HASHES,
+    SHINGLE_K,
+    component_labels,
+    similar_pair_labels,
+)
 
 # one affine (A, B) pair per MinHash function, fixed-seed deterministic;
 # the SAME literals are embedded in the oracle SQL (kgqueries.py)
@@ -149,49 +156,20 @@ DRIVER_CC_MAX_EDGES = 200_000
 DRIVER_ALLPAIRS_MAX_SURFACES = 1_000
 
 
-def _driver_allpairs_edges(surfaces: DataFrame) -> DataFrame:
-    """Small-set fast path: exact char-shingle Jaccard over all pairs,
-    computed on the driver with the shared rule-set functions."""
-    from .rules import JACCARD_THRESHOLD, char_shingles, jaccard
-
-    names = sorted(r["surface"] for r in surfaces.collect())
-    sh = {s: char_shingles(s) for s in names}
-    rows = []
-    for i, a in enumerate(names):
-        for b in names[i + 1 :]:
-            j = jaccard(sh[a], sh[b])
-            if j >= JACCARD_THRESHOLD:
-                rows.append((a, b, float(j)))
-    spark = surfaces.sparkSession
-    return spark.createDataFrame(rows, "a string, b string, jaccard double")
-
-
-def _driver_union_find(sym: DataFrame) -> DataFrame:
-    """Small-graph fast path: same min-label semantics as the loop."""
-    rows = sym.collect()
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        p = parent.setdefault(x, x)
-        while p != x:
-            parent[x] = p = parent.setdefault(p, p)
-            x, p = p, parent[p]
-        return x
-
-    for r in rows:
-        ra, rb = find(r["src"]), find(r["dst"])
-        if ra != rb:
-            lo, hi = sorted((ra, rb))
-            parent[hi] = lo
-    out = [(n, find(n)) for n in parent]
-    return sym.sparkSession.createDataFrame(out, "node string, component string")
+def _driver_labels(spark, labels: dict[str, str]) -> DataFrame:
+    """Label table of a driver path, hinted for broadcast: its row count is
+    bounded by the driver threshold that selected the path, so the rewrite
+    joins in stage_canon never shuffle the triple set against it."""
+    return F.broadcast(
+        spark.createDataFrame(list(labels.items()), "node string, component string")
+    )
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components: min-label propagation.
 
     labels converge to the lexicographically smallest surface in each
-    component — the same representative rule as oracle.UnionFind.
+    component — the same representative rule as rules.UnionFind.
 
     Hybrid execution (both paths produce identical labels, tested):
     - edge set under DRIVER_CC_MAX_EDGES: collect + union-find on the
@@ -201,8 +179,10 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
       truncating lineage so plans stay O(1) per round. Parallelism is
       sized to the edge count, not the global shuffle setting.
 
-    Returns DataFrame[node, component]. Nodes appearing in no edge are NOT
-    returned (callers treat missing as singleton = itself).
+    Returns DataFrame[node, component], broadcast-hinted on the driver
+    path. Nodes appearing in no edge are NOT returned (callers treat
+    missing as singleton = itself). Raises RuntimeError when labels still
+    change after max_iter rounds (a component wider than max_iter hops).
     """
     sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
@@ -211,14 +191,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     # edge chain — persist so the (expensive) LSH chain runs exactly once
     sym = sym.persist()
     n_edges = sym.count()
-    if n_edges <= DRIVER_CC_MAX_EDGES:
-        out = _driver_union_find(sym)
-        sym.unpersist()
-        # consumers (stage_canon) can broadcast these labels: node count is
-        # bounded by 2x the edge count we just measured
-        out._kg_cc_small = True
-        return out
     spark = edges.sparkSession
+    if n_edges <= DRIVER_CC_MAX_EDGES:
+        labels = component_labels((r["src"], r["dst"]) for r in sym.collect())
+        sym.unpersist()
+        return _driver_labels(spark, labels)
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_parts = max(1, min(max_parts, n_edges // 100_000 + 1))
     sym = sym.repartition(n_parts, "dst").localCheckpoint()
@@ -256,6 +233,12 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         labels = new_labels.drop("_chg")
         if changed == 0:
             break
+    else:
+        # a label still moved in the last round: some component is wider
+        # than max_iter hops, and returning now would split it
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
     return labels
 
 
@@ -289,60 +272,31 @@ def stage_canon(linked: DataFrame) -> tuple[DataFrame, DataFrame]:
     n_unl = unlinked.count()
     if n_unl <= DRIVER_ALLPAIRS_MAX_SURFACES:
         # pure-driver fast path: all-pairs edges AND union-find on the one
-        # collected surface list. The round-3 shape built a driver edge
-        # DataFrame only for connected_components to re-count and
-        # re-collect it — ~5 near-empty Spark jobs whose scheduling
-        # latency (measured: 3.2 s at BOTH levels of the 1M ckpt probe,
-        # BENCH/profile_ckpt16M.py) is a pure Amdahl tax on the 4N level
-        # of the production scaling pair (ckpt Stage D scaled 0.53 in r3).
-        # Semantics are identical to _driver_allpairs_edges +
-        # _driver_union_find (same shingle/jaccard/min-label code, order-
-        # independent result); both remain the distributed path's oracle
-        # twins in tests.
-        from .rules import char_shingles, jaccard
-
-        names = sorted(r["surface"] for r in unlinked.collect())
+        # collected surface list, in a single job. Handing a driver edge
+        # DataFrame to connected_components instead would re-count and
+        # re-collect it — ~5 near-empty Spark jobs whose scheduling latency
+        # (measured: 3.2 s at both levels of the 1M ckpt probe) is a pure
+        # Amdahl tax on the 4N level of the production scaling pair (ckpt
+        # Stage D scaled 0.53 in r3).
+        names = [r["surface"] for r in unlinked.collect()]
         unlinked.unpersist()  # collected already; nothing downstream reads it
-        sh = {s: char_shingles(s) for s in names}
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            p = parent.setdefault(x, x)
-            while p != x:
-                parent[x] = p = parent.setdefault(p, p)
-                x, p = p, parent[p]
-            return x
-
-        for i, a in enumerate(names):
-            for b in names[i + 1 :]:
-                if jaccard(sh[a], sh[b]) >= JACCARD_THRESHOLD:
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        lo, hi = sorted((ra, rb))
-                        parent[hi] = lo
-        label_rows = [(n, find(n)) for n in parent]
-        cc = linked.sparkSession.createDataFrame(
-            label_rows, "node string, component string"
-        )
-        cc._kg_cc_small = True
+        cc = _driver_labels(linked.sparkSession, similar_pair_labels(names))
     else:
         edges = candidate_pairs(unlinked)  # lazy — keep unlinked persisted
         cc = connected_components(edges)
 
     # canon_rewrite: two joins against cc_labels (subj then obj); missing
-    # nodes stay themselves (singleton components). When CC ran on the
-    # driver (edge count measured small) the label table is tiny — without
-    # the explicit broadcast hint Spark planned these as SortMergeJoins,
-    # i.e. two full shuffles + sorts of the ENTIRE triple set against a
-    # few-hundred-row table (measured: the bulk of stage D wall). Above the
-    # driver threshold the label table can be arbitrarily large, so it
-    # stays a shuffle join there.
-    hint = F.broadcast if getattr(cc, "_kg_cc_small", False) else (lambda df: df)
-    subj_cc = hint(
-        cc.select(F.col("node").alias("_s_node"), F.col("component").alias("_s_comp"))
+    # nodes stay themselves (singleton components). Labels from a driver
+    # path carry a broadcast hint (_driver_labels) that survives these
+    # selects — without it Spark planned SortMergeJoins, i.e. two full
+    # shuffles + sorts of the ENTIRE triple set against a few-hundred-row
+    # table (measured: the bulk of stage D wall). Labels from the
+    # iterative loop can be arbitrarily large, so they stay a shuffle join.
+    subj_cc = cc.select(
+        F.col("node").alias("_s_node"), F.col("component").alias("_s_comp")
     )
-    obj_cc = hint(
-        cc.select(F.col("node").alias("_o_node"), F.col("component").alias("_o_comp"))
+    obj_cc = cc.select(
+        F.col("node").alias("_o_node"), F.col("component").alias("_o_comp")
     )
     out = (
         linked.join(subj_cc, linked.subj_raw == F.col("_s_node"), "left")

@@ -18,9 +18,9 @@ Design notes (scale):
   columnar buffers, skipping the Arrow->pandas->Arrow conversion AND
   pandas' Python `re` engine; measured 2.5-4.4x faster per batch with a
   set-identical triple output (tests/test_rules.py pins equality).
-- The mention-presence filter runs BEFORE extraction so distractor turns
-  (no dictionary alias, ~20% of corpus) never reach the extraction regexes.
-  Tool turns pass unconditionally (R5 keys on role, not aliases).
+- The rule-anchor prefilter (anchor_prefilter) runs JVM-side BEFORE
+  extraction, so turns containing no rule's literal anchor never cross the
+  Arrow boundary or reach the extraction regexes.
 """
 
 from __future__ import annotations
@@ -33,12 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType
 
 from . import schemas
-from .rules import (
-    build_mention_matcher,
-    detect_mentions_batch,
-    extract_triples_arrow,
-    extract_triples_batch,  # noqa: F401  (pandas twin — oracle + tests)
-)
+from .rules import build_mention_matcher, detect_mentions_batch, extract_triples_arrow
 
 RAW_TRIPLES_KINDED = StructType(
     schemas.RAW_TRIPLES.fields
@@ -106,25 +101,6 @@ def _arrow_extract_runner(batches):
             yield from out.to_batches()
 
 
-def extract_triples(df: DataFrame) -> DataFrame:
-    """mapInArrow triple extraction over (conv_id, turn_idx, role, text_norm).
-
-    Narrow transformation: zero shuffles between turn ordering and
-    raw_triples (SURVEY.md §3.2); kernel rationale in rules.py."""
-    cols = ["conv_id", "turn_idx", "role", "text_norm"]
-    return df.select(cols).mapInArrow(_arrow_extract_runner, RAW_TRIPLES_KINDED)
-
-
-def _collect_aliases(entity_dict: DataFrame) -> tuple[list[str], list[str]]:
-    rows = (
-        entity_dict.select(F.explode("aliases").alias("alias"), F.col("etype"))
-        .select(normalize_text_col(F.col("alias")).alias("alias_norm"), "etype")
-        .distinct()
-        .collect()
-    )
-    return [r["alias_norm"] for r in rows], [r["etype"] for r in rows]
-
-
 def anchor_prefilter(text_norm_col: Column) -> Column:
     """Rule-anchor pushdown (SURVEY.md §7's 'pre-filters into the scan'):
     a row can only produce a triple if its normalized text contains some
@@ -137,86 +113,6 @@ def anchor_prefilter(text_norm_col: Column) -> Column:
     for r in RULES:
         cond = cond | text_norm_col.contains(r.anchor)
     return cond
-
-
-def extract_triples_jvm(t: DataFrame) -> DataFrame:
-    """Pure-JVM extraction twin of the mapInArrow kernel: the entire rule
-    bank compiles to one whole-stage-codegen projection — per rule,
-    `role ∈ roles AND contains(anchor) AND rlike(pattern)` guards an array
-    of emit structs (`regexp_extract` per named group, first-match
-    semantics identical to the kernels' `re.search`/RE2 search); the
-    per-rule arrays are concatenated (array_compact drops non-matching
-    rules' nulls) and exploded. One scan, zero Python workers, zero Arrow
-    IPC — every text byte stays inside the JVM.
-
-    Why this exists alongside the Arrow kernel: the RE2 kernel is the
-    fastest *per-core* extractor (BENCH/BASELINE.md §3c), but it ships
-    every surviving text byte across the local socket to a Python worker
-    and back — on a single box that traffic rides the same DRAM bus the
-    other 4N-level stages are already saturating, and the round-5 HEAD
-    re-measurement showed Stage B scaling at 0.65 (1→4) against 0.90 for
-    the rest of the pipeline. This twin trades a slower regex engine
-    (java.util.regex vs RE2) for zero boundary traffic; which one ships
-    is measured, not assumed — see BENCH/BASELINE.md §3e and
-    KGPIPE_EXTRACT_KERNEL below.
-
-    Input: DataFrame[conv_id, turn_idx, role, text_norm]. Output schema =
-    RAW_TRIPLES_KINDED, set-identical to extract_triples_batch (pinned in
-    tests/test_rules.py)."""
-    from .rules import RULES, group_index, java_pattern
-
-    turn_node = F.concat_ws(
-        "#", F.col("conv_id"), F.col("turn_idx").cast("string")
-    )
-
-    def side(pattern: str, jpat: str, group: str) -> Column:
-        if group == "@turn":
-            return turn_node
-        return F.trim(
-            F.regexp_extract(F.col("text_norm"), jpat, group_index(pattern, group))
-        )
-
-    per_rule = []
-    for rule in RULES:
-        jpat = java_pattern(rule.pattern)
-        cond = F.col("role").isin(*rule.roles)
-        if rule.anchor:
-            # literal-substring gate short-circuits the regex (And.eval is
-            # lazy in codegen), mirroring the kernels' C-substring gate
-            cond = cond & F.col("text_norm").contains(rule.anchor)
-        cond = cond & F.col("text_norm").rlike(jpat)
-        emits = [
-            F.struct(
-                side(rule.pattern, jpat, subj_g).alias("subj_raw"),
-                F.lit(pred).alias("pred"),
-                side(rule.pattern, jpat, obj_g).alias("obj_raw"),
-                F.lit(rule.rule_id).alias("rule_id"),
-                F.lit("node" if subj_g == "@turn" else "surface").alias(
-                    "subj_kind"
-                ),
-                F.lit("node" if obj_g == "@turn" else "surface").alias(
-                    "obj_kind"
-                ),
-            )
-            for subj_g, pred, obj_g in rule.emits
-        ]
-        per_rule.append(F.when(cond, F.array(*emits)))
-
-    exploded = t.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        F.explode(F.flatten(F.array_compact(F.array(*per_rule)))).alias("_t"),
-    )
-    return exploded.select(
-        "conv_id",
-        "turn_idx",
-        "_t.subj_raw",
-        "_t.pred",
-        "_t.obj_raw",
-        "_t.rule_id",
-        "_t.subj_kind",
-        "_t.obj_kind",
-    )
 
 
 def stage_extract(turns: DataFrame, entity_dict: DataFrame) -> DataFrame:
@@ -239,22 +135,4 @@ def stage_extract(turns: DataFrame, entity_dict: DataFrame) -> DataFrame:
     t = turns.withColumn("text_norm", normalize_text_col(F.col("text")))
     t = t.filter(anchor_prefilter(F.col("text_norm")))
     cols = ["conv_id", "turn_idx", "role", "text_norm"]
-    if _extract_kernel() == "jvm":
-        return extract_triples_jvm(t.select(cols))
     return t.select(cols).mapInArrow(_arrow_extract_runner, RAW_TRIPLES_KINDED)
-
-
-def _extract_kernel() -> str:
-    """Stage-B kernel selector: 'arrow' (mapInArrow + RE2 pyarrow.compute)
-    or 'jvm' (whole-stage-codegen rlike/regexp_extract — zero Python
-    boundary). Both are set-identical (tests/test_rules.py,
-    tests/test_spark_stages.py); the default is the measured winner at the
-    4N scaling level (BENCH/BASELINE.md §3e)."""
-    import os
-
-    name = os.environ.get("KGPIPE_EXTRACT_KERNEL", "arrow")
-    if name not in ("arrow", "jvm"):
-        raise ValueError(
-            f"KGPIPE_EXTRACT_KERNEL={name!r}: expected 'arrow' or 'jvm'"
-        )
-    return name

@@ -14,45 +14,21 @@ from __future__ import annotations
 
 import pandas as pd
 
+from .rules import UnionFind  # noqa: F401  (re-exported: the oracle's union-find)
 from .rules import (
     JACCARD_THRESHOLD,
-    char_shingles,
     extract_triples_batch,
-    jaccard,
     normalize_series,
     normalize_surface,
+    similar_pair_labels,
 )
-
-
-class UnionFind:
-    def __init__(self) -> None:
-        self.parent: dict[str, str] = {}
-
-    def find(self, x: str) -> str:
-        p = self.parent.setdefault(x, x)
-        while p != x:
-            self.parent[x] = p = self.parent.setdefault(p, p)
-            x, p = p, self.parent[p]
-        return x
-
-    def union(self, a: str, b: str) -> None:
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            # deterministic: smaller string wins as root
-            lo, hi = sorted((ra, rb))
-            self.parent[hi] = lo
 
 
 def cluster_surfaces(surfaces: list[str], threshold: float = JACCARD_THRESHOLD) -> pd.DataFrame:
     """Exact O(n²) Jaccard clustering — ground truth for LSH+CC (small n)."""
     uniq = sorted(set(surfaces))
-    sh = {s: char_shingles(s) for s in uniq}
-    uf = UnionFind()
-    for i in range(len(uniq)):
-        for j in range(i + 1, len(uniq)):
-            if jaccard(sh[uniq[i]], sh[uniq[j]]) >= threshold:
-                uf.union(uniq[i], uniq[j])
-    return pd.DataFrame({"node": uniq, "component": [uf.find(s) for s in uniq]})
+    rep = similar_pair_labels(uniq, threshold)
+    return pd.DataFrame({"node": uniq, "component": [rep.get(s, s) for s in uniq]})
 
 
 def link_map(entity_dict: pd.DataFrame) -> dict[str, str]:

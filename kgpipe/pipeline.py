@@ -58,8 +58,7 @@ N_TRIPLE_PARTS = 128
 # hash partitions. The count is data-shaped at real scale because
 # triple_parts itself grows with the table (DEPLOY.md §2: O(10^3-10^4)
 # Iceberg buckets at 10^12 turns), never with cores.
-PUBLISH_ROWS_PER_TASK = 500_000  # retained for the env-knob A/B harness docs
-PUBLISH_MIN_TASKS = 16
+PUBLISH_ROWS_PER_TASK = 500_000  # small-corpus task sizing (publish_task_count)
 
 # Hot-bucket salting for the publish stage (round-4 event-log finding,
 # BENCH/evtlog_16M_fused_2_8.json): part_key = hash(subj) concentrates the
@@ -110,12 +109,7 @@ def publish_task_count(rows: int | None, triple_parts: int, parallelism: int) ->
     (the r3 64M probe's local[2] spill case cannot recur here: that
     needs rows far above the small-corpus threshold). rows=None (not a
     plain file scan — row count unknowable cheaply) takes the
-    bucket-aligned path unchanged. KGPIPE_PUBLISH_TASKS is a
-    benchmark-isolation override so scaling A/Bs can pin the count
-    without code flips; unset in production."""
-    forced = os.environ.get("KGPIPE_PUBLISH_TASKS")
-    if forced:
-        return int(forced)
+    bucket-aligned path unchanged."""
     salt = publish_salt_factor(rows)
     if rows and rows < PUBLISH_SMALL_TRIPLES:
         return max(
@@ -129,9 +123,6 @@ def publish_salt_factor(est_rows: int | None) -> int:
     """Salt cardinality for the publish shuffle: ceil(rows / 5M), clamped
     to [1, 32]. None (row count unknowable cheaply) -> 1 = unsalted, the
     pre-round-4 plan."""
-    forced = os.environ.get("KGPIPE_PUBLISH_SALT")
-    if forced:
-        return max(1, int(forced))
     if not est_rows:
         return 1
     return max(1, min(PUBLISH_MAX_SALT, -(-est_rows // PUBLISH_SALT_ROWS)))
@@ -197,35 +188,6 @@ class PipelineConfig:
             sort_keys=True,
         )
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
-
-
-def _fused_c_level():
-    """Storage level for the fused-mode Stage-C boundary persist.
-
-    Default MEMORY_AND_DISK_DESER (PySpark's no-arg `.persist()` default
-    since 3.4: compressed columnar batches on heap, overflow to local
-    disk). At corpus sizes where the
-    cached 70M+-row linked table dwarfs the heap (the 64 M-turn point in
-    BENCH/scaling_2v8_fused_flat_64M.md), most batches spill anyway and the
-    resident remainder raises old-gen occupancy exactly while Stage E
-    shuffles and writes in the same JVM — `KGPIPE_FUSED_PERSIST=disk`
-    (DISK_ONLY) frees the heap for the publish stage at the cost of a
-    sequential columnar re-read. Measured A/B lives in
-    BENCH/profile_stageE_64M.md; knob exists so the scaling harness can
-    test both without code edits."""
-    from pyspark import StorageLevel
-
-    name = os.environ.get("KGPIPE_FUSED_PERSIST", "deser").lower()
-    levels = {
-        "deser": StorageLevel.MEMORY_AND_DISK_DESER,  # == no-arg .persist()
-        "ser": StorageLevel.MEMORY_AND_DISK,  # serialized on-heap
-        "disk": StorageLevel.DISK_ONLY,
-    }
-    if name not in levels:
-        raise ValueError(
-            f"KGPIPE_FUSED_PERSIST={name!r}: expected one of {sorted(levels)}"
-        )
-    return levels[name]
 
 
 def lineage_col() -> F.Column:
@@ -341,8 +303,7 @@ def stage_ingest(transcripts: DataFrame) -> DataFrame:
     Dedup is ADAPTIVE (memoir above): an exact narrow-key detection job
     picks one of three plans — shuffle-free (clean input), broadcast-split
     repair (few dup keys), or the full conv_id repartition + window
-    (adversarially dirty input; also forceable with
-    KGPIPE_INGEST_DEDUP=always for A/Bs, =skip trusts the input blindly).
+    (adversarially dirty input: more than DEDUP_BCAST_MAX flagged keys).
     On the dirty paths the keep-row is deterministic (min ts, then role);
     a min(struct(...)) hash-aggregate variant was measured 1.8x SLOWER:
     struct aggregation buffers are not hash-agg mutable, so Spark falls
@@ -356,39 +317,26 @@ def stage_ingest(transcripts: DataFrame) -> DataFrame:
         & F.col("turn_idx").isNotNull()
         & F.col("text").isNotNull()
     )
-    mode = os.environ.get("KGPIPE_INGEST_DEDUP", "auto").lower()
-    if mode not in ("auto", "always", "skip"):
-        raise ValueError(
-            f"KGPIPE_INGEST_DEDUP={mode!r}: expected auto, always or skip"
-        )
-    if mode == "skip":
+    key_hash = F.xxhash64("conv_id", "turn_idx")
+    flagged = (
+        a.select(key_hash.alias("_k"))
+        .groupBy("_k")
+        .count()
+        .filter(F.col("count") > 1)
+        .select("_k")
+    )
+    # one job: detection + overflow probe (limit fuses into the scan)
+    hits = flagged.limit(DEDUP_BCAST_MAX + 1).collect()
+    if not hits:
         return extract.with_turn_order(a)
-    if mode == "auto":
-        key_hash = F.xxhash64("conv_id", "turn_idx")
-        flagged = (
-            a.select(key_hash.alias("_k"))
-            .groupBy("_k")
-            .count()
-            .filter(F.col("count") > 1)
-            .select("_k")
-        )
-        # one job: detection + overflow probe (limit fuses into the scan)
-        hits = flagged.limit(DEDUP_BCAST_MAX + 1).collect()
-        if not hits:
-            return extract.with_turn_order(a)
-        if len(hits) <= DEDUP_BCAST_MAX:
-            spark = a.sparkSession
-            flagged_df = spark.createDataFrame(hits, "_k long")
-            keyed = a.withColumn("_k", key_hash)
-            clean = keyed.join(F.broadcast(flagged_df), "_k", "left_anti")
-            dirty = _dedup_window(
-                keyed.join(F.broadcast(flagged_df), "_k", "left_semi")
-            )
-            return extract.with_turn_order(
-                clean.unionByName(dirty).drop("_k")
-            )
-        # fall through: too dirty to broadcast — full shuffle plan
     spark = a.sparkSession
+    if len(hits) <= DEDUP_BCAST_MAX:
+        flagged_df = spark.createDataFrame(hits, "_k long")
+        keyed = a.withColumn("_k", key_hash)
+        clean = keyed.join(F.broadcast(flagged_df), "_k", "left_anti")
+        dirty = _dedup_window(keyed.join(F.broadcast(flagged_df), "_k", "left_semi"))
+        return extract.with_turn_order(clean.unionByName(dirty).drop("_k"))
+    # too dirty to broadcast — full shuffle plan
     nparts = ingest_partitions(
         input_rows_estimate(transcripts),
         int(spark.conf.get("spark.sql.shuffle.partitions")),
@@ -451,7 +399,7 @@ class Pipeline:
             # C is read by two consumers — the unlinked-surface derivation
             # driving CC, and the final rewrite — so it must materialize.
             if stage == "C_link":
-                df = df.persist(_fused_c_level())
+                df = df.persist()
             m = {
                 "stage": stage,
                 "fingerprint": fp,

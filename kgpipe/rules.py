@@ -10,7 +10,9 @@ are DATA, executed by two engines:
     golden triple fixture (SURVEY.md §5.2.3).
 
 Both call the batch functions below, so P/R vs the fixture measures the
-distributed machinery (ordering, shuffles, joins, CC), not rule drift.
+distributed machinery (ordering, shuffles, joins, CC), not rule drift. The
+oracle's name clustering and Stage D's driver paths likewise share one
+union-find (UnionFind / component_labels at the end of this module).
 
 Everything in this module is pure pandas/regex — no Spark imports — so it is
 importable on executors without a session.
@@ -19,6 +21,7 @@ importable on executors without a session.
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 import pandas as pd
@@ -96,21 +99,6 @@ RULES: tuple[Rule, ...] = (
 )
 
 _COMPILED: dict[str, re.Pattern[str]] = {r.rule_id: re.compile(r.pattern) for r in RULES}
-
-
-def java_pattern(pattern: str) -> str:
-    """Python named-group syntax -> Java: `(?P<x>` becomes `(?<x>`. The
-    RULES patterns use no other Python-only constructs (lazy quantifiers,
-    anchors and character classes are identical in java.util.regex), so
-    this is the whole translation — the JVM extraction twin
-    (extract.extract_triples_jvm) runs the same automaton semantics."""
-    return pattern.replace("(?P<", "(?<")
-
-
-def group_index(pattern: str, name: str) -> int:
-    """1-based positional index of a named group — Spark's regexp_extract
-    addresses groups by position."""
-    return re.findall(r"\(\?P<([a-z]+)>", pattern).index(name) + 1
 
 
 # --------------------------------------------------------------------------
@@ -310,3 +298,52 @@ def jaccard(a: set[str], b: set[str]) -> float:
         return 1.0
     inter = len(a & b)
     return inter / (len(a) + len(b) - inter)
+
+
+# --------------------------------------------------------------------------
+# Union-find clustering shared by the oracle and Stage D's driver paths.
+# Every root is the smallest name of its set, so the labels match the
+# iterative min-label propagation of canon.connected_components whatever
+# order the pairs arrive in.
+# --------------------------------------------------------------------------
+class UnionFind:
+    def __init__(self) -> None:
+        self.parent: dict[str, str] = {}
+
+    def find(self, x: str) -> str:
+        p = self.parent.setdefault(x, x)
+        while p != x:
+            self.parent[x] = p = self.parent.setdefault(p, p)
+            x, p = p, self.parent[p]
+        return x
+
+    def union(self, a: str, b: str) -> None:
+        ra, rb = self.find(a), self.find(b)
+        if ra != rb:
+            # deterministic: smaller string wins as root
+            lo, hi = sorted((ra, rb))
+            self.parent[hi] = lo
+
+
+def component_labels(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """node -> smallest node of its component, for every node of `pairs`."""
+    uf = UnionFind()
+    for a, b in pairs:
+        uf.union(a, b)
+    return {n: uf.find(n) for n in list(uf.parent)}
+
+
+def similar_pair_labels(
+    surfaces: Iterable[str], threshold: float = JACCARD_THRESHOLD
+) -> dict[str, str]:
+    """Exact all-pairs char-shingle Jaccard clustering: component labels of
+    every surface with at least one partner at >= threshold. O(n²) — the
+    ground truth for LSH + CC, and Stage D's path for small surface sets."""
+    names = sorted(set(surfaces))
+    sh = [char_shingles(s) for s in names]
+    return component_labels(
+        (a, names[j])
+        for i, a in enumerate(names)
+        for j in range(i + 1, len(names))
+        if jaccard(sh[i], sh[j]) >= threshold
+    )

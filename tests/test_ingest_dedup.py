@@ -14,6 +14,13 @@ from kgpipe import pipeline
 OUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
+def _valid(df):
+    """Stage A's validation filter."""
+    return df.filter(
+        F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull() & F.col("text").isNotNull()
+    )
+
+
 def _turns(df) -> pd.DataFrame:
     return (
         df.select(*OUT_COLS)
@@ -41,16 +48,20 @@ def dirty_df(spark, transcripts_df):
     return transcripts_df.unionByName(later).unionByName(earlier)
 
 
-def test_clean_path_equals_full_path(spark, transcripts_df, monkeypatch):
+def test_clean_path_equals_full_path(spark, transcripts_df):
+    """Clean input (no duplicated key) takes the shuffle-free path and
+    emits exactly the validated input rows — nothing dropped, nothing
+    added."""
     got = _turns(pipeline.stage_ingest(transcripts_df))
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
-    want = _turns(pipeline.stage_ingest(transcripts_df))
+    want = _turns(_valid(transcripts_df))
     pd.testing.assert_frame_equal(got, want)
 
 
 def test_repair_path_equals_full_path(spark, dirty_df, monkeypatch):
+    """Broadcast-split repair and the full repartition+window plan (forced
+    by a zero broadcast cap) keep the same row per duplicated key."""
     got = _turns(pipeline.stage_ingest(dirty_df))
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
+    monkeypatch.setattr(pipeline, "DEDUP_BCAST_MAX", 0)
     want = _turns(pipeline.stage_ingest(dirty_df))
     pd.testing.assert_frame_equal(got, want)
 
@@ -59,13 +70,7 @@ def test_repair_keeps_min_ts_row(spark, dirty_df, transcripts_df):
     """Value-level pin, independent of the full path: every duplicated key
     collapses to one row; late dups lose, the early dup wins."""
     out = _turns(pipeline.stage_ingest(dirty_df))
-    base = _turns(
-        transcripts_df.filter(
-            F.col("conv_id").isNotNull()
-            & F.col("turn_idx").isNotNull()
-            & F.col("text").isNotNull()
-        )
-    )
+    base = _turns(_valid(transcripts_df))
     assert len(out) == len(base)  # one row per (conv_id, turn_idx)
     assert not out.duplicated(["conv_id", "turn_idx"]).any()
     assert (out["text"].str.startswith("dup-late")).sum() == 0
@@ -74,21 +79,21 @@ def test_repair_keeps_min_ts_row(spark, dirty_df, transcripts_df):
 
 def test_overflow_falls_back_to_full_shuffle(spark, dirty_df, monkeypatch):
     """> DEDUP_BCAST_MAX flagged hashes → the broadcast split is refused and
-    the full repartition+window plan runs; results identical."""
+    the full repartition+window plan runs; it keeps the min (ts, role) row
+    of every key, checked against a pandas reference."""
     monkeypatch.setattr(pipeline, "DEDUP_BCAST_MAX", 0)
-    got = _turns(pipeline.stage_ingest(dirty_df))
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
-    want = _turns(pipeline.stage_ingest(dirty_df))
-    pd.testing.assert_frame_equal(got, want)
-
-
-def test_skip_mode_and_bad_mode(spark, transcripts_df, monkeypatch):
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "skip")
-    out = _turns(pipeline.stage_ingest(transcripts_df))
-    assert len(out) == transcripts_df.count()
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "bogus")
-    with pytest.raises(ValueError, match="KGPIPE_INGEST_DEDUP"):
-        pipeline.stage_ingest(transcripts_df)
+    out = pipeline.stage_ingest(dirty_df)
+    assert "BroadcastHashJoin" not in out._jdf.queryExecution().executedPlan().toString()
+    want = (
+        _valid(dirty_df)
+        .toPandas()
+        .sort_values(["ts", "role"], kind="mergesort")
+        .drop_duplicates(["conv_id", "turn_idx"])
+    )
+    pd.testing.assert_frame_equal(
+        _turns(out),
+        want[OUT_COLS].sort_values(["conv_id", "turn_idx"]).reset_index(drop=True),
+    )
 
 
 def test_pipeline_e2e_with_dirty_input(spark, dirty_df, transcripts_df, entity_dict_df, tmp_path):

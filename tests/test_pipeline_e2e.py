@@ -136,11 +136,12 @@ def test_parallelism_invariance(spark, transcripts_df, entity_dict_df, tmp_path,
 def test_salted_publish_matches_unsalted(
     spark, transcripts_df, entity_dict_df, tmp_path, final_triples, monkeypatch
 ):
-    """Hot-bucket salting (KGPIPE_PUBLISH_SALT>1 / large-corpus default):
-    identical triple set + lineage + part_key, and the salted dedup stays a
-    single shuffle (the salt is a function of the full dedup key, so the
-    aggregate's clustering requirement is met by the salted exchange)."""
-    monkeypatch.setenv("KGPIPE_PUBLISH_SALT", "4")
+    """Hot-bucket salting (the large-corpus default, forced here on the
+    fixture): identical triple set + lineage + part_key, and the salted
+    dedup stays a single shuffle (the salt is a function of the full dedup
+    key, so the aggregate's clustering requirement is met by the salted
+    exchange)."""
+    monkeypatch.setattr(pipeline, "publish_salt_factor", lambda rows: 4)
     out = pipeline.run_simple(
         spark, transcripts_df, entity_dict_df, str(tmp_path / "salted"),
         input_fingerprint="salt4",

@@ -86,14 +86,21 @@ def test_stage_a_clean_input_is_shuffle_free(spark, transcripts_df):
 
 
 def test_stage_a_forced_full_path_single_shuffle(spark, transcripts_df, monkeypatch):
-    """KGPIPE_INGEST_DEDUP=always → the pre-round-4 plan: exactly ONE
-    Exchange (the conv_id repartition; the dedup window rides it)."""
+    """Dirty input over the broadcast cap (forced with a zero cap) → the
+    full-shuffle plan: exactly ONE Exchange (the conv_id repartition; the
+    dedup window rides it) and no broadcast split."""
     from kgpipe import pipeline
 
-    monkeypatch.setenv("KGPIPE_INGEST_DEDUP", "always")
-    a = pipeline.stage_ingest(transcripts_df)
+    monkeypatch.setattr(pipeline, "DEDUP_BCAST_MAX", 0)
+    # duplicate every conversation's first turn (a filter, not a limit: a
+    # limit would add its own single-partition Exchange to the plan)
+    dups = transcripts_df.filter(F.col("turn_idx") == 0).withColumn(
+        "ts", F.expr("ts + interval 1 hour")
+    )
+    a = pipeline.stage_ingest(transcripts_df.unionByName(dups))
     plan = plan_of(a.select("conv_id", "turn_idx", "role", "text"))
     assert plan.count("Exchange") == 1
+    assert "BroadcastHashJoin" not in plan
     assert plan.count("Window [") == 1  # dedup only; turn-order pruned
     plan_rank = plan_of(a.select("conv_id", "turn_idx", "turn_rank"))
     assert plan_rank.count("Window [") == 2
@@ -180,6 +187,63 @@ def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
     assert len(p_long.splitlines()) == len(p_short.splitlines())
     # and the result really is a lineage-truncated scan, not the join DAG
     assert "Join" not in p_long and "Scan ExistingRDD" in p_long
+
+
+def test_canon_rewrite_broadcasts_driver_labels_only(spark, monkeypatch):
+    """stage_canon's two rewrite joins broadcast the label table when a
+    driver path built it (its size is bounded by the driver thresholds)
+    and shuffle it when the iterative loop did (unbounded). Auto-broadcast
+    is off so only the explicit hint can produce a BroadcastHashJoin."""
+    from kgpipe import canon
+
+    names = ["grace hopperr", "grace hoppe", "alan turingg", "alan turin", "zed"]
+    linked = spark.createDataFrame(
+        [(n, "p", names[(i + 1) % len(names)]) for i, n in enumerate(names)],
+        "subj_raw string, pred string, obj_raw string",
+    ).select(
+        "subj_raw", "pred", "obj_raw",
+        F.lit("surface").alias("subj_kind"), F.lit("surface").alias("obj_kind"),
+        F.lit(None).cast("string").alias("subj_link"),
+        F.lit(None).cast("string").alias("obj_link"),
+        F.lit("c0").alias("conv_id"), F.lit(0).alias("turn_idx"),
+        F.lit("R3").alias("rule_id"),
+    )
+    monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        driver_out, _ = canon.stage_canon(linked)  # LSH + driver union-find
+        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+        loop_out, _ = canon.stage_canon(linked)  # LSH + iterative loop
+        driver_plan, loop_plan = plan_of(driver_out), plan_of(loop_out)
+        monkeypatch.undo()
+        allpairs_out, _ = canon.stage_canon(linked)  # all-pairs on the driver
+        allpairs_plan = plan_of(allpairs_out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert allpairs_plan.count("BroadcastHashJoin") == 2, allpairs_plan
+    assert driver_plan.count("BroadcastHashJoin") == 2, driver_plan
+    assert "BroadcastHashJoin" not in loop_plan, loop_plan
+    assert loop_plan.count("SortMergeJoin") == 2, loop_plan
+    # all three paths agree on the rewrite
+    rows = [sorted(map(tuple, df.select("subj", "obj").collect()))
+            for df in (allpairs_out, driver_out, loop_out)]
+    assert rows[0] == rows[1] == rows[2]
+
+
+def test_only_session_reads_env():
+    """Deployment settings are read in one place (session.get_spark);
+    every other engine module takes its inputs as arguments or constants,
+    so no call site can switch a code path from the environment."""
+    import pathlib
+
+    src_dir = pathlib.Path(__file__).resolve().parents[1] / "kgpipe"
+    offenders = [
+        p.name
+        for p in src_dir.glob("*.py")
+        if p.name != "session.py" and "os.environ" in p.read_text()
+    ]
+    assert not offenders, offenders
 
 
 def test_corpus_curation_gate_is_single_scan(spark):

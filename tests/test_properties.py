@@ -78,3 +78,33 @@ def test_lsh_recall_on_planted_duplicates(spark):
     got_pairs = set(zip(got.a, got.b))
     missed = want_pairs - got_pairs
     assert len(missed) <= max(1, int(0.02 * len(want_pairs))), missed
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.text(alphabet="abcdef", min_size=1, max_size=3),
+            st.text(alphabet="abcdef", min_size=1, max_size=3),
+        ),
+        max_size=40,
+    )
+)
+def test_component_labels_match_bfs(edges):
+    """The union-find shared by the oracle and Stage D against an
+    independent labelling: BFS over the undirected graph, each component
+    labelled by its smallest name."""
+    adj: dict[str, set[str]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    want: dict[str, str] = {}
+    for start in adj:
+        if start in want:
+            continue
+        comp, frontier = {start}, [start]
+        while frontier:
+            frontier = [m for n in frontier for m in adj[n] if m not in comp]
+            comp.update(frontier)
+        want.update(dict.fromkeys(comp, min(comp)))
+    assert rules.component_labels(edges) == want

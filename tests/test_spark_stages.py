@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from kgpipe import canon, extract, link, oracle, rules
@@ -21,42 +22,6 @@ def test_stage_extract_matches_oracle(spark, corpus, transcripts_df, entity_dict
     # full-row parity including provenance
     cols = ("conv_id", "turn_idx", "subj_raw", "pred", "obj_raw", "rule_id")
     assert _triple_set(got, cols) == _triple_set(want, cols)
-
-
-def test_jvm_kernel_matches_pandas_kernel(spark, corpus, transcripts_df, entity_dict_df):
-    """extract_triples_jvm (pure codegen rlike/regexp_extract) is
-    MULTISET-identical to the pandas kernel — full row including kinds.
-    Both engines must agree exactly or the KGPIPE_EXTRACT_KERNEL knob
-    would silently change query results."""
-    t = transcripts_df.withColumn(
-        "text_norm", extract.normalize_text_col(F.col("text"))
-    ).filter(extract.anchor_prefilter(F.col("text_norm")))
-    got = extract.extract_triples_jvm(
-        t.select("conv_id", "turn_idx", "role", "text_norm")
-    ).toPandas()
-    p = corpus.transcripts.copy()
-    p["text_norm"] = rules.normalize_series(p["text"])
-    want = rules.extract_triples_batch(
-        p[["conv_id", "turn_idx", "role", "text_norm"]]
-    )
-    cols = [
-        "conv_id", "turn_idx", "subj_raw", "pred", "obj_raw", "rule_id",
-        "subj_kind", "obj_kind",
-    ]
-    got_m = sorted(map(tuple, got[cols].itertuples(index=False)))
-    want_m = sorted(map(tuple, want[cols].itertuples(index=False)))
-    assert got_m == want_m  # multiset, not set: duplicates must match too
-
-
-def test_jvm_kernel_plan_is_codegen(spark, transcripts_df, entity_dict_df, monkeypatch):
-    """With KGPIPE_EXTRACT_KERNEL=jvm, stage B has no Python node at all —
-    no MapInArrow, no MapInPandas, no BatchEvalPython."""
-    monkeypatch.setenv("KGPIPE_EXTRACT_KERNEL", "jvm")
-    df = extract.stage_extract(transcripts_df, entity_dict_df)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for node in ("MapInArrow", "MapInPandas", "BatchEvalPython", "ArrowEval"):
-        assert node not in plan, plan
-    assert "Generate explode" in plan
 
 
 def test_mentions_detected(spark, transcripts_df, entity_dict_df):
@@ -145,3 +110,14 @@ def test_cc_random_graph_vs_unionfind(spark):
     finally:
         canon_mod.DRIVER_CC_MAX_EDGES = orig
     assert dict(zip(cc2.node, cc2.component)) == want
+
+
+def test_cc_loop_raises_when_not_converged(spark, monkeypatch):
+    """A 60-node path needs 60 propagation rounds to carry n000 to the far
+    end; with the default 25-round cap the loop must fail loudly instead
+    of returning the half-propagated labels (35 components)."""
+    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)  # force loop path
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)]
+    edf = spark.createDataFrame(edges, "a string, b string")
+    with pytest.raises(RuntimeError, match="did not converge in 25 rounds"):
+        canon.connected_components(edf)
