@@ -54,7 +54,7 @@ spark = get_spark(
     "profile",
     master=f"local[{{cores}}]",
     shuffle_partitions=2 * cores,
-    extra_conf={{"spark.local.dir": shm}},
+    extra_conf={{"spark.local.dir": shm, "spark.driver.memory": {driver_mem!r}}},
 )
 spark.sparkContext.setLogLevel("ERROR")
 t = spark.read.schema(schemas.TRANSCRIPTS).parquet(corpus + "/transcripts.parquet")
@@ -70,7 +70,7 @@ def scan_jvm():
 
 
 def extract_py():
-    return extract.stage_extract(t, None).count()
+    return extract.stage_extract(t).count()
 
 
 def _publish_df():
@@ -174,15 +174,15 @@ print("RESULT " + json.dumps({{"cores": cores, "jobs": out}}))
 
 
 def run_level(cores: int, corpus: str, trials: int, only: list) -> dict:
-    code = CHILD.format(repo=REPO, cores=cores, corpus=corpus, trials=trials, only=only)
-    env = dict(os.environ)
-    env["KGPIPE_DRIVER_MEM"] = f"{min(3 * cores, 48)}g"
+    code = CHILD.format(
+        repo=REPO, cores=cores, corpus=corpus, trials=trials, only=only,
+        driver_mem=f"{min(3 * cores, 48)}g",
+    )
     out = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", code],
         capture_output=True,
         text=True,
         timeout=3600,
-        env=env,
     )
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):

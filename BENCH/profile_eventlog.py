@@ -54,6 +54,7 @@ spark = get_spark(
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": "file:" + evt_dir,
         "spark.eventLog.compress": "false",
+        "spark.driver.memory": "8g",  # flat protocol (primary evidence)
     }},
 )
 spark.sparkContext.setLogLevel("ERROR")
@@ -69,8 +70,7 @@ for trial, src in enumerate([{warm_corpus!r}, {corpus!r}]):
         checkpoints={checkpoints},
     )
     p = pipeline.Pipeline(cfg)
-    out = p.run(spark, t, e)
-    n = out.count()
+    n = p.run(spark, t, e)["rows"]
     walls.append(time.time() - t0)
     stage_ms = {{m["stage"]: m["total_ms"] for m in p.metrics}}
     if trial == 0:
@@ -91,11 +91,9 @@ def run_level(cores: int, corpus: str, warm: str, checkpoints: bool) -> dict:
         repo=REPO, cores=cores, corpus=corpus, warm_corpus=warm,
         checkpoints=checkpoints, evt_dir=evt_dir,
     )
-    env = dict(os.environ)
-    env["KGPIPE_DRIVER_MEM"] = "8g"  # flat protocol (primary evidence)
     out = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", code],
-        capture_output=True, text=True, timeout=7200, env=env,
+        capture_output=True, text=True, timeout=7200,
     )
     res, warm_end = None, 0.0
     for line in out.stdout.splitlines():

@@ -45,13 +45,13 @@ scaled = {scaled!r} == "scaled"  # tmpfs scratch only in full scaled mode
 # flat mode: default local dir — both levels share the same disk budget.
 import os as _os
 import tempfile as _tf
+extra = {{"spark.driver.memory": {driver_mem!r}}}
 if scaled:
     shm = f"/dev/shm/kgscale_{{cores}}"
     _os.makedirs(shm, exist_ok=True)
-    extra = {{"spark.local.dir": shm}}
+    extra["spark.local.dir"] = shm
 else:
     shm = _tf.gettempdir()
-    extra = {{}}
 spark = get_spark(
     "scaling",
     master=f"local[{{cores}}]",
@@ -73,19 +73,39 @@ for trial in range({trials} + 1):  # trial 0 = warm-up
         checkpoints={checkpoints},
     )
     p = pipeline.Pipeline(cfg)
-    out = p.run(spark, t, e)
-    n = out.count()
+    n = p.run(spark, t, e)["rows"]
     walls.append(time.time() - t0)
     stage_ms = {{m["stage"]: m["total_ms"] for m in p.metrics}}
     spark.catalog.clearCache()
     import shutil
     shutil.rmtree(cfg.work_dir, ignore_errors=True)
 best = min(walls[1:])
+codec = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
 print("RESULT " + json.dumps({{"cores": cores, "wall_s": round(best, 2),
                                "all_walls": [round(w, 2) for w in walls],
                                "triples": n, "stage_ms": stage_ms,
-                               "triples_per_sec": round(n / best, 1)}}))
+                               "triples_per_sec": round(n / best, 1),
+                               "io_codec": codec}}))
 """
+
+
+def driver_memory(cores: int, resources: str) -> str:
+    """spark.driver.memory of one level's child session."""
+    if resources in ("scaled", "heap"):
+        # aggregate memory scales with executor count on a real cluster: an
+        # N-core level gets N executors' worth of heap, 4N gets 4x. A flat
+        # heap would make the larger level GC 4x harder on the same garbage
+        # rate — an artifact no real 4N cluster has.
+        # capped: heap + tmpfs shuffle files + OS must fit the box's RAM — an
+        # uncapped 3g x 32 = 96g heap thrashed the 125G host
+        # ("heap" = diagnostic mode: scaled heap WITHOUT the tmpfs scratch,
+        # to isolate which of the two scaled-protocol knobs moves the number)
+        return f"{min(3 * cores, 48)}g"
+    # flat-resource mode (primary fused evidence since round 2): both
+    # levels get the identical heap and share the default local dir, so
+    # the efficiency number cannot be an artifact of the per-level
+    # resource scaling above
+    return "8g"
 
 
 def run_level(
@@ -100,6 +120,7 @@ def run_level(
         trials=trials,
         checkpoints=checkpoints,
         scaled=resources,
+        driver_mem=driver_memory(cores, resources),
     )
     # pin the process tree to exactly `cores` CPUs: a local[N] JVM otherwise
     # borrows idle cores for Python workers/GC/shuffle threads, which a real
@@ -113,22 +134,6 @@ def run_level(
     env["PYTHONPATH"] = REPO + (
         os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""
     )
-    if resources in ("scaled", "heap"):
-        # aggregate memory scales with executor count on a real cluster: an
-        # N-core level gets N executors' worth of heap, 4N gets 4x. A flat
-        # heap would make the larger level GC 4x harder on the same garbage
-        # rate — an artifact no real 4N cluster has.
-        # capped: heap + tmpfs shuffle files + OS must fit the box's RAM — an
-        # uncapped 3g x 32 = 96g heap thrashed the 125G host
-        # ("heap" = diagnostic mode: scaled heap WITHOUT the tmpfs scratch,
-        # to isolate which of the two scaled-protocol knobs moves the number)
-        env["KGPIPE_DRIVER_MEM"] = f"{min(3 * cores, 48)}g"
-    else:
-        # flat-resource mode (primary fused evidence since round 2): both
-        # levels get the identical heap and share the default local dir, so
-        # the efficiency number cannot be an artifact of the per-level
-        # resource scaling above
-        env["KGPIPE_DRIVER_MEM"] = "8g"
     out = subprocess.run(
         ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", code],
         capture_output=True,
@@ -227,17 +232,19 @@ All trial walls: local[{args.n}] {r8['all_walls']}, local[{args.n4}] {r32['all_w
 (first value = discarded warm-up{warm_note}).
 """
     suffix = {"scaled": "", "flat": "_flat", "heap": "_heap"}[args.resources]
-    # non-default IO codec (KGPIPE_IO_CODEC, see session.get_spark) in the
-    # name + md: a codec A/B run must not clobber the default-config
-    # evidence file. (Round 4 briefly flipped the default to zstd, then
-    # reverted after the 1v4 gate pair regressed 0.804 -> 0.722 under it;
-    # the _zstd-suffixed files are that A/B's evidence.)
-    codec = os.environ.get("KGPIPE_IO_CODEC", "lz4")
+    # non-default IO codec (the child session's effective
+    # spark.io.compression.codec, e.g. set with PYSPARK_SUBMIT_ARGS="--conf
+    # spark.io.compression.codec=zstd pyspark-shell") in the name + md: a
+    # codec A/B run must not clobber the default-config evidence file.
+    # (Round 4 briefly flipped the default to zstd, then reverted after the
+    # 1v4 gate pair regressed 0.804 -> 0.722 under it; the _zstd-suffixed
+    # files are that A/B's evidence.)
+    codec = r8["io_codec"]
     if codec != "lz4":
         suffix += f"_{codec}"
         md += (
-            f"\nShuffle IO codec: KGPIPE_IO_CODEC={codec} "
-            f"(default lz4; see kgpipe/session.py).\n"
+            f"\nShuffle IO codec: spark.io.compression.codec={codec} "
+            f"(default lz4; see DEPLOY.md §5).\n"
         )
     # corpus size in the name so a 64M-turn run cannot clobber the 16M
     # evidence file (pre-round-3 files carry no size suffix = 16M or as

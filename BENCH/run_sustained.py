@@ -48,7 +48,6 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    os.environ["KGPIPE_DRIVER_MEM"] = args.heap
     sys.path.insert(0, REPO)
     from bench import corpus_parquet
     from kgpipe import pipeline, schemas
@@ -61,6 +60,7 @@ def main() -> int:
         "sustained",
         master=f"local[{args.cores}]",
         shuffle_partitions=args.shuffle or 2 * args.cores,
+        extra_conf={"spark.driver.memory": args.heap},
     )
     spark.sparkContext.setLogLevel("ERROR")
     t = spark.read.schema(schemas.TRANSCRIPTS).parquet(
@@ -79,8 +79,7 @@ def main() -> int:
             checkpoints=False,
         )
         p = pipeline.Pipeline(cfg)
-        out = p.run(spark, t, e)
-        n = out.count()
+        n = p.run(spark, t, e)["rows"]
         wall = time.time() - t0
         walls.append(round(wall, 2))
         stage_ms = {m["stage"]: m["total_ms"] for m in p.metrics}

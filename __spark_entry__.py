@@ -66,9 +66,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # driver evidence is the round-3 report.
 # ---------------------------------------------------------------------------
 #   round 5 rotation: (a) every entry whose plan the round-5 engine work
-#   touches — the data-sized Stage-E task count, the D_cc_labels
-#   fused-gating and the 200k dedup broadcast cap all live on the KG
-#   pipeline path, so its facets (sinks, materialize, per-entity rollup,
+#   touches — the data-sized Stage-E task count, the fused-mode gating
+#   of Stage D's label write and the 200k dedup broadcast cap all live on
+#   the KG pipeline path, so its facets (sinks, materialize, per-entity rollup,
 #   canon/cc) plus the ingest-side scan_transcripts/kg_turn_order and the
 #   extraction kernel are fronted; (b) ALL 31 entries whose newest driver
 #   row is round 3's, so after this round no entry's evidence is older

@@ -79,8 +79,7 @@ def run_kg_pipeline(
         input_fingerprint=tag,
         checkpoints=checkpoints,
     )
-    out = pipeline.Pipeline(cfg).run(spark, t, e)
-    n = out.count()
+    n = pipeline.Pipeline(cfg).run(spark, t, e)["rows"]
     return time.time() - t0, n
 
 

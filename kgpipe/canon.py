@@ -262,11 +262,11 @@ def unlinked_surfaces(linked: DataFrame) -> DataFrame:
     )
 
 
-def stage_canon(linked: DataFrame) -> tuple[DataFrame, DataFrame]:
+def stage_canon(linked: DataFrame) -> DataFrame:
     """Resolve unlinked surfaces to component representatives.
 
     Input: Stage C output (…, subj_raw/obj_raw, subj_kind/obj_kind,
-    subj_link/obj_link). Output: (triples with final subj/obj, cc_labels).
+    subj_link/obj_link). Output: triples with final subj/obj.
     """
     unlinked = unlinked_surfaces(linked).persist()
     n_unl = unlinked.count()
@@ -298,7 +298,7 @@ def stage_canon(linked: DataFrame) -> tuple[DataFrame, DataFrame]:
     obj_cc = cc.select(
         F.col("node").alias("_o_node"), F.col("component").alias("_o_comp")
     )
-    out = (
+    return (
         linked.join(subj_cc, linked.subj_raw == F.col("_s_node"), "left")
         .join(obj_cc, linked.obj_raw == F.col("_o_node"), "left")
         .select(
@@ -320,4 +320,3 @@ def stage_canon(linked: DataFrame) -> tuple[DataFrame, DataFrame]:
             "rule_id",
         )
     )
-    return out, cc

@@ -20,7 +20,7 @@ import time
 
 from pyspark.sql import functions as F  # noqa: F401  (re-exported for jobs)
 
-from . import pipeline, schemas
+from . import io_tables, pipeline, schemas
 from .session import get_spark
 
 
@@ -57,10 +57,10 @@ def cmd_run(args: argparse.Namespace) -> int:
     )
     t0 = time.time()
     p = pipeline.Pipeline(cfg)
-    out = p.run(spark, transcripts, entity_dict, resume=args.resume)
-    n = out.count()
-    distinct = out.select("subj", "pred", "obj").distinct().count()
+    n = p.run(spark, transcripts, entity_dict, resume=args.resume)["rows"]
     wall = time.time() - t0
+    sink = io_tables.read_stage(spark, f"{args.work}/E_triples")
+    distinct = sink.select("subj", "pred", "obj").distinct().count()
     print(
         json.dumps(
             {

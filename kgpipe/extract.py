@@ -115,7 +115,7 @@ def anchor_prefilter(text_norm_col: Column) -> Column:
     return cond
 
 
-def stage_extract(turns: DataFrame, entity_dict: DataFrame) -> DataFrame:
+def stage_extract(turns: DataFrame) -> DataFrame:
     """Full Stage B: normalize -> anchor prefilter (JVM) -> batched triple
     extraction (one mapInArrow pass, RE2 kernel in rules.py).
 
@@ -125,10 +125,8 @@ def stage_extract(turns: DataFrame, entity_dict: DataFrame) -> DataFrame:
     it is pure pushdown. Dictionary-based mention detection remains
     available as its own operator (detect_mentions / udf_mention_detect)
     for enrichment queries; the hot path doesn't need the alias automaton —
-    entity resolution happens in Stage C via the broadcast join.
-
-    entity_dict is accepted (and ignored) to keep the stage signature
-    stable for callers that pass it.
+    entity resolution happens in Stage C via the broadcast join, so the
+    stage takes the turns only.
 
     Returns raw triples (conv_id, turn_idx, subj_raw, pred, obj_raw,
     rule_id, subj_kind, obj_kind)."""

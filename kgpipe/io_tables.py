@@ -81,25 +81,21 @@ def write_stage(
     return manifest
 
 
-def read_stage(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    if schema is None:
-        m = read_manifest(path)
-        if m is not None and "schema" in m:
-            from pyspark.sql.types import StructType
+def read_stage(spark: SparkSession, path: str) -> DataFrame:
+    """Read a stage checkpoint back with the schema its manifest carries."""
+    m = read_manifest(path)
+    if m is None or "schema" not in m:
+        return spark.read.parquet(path)
+    from pyspark.sql.types import StructType
 
-            schema = StructType.fromJson(m["schema"])
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-        has_data = any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(path)
-            for f in fs
-        )
-        if not has_data:
-            # zero-row checkpoint: no data files to scan at all
-            return spark.createDataFrame([], schema)
-    return r.parquet(path)
+    schema = StructType.fromJson(m["schema"])
+    has_data = any(
+        f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
+    )
+    if not has_data:
+        # zero-row checkpoint: no data files to scan at all
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def stage_complete(path: str, fingerprint: str) -> bool:

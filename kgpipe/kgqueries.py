@@ -110,7 +110,7 @@ def _stage(spark: SparkSession, sf: str, which: str) -> DataFrame:
     if key not in _STAGE_CACHE:
         d = corpus_dfs(spark, sf)
         if which == "raw":
-            df = extract.stage_extract(d["transcripts"], d["entity_dict"])
+            df = extract.stage_extract(d["transcripts"])
         elif which == "linked":
             df = link.stage_link(_stage(spark, sf, "raw"), d["entity_dict"])
         elif which == "pairs":
@@ -434,8 +434,7 @@ def cc_iterate(spark, sf):
     ),
 )
 def canon_rewrite(spark, sf):
-    out, _ = canon.stage_canon(_stage(spark, sf, "linked"))
-    return out
+    return canon.stage_canon(_stage(spark, sf, "linked"))
 
 
 # the oracle replays the exact MinHash definition: md5-prefix base hash per

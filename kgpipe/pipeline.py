@@ -23,7 +23,7 @@ import hashlib
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +39,7 @@ SEP = "\x1f"
 N_TRIPLE_PARTS = 128
 
 # Publish-stage task sizing. History, because this flip-flopped on evidence:
-# round 3 made it an unconditional triple_parts (128) after the 64M probe
+# round 3 made it an unconditional N_TRIPLE_PARTS (128) after the 64M probe
 # showed cores-derived counts starve low-core runs into spill (local[2]:
 # 4 tasks -> 169.6 s dedup vs 128 -> 93.6 s, BENCH/profile_stageE_64M.md).
 # The r3 verdict suspected that change for the ckpt-16M scaling regression
@@ -56,7 +56,7 @@ N_TRIPLE_PARTS = 128
 # uniformly fastest at 1M (profile_ckpt16M.md), 16M, and 64M: one task wave
 # per sink bucket, no balls-in-bins lumping of 128 bucket keys into fewer
 # hash partitions. The count is data-shaped at real scale because
-# triple_parts itself grows with the table (DEPLOY.md §2: O(10^3-10^4)
+# N_TRIPLE_PARTS itself grows with the table (DEPLOY.md §2: O(10^3-10^4)
 # Iceberg buckets at 10^12 turns), never with cores.
 PUBLISH_ROWS_PER_TASK = 500_000  # small-corpus task sizing (publish_task_count)
 
@@ -170,21 +170,15 @@ def part_key_col(subj: str = "subj", parts: int = N_TRIPLE_PARTS) -> F.Column:
 class PipelineConfig:
     work_dir: str
     input_fingerprint: str  # content identity of the input (seed/path/etc.)
-    triple_parts: int = N_TRIPLE_PARTS
     # True: every stage materializes to parquet + manifest (exact resume,
     # the production default per BASELINE.json). False: stage boundaries
     # are in-memory persist() only — no resume, ~2x faster end-to-end when
     # the job comfortably fits one run (bench fast path).
     checkpoints: bool = True
-    extra: dict = field(default_factory=dict)
 
     def config_hash(self) -> str:
         blob = json.dumps(
-            {
-                "input": self.input_fingerprint,
-                "triple_parts": self.triple_parts,
-                "extra": self.extra,
-            },
+            {"input": self.input_fingerprint, "triple_parts": N_TRIPLE_PARTS},
             sort_keys=True,
         )
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
@@ -350,7 +344,6 @@ class Pipeline:
     def __init__(self, cfg: PipelineConfig):
         self.cfg = cfg
         self.metrics: list[dict] = []
-        self._est_turns: int | None = None
 
     # -- stage fingerprints chain: fp(stage k) = h(config, stage, fp(k-1)) --
     def _fp(self, stage: str, upstream: str) -> str:
@@ -382,36 +375,41 @@ class Pipeline:
         resume: bool,
         partition_by: list[str] | None = None,
         mode: str = "overwrite",
-    ) -> tuple[DataFrame, str]:
+    ) -> tuple[DataFrame | dict, str]:
+        """Build (or skip on resume) one stage. Returns its output for the
+        next stage plus its fingerprint; the sink (E_triples) has no next
+        stage, so it returns its manifest instead of a read-back."""
         fp = self._fp(stage, upstream_fp)
         path = self._path(stage)
         if resume and io_tables.stage_complete(path, fp):
             m = io_tables.read_manifest(path)
             m["skipped"] = True
-            self._record(stage, m)
-            return io_tables.read_stage(spark, path), fp
-        t_build = time.time()
-        df = build()
-        if not self.cfg.checkpoints and stage != "E_triples":
-            # fused mode: in-memory stage boundary (final sink still writes).
-            # Only C_link persists: B feeds only C (persisting both doubles
-            # memory for nothing) and D feeds only E (straight pipeline).
-            # C is read by two consumers — the unlinked-surface derivation
-            # driving CC, and the final rewrite — so it must materialize.
-            if stage == "C_link":
-                df = df.persist()
-            m = {
-                "stage": stage,
-                "fingerprint": fp,
-                "rows": -1,  # lazily evaluated; counts live in the sink
-                "wall_ms": 0,
-                "total_ms": int((time.time() - t_build) * 1000),
-            }
-            self._record(stage, m)
-            return df, fp
-        m = io_tables.write_stage(df, path, stage, fp, partition_by, mode=mode)
-        m["total_ms"] = int((time.time() - t_build) * 1000)
+        else:
+            t_build = time.time()
+            df = build()
+            if not self.cfg.checkpoints and stage != "E_triples":
+                # fused mode: in-memory stage boundary (final sink still
+                # writes). Only C_link persists: B feeds only C (persisting
+                # both doubles memory for nothing) and D feeds only E
+                # (straight pipeline). C is read by two consumers — the
+                # unlinked-surface derivation driving CC, and the final
+                # rewrite — so it must materialize.
+                if stage == "C_link":
+                    df = df.persist()
+                m = {
+                    "stage": stage,
+                    "fingerprint": fp,
+                    "rows": -1,  # lazily evaluated; counts live in the sink
+                    "wall_ms": 0,
+                    "total_ms": int((time.time() - t_build) * 1000),
+                }
+                self._record(stage, m)
+                return df, fp
+            m = io_tables.write_stage(df, path, stage, fp, partition_by, mode=mode)
+            m["total_ms"] = int((time.time() - t_build) * 1000)
         self._record(stage, m)
+        if stage == "E_triples":
+            return m, fp
         # read back: downstream plans hang off the checkpoint, not the
         # full upstream lineage (bounded plan size; exact resume)
         return io_tables.read_stage(spark, path), fp
@@ -422,13 +420,15 @@ class Pipeline:
         transcripts: DataFrame,
         entity_dict: DataFrame,
         resume: bool = False,
-        stop_after: str | None = None,
-    ) -> DataFrame | None:
-        """Run stages; returns final triples DF (or None if stopped early)."""
+    ) -> dict:
+        """Run Stages A..E and return the sink's manifest: the cumulative
+        published row count and per-bucket counts of E_triples. The run
+        ends at that commit; callers that want the table read it with
+        io_tables.read_stage (as run_simple does)."""
         t0 = time.time()
         # input scale from parquet footers (None for non-file inputs):
         # sizes the publish salt factor without a count job
-        self._est_turns = input_rows_estimate(transcripts)
+        est_turns = input_rows_estimate(transcripts)
 
         # ---- Stage A: ingest + stable ordering (no checkpoint: cheap) ----
         a = stage_ingest(transcripts)
@@ -438,12 +438,9 @@ class Pipeline:
             spark,
             "B_extract",
             self.cfg.input_fingerprint,
-            lambda: extract.stage_extract(a, entity_dict),
+            lambda: extract.stage_extract(a),
             resume,
         )
-        if stop_after == "B":
-            self._flush_metrics(spark, t0)
-            return None
 
         # ---- Stage C: linking ------------------------------------------
         linked, fp_c = self._run_stage(
@@ -453,28 +450,11 @@ class Pipeline:
             lambda: link.stage_link(raw, entity_dict),
             resume,
         )
-        if stop_after == "C":
-            self._flush_metrics(spark, t0)
-            return None
 
         # ---- Stage D: canonicalization ----------------------------------
-        def build_d() -> DataFrame:
-            rewritten, cc = canon.stage_canon(linked)
-            # persist cc labels alongside for audit — but only in
-            # checkpointed runs: fused mode's contract is "no resume, no
-            # audit tables, stage boundaries in memory", and this write
-            # was the one disk job left on the fused path (part of the
-            # measured 1M-turn fixed-overhead regression, r4 verdict
-            # "what's wrong #4"). Ckpt mode keeps the table: resume +
-            # lineage audits read it.
-            if self.cfg.checkpoints:
-                cc.write.mode("overwrite").parquet(self._path("D_cc_labels"))
-            return rewritten
-
-        canoned, fp_d = self._run_stage(spark, "D_canon", fp_c, build_d, resume)
-        if stop_after == "D":
-            self._flush_metrics(spark, t0)
-            return None
+        canoned, fp_d = self._run_stage(
+            spark, "D_canon", fp_c, lambda: canon.stage_canon(linked), resume
+        )
 
         # ---- Stage E: publish -------------------------------------------
         def build_e() -> DataFrame:
@@ -488,20 +468,12 @@ class Pipeline:
             # the measured sizing memoir; the salt splits Zipf-hot buckets
             # — the measured 4N-level straggler, see PUBLISH_SALT_ROWS).
             # Row estimate from input parquet footers: no count job.
-            est_rows = (
-                int(self._est_turns * TRIPLES_PER_TURN_EST)
-                if self._est_turns
-                else None
-            )
+            est_rows = int(est_turns * TRIPLES_PER_TURN_EST) if est_turns else None
             salt = publish_salt_factor(est_rows)
             n_tasks = publish_task_count(
-                est_rows,
-                self.cfg.triple_parts,
-                spark.sparkContext.defaultParallelism,
+                est_rows, N_TRIPLE_PARTS, spark.sparkContext.defaultParallelism
             )
-            with_key = canoned.withColumn(
-                "part_key", part_key_col("subj", self.cfg.triple_parts)
-            )
+            with_key = canoned.withColumn("part_key", part_key_col("subj"))
             if salt > 1:
                 # full-key hash: a single hot subject still splits evenly;
                 # identical rows still co-locate, so dedup is unaffected
@@ -541,8 +513,8 @@ class Pipeline:
             return triples
 
         # append-mode sink: the anti-joined delta is appended, so re-runs
-        # are idempotent and the returned table is always the cumulative set
-        final, _ = self._run_stage(
+        # are idempotent and the manifest always counts the cumulative set
+        sink, _ = self._run_stage(
             spark,
             "E_triples",
             fp_d,
@@ -551,10 +523,10 @@ class Pipeline:
             partition_by=["part_key"],
             mode="append",
         )
-        self._flush_metrics(spark, t0)
-        return final
+        self._flush_metrics(t0)
+        return sink
 
-    def _flush_metrics(self, spark: SparkSession, t0: float) -> None:
+    def _flush_metrics(self, t0: float) -> None:
         path = os.path.join(self.cfg.work_dir, "stage_metrics.json")
         payload = {
             "config": self.cfg.config_hash(),
@@ -573,7 +545,7 @@ def run_simple(
     input_fingerprint: str = "adhoc",
     resume: bool = False,
 ) -> DataFrame:
+    """Run the pipeline and return the published sink table."""
     cfg = PipelineConfig(work_dir=work_dir, input_fingerprint=input_fingerprint)
-    out = Pipeline(cfg).run(spark, transcripts, entity_dict, resume=resume)
-    assert out is not None
-    return out
+    Pipeline(cfg).run(spark, transcripts, entity_dict, resume=resume)
+    return io_tables.read_stage(spark, os.path.join(work_dir, "E_triples"))

@@ -10,7 +10,12 @@ scale-relevant configs are applied uniformly:
 - Arrow enabled, batch size measured not guessed: 50k-row batches (~15 MB
   at transcript text widths) amortize per-batch overhead 1.3-1.8x over the
   old conservative 4096 without worker memory pressure (BENCH/
-  profile_8v32.md); override with KGPIPE_ARROW_BATCH.
+  profile_8v32.md).
+
+Driver memory (8g) and the Arrow batch size are defaults; callers override
+them, or any other setting, through `extra_conf`. Block and parquet codecs
+stay at Spark's own defaults (lz4, snappy), so spark-submit `--conf` values
+for them take effect (the measured lz4-vs-zstd trade: DEPLOY.md §5).
 """
 
 from __future__ import annotations
@@ -60,40 +65,11 @@ def get_spark(
         # gate stays green under the new default: 0.845 checkpointed /
         # 0.834 fused-flat (BENCH/BASELINE.md §1; the scaled-resource
         # fused pair measures 0.772 and is disclosed there).
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("KGPIPE_ARROW_BATCH", "50000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("KGPIPE_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Shuffle/broadcast/spill block codec. zstd trades CPU for shuffle
-        # BYTES; the round-4 A/B showed the trade cuts BOTH ways on this
-        # box, split exactly by the membw_probe saturation knee:
-        #   bandwidth-bound (>=8 cores sharing DRAM): zstd wins — +6% at
-        #     16M/local[8] ckpt (70.7 -> 66.6 s), +1.4% at 64M/local[8];
-        #   CPU-bound (<=4 cores, below the knee): lz4 wins — 16M ckpt
-        #     local[4] 105.3 -> 116.0 s (+10%) and 64M local[2]
-        #     715.9 -> 758.1 s (+6%) under zstd, which flipped the 1->4
-        #     production gate pair from 0.804 PASS to 0.722
-        #     (BENCH/scaling_1v4_ckpt{,_zstd}_16M.md).
-        # Default stays lz4 (Spark's own): the shipped config must be the
-        # one the gate evidence is measured under, and per-executor core
-        # counts on a real cluster sit in the lz4 regime. For clusters
-        # whose shuffle genuinely crosses NICs/spinning disks, set
-        # KGPIPE_IO_CODEC=zstd (DEPLOY.md §5).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("KGPIPE_IO_CODEC", "lz4"),
-        )
-        # Parquet page codec for stage checkpoints + sinks. Same
-        # CPU-vs-bytes trade as the shuffle codec above, probed the same
-        # way (BENCH/BASELINE.md §1); snappy is Spark's default.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("KGPIPE_PARQUET_CODEC", "snappy"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -387,7 +387,7 @@ def incremental_triples(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        raw = extract.stage_extract(batch_df, entity_dict)
+        raw = extract.stage_extract(batch_df)
         linked = link.stage_link(raw, entity_dict)
         triples = (
             linked.withColumn(

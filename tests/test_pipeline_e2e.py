@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kgpipe import extract, oracle, pipeline, schemas
+from kgpipe import canon, extract, io_tables, oracle, pipeline, schemas
 
 
 @pytest.fixture(scope="module")
@@ -63,19 +65,48 @@ def test_order_permutation_invariance(spark, corpus, entity_dict_df, tmp_path, f
     )
 
 
-def test_resume_idempotent(spark, transcripts_df, entity_dict_df, tmp_path, final_triples):
-    """Kill after stage C, resume: final triples + lineage ids identical to
-    an uninterrupted run; second resume publishes zero new rows."""
+def test_resume_idempotent(
+    spark, transcripts_df, entity_dict_df, tmp_path, final_triples, monkeypatch
+):
+    """Crash in Stage D, resume: final triples + lineage ids identical to
+    an uninterrupted run; a full re-run publishes zero new rows. The run
+    ends at the sink commit: it leaves only the stage checkpoints and the
+    metrics file behind, and reads the sink back only for the re-publish
+    anti-join."""
     wd = str(tmp_path / "resume")
     cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint="fix120")
-    p1 = pipeline.Pipeline(cfg)
-    assert p1.run(spark, transcripts_df, entity_dict_df, stop_after="C") is None
 
+    def crash(linked):
+        raise RuntimeError("simulated crash in Stage D")
+
+    with monkeypatch.context() as m:
+        m.setattr(canon, "stage_canon", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict_df)
+    for stage in ("B_extract", "C_link"):
+        assert io_tables.read_manifest(os.path.join(wd, stage)) is not None
+    for stage in ("D_canon", "E_triples"):
+        assert io_tables.read_manifest(os.path.join(wd, stage)) is None
+
+    read_stage = io_tables.read_stage
+    sink_reads = []
+
+    def counting_read(spark_, path):
+        if os.path.basename(path) == "E_triples":
+            sink_reads.append(path)
+        return read_stage(spark_, path)
+
+    monkeypatch.setattr(io_tables, "read_stage", counting_read)
     p2 = pipeline.Pipeline(cfg)
-    out = p2.run(spark, transcripts_df, entity_dict_df, resume=True)
+    sink = p2.run(spark, transcripts_df, entity_dict_df, resume=True)
+    assert len(sink_reads) == 0  # first publish: nothing to anti-join
     stages = {m["stage"]: m for m in p2.metrics}
     assert stages["B_extract"]["skipped"] and stages["C_link"]["skipped"]
-    got = out.toPandas()
+    assert sorted(os.listdir(wd)) == [
+        "B_extract", "C_link", "D_canon", "E_triples", "stage_metrics.json",
+    ]
+    got = read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
+    assert sink["rows"] == len(got)
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "rule_id", "lineage_id"]
     assert set(map(tuple, got[cols].itertuples(index=False))) == set(
         map(tuple, final_triples[cols].itertuples(index=False))
@@ -84,7 +115,9 @@ def test_resume_idempotent(spark, transcripts_df, entity_dict_df, tmp_path, fina
     # idempotent re-publish: a full re-run appends zero new rows — the
     # cumulative sink is byte-identical to the single-run result
     p3 = pipeline.Pipeline(cfg)
-    again = p3.run(spark, transcripts_df, entity_dict_df, resume=False).toPandas()
+    assert p3.run(spark, transcripts_df, entity_dict_df)["rows"] == len(final_triples)
+    assert len(sink_reads) == 1  # the anti-join's read of the published ids
+    again = read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
     assert len(again) == len(final_triples)
     assert set(map(tuple, again[cols].itertuples(index=False))) == set(
         map(tuple, final_triples[cols].itertuples(index=False))

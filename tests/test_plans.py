@@ -123,7 +123,7 @@ def test_stage_a_dirty_input_broadcast_repair(spark, transcripts_df):
     assert plan.count("Window [") == 1
 
 
-def test_extraction_stage_no_shuffle_after_ordering(spark, transcripts_df, entity_dict_df):
+def test_extraction_stage_no_shuffle_after_ordering(spark, transcripts_df):
     """Stage B is narrow: between the conv_id repartition and raw triples
     there must be no further Exchange (ordering windows + extraction are
     all pipelined in one stage)."""
@@ -131,11 +131,11 @@ def test_extraction_stage_no_shuffle_after_ordering(spark, transcripts_df, entit
 
     a = transcripts_df.repartition(8, "conv_id")
     a = extract.with_turn_order(a)
-    raw = extract.stage_extract(a, entity_dict_df)
+    raw = extract.stage_extract(a)
     assert plan_of(raw).count("Exchange") == 1  # only the explicit repartition
 
 
-def test_extraction_kernel_is_map_in_arrow(spark, transcripts_df, entity_dict_df):
+def test_extraction_kernel_is_map_in_arrow(spark, transcripts_df):
     """The extraction hot path is mapInArrow (pure-Arrow RE2 kernel,
     kgpipe/rules.py extract_triples_arrow) — NOT mapInPandas. Pinned so the
     auto-generated PLANS.md can't silently drift from the shipping plan
@@ -145,7 +145,7 @@ def test_extraction_kernel_is_map_in_arrow(spark, transcripts_df, entity_dict_df
     from kgpipe import extract
 
     a = extract.with_turn_order(transcripts_df.repartition(4, "conv_id"))
-    raw = extract.stage_extract(a, entity_dict_df)
+    raw = extract.stage_extract(a)
     plan = plan_of(raw)
     assert "MapInArrow" in plan, plan
     assert "MapInPandas" not in plan, plan
@@ -212,12 +212,12 @@ def test_canon_rewrite_broadcasts_driver_labels_only(spark, monkeypatch):
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        driver_out, _ = canon.stage_canon(linked)  # LSH + driver union-find
+        driver_out = canon.stage_canon(linked)  # LSH + driver union-find
         monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
-        loop_out, _ = canon.stage_canon(linked)  # LSH + iterative loop
+        loop_out = canon.stage_canon(linked)  # LSH + iterative loop
         driver_plan, loop_plan = plan_of(driver_out), plan_of(loop_out)
         monkeypatch.undo()
-        allpairs_out, _ = canon.stage_canon(linked)  # all-pairs on the driver
+        allpairs_out = canon.stage_canon(linked)  # all-pairs on the driver
         allpairs_plan = plan_of(allpairs_out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
@@ -234,14 +234,17 @@ def test_canon_rewrite_broadcasts_driver_labels_only(spark, monkeypatch):
 def test_only_session_reads_env():
     """Deployment settings are read in one place (session.get_spark);
     every other engine module takes its inputs as arguments or constants,
-    so no call site can switch a code path from the environment."""
+    so no call site can switch a code path from the environment. No
+    module names a KGPIPE_* variable at all: session settings go through
+    get_spark's extra_conf or spark-submit --conf."""
     import pathlib
 
     src_dir = pathlib.Path(__file__).resolve().parents[1] / "kgpipe"
+    sources = {p.name: p.read_text() for p in src_dir.glob("*.py")}
     offenders = [
-        p.name
-        for p in src_dir.glob("*.py")
-        if p.name != "session.py" and "os.environ" in p.read_text()
+        name
+        for name, text in sources.items()
+        if (name != "session.py" and "os.environ" in text) or "KGPIPE_" in text
     ]
     assert not offenders, offenders
 

@@ -97,22 +97,40 @@ def test_stateful_applyinpandas_accumulates_across_batches(spark):
     assert (final["total"] == final["last_seen"]).all()
 
 
-def test_resume_from_mid_pipeline_crash(spark, transcripts_df, entity_dict_df, tmp_path):
-    """Simulated crash after Stage C: a resumed full run must skip B and C
+def test_resume_from_mid_pipeline_crash(
+    spark, transcripts_df, entity_dict_df, tmp_path, monkeypatch
+):
+    """Simulated crash in Stage D: a resumed full run must skip B and C
     (manifest fingerprints) and produce the same triples as a clean run."""
-    from kgpipe import pipeline
+    import os
+
+    import pytest
+
+    from kgpipe import canon, io_tables, pipeline
 
     wd_crash = str(tmp_path / "crash")
     cfg = pipeline.PipelineConfig(work_dir=wd_crash, input_fingerprint="crash")
+
+    def crash(linked):
+        raise RuntimeError("simulated crash in Stage D")
+
     p1 = pipeline.Pipeline(cfg)
-    p1.run(spark, transcripts_df, entity_dict_df, stop_after="C")
+    with monkeypatch.context() as m:
+        m.setattr(canon, "stage_canon", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            p1.run(spark, transcripts_df, entity_dict_df)
     assert {m["stage"] for m in p1.metrics} == {"B_extract", "C_link"}
+    for stage in ("B_extract", "C_link"):
+        assert io_tables.read_manifest(os.path.join(wd_crash, stage)) is not None
+    for stage in ("D_canon", "E_triples"):
+        assert io_tables.read_manifest(os.path.join(wd_crash, stage)) is None
 
     p2 = pipeline.Pipeline(pipeline.PipelineConfig(work_dir=wd_crash, input_fingerprint="crash"))
-    out = p2.run(spark, transcripts_df, entity_dict_df, resume=True)
+    p2.run(spark, transcripts_df, entity_dict_df, resume=True)
     by_stage = {m["stage"]: m for m in p2.metrics}
     assert by_stage["B_extract"]["skipped"] and by_stage["C_link"]["skipped"]
     assert not by_stage["D_canon"]["skipped"]
+    out = io_tables.read_stage(spark, os.path.join(wd_crash, "E_triples"))
 
     wd_clean = str(tmp_path / "clean")
     clean = pipeline.run_simple(

@@ -135,12 +135,12 @@ def test_anchor_is_literal_substring_invariant():
         assert (hits & ~anchored).sum() == 0, rule.rule_id
 
 
-def test_prefilter_preserves_triple_set(spark, transcripts_df, entity_dict_df, corpus):
+def test_prefilter_preserves_triple_set(spark, transcripts_df, corpus):
     """Extraction with the JVM anchor prefilter == extraction over every
     turn (pure pushdown, zero semantic effect)."""
     from kgpipe import extract
 
-    got = extract.stage_extract(transcripts_df, entity_dict_df).toPandas()
+    got = extract.stage_extract(transcripts_df).toPandas()
     t = corpus.transcripts.copy()
     t["text_norm"] = rules.normalize_series(t["text"])
     want = rules.extract_triples_batch(t[["conv_id", "turn_idx", "role", "text_norm"]])

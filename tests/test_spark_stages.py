@@ -13,8 +13,8 @@ def _triple_set(pdf: pd.DataFrame, cols=("subj_raw", "pred", "obj_raw")) -> set:
     return set(map(tuple, pdf[list(cols)].drop_duplicates().itertuples(index=False)))
 
 
-def test_stage_extract_matches_oracle(spark, corpus, transcripts_df, entity_dict_df):
-    got = extract.stage_extract(transcripts_df, entity_dict_df).toPandas()
+def test_stage_extract_matches_oracle(spark, corpus, transcripts_df):
+    got = extract.stage_extract(transcripts_df).toPandas()
     t = corpus.transcripts.copy()
     t["text_norm"] = rules.normalize_series(t["text"])
     want = rules.extract_triples_batch(t[["conv_id", "turn_idx", "role", "text_norm"]])

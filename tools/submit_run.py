@@ -33,8 +33,8 @@ def main() -> int:
     cfg = pipeline.PipelineConfig(
         work_dir=ns.work, input_fingerprint=ns.fingerprint or ns.input
     )
-    out = pipeline.Pipeline(cfg).run(spark, transcripts, entity_dict, resume=ns.resume)
-    print("TRIPLES", out.count())
+    sink = pipeline.Pipeline(cfg).run(spark, transcripts, entity_dict, resume=ns.resume)
+    print("TRIPLES", sink["rows"])
     return 0
 
 
