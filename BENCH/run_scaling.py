@@ -91,15 +91,13 @@ print("RESULT " + json.dumps({{"cores": cores, "wall_s": round(best, 2),
 
 def driver_memory(cores: int, resources: str) -> str:
     """spark.driver.memory of one level's child session."""
-    if resources in ("scaled", "heap"):
+    if resources == "scaled":
         # aggregate memory scales with executor count on a real cluster: an
         # N-core level gets N executors' worth of heap, 4N gets 4x. A flat
         # heap would make the larger level GC 4x harder on the same garbage
         # rate — an artifact no real 4N cluster has.
         # capped: heap + tmpfs shuffle files + OS must fit the box's RAM — an
         # uncapped 3g x 32 = 96g heap thrashed the 125G host
-        # ("heap" = diagnostic mode: scaled heap WITHOUT the tmpfs scratch,
-        # to isolate which of the two scaled-protocol knobs moves the number)
         return f"{min(3 * cores, 48)}g"
     # flat-resource mode (primary fused evidence since round 2): both
     # levels get the identical heap and share the default local dir, so
@@ -162,11 +160,11 @@ def main() -> int:
     ap.add_argument("--n4", type=int, default=8, help="large level cores (4N)")
     ap.add_argument(
         "--resources",
-        choices=["scaled", "flat", "heap"],
+        choices=["scaled", "flat"],
         default="scaled",
         help="scaled = heap and scratch disk scale with core count; "
         "flat = identical heap + shared disk at both levels (primary "
-        "fused evidence); heap = scaled heap, shared disk (diagnostic)",
+        "fused evidence)",
     )
     ap.add_argument(
         "--warm-turns",
@@ -231,7 +229,7 @@ trials):
 All trial walls: local[{args.n}] {r8['all_walls']}, local[{args.n4}] {r32['all_walls']}
 (first value = discarded warm-up{warm_note}).
 """
-    suffix = {"scaled": "", "flat": "_flat", "heap": "_heap"}[args.resources]
+    suffix = {"scaled": "", "flat": "_flat"}[args.resources]
     # non-default IO codec (the child session's effective
     # spark.io.compression.codec, e.g. set with PYSPARK_SUBMIT_ARGS="--conf
     # spark.io.compression.codec=zstd pyspark-shell") in the name + md: a

@@ -40,7 +40,7 @@ HEADLINE = [
 ]
 
 WARM_SF = "/root/testdata/sf0.001"
-BENCH_TURNS = int(os.environ.get("KGPIPE_BENCH_TURNS", "1000000"))
+BENCH_TURNS = 1_000_000
 
 
 def force(df) -> None:

@@ -1,8 +1,8 @@
-"""CLI entry point — the spark-submit surface (BASELINE.json north_rule:
-"run via spark-submit --py-files on a multi-executor cluster").
-
-Usage (cluster):
-  spark-submit --py-files kgpipe.zip -m kgpipe.cli run \
+"""CLI entry point for local runs. On a cluster (BASELINE.json north_rule:
+"run via spark-submit --py-files on a multi-executor cluster") the same
+`run` goes through its spark-submit twin, tools/submit_run.py (DEPLOY.md
+§1), since spark-submit runs a script, not a module:
+  spark-submit --py-files kgpipe.zip tools/submit_run.py run \
       --input /path/transcripts.parquet --dict /path/entity_dict.parquet \
       --work /path/workdir [--resume]
 
@@ -17,8 +17,6 @@ import argparse
 import json
 import sys
 import time
-
-from pyspark.sql import functions as F  # noqa: F401  (re-exported for jobs)
 
 from . import io_tables, pipeline, schemas
 from .session import get_spark

@@ -53,19 +53,6 @@ def word_shingles_from_tokens(tok_col: str, n: int = WORD_NGRAM) -> F.Column:
     )
 
 
-def word_shingles(col: str, n: int = WORD_NGRAM):
-    """Convenience single-expression form (tokenizes inline — prefer
-    tokens_col + word_shingles_from_tokens on hot paths)."""
-    toks = f"split(lower(trim(regexp_replace({col}, '\\\\s+', ' '))), ' ')"
-    return F.array_distinct(
-        F.expr(
-            f"CASE WHEN size({toks}) < {n} THEN array(array_join({toks}, ' ')) "
-            f"ELSE transform(sequence(0, size({toks}) - {n}), "
-            f"i -> array_join(slice({toks}, i + 1, {n}), ' ')) END"
-        )
-    )
-
-
 def doc_minhash_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """MinHash-LSH candidate pairs over word shingles with exact-Jaccard
     verification. Returns (a, b, jaccard)."""

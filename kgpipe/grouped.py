@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -78,15 +77,6 @@ def conv_stats_applyinpandas(spark, sf):
 
     t = corpus_dfs(spark, sf)["transcripts"]
     return t.groupBy("conv_id").applyInPandas(conv_stats, CONV_STATS)
-
-
-SENTENCES = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("sent_idx", IntegerType(), False),
-        StructField("n_words", IntegerType(), False),
-    ]
-)
 
 
 _UDTF_SQL = """

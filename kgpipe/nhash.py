@@ -89,10 +89,6 @@ def affine_sql(hb_expr: str, a: int, b: int) -> str:
     return f"(({a} * {hb_expr} + {b}) % {P})"
 
 
-def band_key_sql(mh1_expr: str, mh2_expr: str) -> str:
-    return f"({mh1_expr} * {P} + {mh2_expr})"
-
-
 # -- pure-Python reference (for value pins; no Spark, no DuckDB) -------------
 
 

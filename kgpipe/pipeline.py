@@ -91,7 +91,7 @@ TRIPLES_PER_TURN_EST = 1.15
 PUBLISH_SMALL_TRIPLES = 2_500_000
 
 
-def publish_task_count(rows: int | None, triple_parts: int, parallelism: int) -> int:
+def publish_task_count(rows: int | None, parallelism: int) -> int:
     """Stage-E repartition task count: sink buckets x salt factor, with a
     data-sized small-corpus floor.
 
@@ -114,9 +114,9 @@ def publish_task_count(rows: int | None, triple_parts: int, parallelism: int) ->
     if rows and rows < PUBLISH_SMALL_TRIPLES:
         return max(
             parallelism,
-            min(triple_parts * salt, -(-rows // PUBLISH_ROWS_PER_TASK)),
+            min(N_TRIPLE_PARTS * salt, -(-rows // PUBLISH_ROWS_PER_TASK)),
         )
-    return triple_parts * salt
+    return N_TRIPLE_PARTS * salt
 
 
 def publish_salt_factor(est_rows: int | None) -> int:
@@ -426,19 +426,14 @@ class Pipeline:
         ends at that commit; callers that want the table read it with
         io_tables.read_stage (as run_simple does)."""
         t0 = time.time()
-        # input scale from parquet footers (None for non-file inputs):
-        # sizes the publish salt factor without a count job
-        est_turns = input_rows_estimate(transcripts)
 
-        # ---- Stage A: ingest + stable ordering (no checkpoint: cheap) ----
-        a = stage_ingest(transcripts)
-
-        # ---- Stage B: extraction --------------------------------------
+        # ---- Stage A+B: ingest + stable ordering (no checkpoint of its
+        # own: it runs only when B is built), then extraction -----------
         raw, fp_b = self._run_stage(
             spark,
             "B_extract",
             self.cfg.input_fingerprint,
-            lambda: extract.stage_extract(a),
+            lambda: extract.stage_extract(stage_ingest(transcripts)),
             resume,
         )
 
@@ -467,11 +462,13 @@ class Pipeline:
             # task count = buckets x salt factor (publish_task_count has
             # the measured sizing memoir; the salt splits Zipf-hot buckets
             # — the measured 4N-level straggler, see PUBLISH_SALT_ROWS).
-            # Row estimate from input parquet footers: no count job.
+            # Row estimate from input parquet footers (None for non-file
+            # inputs): no count job.
+            est_turns = input_rows_estimate(transcripts)
             est_rows = int(est_turns * TRIPLES_PER_TURN_EST) if est_turns else None
             salt = publish_salt_factor(est_rows)
             n_tasks = publish_task_count(
-                est_rows, N_TRIPLE_PARTS, spark.sparkContext.defaultParallelism
+                est_rows, spark.sparkContext.defaultParallelism
             )
             with_key = canoned.withColumn("part_key", part_key_col("subj"))
             if salt > 1:

@@ -11,7 +11,6 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -40,16 +39,6 @@ MENTION = StructType(
 )
 MENTIONS_ARRAY = ArrayType(MENTION, False)
 
-RAW_TRIPLE = StructType(
-    [
-        StructField("subj_raw", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj_raw", StringType(), False),
-        StructField("rule_id", StringType(), False),
-    ]
-)
-RAW_TRIPLES_ARRAY = ArrayType(RAW_TRIPLE, False)
-
 # Extraction output (post-explode), before linking.
 RAW_TRIPLES = StructType(
     [
@@ -69,30 +58,5 @@ ENTITY_DICT = StructType(
         StructField("aliases", ArrayType(StringType(), False), False),
         StructField("etype", StringType(), False),
         StructField("prior", DoubleType(), False),
-    ]
-)
-
-# Final published triples.
-TRIPLES = StructType(
-    [
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("rule_id", StringType(), False),
-        StructField("lineage_id", StringType(), False),
-        StructField("part_key", IntegerType(), False),
-    ]
-)
-
-STAGE_METRICS = StructType(
-    [
-        StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("rows_out", LongType(), False),
-        StructField("lineage_id", StringType(), True),
-        StructField("wall_ms", LongType(), True),
-        StructField("ts", TimestampType(), True),
     ]
 )

@@ -72,7 +72,8 @@ def test_resume_idempotent(
     an uninterrupted run; a full re-run publishes zero new rows. The run
     ends at the sink commit: it leaves only the stage checkpoints and the
     metrics file behind, and reads the sink back only for the re-publish
-    anti-join."""
+    anti-join. Stage A runs only when B is built: a resume that skips B
+    does not scan the input."""
     wd = str(tmp_path / "resume")
     cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint="fix120")
 
@@ -96,10 +97,19 @@ def test_resume_idempotent(
             sink_reads.append(path)
         return read_stage(spark_, path)
 
+    stage_ingest = pipeline.stage_ingest
+    ingest_calls = []
+
+    def counting_ingest(transcripts):
+        ingest_calls.append(transcripts)
+        return stage_ingest(transcripts)
+
     monkeypatch.setattr(io_tables, "read_stage", counting_read)
+    monkeypatch.setattr(pipeline, "stage_ingest", counting_ingest)
     p2 = pipeline.Pipeline(cfg)
     sink = p2.run(spark, transcripts_df, entity_dict_df, resume=True)
     assert len(sink_reads) == 0  # first publish: nothing to anti-join
+    assert len(ingest_calls) == 0  # B's manifest matches: no Stage A
     stages = {m["stage"]: m for m in p2.metrics}
     assert stages["B_extract"]["skipped"] and stages["C_link"]["skipped"]
     assert sorted(os.listdir(wd)) == [
@@ -117,6 +127,7 @@ def test_resume_idempotent(
     p3 = pipeline.Pipeline(cfg)
     assert p3.run(spark, transcripts_df, entity_dict_df)["rows"] == len(final_triples)
     assert len(sink_reads) == 1  # the anti-join's read of the published ids
+    assert len(ingest_calls) == 1
     again = read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
     assert len(again) == len(final_triples)
     assert set(map(tuple, again[cols].itertuples(index=False))) == set(
@@ -200,8 +211,8 @@ def test_publish_salt_sizing():
     assert f(18_000_000) == 4   # ~16M-turn corpus
     assert f(74_000_000) == 15  # ~64M-turn corpus
     assert f(10**12) == pipeline.PUBLISH_MAX_SALT
-    assert pipeline.publish_task_count(18_000_000, 128, 8) == 512
-    assert pipeline.publish_task_count(None, 128, 8) == 128
+    assert pipeline.publish_task_count(18_000_000, 8) == 512
+    assert pipeline.publish_task_count(None, 8) == 128
 
 
 def test_ingest_partition_sizing():
