@@ -17,8 +17,9 @@ Layout:
   oracle.py      single-process pandas oracle (golden-fixture producer)
   extract.py     Stage B: mention detection + triple extraction (Arrow UDFs)
   link.py        Stage C: broadcast-dictionary entity linking + top-k
-  canon.py       Stage D: MinHash-LSH blocking + iterative-join connected
-                 components + canonical rewrite
+  canon.py       Stage D: MinHash-LSH blocking (lsh_pairs, the one band
+                 join + Jaccard check, also used by dedup.py) +
+                 iterative-join connected components + canonical rewrite
   pipeline.py    Stage A..E orchestration, checkpoint/resume, metrics
   io_tables.py   Iceberg-style table shim (partitioned parquet + manifest)
   relational.py  SURVEY.md §2 relational operator matrix (queries/oracles)

@@ -15,7 +15,10 @@ was switched from xxhash64 to the md5-affine scheme in round 3 so the
 signature values themselves are reproducible by an external SQL engine
 (the DuckDB oracle) — one md5 per shingle fans out to all hash functions
 via integer multiply-adds, so the swap is performance-neutral (measured;
-see kgqueries.py oracle-ability header).
+see kgqueries.py oracle-ability header). The banding, band self-join and
+exact-Jaccard verify (lsh_pairs) are the one MinHash-LSH blocking core of
+the package: document dedup (dedup.doc_minhash_pairs) feeds it its own
+signature.
 """
 
 from __future__ import annotations
@@ -26,7 +29,6 @@ from pyspark.sql import functions as F
 from . import nhash
 from .rules import (
     JACCARD_THRESHOLD,
-    LSH_BANDS,
     MINHASH_HASHES,
     SHINGLE_K,
     component_labels,
@@ -38,9 +40,10 @@ from .rules import (
 MH_AFFINE = nhash.affine_params(MINHASH_HASHES)
 
 
-def shingles_col(col: str, k: int = SHINGLE_K):
-    """array of distinct char k-shingles of a (normalized) string column —
-    pure SQL `transform(sequence(...), substring(...))`, no UDF."""
+def shingles_col(col: str):
+    """array of distinct char SHINGLE_K-shingles of a (normalized) string
+    column — pure SQL `transform(sequence(...), substring(...))`, no UDF."""
+    k = SHINGLE_K
     return F.array_distinct(
         F.expr(
             f"CASE WHEN length({col}) < {k} THEN array({col}) "
@@ -49,8 +52,9 @@ def shingles_col(col: str, k: int = SHINGLE_K):
     )
 
 
-def minhash_signatures(surfaces: DataFrame, n_hashes: int = MINHASH_HASHES) -> DataFrame:
-    """surfaces[surface] -> one row per surface with mh_0..mh_{n-1}.
+def minhash_signatures(surfaces: DataFrame) -> DataFrame:
+    """surfaces[surface] -> one row per surface with mh_0..mh_{n-1}, one
+    column per MH_AFFINE pair.
 
     MinHash_i(s) = min over shingles of (A_i * baseP(shingle) + B_i) % P —
     ONE engine-neutral md5-prefix base hash per shingle, fanned out to all
@@ -58,84 +62,65 @@ def minhash_signatures(surfaces: DataFrame, n_hashes: int = MINHASH_HASHES) -> D
     hashing MinHash). All builtins, deterministic across runs and cluster
     sizes (never Python hash()), and value-reproducible in the DuckDB
     oracle (kgpipe/nhash.py)."""
-    assert n_hashes <= len(MH_AFFINE), (
-        f"n_hashes={n_hashes} exceeds the {len(MH_AFFINE)} frozen affine "
-        "pairs (MH_AFFINE) — raise MINHASH_HASHES in rules.py so the params "
-        "(and the oracle SQL literals) are regenerated together"
-    )
     ex = surfaces.select(
         "surface", F.explode(shingles_col("surface")).alias("sh")
     ).select("surface", nhash.basep_col(F.col("sh")).alias("hb"))
     aggs = [
         F.min(nhash.affine_col(F.col("hb"), a, b)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(MH_AFFINE[:n_hashes])
+        for i, (a, b) in enumerate(MH_AFFINE)
     ]
     return ex.groupBy("surface").agg(*aggs)
 
 
-def lsh_bands(sig: DataFrame, n_hashes: int = MINHASH_HASHES, bands: int = LSH_BANDS) -> DataFrame:
-    """Reshape signature to (surface, band_id, band_hash) rows. With 2 rows
-    per band the band key is the INJECTIVE pairing mh1 * P + mh2 (< 2^62)
-    — no hash, no collisions, reproducible in SQL."""
-    rows = n_hashes // bands
-    assert rows == 2, "injective band pairing assumes 2 rows per band"
+def lsh_pairs(sh: DataFrame, sig: DataFrame) -> DataFrame:
+    """THE MinHash-LSH blocking core of Stage D (candidate_pairs) and
+    document dedup (dedup.doc_minhash_pairs): sh[id, sh] distinct shingle
+    arrays + sig[id, mh_0..mh_{2k-1}] -> (a, b, jaccard) for every a < b
+    agreeing on at least one of the k 2-row bands, jaccard exact over the
+    shingle sets. Callers own the signature hash and the threshold.
+
+    Band key xxhash64(mh_2b, mh_2b+1): a collision can only add a
+    candidate, which the exact check then scores. The self-join is an
+    EQUI-join on (band_id, band_hash) — never a nested loop (SURVEY.md
+    §2(c) join_theta_selfjoin_lsh)."""
+    n_bands = sum(c.startswith("mh_") for c in sig.columns) // 2
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band_id"),
-                nhash.band_key_col(
-                    F.col(f"mh_{b * rows}"), F.col(f"mh_{b * rows + 1}")
-                ).alias("band_hash"),
+                F.xxhash64(f"mh_{2 * b}", f"mh_{2 * b + 1}").alias("band_hash"),
             )
-            for b in range(bands)
+            for b in range(n_bands)
         ]
     )
-    return sig.select("surface", F.explode(band_structs).alias("band")).select(
-        "surface", "band.band_id", "band.band_hash"
-    )
-
-
-def candidate_pairs(surfaces: DataFrame) -> DataFrame:
-    """LSH blocking self-join -> verified candidate edges (a, b) with exact
-    char-shingle Jaccard >= JACCARD_THRESHOLD.
-
-    The self-join is an EQUI-join on (band_id, band_hash) — blocking keys —
-    never a nested loop (SURVEY.md §2(c) join_theta_selfjoin_lsh).
-    """
-    # surfaces feeds three branches of this DAG (signature + both shingle
-    # sides of the verify join); Spark does not dedupe common subplans, so
-    # persist or the upstream distinct executes three times per action
-    surfaces = surfaces.persist()
-    sig = minhash_signatures(surfaces)
-    bands = lsh_bands(sig)
-    left = bands.select(
-        F.col("surface").alias("a"), "band_id", "band_hash"
-    )
-    right = bands.select(
-        F.col("surface").alias("b"), "band_id", "band_hash"
+    bands = sig.select("id", F.explode(band_structs).alias("bd")).select(
+        "id", "bd.band_id", "bd.band_hash"
     )
     pairs = (
-        left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+        bands.alias("x")
+        .join(bands.alias("y"), ["band_id", "band_hash"])
+        .filter(F.col("x.id") < F.col("y.id"))
+        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         .distinct()
     )
-    sha = surfaces.select(
-        F.col("surface").alias("a"), shingles_col("surface").alias("sh_a")
-    )
-    shb = surfaces.select(
-        F.col("surface").alias("b"), shingles_col("surface").alias("sh_b")
-    )
+    sa = sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a"))
+    sb = sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
     jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    return (
-        pairs.join(sha, "a")
-        .join(shb, "b")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= F.lit(float(JACCARD_THRESHOLD)))
-        .select("a", "b", "jaccard")
-    )
+    return pairs.join(sa, "a").join(sb, "b").select("a", "b", jac.alias("jaccard"))
+
+
+def candidate_pairs(surfaces: DataFrame) -> DataFrame:
+    """Stage D's blocking: md5-affine MinHash signatures through lsh_pairs
+    -> verified edges (a, b, jaccard), jaccard >= JACCARD_THRESHOLD."""
+    # surfaces feeds two branches of this DAG (the signature and the
+    # verify side's shingle sets); Spark does not dedupe common subplans,
+    # so persist or the upstream distinct executes twice per action
+    surfaces = surfaces.persist()
+    sig = minhash_signatures(surfaces).withColumnRenamed("surface", "id")
+    sh = surfaces.select(F.col("surface").alias("id"), shingles_col("surface").alias("sh"))
+    return lsh_pairs(sh, sig).filter(F.col("jaccard") >= F.lit(float(JACCARD_THRESHOLD)))
 
 
 # Below this many (symmetrized) edges the component graph fits trivially on

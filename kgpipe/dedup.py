@@ -5,15 +5,19 @@ The reference's dedup capability is pairwise creator-name comparison
 100 TB corpus pipeline needs: exact hash dedup, MinHash+LSH banding,
 SimHash hamming buckets, n-gram Jaccard verification — all candidate
 generation via equi-joins on block keys, never O(n²) nested loops, and all
-hashing JVM-side inside whole-stage codegen.
+hashing JVM-side inside whole-stage codegen. The MinHash band join and
+exact-Jaccard check are canon.lsh_pairs, the blocking core Stage D uses
+too; this module supplies only the word-shingle signature.
 
 Hash policy (round 3, measured): operators whose OUTPUT exposes
 hash-derived values use the engine-neutral md5-prefix scheme
 (kgpipe/nhash.py) so the DuckDB oracle can reproduce them —
 simhash_df/dedup_simhash (upgraded to a full SQL value check; md5 vs
 xxhash64 measured neutral there, -3% median at sf0.1). doc_minhash_pairs
-keeps xxhash64: the md5 swap measured +26% median on the dedup headline
-(over the 15% budget) and its Jaccard-edge oracle never sees hash values.
+keeps an xxhash64 signature: the md5 swap measured +26% median on the
+dedup headline (over the 15% budget) and its Jaccard-edge oracle never
+sees hash values. LSH band keys are xxhash64 everywhere: no operator
+output or oracle exposes them.
 """
 
 from __future__ import annotations
@@ -21,12 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import nhash
+from . import canon, nhash
 from .qreg import load, register
 
 WORD_NGRAM = 3
 DOC_MINHASH = 32
-DOC_BANDS = 16
 DOC_JACCARD = 0.5
 
 SIMHASH_BITS = 60  # md5-prefix base hash is 60 bits (15 hex digits)
@@ -38,12 +41,14 @@ def tokens_col(col: str) -> F.Column:
     return F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " ")
 
 
-def word_shingles_from_tokens(tok_col: str, n: int = WORD_NGRAM) -> F.Column:
-    """array of distinct word n-grams over a MATERIALIZED token-array
-    column — builtin transform, no UDF. Tokenization must happen in a prior
-    projection: higher-order-function lambdas are interpreted per element,
-    so an inlined `split(regexp_replace(...))` would re-run the regex for
-    every n-gram (measured ~4x slower at sf0.1)."""
+def word_shingles_from_tokens(tok_col: str) -> F.Column:
+    """array of distinct word WORD_NGRAM-grams over a MATERIALIZED
+    token-array column — builtin transform, no UDF. Tokenization must
+    happen in a prior projection: higher-order-function lambdas are
+    interpreted per element, so an inlined `split(regexp_replace(...))`
+    would re-run the regex for every n-gram (measured ~4x slower at
+    sf0.1)."""
+    n = WORD_NGRAM
     return F.array_distinct(
         F.expr(
             f"CASE WHEN size({tok_col}) < {n} THEN array(array_join({tok_col}, ' ')) "
@@ -53,13 +58,15 @@ def word_shingles_from_tokens(tok_col: str, n: int = WORD_NGRAM) -> F.Column:
     )
 
 
-def doc_minhash_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """MinHash-LSH candidate pairs over word shingles with exact-Jaccard
-    verification. Returns (a, b, jaccard)."""
-    # base feeds three DAG branches (signature + both verify sides) —
+def doc_minhash_pairs(docs: DataFrame) -> DataFrame:
+    """MinHash-LSH candidate pairs of docs[doc_id, text] over word
+    shingles, through the shared blocking core (canon.lsh_pairs) with
+    exact-Jaccard verification. Returns (a, b, jaccard), jaccard rounded
+    to 4 places."""
+    # sh feeds three DAG branches (signature + both verify sides) —
     # persist, or the shingle computation runs three times per action
-    base = (
-        docs.select(F.col(id_col).alias("id"), tokens_col(text_col).alias("toks"))
+    sh = (
+        docs.select(F.col("doc_id").alias("id"), tokens_col("text").alias("toks"))
         .select("id", word_shingles_from_tokens("toks").alias("sh"))
         .persist()
     )
@@ -71,56 +78,19 @@ def doc_minhash_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "
     # which never looks at hash values, so the entry keeps its full value
     # oracle either way. Operators that EXPOSE hash-derived values
     # (canon.minhash_signatures, simhash_df) use nhash instead.
-    ex = base.select("id", F.explode("sh").alias("s"))
+    ex = sh.select("id", F.explode("sh").alias("s"))
     sig = ex.groupBy("id").agg(
         *[F.min(F.xxhash64(F.lit(i), F.col("s"))).alias(f"mh_{i}") for i in range(DOC_MINHASH)]
     )
-    rows = DOC_MINHASH // DOC_BANDS
-    bands = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            *[F.col(f"mh_{b * rows + r}") for r in range(rows)]
-                        ).alias("band_hash"),
-                    )
-                    for b in range(DOC_BANDS)
-                ]
-            )
-        ).alias("bd"),
-    ).select("id", "bd.band_id", "bd.band_hash")
-    pairs = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["band_id", "band_hash"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .distinct()
-    )
-    sa = base.select(F.col("id").alias("a"), F.col("sh").alias("sh_a"))
-    sb = base.select(F.col("id").alias("b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        pairs.join(sa, "a")
-        .join(sb, "b")
-        .select(
-            "a",
-            "b",
-            F.round(F.when(union > 0, inter / union).otherwise(F.lit(1.0)), 4).alias(
-                "jaccard"
-            ),
-        )
-    )
+    return canon.lsh_pairs(sh, sig).withColumn("jaccard", F.round("jaccard", 4))
 
 
-def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """60-bit SimHash per document: per bit, sum +1/-1 over token-hash bits;
-    bit set iff the sum is positive. Shape: explode tokens -> hash ONCE per
-    token -> ONE codegen'd HashAggregate (map-side partial agg, so the
-    shuffle carries a handful of longs per doc, not the tokens).
+def simhash_df(docs: DataFrame) -> DataFrame:
+    """60-bit SimHash per document of docs[doc_id, text]: per bit, sum
+    +1/-1 over token-hash bits; bit set iff the sum is positive. Shape:
+    explode tokens -> hash ONCE per token -> ONE codegen'd HashAggregate
+    (map-side partial agg, so the shuffle carries a handful of longs per
+    doc, not the tokens).
 
     The token hash is the engine-neutral 60-bit md5 prefix (nhash.py), so
     the signature — and everything derived from it — is bit-identical in
@@ -136,7 +106,7 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     unpacked agg. Branch-free vote test: the +1/-1 vote sum is
     2*bits_i - n, so "sum positive" == "2*bits_i > n"."""
     toks = docs.select(
-        F.col(id_col).alias("id"), F.explode(tokens_col(text_col)).alias("t")
+        F.col("doc_id").alias("id"), F.explode(tokens_col("text")).alias("t")
     ).select("id", nhash.base60_col(F.col("t")).alias("h"))
     lanes = []
     for j in range(SIMHASH_BITS // 4):

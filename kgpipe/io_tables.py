@@ -4,8 +4,10 @@ Production target is Iceberg (`df.writeTo("cat.db.triples").append()`,
 partitioned by bucket(subj) — BASELINE.json: "partitioned Iceberg triple
 tables"); the sandbox has no Iceberg runtime and no network for jars
 (SURVEY.md §0.5), so this module exposes the minimal surface the pipeline
-needs — append / read / manifest — over parquet + a JSON manifest, and the
-real Iceberg calls sit behind the same functions gated on a config flag.
+needs — append / read / manifest — over parquet paths + a JSON manifest.
+Iceberg is not wired: every function here reads and writes parquet paths,
+and an Iceberg port would replace their bodies behind the same signatures
+(DEPLOY.md §1).
 
 The manifest carries the stage fingerprint and per-partition row counts that
 power exact resume (BASELINE.json: "checkpoints per-partition triple counts,
@@ -76,8 +78,14 @@ def write_stage(
         # parquet data files, so read-back must not depend on inference
         "schema": df.schema.jsonValue(),
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
+    # write-then-rename: a crash mid-dump leaves the previous manifest
+    # whole, never a truncated one. The temp name keeps the leading "_",
+    # so Spark's parquet reader skips a leftover one (the footer walk
+    # above reads *.parquet only).
+    tmp = os.path.join(path, MANIFEST + ".tmp")
+    with open(tmp, "w") as f:
         json.dump(manifest, f, indent=1)
+    os.replace(tmp, os.path.join(path, MANIFEST))
     return manifest
 
 

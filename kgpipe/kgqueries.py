@@ -73,19 +73,14 @@ CORPUS_DIR = synth.stage_corpus(ORACLE_CONVS)  # import-time: path is static
 _CACHE: dict[str, dict[str, DataFrame]] = {}
 
 
-def _convs_for(sf_dir: str) -> int:
-    return ORACLE_CONVS
-
-
 def corpus_dfs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Parquet-backed corpus scan (a real source operator, not a
     createDataFrame upload). Cache key includes applicationId — unique per
     SparkSession — so a recycled id(spark) address can never serve
     DataFrames owned by a dead session."""
-    n = _convs_for(sf_dir)
-    key = f"{spark.sparkContext.applicationId}|{n}"
+    key = f"{spark.sparkContext.applicationId}|{ORACLE_CONVS}"
     if key not in _CACHE:
-        d = synth.stage_corpus(n)
+        d = synth.stage_corpus(ORACLE_CONVS)
         t = spark.read.parquet(f"{d}/transcripts.parquet").cache()
         e = spark.read.parquet(f"{d}/entity_dict.parquet").cache()
         _CACHE[key] = {"transcripts": t, "entity_dict": e}
@@ -106,7 +101,7 @@ _STAGE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _stage(spark: SparkSession, sf: str, which: str) -> DataFrame:
-    key = (f"{spark.sparkContext.applicationId}|{_convs_for(sf)}", which)
+    key = (f"{spark.sparkContext.applicationId}|{ORACLE_CONVS}", which)
     if key not in _STAGE_CACHE:
         d = corpus_dfs(spark, sf)
         if which == "raw":
@@ -142,7 +137,7 @@ def _ckpt_run(spark: SparkSession, sf: str) -> str:
     registry entries expose different facets of the same pipeline artifacts
     (triple table, metrics, sink layout, resume) — run it once, reuse the
     work_dir."""
-    key = f"{spark.sparkContext.applicationId}|{_convs_for(sf)}"
+    key = f"{spark.sparkContext.applicationId}|{ORACLE_CONVS}"
     if key not in _CKPT_RUNS:
         d = corpus_dfs(spark, sf)
         wd = tempfile.mkdtemp(prefix="kgm_")

@@ -1,9 +1,10 @@
 """Engine-neutral 60-bit hashing for oracle-checkable sketch operators.
 
 xxhash64 is JVM-internal: any operator whose OUTPUT exposes hash-derived
-values (MinHash signatures, SimHash bits, LSH band keys) could not be
-value-checked by an external SQL engine, leaving those registry entries
-rows-only for the correctness driver. These primitives define the hash in
+values (MinHash signatures, SimHash bits) could not be value-checked by an
+external SQL engine, leaving those registry entries with row-count checks
+only. LSH band keys stay xxhash64 (canon.lsh_pairs): no operator output or
+oracle exposes them. These primitives define the hash in
 terms both Spark and DuckDB evaluate identically:
 
   base60(x) = CAST(hex_prefix15(md5(x)) AS BIGINT)          60-bit, [0, 2^60)
@@ -65,13 +66,6 @@ def basep_col(col: Column) -> Column:
 
 def affine_col(hb: Column, a: int, b: int) -> Column:
     return (F.lit(a) * hb + F.lit(b)) % F.lit(P)
-
-
-def band_key_col(mh1: Column, mh2: Column) -> Column:
-    """INJECTIVE key for a 2-row LSH band: mh1 * P + mh2 (both < P, so the
-    product stays < 2^62 and distinct pairs can never collide — strictly
-    better than hashing the pair)."""
-    return mh1 * F.lit(P) + mh2
 
 
 # -- DuckDB / ANSI SQL side --------------------------------------------------

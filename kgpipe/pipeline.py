@@ -152,17 +152,17 @@ def input_rows_estimate(df) -> int | None:
         return None
 
 
-def part_key_col(subj: str = "subj", parts: int = N_TRIPLE_PARTS) -> F.Column:
-    """Deterministic sink bucket of a subject: first 60 bits of sha2-256 as
-    a bigint, mod the bucket count. sha2 instead of xxhash64 so the bucket
-    function is reproducible outside the JVM (DuckDB:
-    CAST('0x' || substr(sha256(subj), 1, 15) AS BIGINT) % parts) — the
-    driver's SQL oracle can then verify the physical sink layout, not just
-    the logical triple set. One extra hash per triple on an already
-    shuffle-bound stage; still whole-stage-codegen."""
+def part_key_col() -> F.Column:
+    """Deterministic sink bucket of the subj column: first 60 bits of
+    sha2-256 as a bigint, mod N_TRIPLE_PARTS. sha2 instead of xxhash64 so
+    the bucket function is reproducible outside the JVM (DuckDB:
+    CAST('0x' || substr(sha256(subj), 1, 15) AS BIGINT) % N_TRIPLE_PARTS)
+    — the DuckDB SQL oracle can then verify the physical sink layout,
+    not just the logical triple set. One extra hash per triple on an
+    already shuffle-bound stage; still whole-stage-codegen."""
     return F.pmod(
-        F.conv(F.substring(F.sha2(F.col(subj), 256), 1, 15), 16, 10).cast("bigint"),
-        F.lit(parts),
+        F.conv(F.substring(F.sha2(F.col("subj"), 256), 1, 15), 16, 10).cast("bigint"),
+        F.lit(N_TRIPLE_PARTS),
     ).cast("int")
 
 
@@ -214,6 +214,41 @@ def lineage_col() -> F.Column:
         1,
         32,
     )
+
+
+def publish_triples(canoned: DataFrame, salt: int, n_tasks: int) -> DataFrame:
+    """Stage E before the sink anti-join: part_key, optional salt, ONE
+    shuffle on (part_key[, _salt]), hash-aggregate dedup, lineage ids
+    (single shuffle pinned by tests/test_plans.py). The partitioned write
+    then fans out to (buckets x salt) clean files instead of (tasks x
+    partitions) small ones."""
+    with_key = canoned.withColumn("part_key", part_key_col())
+    if salt > 1:
+        # full-key hash: a single hot subject still splits evenly;
+        # identical rows still co-locate, so dedup is unaffected
+        with_key = with_key.withColumn(
+            "_salt",
+            F.pmod(
+                F.xxhash64("subj", "pred", "obj", "conv_id", "turn_idx", "rule_id"),
+                F.lit(salt),
+            ).cast("int"),
+        )
+        with_key = with_key.repartition(n_tasks, "part_key", "_salt")
+    else:
+        with_key = with_key.repartition(n_tasks, "part_key")
+    # dedup as a hash aggregate over the full key: part_key (and _salt,
+    # itself a function of key columns) are in the grouping set, so the
+    # existing partitioning satisfies the aggregate's clustering
+    # requirement — no second shuffle — and a HashAggregate beats the
+    # previous sort-based window dedup (row_number over a 7-column sort)
+    # by skipping the O(n log n) multi-string sort entirely; the
+    # partitioned write only re-sorts by part_key, not the whole key. All
+    # columns are key columns, so distinct == keep-any, same as
+    # row_number()=1.
+    triples = with_key.distinct()
+    if salt > 1:
+        triples = triples.drop("_salt")
+    return triples.withColumn("lineage_id", lineage_col())
 
 
 INGEST_TURNS_PER_PART = 1_000_000
@@ -453,12 +488,6 @@ class Pipeline:
 
         # ---- Stage E: publish -------------------------------------------
         def build_e() -> DataFrame:
-            # ONE shuffle: repartition on (part_key, salt), then
-            # hash-aggregate dedup on the full triple key — both partition
-            # expressions are grouping columns, so the aggregate's
-            # clustering requirement is satisfied with no second shuffle —
-            # and the partitioned write fans out to (buckets x salt) clean
-            # files instead of (tasks x partitions) small ones.
             # task count = buckets x salt factor (publish_task_count has
             # the measured sizing memoir; the salt splits Zipf-hot buckets
             # — the measured 4N-level straggler, see PUBLISH_SALT_ROWS).
@@ -470,36 +499,7 @@ class Pipeline:
             n_tasks = publish_task_count(
                 est_rows, spark.sparkContext.defaultParallelism
             )
-            with_key = canoned.withColumn("part_key", part_key_col("subj"))
-            if salt > 1:
-                # full-key hash: a single hot subject still splits evenly;
-                # identical rows still co-locate, so dedup is unaffected
-                with_key = with_key.withColumn(
-                    "_salt",
-                    F.pmod(
-                        F.xxhash64(
-                            "subj", "pred", "obj", "conv_id", "turn_idx",
-                            "rule_id",
-                        ),
-                        F.lit(salt),
-                    ).cast("int"),
-                )
-                with_key = with_key.repartition(n_tasks, "part_key", "_salt")
-            else:
-                with_key = with_key.repartition(n_tasks, "part_key")
-            # dedup as a hash aggregate over the full key: part_key (and
-            # _salt, itself a function of key columns) are in the grouping
-            # set, so the existing partitioning satisfies the aggregate's
-            # clustering requirement — no second shuffle — and a
-            # HashAggregate beats the previous sort-based window dedup
-            # (row_number over a 7-column sort) by skipping the O(n log n)
-            # multi-string sort entirely; the partitioned write below only
-            # re-sorts by part_key, not the whole key. All columns are key
-            # columns, so distinct == keep-any, same as row_number()=1.
-            triples = with_key.distinct()
-            if salt > 1:
-                triples = triples.drop("_salt")
-            triples = triples.withColumn("lineage_id", lineage_col())
+            triples = publish_triples(canoned, salt, n_tasks)
             # idempotent publish: drop lineage ids already in the sink
             final_path = self._path("E_triples")
             if io_tables.read_manifest(final_path) is not None:

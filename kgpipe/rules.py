@@ -278,8 +278,9 @@ def detect_mentions_batch(
 # Canonicalization constants shared by Spark canon.py and the oracle.
 # --------------------------------------------------------------------------
 SHINGLE_K = 3  # character shingle width
-MINHASH_HASHES = 32  # total hash functions
-LSH_BANDS = 16  # 16 bands x 2 rows: P(candidate)≈0.99 at Jaccard 0.5
+# total hash functions; LSH bands are 2 rows each, so 16 bands:
+# P(candidate)≈0.99 at Jaccard 0.5
+MINHASH_HASHES = 32
 # verify-filter on candidate pairs; 0.5 keeps short-name 1-edit variants
 # (e.g. "rob larspur"/"rob larkspur", J=0.583) in the same component while
 # distinct names (J≈0.2) stay apart

@@ -28,12 +28,10 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "kgpipe",
     master: str | None = None,
-    cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     if master is None:
         master = f"local[{cores}]"
     if shuffle_partitions is None:

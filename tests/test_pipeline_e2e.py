@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
@@ -181,10 +182,9 @@ def test_salted_publish_matches_unsalted(
     spark, transcripts_df, entity_dict_df, tmp_path, final_triples, monkeypatch
 ):
     """Hot-bucket salting (the large-corpus default, forced here on the
-    fixture): identical triple set + lineage + part_key, and the salted
-    dedup stays a single shuffle (the salt is a function of the full dedup
-    key, so the aggregate's clustering requirement is met by the salted
-    exchange)."""
+    fixture): identical triple set + lineage + part_key. That the salted
+    dedup stays a single shuffle is pinned in
+    tests/test_plans.py::test_stage_e_is_single_shuffle."""
     monkeypatch.setattr(pipeline, "publish_salt_factor", lambda rows: 4)
     out = pipeline.run_simple(
         spark, transcripts_df, entity_dict_df, str(tmp_path / "salted"),
@@ -198,6 +198,26 @@ def test_salted_publish_matches_unsalted(
     want = final_triples[cols].sort_values(cols).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want)
     assert "_salt" not in out.columns
+
+
+def test_torn_manifest_write_keeps_previous_manifest(spark, tmp_path, monkeypatch):
+    """A crash while a stage's manifest is being dumped (here: the second
+    append to a sink) must leave the previous manifest readable — never a
+    truncated file that read_manifest would choke on at the next run's
+    publish anti-join."""
+    path = str(tmp_path / "sink")
+    df = spark.createDataFrame([("s", 1)], "subj string, n int")
+    first = io_tables.write_stage(df, path, "E_triples", "fp1", mode="append")
+
+    def torn_dump(obj, f, **kwargs):
+        f.write(json.dumps(obj)[:20])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(io_tables.json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        io_tables.write_stage(df, path, "E_triples", "fp2", mode="append")
+    monkeypatch.undo()
+    assert io_tables.read_manifest(path) == first
 
 
 def test_publish_salt_sizing():

@@ -4,6 +4,7 @@ final stage, no row-at-a-time Python anywhere (SURVEY.md §4)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -47,24 +48,46 @@ def test_topk_no_global_sort(spark):
 
 
 def test_stage_e_is_single_shuffle(spark):
-    """Final dedup+partition: exactly ONE Exchange — the part_key
-    repartition; the hash-aggregate dedup must ride it (part_key is in the
-    grouping set, so hash(part_key) satisfies the clustering requirement),
-    and there must be no sort in the dedup itself."""
+    """Final dedup+partition, planned from Stage E's own code
+    (pipeline.publish_triples), unsalted and salted: exactly ONE Exchange
+    — the (part_key[, _salt]) repartition; the hash-aggregate dedup must
+    ride it (both partition columns are in the grouping set, so the
+    clustering requirement is met), and there must be no sort in the
+    dedup itself."""
     from kgpipe import pipeline
 
     canoned = spark.createDataFrame(
         [("s", "p", "o", "c", 0, "R1")],
         "subj string, pred string, obj string, conv_id string, turn_idx int, rule_id string",
     )
-    with_key = canoned.withColumn(
-        "part_key", pipeline.part_key_col("subj", 64)
-    ).repartition(64, "part_key")
-    triples = with_key.distinct()
-    plan = plan_of(triples)
-    assert plan.count("Exchange") == 1
-    assert "HashAggregate" in plan
-    assert "Sort" not in plan
+    for salt in (1, 4):
+        plan = plan_of(pipeline.publish_triples(canoned, salt, 64 * salt))
+        assert plan.count("Exchange") == 1, plan
+        assert "HashAggregate" in plan
+        assert "Sort" not in plan
+
+
+@pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs"])
+def test_lsh_candidates_never_nested_loop(spark, blocking):
+    """Both MinHash-LSH callers get their candidates from the band
+    EQUI-join in canon.lsh_pairs (SURVEY.md §2(c)): the executed plan has
+    hash or sort-merge joins and never a nested loop or a cartesian
+    product."""
+    from kgpipe import canon, dedup
+    from kgpipe.qreg import load
+
+    if blocking == "candidate_pairs":
+        names = ["grace hopper", "grace hoppe", "alan turing", "alan turin", "zed"]
+        df = canon.candidate_pairs(
+            spark.createDataFrame([(n,) for n in names], "surface string")
+        )
+    else:
+        df = dedup.doc_minhash_pairs(load(spark, SF, "documents"))
+    df.collect()
+    plan = plan_of(df)
+    assert "SortMergeJoin" in plan or "HashJoin" in plan, plan
+    assert "NestedLoopJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
 
 
 def test_stage_a_clean_input_is_shuffle_free(spark, transcripts_df):

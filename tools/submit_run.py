@@ -1,7 +1,7 @@
 """spark-submit entry script (the cluster twin of `python -m kgpipe.cli`):
 
   spark-submit --master <cluster> --py-files kgpipe.zip tools/submit_run.py \
-      run --input <table/path> --dict <path> --work <path> [--resume]
+      run --input <parquet path> --dict <parquet path> --work <path> [--resume]
 
 Uses the session spark-submit provides instead of building its own.
 """
