@@ -23,8 +23,7 @@ def main() -> int:
 
     from kgpipe import oracle, synth
 
-    n_convs = max(200, args.turns // 70)
-    c = synth.generate(n_convs=n_convs)
+    c = synth.generate(n_convs=synth.scale_for_turns(args.turns))
     t0 = time.time()
     out = oracle.run_pipeline(c.transcripts, c.entity_dict)
     wall = time.time() - t0

@@ -5,17 +5,24 @@ Sandbox protocol (SURVEY.md §6.1): no multi-node cluster exists here, so
 the two cluster sizes are two taskset-pinned parallelism levels (default
 local[2] vs local[8] — the regime where cores, not the box's shared
 memory bus, are the binding constraint; see BENCH/profile_8v32.md) on the
-SAME seeded corpus, each in a fresh JVM subprocess with shuffle
-partitions pinned to 2x cores. Each level runs one warm-up pass
-(JIT/codegen) then `trials` measured passes; best-of is reported (the
-machine is shared, so min is the least-noise estimator). MEASUREMENT
-HYGIENE: results are only valid if nothing else runs on the box — a
-concurrent pytest/crosscheck session (unpinned, local[32]) steals the
-pinned cores and inflates the small level's walls arbitrarily.
+SAME seeded corpus (`synth.stage_corpus`), each in a fresh JVM subprocess.
+The subprocess is this script again, `--child` first and the parent's
+options after it; it gets SPARK_GRAFT_CPUS=cores, from which `get_spark`
+derives local[cores] and 2x cores shuffle partitions. Both levels run on
+the session defaults (8g driver heap, default local dir: the "flat"
+resource protocol), so the efficiency number cannot be an artifact of
+per-level resources. Each level runs one warm-up pass (JIT/codegen) then
+`trials` measured passes through `bench.run_kg_pipeline`; best-of is
+reported (the machine is shared, so min is the least-noise estimator).
+MEASUREMENT HYGIENE: results are only valid if nothing else runs on the
+box — a concurrent pytest session steals the pinned cores and inflates
+the small level's walls arbitrarily.
 
-Writes BENCH/BASELINE.md and prints a JSON summary.
+Writes BENCH/scaling_{n}v{n4}_{mode}_flat_{turns}M.{md,json} (the .json
+sidecar keeps each level's per-stage walls) and prints a JSON summary.
 
-Usage: python BENCH/run_scaling.py [--turns 1000000] [--trials 2]
+Usage: python BENCH/run_scaling.py [--turns 10000000] [--trials 2]
+           [--mode fused|ckpt] [--n 2] [--n4 8] [--warm-turns N]
 """
 
 from __future__ import annotations
@@ -25,127 +32,15 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-CHILD = r"""
-import json, sys, time, tempfile
-sys.path.insert(0, {repo!r})
-from kgpipe import pipeline, schemas
-from kgpipe.session import get_spark
-
-cores = {cores}
-corpus = {corpus!r}
-warm_corpus = {warm_corpus!r}  # trial 0 (discarded) runs here; same code paths
-scaled = {scaled!r} == "scaled"  # tmpfs scratch only in full scaled mode
-# resource-scaled mode: shuffle + stage sinks on tmpfs (a real N-node
-# cluster has N nodes' worth of local disk; one shared root disk caps the
-# larger level's I/O exactly where a real cluster would scale it).
-# flat mode: default local dir — both levels share the same disk budget.
-import os as _os
-import tempfile as _tf
-extra = {{"spark.driver.memory": {driver_mem!r}}}
-if scaled:
-    shm = f"/dev/shm/kgscale_{{cores}}"
-    _os.makedirs(shm, exist_ok=True)
-    extra["spark.local.dir"] = shm
-else:
-    shm = _tf.gettempdir()
-spark = get_spark(
-    "scaling",
-    master=f"local[{{cores}}]",
-    shuffle_partitions=2 * cores,
-    extra_conf=extra,
-)
-spark.sparkContext.setLogLevel("ERROR")
-
-walls = []
-stage_ms = None
-for trial in range({trials} + 1):  # trial 0 = warm-up
-    src = warm_corpus if trial == 0 else corpus
-    t = spark.read.schema(schemas.TRANSCRIPTS).parquet(src + "/transcripts.parquet")
-    e = spark.read.schema(schemas.ENTITY_DICT).parquet(src + "/entity_dict.parquet")
-    t0 = time.time()
-    cfg = pipeline.PipelineConfig(
-        work_dir=tempfile.mkdtemp(prefix=f"scale{{cores}}_{{trial}}_", dir=shm),
-        input_fingerprint=f"scale{{trial}}",
-        checkpoints={checkpoints},
-    )
-    p = pipeline.Pipeline(cfg)
-    n = p.run(spark, t, e)["rows"]
-    walls.append(time.time() - t0)
-    stage_ms = {{m["stage"]: m["total_ms"] for m in p.metrics}}
-    spark.catalog.clearCache()
-    import shutil
-    shutil.rmtree(cfg.work_dir, ignore_errors=True)
-best = min(walls[1:])
-codec = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
-print("RESULT " + json.dumps({{"cores": cores, "wall_s": round(best, 2),
-                               "all_walls": [round(w, 2) for w in walls],
-                               "triples": n, "stage_ms": stage_ms,
-                               "triples_per_sec": round(n / best, 1),
-                               "io_codec": codec}}))
-"""
+from bench import run_kg_pipeline  # noqa: E402
+from kgpipe import session, synth  # noqa: E402
 
 
-def driver_memory(cores: int, resources: str) -> str:
-    """spark.driver.memory of one level's child session."""
-    if resources == "scaled":
-        # aggregate memory scales with executor count on a real cluster: an
-        # N-core level gets N executors' worth of heap, 4N gets 4x. A flat
-        # heap would make the larger level GC 4x harder on the same garbage
-        # rate — an artifact no real 4N cluster has.
-        # capped: heap + tmpfs shuffle files + OS must fit the box's RAM — an
-        # uncapped 3g x 32 = 96g heap thrashed the 125G host
-        return f"{min(3 * cores, 48)}g"
-    # flat-resource mode (primary fused evidence since round 2): both
-    # levels get the identical heap and share the default local dir, so
-    # the efficiency number cannot be an artifact of the per-level
-    # resource scaling above
-    return "8g"
-
-
-def run_level(
-    cores: int, corpus: str, trials: int, checkpoints: bool, resources: str,
-    warm_corpus: str | None = None,
-) -> dict:
-    code = CHILD.format(
-        repo=REPO,
-        cores=cores,
-        corpus=corpus,
-        warm_corpus=warm_corpus or corpus,
-        trials=trials,
-        checkpoints=checkpoints,
-        scaled=resources,
-        driver_mem=driver_memory(cores, resources),
-    )
-    # pin the process tree to exactly `cores` CPUs: a local[N] JVM otherwise
-    # borrows idle cores for Python workers/GC/shuffle threads, which a real
-    # N-core executor does not have — unpinned, the small level's throughput
-    # is inflated and the N->4N comparison is unfair
-    env = dict(os.environ)
-    # kgpipe must be importable in the child's PYTHON WORKERS, not just its
-    # driver (the CHILD template's sys.path.insert only covers the driver):
-    # workers resolve imports via PYTHONPATH, which previously worked only
-    # because every invocation happened to cwd at the repo root.
-    env["PYTHONPATH"] = REPO + (
-        os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""
-    )
-    out = subprocess.run(
-        ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=7200,
-        env=env,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise RuntimeError(f"no RESULT from local[{cores}]:\n{out.stderr[-2000:]}")
-
-
-def main() -> int:
+def parse_args(argv: list[str]) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--turns", type=int, default=10_000_000)
     ap.add_argument("--trials", type=int, default=2)
@@ -159,14 +54,6 @@ def main() -> int:
     ap.add_argument("--n", type=int, default=2, help="small level cores (N)")
     ap.add_argument("--n4", type=int, default=8, help="large level cores (4N)")
     ap.add_argument(
-        "--resources",
-        choices=["scaled", "flat"],
-        default="scaled",
-        help="scaled = heap and scratch disk scale with core count; "
-        "flat = identical heap + shared disk at both levels (primary "
-        "fused evidence)",
-    )
-    ap.add_argument(
         "--warm-turns",
         type=int,
         default=None,
@@ -175,33 +62,93 @@ def main() -> int:
         "codegen/Python workers still warm, but a 64M-turn level does not "
         "pay a full discarded pass (~1h at local[2])",
     )
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
-    sys.path.insert(0, REPO)
-    from bench import corpus_parquet
 
-    n_convs = max(200, args.turns // 70)
-    corpus = corpus_parquet(n_convs)
-    warm = (
-        corpus_parquet(max(200, args.warm_turns // 70))
-        if args.warm_turns
-        else None
+def corpora(args: argparse.Namespace) -> tuple[str, str]:
+    """The measured corpus and the warm-up corpus (the same one unless
+    --warm-turns is given); staged once, then found at their
+    content-keyed paths."""
+    corpus = synth.stage_corpus(synth.scale_for_turns(args.turns))
+    if not args.warm_turns:
+        return corpus, corpus
+    return corpus, synth.stage_corpus(synth.scale_for_turns(args.warm_turns))
+
+
+def child(args: argparse.Namespace) -> None:
+    """One level in this process: a warm-up run, then `trials` measured
+    runs; prints the level's RESULT line."""
+    corpus, warm = corpora(args)
+    spark = session.get_spark("scaling")
+    spark.sparkContext.setLogLevel("ERROR")
+    runs = [
+        run_kg_pipeline(
+            spark, warm if trial == 0 else corpus, f"scale{trial}", args.mode == "ckpt"
+        )
+        for trial in range(args.trials + 1)
+    ]
+    wall, n, stage_ms = min(runs[1:], key=lambda r: r[0])
+    codec = spark.sparkContext.getConf().get("spark.io.compression.codec", "lz4")
+    print("RESULT " + json.dumps({
+        "cores": spark.sparkContext.defaultParallelism,
+        "wall_s": round(wall, 2),
+        "all_walls": [round(r[0], 2) for r in runs],
+        "triples": n,
+        "stage_ms": stage_ms,
+        "triples_per_sec": round(n / wall, 1),
+        "io_codec": codec,
+    }))
+
+
+def run_level(cores: int, argv: list[str]) -> dict:
+    """Run `child` in a fresh JVM on `cores` CPUs and return its RESULT."""
+    # pin the process tree to exactly `cores` CPUs: a local[N] JVM otherwise
+    # borrows idle cores for Python workers/GC/shuffle threads, which a real
+    # N-core executor does not have — unpinned, the small level's throughput
+    # is inflated and the N->4N comparison is unfair
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
+    # kgpipe must be importable in the child's PYTHON WORKERS, not just its
+    # driver (the sys.path.insert above only covers the driver): workers
+    # resolve imports via PYTHONPATH, which would otherwise work only when
+    # the invocation happens to cwd at the repo root.
+    env["PYTHONPATH"] = REPO + (
+        os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else ""
     )
+    out = subprocess.run(
+        ["taskset", "-c", f"0-{cores - 1}", sys.executable,
+         os.path.abspath(__file__), "--child", *argv],
+        capture_output=True,
+        text=True,
+        timeout=7200,
+        env=env,
+    )
+    for line in out.stdout.splitlines():
+        if line.startswith("RESULT "):
+            return json.loads(line[len("RESULT "):])
+    raise RuntimeError(f"no RESULT from local[{cores}]:\n{out.stderr[-2000:]}")
 
-    ck = args.mode == "ckpt"
-    r8 = run_level(args.n, corpus, args.trials, ck, args.resources, warm)
-    r32 = run_level(args.n4, corpus, args.trials, ck, args.resources, warm)
-    eff = (r32["triples_per_sec"] / r8["triples_per_sec"]) / (args.n4 / args.n)
+
+def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    if argv[:1] == ["--child"]:
+        child(parse_args(argv[1:]))
+        return 0
+    args = parse_args(argv)
+    corpora(args)  # stage here, not inside a pinned level
+    r_n = run_level(args.n, argv)
+    r_4n = run_level(args.n4, argv)
+    eff = (r_4n["triples_per_sec"] / r_n["triples_per_sec"]) / (args.n4 / args.n)
+    turns = synth.scale_for_turns(args.turns) * 70
     warm_note = (
         f" on a {args.warm_turns:,}-turn corpus, same code paths"
         if args.warm_turns
         else ""
     )
     summary = {
-        "corpus_turns_approx": n_convs * 70,
-        "resources": args.resources,
-        f"local{args.n}": r8,
-        f"local{args.n4}": r32,
+        "corpus_turns_approx": turns,
+        "resources": "flat",
+        f"local{args.n}": r_n,
+        f"local{args.n4}": r_4n,
         f"scaling_efficiency_{args.n}_to_{args.n4}": round(eff, 3),
         "target": 0.8,
         "pass": eff >= 0.8,
@@ -212,24 +159,28 @@ def main() -> int:
 
 Per BASELINE.json the rule is >=0.8 throughput scaling efficiency between N
 and 4N executors. No real cluster exists in this sandbox, so the evidence is
-the same full Stage A..E pipeline ({args.mode} mode, {args.resources}
-resources) on the SAME seeded synthetic corpus (~{n_convs * 70:,} turns) at
-two parallelism levels in fresh JVMs, `spark.sql.shuffle.partitions` = 2x
-cores, steady-state (warm-up pass excluded, best of {args.trials} measured
-trials):
+the same full Stage A..E pipeline ({args.mode} mode, flat resources: the
+session's 8g driver heap and default local dir at both levels) on the SAME
+seeded synthetic corpus (~{turns:,} turns) at two parallelism levels in fresh
+JVMs, `spark.sql.shuffle.partitions` = 2x cores, steady-state (warm-up pass
+excluded, best of {args.trials} measured trials):
 
 | level | wall (s) | triples/sec |
 | --- | --- | --- |
-| local[{args.n}]  (N)  | {r8['wall_s']} | {r8['triples_per_sec']:,} |
-| local[{args.n4}] (4N) | {r32['wall_s']} | {r32['triples_per_sec']:,} |
+| local[{args.n}]  (N)  | {r_n['wall_s']} | {r_n['triples_per_sec']:,} |
+| local[{args.n4}] (4N) | {r_4n['wall_s']} | {r_4n['triples_per_sec']:,} |
 
 **Scaling efficiency = (thr_{args.n4} / thr_{args.n}) / {args.n4 // args.n} = {eff:.3f}**
 (target >= 0.8: {"PASS" if eff >= 0.8 else "FAIL"}).
 
-All trial walls: local[{args.n}] {r8['all_walls']}, local[{args.n4}] {r32['all_walls']}
-(first value = discarded warm-up{warm_note}).
+All trial walls: local[{args.n}] {r_n['all_walls']}, local[{args.n4}] {r_4n['all_walls']}
+(first value = discarded warm-up{warm_note}). Per-stage walls of the best
+trial: `stage_ms` in the .json sidecar.
 """
-    suffix = {"scaled": "", "flat": "_flat"}[args.resources]
+    # "_flat" names the resource protocol; files without it (e.g.
+    # scaling_1v4_ckpt_16M.md) are evidence of the retired scaled protocol
+    # (3g heap per core, tmpfs scratch) and are never overwritten.
+    suffix = "_flat"
     # non-default IO codec (the child session's effective
     # spark.io.compression.codec, e.g. set with PYSPARK_SUBMIT_ARGS="--conf
     # spark.io.compression.codec=zstd pyspark-shell") in the name + md: a
@@ -237,7 +188,7 @@ All trial walls: local[{args.n}] {r8['all_walls']}, local[{args.n4}] {r32['all_w
     # (Round 4 briefly flipped the default to zstd, then reverted after the
     # 1v4 gate pair regressed 0.804 -> 0.722 under it; the _zstd-suffixed
     # files are that A/B's evidence.)
-    codec = r8["io_codec"]
+    codec = r_n["io_codec"]
     if codec != "lz4":
         suffix += f"_{codec}"
         md += (

@@ -49,8 +49,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # ordering. The windows are therefore ROTATED across rounds so the union of
 # rounds covers the whole registry (see COVERAGE.md §driver-window):
 #   round 1 proved the relational/dedup/ann/text block; round 2 fronted the
-#   KG pipeline, streaming, multimodal/curation entries.
-#   round 1 proved the relational/dedup/ann/text block; round 2 fronted the
 #   KG pipeline, streaming, multimodal/curation entries; round 3 fronted the
 #   9 never-green + 11 plan-changed + all 29 r1-only entries (CORRECTNESS_r03
 #   matched it exactly: 43 hash-green, 7 structural rows-only, 0 errors).

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -48,49 +49,42 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def corpus_parquet(n_convs: int) -> str:
-    """Generate (once, cached on disk) the seeded bench corpus."""
-    from kgpipe import synth
-
-    d = os.path.join(tempfile.gettempdir(), f"kgbench_corpus_{n_convs}")
-    if not os.path.exists(os.path.join(d, "transcripts.parquet")):
-        os.makedirs(d, exist_ok=True)
-        c = synth.generate(n_convs=n_convs)
-        # bounded row groups: the row group is Spark's atomic input split —
-        # pandas' default (~1M rows/group) caps scan parallelism at ~11
-        # tasks for a 10M-row corpus
-        c.transcripts.to_parquet(
-            f"{d}/transcripts.parquet", index=False, row_group_size=131072
-        )
-        c.entity_dict.to_parquet(f"{d}/entity_dict.parquet", index=False)
-    return d
-
-
 def run_kg_pipeline(
     spark, corpus_dir: str, tag: str, checkpoints: bool = True
-) -> tuple[float, int]:
+) -> tuple[float, int, dict[str, int]]:
+    """One timed Stage A..E run on a staged corpus, in a work dir of its
+    own that it removes afterwards. The cache is cleared first: identical
+    logical plans would otherwise hit the previous run's persisted stage.
+    Returns the wall, the published rows and each stage's total_ms."""
     from kgpipe import pipeline, schemas
 
+    spark.catalog.clearCache()
     t = spark.read.schema(schemas.TRANSCRIPTS).parquet(f"{corpus_dir}/transcripts.parquet")
     e = spark.read.schema(schemas.ENTITY_DICT).parquet(f"{corpus_dir}/entity_dict.parquet")
-    t0 = time.time()
-    cfg = pipeline.PipelineConfig(
-        work_dir=tempfile.mkdtemp(prefix=f"bench_{tag}_"),
-        input_fingerprint=tag,
-        checkpoints=checkpoints,
-    )
-    n = pipeline.Pipeline(cfg).run(spark, t, e)["rows"]
-    return time.time() - t0, n
+    work = tempfile.mkdtemp(prefix=f"bench_{tag}_")
+    try:
+        t0 = time.time()
+        p = pipeline.Pipeline(
+            pipeline.PipelineConfig(
+                work_dir=work, input_fingerprint=tag, checkpoints=checkpoints
+            )
+        )
+        n = p.run(spark, t, e)["rows"]
+        wall = time.time() - t0
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return wall, n, {m["stage"]: m["total_ms"] for m in p.metrics}
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
 
+    from kgpipe import synth
     from kgpipe.session import get_spark
 
-    spark = get_spark("kgpipe-bench", master=f"local[{cpus}]", shuffle_partitions=2 * cpus)
+    spark = get_spark("kgpipe-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as E
 
@@ -99,8 +93,7 @@ def main() -> int:
     # ---- warm-up: JIT/codegen/Python workers (excluded from timing) ----
     for name in HEADLINE:
         force(qs[name](spark, WARM_SF))
-    warm_corpus = corpus_parquet(800)
-    run_kg_pipeline(spark, warm_corpus, "warm")
+    run_kg_pipeline(spark, synth.stage_corpus(800), "warm")
 
     # ---- timed section -------------------------------------------------
     timings: dict[str, float] = {}
@@ -109,21 +102,18 @@ def main() -> int:
         force(qs[name](spark, sf_dir))
         timings[name] = round(time.time() - t0, 3)
 
-    n_convs = max(200, BENCH_TURNS // 70)
-    corpus_dir = corpus_parquet(n_convs)
+    n_convs = synth.scale_for_turns(BENCH_TURNS)
+    corpus_dir = synth.stage_corpus(n_convs)
 
     def best_of(tag: str, checkpoints: bool, n: int = 2) -> tuple[float, int]:
-        # best-of-n with cache cleared between runs (identical logical
-        # plans would otherwise hit run 1's persisted stage); the host
-        # shows 2-3x run-to-run noise and min is the least-noise estimator
-        best, rows = None, 0
-        for i in range(n):
-            spark.catalog.clearCache()
-            w, rows = run_kg_pipeline(
-                spark, corpus_dir, f"{tag}{i}", checkpoints=checkpoints
-            )
-            best = w if best is None else min(best, w)
-        return best, rows
+        # the host shows 2-3x run-to-run noise; min is the least-noise
+        # estimator
+        runs = [
+            run_kg_pipeline(spark, corpus_dir, f"{tag}{i}", checkpoints)
+            for i in range(n)
+        ]
+        wall, rows, _ = min(runs, key=lambda r: r[0])
+        return wall, rows
 
     kg_wall, n_triples = best_of("bench", checkpoints=True)
     timings["kg_pipeline_e2e"] = round(kg_wall, 3)

@@ -1,7 +1,8 @@
-"""CLI entry point for local runs. On a cluster (BASELINE.json north_rule:
-"run via spark-submit --py-files on a multi-executor cluster") the same
-`run` goes through its spark-submit twin, tools/submit_run.py (DEPLOY.md
-§1), since spark-submit runs a script, not a module:
+"""CLI entry point. Local runs build their own session; on a cluster
+(BASELINE.json north_rule: "run via spark-submit --py-files on a
+multi-executor cluster") spark-submit runs tools/submit_run.py (DEPLOY.md
+§1), since it takes a script, not a module, and that script hands `main`
+the session spark-submit built:
   spark-submit --py-files kgpipe.zip tools/submit_run.py run \
       --input /path/transcripts.parquet --dict /path/entity_dict.parquet \
       --work /path/workdir [--resume]
@@ -18,7 +19,9 @@ import json
 import sys
 import time
 
-from . import io_tables, pipeline, schemas
+from pyspark.sql import SparkSession
+
+from . import pipeline, schemas
 from .session import get_spark
 
 
@@ -45,9 +48,10 @@ def cmd_synth(args: argparse.Namespace) -> int:
     return 0
 
 
-def cmd_run(args: argparse.Namespace) -> int:
-    spark = get_spark("kgpipe-run", master=args.master)
-    spark.sparkContext.setLogLevel("ERROR")
+def cmd_run(args: argparse.Namespace, spark: SparkSession | None) -> int:
+    if spark is None:
+        spark = get_spark("kgpipe-run", master=args.master)
+        spark.sparkContext.setLogLevel("ERROR")
     transcripts = spark.read.schema(schemas.TRANSCRIPTS).parquet(args.input)
     entity_dict = spark.read.schema(schemas.ENTITY_DICT).parquet(args.dict)
     cfg = pipeline.PipelineConfig(
@@ -57,13 +61,10 @@ def cmd_run(args: argparse.Namespace) -> int:
     p = pipeline.Pipeline(cfg)
     n = p.run(spark, transcripts, entity_dict, resume=args.resume)["rows"]
     wall = time.time() - t0
-    sink = io_tables.read_stage(spark, f"{args.work}/E_triples")
-    distinct = sink.select("subj", "pred", "obj").distinct().count()
     print(
         json.dumps(
             {
                 "triples": n,
-                "distinct_triples": distinct,
                 "wall_s": round(wall, 2),
                 "triples_per_sec": round(n / wall, 1),
                 "stages": p.metrics,
@@ -74,14 +75,15 @@ def cmd_run(args: argparse.Namespace) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
+def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
+    """Parse argv and run its subcommand; `run` uses `spark` when given
+    (the spark-submit session) and builds a local one otherwise."""
     ap = argparse.ArgumentParser(prog="kgpipe")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     s = sub.add_parser("synth", help="generate a deterministic test corpus")
     s.add_argument("--out", required=True)
     s.add_argument("--convs", type=int, default=400)
-    s.set_defaults(fn=cmd_synth)
 
     r = sub.add_parser("run", help="run the full Stage A..E pipeline")
     r.add_argument("--input", required=True, help="transcripts parquet path/table")
@@ -90,10 +92,11 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--master", default=None)
     r.add_argument("--resume", action="store_true")
     r.add_argument("--fingerprint", default=None)
-    r.set_defaults(fn=cmd_run)
 
     args = ap.parse_args(argv)
-    return args.fn(args)
+    if args.cmd == "run":
+        return cmd_run(args, spark)
+    return cmd_synth(args)
 
 
 if __name__ == "__main__":

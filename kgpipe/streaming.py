@@ -89,14 +89,16 @@ def windowed_rates(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_available_now(result: DataFrame, name: str) -> DataFrame:
-    """Drain all available input into an in-memory table, batch-style."""
+def run_available_now(result: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Drain all available input into an in-memory table, batch-style, in
+    `output_mode` ("append", or "complete" for an unwatermarked
+    aggregate)."""
     spark = result.sparkSession
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
     q = (
         result.writeStream.format("memory")
         .queryName(qname)
-        .outputMode("complete" if result.isStreaming else "append")
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ck_{name}_"))
         .start()
@@ -115,7 +117,7 @@ def stream_ingest(spark, sf):
     full backlog must equal the batch scan exactly — so this one carries a
     full SQL value oracle, not just a rows check."""
     s = stream_events(spark, sf).select("event_id", "user_id", "event_type", "value")
-    return run_available_now_append(s, "ingest")
+    return run_available_now(s, "ingest", "append")
 
 
 @register(
@@ -135,7 +137,7 @@ def stream_window_aggs(spark, sf):
         # the tz-sensitive work (NTZ->LTZ cast, window alignment) runs and
         # MATERIALIZES into the memory sink inside this scope
         out = run_available_now(
-            windowed_rates(stream_events(spark, sf)), "winagg"
+            windowed_rates(stream_events(spark, sf)), "winagg", "complete"
         )
     # post-scope projection is tz-free: unix_timestamp of a TIMESTAMP
     # (instant) column extracts epoch seconds without consulting the tz
@@ -245,7 +247,7 @@ def stream_watermark_late(spark, sf):
             .agg(F.count("*").alias("n"))
             .select(F.unix_timestamp(F.col("w.start")).alias("win_start_s"), "n")
         )
-        return run_available_now_append(agg, "wmlate")
+        return run_available_now(agg, "wmlate", "append")
 
 
 def sf_dir_events(sf_dir: str) -> str:
@@ -324,7 +326,7 @@ def stream_stateful_applyinpandas(spark, sf):
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_available_now_append(out, "stateful")
+    return run_available_now(out, "stateful", "append")
 
 
 @register(
@@ -358,7 +360,7 @@ def stream_stateful_dedup(spark, sf):
     dedup = s.dropDuplicatesWithinWatermark(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    return run_available_now_append(dedup, "dedup")
+    return run_available_now(dedup, "dedup", "append")
 
 
 def incremental_triples(
@@ -454,18 +456,3 @@ def stream_sink_incremental(spark, sf):
     ck = tempfile.mkdtemp(prefix="stream_ck_")
     incremental_triples(spark, src, edf, sink, ck)
     return spark.read.parquet(sink)
-
-
-def run_available_now_append(result: DataFrame, name: str) -> DataFrame:
-    spark = result.sparkSession
-    qname = f"{name}_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"ck_{name}_"))
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(qname)

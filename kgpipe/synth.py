@@ -171,7 +171,8 @@ def generate(n_convs: int = 400, seed: int = SEED) -> Corpus:
     conv_no = np.repeat(np.arange(n_convs), lens)
     starts = np.repeat(np.cumsum(lens) - lens, lens)
     turn_idx = (np.arange(total) - starts).astype("int32")
-    conv_id = pd.Series(conv_no).map(lambda i: f"c{i:08d}").to_numpy()
+    # one str per conversation, shared by its turns (memory at 16M turns)
+    conv_id = np.array([f"c{i:08d}" for i in range(n_convs)], dtype=object)[conv_no]
     ts = BASE_TS + conv_no.astype("timedelta64[s]") * 3600 + turn_idx.astype("timedelta64[s]") * 7
 
     is_tool = turn_idx % 6 == 5
@@ -286,8 +287,9 @@ def generate(n_convs: int = 400, seed: int = SEED) -> Corpus:
             "conv_id": conv_id,
             "turn_idx": turn_idx,
             "role": role,
-            "text": text.astype(str),
-            "tool": tool_col.astype(str),
+            # no astype(str): a fixed-width copy, 4 B x longest text per row
+            "text": text,
+            "tool": tool_col,
             "ts": pd.Series(ts),
         }
     )
@@ -322,7 +324,8 @@ def scale_for_turns(target_turns: int) -> int:
 
 def stage_corpus(n_convs: int, seed: int = SEED) -> str:
     """Materialize the deterministic corpus as parquet at a content-keyed
-    path shared by every consumer in this environment.
+    path shared by every consumer in this environment: the registry
+    entries and their SQL oracles, bench.py and BENCH/run_scaling.py.
 
     Written with pyarrow (no Spark session needed) so it can run at import
     time: the SQL-oracle strings in kgqueries.py embed this path and DuckDB
@@ -368,6 +371,10 @@ def stage_corpus(n_convs: int, seed: int = SEED) -> str:
     pq.write_table(
         pa.Table.from_pandas(c.transcripts, preserve_index=False).cast(t_schema),
         os.path.join(tmp, "transcripts.parquet"),
+        # bounded row groups: the row group is Spark's atomic input split —
+        # ~1M-row groups would cap scan parallelism at ~11 tasks for a
+        # 10M-row corpus. Registry corpora (<= 150 conversations) stay one.
+        row_group_size=131_072,
     )
     pq.write_table(
         pa.Table.from_pandas(c.entity_dict, preserve_index=False).cast(e_schema),

@@ -2,14 +2,21 @@
 
 from __future__ import annotations
 
+import glob
+import importlib.util
 import json
 import os
+import pathlib
+import subprocess
+import tempfile
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from kgpipe import canon, extract, io_tables, oracle, pipeline, schemas
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -246,3 +253,91 @@ def test_ingest_partition_sizing():
     assert f(64_000_000, 16) == 64
     assert f(64_000_000, 4) == 64       # same count at BOTH cluster sizes
     assert f(10**12, 64) == pipeline.INGEST_MAX_PARTS
+
+
+def _load_harness(name: str):
+    spec = importlib.util.spec_from_file_location(
+        f"harness_{name}", ROOT / "BENCH" / f"{name}.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_bench_harnesses_import_and_scaling_level_runs(spark, monkeypatch, capsys):
+    """The BENCH/ harnesses run only by hand, so nothing else notices when
+    they drift from the code they drive. Import each, and run one
+    run_scaling level per mode for real: run_level's subprocess is faked
+    to run the child argv it built in this process, through main, with
+    get_spark returning the test session (so its confs are not
+    rewritten), on synth.stage_corpus(60)."""
+    from kgpipe import session, synth
+
+    _load_harness("membw_probe")
+    _load_harness("oracle_baseline")
+    run_scaling = _load_harness("run_scaling")
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    calls = []
+
+    def fake_run(argv, env, **kwargs):
+        calls.append((argv, env))
+        capsys.readouterr()
+        assert run_scaling.main(argv[argv.index("--child"):]) == 0
+        return subprocess.CompletedProcess(argv, 0, capsys.readouterr().out, "")
+
+    monkeypatch.setattr(run_scaling.subprocess, "run", fake_run)
+
+    def work_dirs() -> set[str]:
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "bench_*")))
+
+    before = work_dirs()
+    turns = 60 * 70
+    assert synth.scale_for_turns(turns) == 60
+    results = {
+        mode: run_scaling.run_level(
+            1, ["--turns", str(turns), "--trials", "1", "--mode", mode]
+        )
+        for mode in ("ckpt", "fused")
+    }
+    assert len(calls) == 2
+    for argv, env in calls:
+        assert argv[:3] == ["taskset", "-c", "0-0"]
+        assert env["SPARK_GRAFT_CPUS"] == "1"
+    assert results["ckpt"]["triples"] == results["fused"]["triples"] > 0
+    for r in results.values():
+        assert set(r["stage_ms"]) == {"B_extract", "C_link", "D_canon", "E_triples"}
+        assert len(r["all_walls"]) == 2  # warm-up + 1 trial
+    assert work_dirs() == before
+
+
+@pytest.mark.parametrize("entry", ["cli", "submit_run"])
+def test_run_entry_points_publish_then_resume(spark, tmp_path, capsys, entry):
+    """`python -m kgpipe.cli run` and its spark-submit script print the
+    sink manifest's row count, and a --resume rerun skips every stage."""
+    from kgpipe import cli, synth
+    from tools import submit_run
+
+    d = synth.stage_corpus(120)  # the conftest fixture corpus, as parquet
+    work = str(tmp_path / "run")
+    argv = [
+        "run", "--input", f"{d}/transcripts.parquet",
+        "--dict", f"{d}/entity_dict.parquet", "--work", work,
+    ]
+
+    def run(args: list[str]) -> dict:
+        capsys.readouterr()
+        if entry == "cli":
+            assert cli.main(args, spark) == 0
+        else:
+            assert submit_run.main(args) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    first = run(argv)
+    assert first["triples"] == io_tables.read_manifest(f"{work}/E_triples")["rows"] > 0
+    assert not any(s["skipped"] for s in first["stages"])
+    again = run(argv + ["--resume"])
+    assert [s["stage"] for s in again["stages"]] == [
+        "B_extract", "C_link", "D_canon", "E_triples"
+    ]
+    assert all(s["skipped"] for s in again["stages"])
+    assert again["triples"] == first["triples"]

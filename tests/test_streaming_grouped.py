@@ -68,7 +68,9 @@ def test_windowed_rates_drop_late_rows(spark, tmp_path):
         .parquet(str(d))
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    out = streaming.run_available_now(streaming.windowed_rates(s), "latewin")
+    out = streaming.run_available_now(
+        streaming.windowed_rates(s), "latewin", "complete"
+    )
     # all three rows are in the same input file -> same batch -> none dropped;
     # this asserts the aggregation shape (1h windows, per-type counts)
     pdf = out.toPandas().sort_values("win_start")

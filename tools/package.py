@@ -3,7 +3,7 @@
 
 Usage:
   python tools/package.py [out.zip]
-  spark-submit --py-files kgpipe.zip tools/submit_run.py \
+  spark-submit --py-files kgpipe.zip tools/submit_run.py run \
       --input ... --dict ... --work ...
 """
 
