@@ -19,6 +19,13 @@ see kgqueries.py oracle-ability header). The banding, band self-join and
 exact-Jaccard verify (lsh_pairs) are the one MinHash-LSH blocking core of
 the package: document dedup (dedup.doc_minhash_pairs) feeds it its own
 signature.
+
+The verify side runs once per candidate: Stage D's shingle sets are
+xxhash64 arrays (fixed-width keys intersect faster than strings; no output
+exposes them), the threshold is one inequality over one array_intersect,
+and jaccard is projected only over the pairs that pass. connected_components
+symmetrizes its edges in one explode, so the lazy LSH DAG feeding it runs
+once per action, not once per union branch.
 """
 
 from __future__ import annotations
@@ -75,14 +82,29 @@ def minhash_signatures(surfaces: DataFrame) -> DataFrame:
 def lsh_pairs(sh: DataFrame, sig: DataFrame) -> DataFrame:
     """THE MinHash-LSH blocking core of Stage D (candidate_pairs) and
     document dedup (dedup.doc_minhash_pairs): sh[id, sh] distinct shingle
-    arrays + sig[id, mh_0..mh_{2k-1}] -> (a, b, jaccard) for every a < b
-    agreeing on at least one of the k 2-row bands, jaccard exact over the
-    shingle sets. Callers own the signature hash and the threshold.
+    arrays + sig[id, mh_0..mh_{2k-1}] -> (a, b, inter, n) for every a < b
+    agreeing on at least one of the k 2-row bands, where
+    inter = size(array_intersect(sh_a, sh_b)) and n = size(sh_a) + size(sh_b),
+    so jaccard = inter / (n - inter). Callers own the signature hash, the
+    threshold and the jaccard projection: testing J >= t as
+    inter * (1 + t) >= t * n names the intersect once, where a filter on a
+    jaccard column would be pushed into the join condition with the
+    intersect repeated per reference (Catalyst does no common-
+    subexpression elimination there).
 
     Band key xxhash64(mh_2b, mh_2b+1): a collision can only add a
     candidate, which the exact check then scores. The self-join is an
     EQUI-join on (band_id, band_hash) — never a nested loop (SURVEY.md
-    §2(c) join_theta_selfjoin_lsh)."""
+    §2(c) join_theta_selfjoin_lsh).
+
+    The shingle arrays may be 64-bit hashes of distinct shingles
+    (candidate_pairs) instead of the strings. n stays exact (the arrays
+    are deduplicated before hashing), and inter is exact whenever the hash
+    is injective over the pair's shingles — which holds for every char
+    3-shingle over [a-z0-9 ] (tested). Otherwise each colliding pair of
+    distinct shingles moves inter by at most one; the chance of any
+    collision in a pair is about |A u B|^2 / 2^65. The hashes never leave
+    this function, and the DuckDB oracle computes on the strings."""
     n_bands = sum(c.startswith("mh_") for c in sig.columns) // 2
     band_structs = F.array(
         *[
@@ -105,22 +127,42 @@ def lsh_pairs(sh: DataFrame, sig: DataFrame) -> DataFrame:
     )
     sa = sh.select(F.col("id").alias("a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("id").alias("b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    return pairs.join(sa, "a").join(sb, "b").select("a", "b", jac.alias("jaccard"))
+    return pairs.join(sa, "a").join(sb, "b").select(
+        "a",
+        "b",
+        F.size(F.array_intersect("sh_a", "sh_b")).alias("inter"),
+        (F.size("sh_a") + F.size("sh_b")).alias("n"),
+    )
+
+
+def jaccard_col() -> F.Column:
+    """jaccard of an lsh_pairs row. Shingle arrays are never empty (a
+    string shorter than the shingle width is its own shingle), so
+    n - inter >= 1."""
+    return (F.col("inter") / (F.col("n") - F.col("inter"))).alias("jaccard")
 
 
 def candidate_pairs(surfaces: DataFrame) -> DataFrame:
     """Stage D's blocking: md5-affine MinHash signatures through lsh_pairs
-    -> verified edges (a, b, jaccard), jaccard >= JACCARD_THRESHOLD."""
+    -> verified edges (a, b, jaccard), jaccard >= JACCARD_THRESHOLD.
+
+    The verify side is a per-row projection: each surface's distinct char
+    shingles as xxhash64 values (see lsh_pairs for the collision bound)."""
     # surfaces feeds two branches of this DAG (the signature and the
     # verify side's shingle sets); Spark does not dedupe common subplans,
     # so persist or the upstream distinct executes twice per action
     surfaces = surfaces.persist()
     sig = minhash_signatures(surfaces).withColumnRenamed("surface", "id")
-    sh = surfaces.select(F.col("surface").alias("id"), shingles_col("surface").alias("sh"))
-    return lsh_pairs(sh, sig).filter(F.col("jaccard") >= F.lit(float(JACCARD_THRESHOLD)))
+    sh = surfaces.select(
+        F.col("surface").alias("id"),
+        F.transform(shingles_col("surface"), lambda s: F.xxhash64(s)).alias("sh"),
+    )
+    t = JACCARD_THRESHOLD
+    return (
+        lsh_pairs(sh, sig)
+        .filter(F.col("inter") * (1 + t) >= F.col("n") * t)
+        .select("a", "b", jaccard_col())
+    )
 
 
 # Below this many (symmetrized) edges the component graph fits trivially on
@@ -156,6 +198,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     labels converge to the lexicographically smallest surface in each
     component — the same representative rule as rules.UnionFind.
 
+    The edges are symmetrized in one pass (each row explodes into both
+    directions), so the edge DAG — the lazy LSH chain on Stage D's path —
+    executes once for the count that persists it; a union of two
+    projections would run it once per branch.
+
     Hybrid execution (both paths produce identical labels, tested):
     - edge set under DRIVER_CC_MAX_EDGES: collect + union-find on the
       driver (one job; the K-iteration loop is pure overhead there);
@@ -169,9 +216,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     missing as singleton = itself). Raises RuntimeError when labels still
     change after max_iter rounds (a component wider than max_iter hops).
     """
-    sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    both_ways = F.array(
+        F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+        F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
     )
+    sym = edges.select(F.explode(both_ways).alias("e")).select("e.src", "e.dst")
     # the count decides the execution path and the collect/loop reuses the
     # edge chain — persist so the (expensive) LSH chain runs exactly once
     sym = sym.persist()
@@ -183,7 +232,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         return _driver_labels(spark, labels)
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_parts = max(1, min(max_parts, n_edges // 100_000 + 1))
-    sym = sym.repartition(n_parts, "dst").localCheckpoint()
+    ckpt = sym.repartition(n_parts, "dst").localCheckpoint()
+    sym.unpersist()  # the eager checkpoint holds the edges from here on
+    sym = ckpt
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("component", F.col("node")).repartition(
         n_parts, "node"
@@ -269,6 +320,9 @@ def stage_canon(linked: DataFrame) -> DataFrame:
     else:
         edges = candidate_pairs(unlinked)  # lazy — keep unlinked persisted
         cc = connected_components(edges)
+        # cc's labels are collected or checkpointed: nothing reads the
+        # LSH chain, so nothing needs unlinked cached any more
+        unlinked.unpersist()
 
     # canon_rewrite: two joins against cc_labels (subj then obj); missing
     # nodes stay themselves (singleton components). Labels from a driver

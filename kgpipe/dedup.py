@@ -16,8 +16,8 @@ simhash_df/dedup_simhash (upgraded to a full SQL value check; md5 vs
 xxhash64 measured neutral there, -3% median at sf0.1). doc_minhash_pairs
 keeps an xxhash64 signature: the md5 swap measured +26% median on the
 dedup headline (over the 15% budget) and its Jaccard-edge oracle never
-sees hash values. LSH band keys are xxhash64 everywhere: no operator
-output or oracle exposes them.
+sees hash values. LSH band keys are xxhash64 everywhere, as are Stage D's
+verify-side shingle hashes: no operator output or oracle exposes them.
 """
 
 from __future__ import annotations
@@ -64,7 +64,9 @@ def doc_minhash_pairs(docs: DataFrame) -> DataFrame:
     exact-Jaccard verification. Returns (a, b, jaccard), jaccard rounded
     to 4 places."""
     # sh feeds three DAG branches (signature + both verify sides) —
-    # persist, or the shingle computation runs three times per action
+    # persist, or the shingle computation runs three times per action.
+    # The verify sets stay the string word shingles (Stage D hashes its
+    # char shingles instead); the jaccard is exact either way.
     sh = (
         docs.select(F.col("doc_id").alias("id"), tokens_col("text").alias("toks"))
         .select("id", word_shingles_from_tokens("toks").alias("sh"))
@@ -82,7 +84,9 @@ def doc_minhash_pairs(docs: DataFrame) -> DataFrame:
     sig = ex.groupBy("id").agg(
         *[F.min(F.xxhash64(F.lit(i), F.col("s"))).alias(f"mh_{i}") for i in range(DOC_MINHASH)]
     )
-    return canon.lsh_pairs(sh, sig).withColumn("jaccard", F.round("jaccard", 4))
+    return canon.lsh_pairs(sh, sig).select(
+        "a", "b", F.round(canon.jaccard_col(), 4).alias("jaccard")
+    )
 
 
 def simhash_df(docs: DataFrame) -> DataFrame:

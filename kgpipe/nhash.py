@@ -3,8 +3,9 @@
 xxhash64 is JVM-internal: any operator whose OUTPUT exposes hash-derived
 values (MinHash signatures, SimHash bits) could not be value-checked by an
 external SQL engine, leaving those registry entries with row-count checks
-only. LSH band keys stay xxhash64 (canon.lsh_pairs): no operator output or
-oracle exposes them. These primitives define the hash in
+only. LSH band keys and Stage D's verify-side shingle hashes stay xxhash64
+(canon.lsh_pairs, canon.candidate_pairs): no operator output or oracle
+exposes them. These primitives define the hash in
 terms both Spark and DuckDB evaluate identically:
 
   base60(x) = CAST(hex_prefix15(md5(x)) AS BIGINT)          60-bit, [0, 2^60)

@@ -290,3 +290,24 @@ def test_corpus_curation_gate_is_single_scan(spark):
     assert plan.count("Scan parquet") == 1, plan
     assert "Exchange" not in plan
     assert "*(1)" in plan  # the gate is codegen-compiled
+
+
+def test_lsh_threshold_names_one_intersect(spark):
+    """Stage D tests J >= t as inter * (1 + t) >= t * (|A| + |B|): the join
+    condition or Filter that applies the threshold in candidate_pairs'
+    final plan computes array_intersect once per candidate. A filter on a
+    projected jaccard column gets pushed into the join condition with the
+    intersect repeated per reference (no common-subexpression elimination
+    there)."""
+    from kgpipe import canon
+
+    names = ["grace hopper", "grace hoppe", "alan turing", "alan turin", "zed"]
+    df = canon.candidate_pairs(spark.createDataFrame([(n,) for n in names], "surface string"))
+    df.collect()
+    final = plan_of(df).split("== Initial Plan ==")[0]
+    tests = [
+        line for line in final.splitlines()
+        if "array_intersect" in line and ("Join" in line or "Filter" in line)
+    ]
+    assert len(tests) == 1, final
+    assert tests[0].count("array_intersect") == 1, tests[0]

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from kgpipe import oracle, rules, synth
 
@@ -52,11 +54,8 @@ def test_one_char_deletion_stays_similar(base, pos):
     assert j >= 0.45  # threshold 0.5 with slack documented in rules.py
 
 
-def test_lsh_recall_on_planted_duplicates(spark):
-    """Every oracle-found pair above threshold must be recovered by the
-    MinHash-LSH blocking path (recall gate; 16x2 banding P~0.99 at s=0.5)."""
-    from kgpipe import canon
-
+def _planted_names() -> list[str]:
+    """60 names, each with a 1-deletion variant."""
     rng = np.random.default_rng(7)
     names = []
     for i in range(60):
@@ -64,6 +63,15 @@ def test_lsh_recall_on_planted_duplicates(spark):
         names.append(base)
         k = int(rng.integers(1, len(base) - 1))
         names.append(base[:k] + base[k + 1 :])  # 1-deletion variant
+    return names
+
+
+def test_lsh_recall_on_planted_duplicates(spark):
+    """Every oracle-found pair above threshold must be recovered by the
+    MinHash-LSH blocking path (recall gate; 16x2 banding P~0.99 at s=0.5)."""
+    from kgpipe import canon
+
+    names = _planted_names()
     comp = oracle.cluster_surfaces(names)
     want_pairs = {
         (a, b)
@@ -78,6 +86,55 @@ def test_lsh_recall_on_planted_duplicates(spark):
     got_pairs = set(zip(got.a, got.b))
     missed = want_pairs - got_pairs
     assert len(missed) <= max(1, int(0.02 * len(want_pairs))), missed
+
+
+@pytest.mark.parametrize("names", ["planted", "chain_family"])
+def test_lsh_edge_jaccard_is_exact(spark, names):
+    """candidate_pairs scores its candidates over xxhash64 shingle arrays;
+    every edge it returns carries the exact string-shingle Jaccard of its
+    two names, bit for bit, and passes the threshold."""
+    from kgpipe import canon
+    from perfbench.workloads import chain_families
+
+    if names == "planted":
+        surfaces = sorted(set(_planted_names()))
+    else:
+        surfaces = chain_families(1, np.random.default_rng(1))[0]
+    sdf = spark.createDataFrame([(n,) for n in surfaces], "surface string")
+    got = canon.candidate_pairs(sdf).collect()
+    assert got
+    for a, b, jac in got:
+        want = rules.jaccard(rules.char_shingles(a), rules.char_shingles(b))
+        assert jac == want, (a, b)
+        assert jac >= rules.JACCARD_THRESHOLD
+
+
+def test_lsh_threshold_is_inclusive(spark):
+    """3 * inter == |A| + |B| is J == 0.5 exactly: kept. A pair one shared
+    shingle short of it (J = 19/41) is a band candidate that the threshold
+    drops."""
+    from kgpipe import canon
+
+    base = "abcdefghijklmnopqrstuvwxyz012345"  # 32 distinct chars, 30 shingles
+    at = base[:22] + "QRSTUVWXYZ"  # shares base's first 20 shingles
+    below = base[:21] + "ABCDEFGHIJK"  # shares 19
+    sdf = spark.createDataFrame([(n,) for n in (base, at, below)], "surface string")
+    edges = {frozenset((a, b)): j for a, b, j in canon.candidate_pairs(sdf).collect()}
+    assert edges == {frozenset((base, at)): 0.5}
+    sig = canon.minhash_signatures(sdf).withColumnRenamed("surface", "id")
+    sh = sdf.select(F.col("surface").alias("id"), canon.shingles_col("surface").alias("sh"))
+    scored = {frozenset((a, b)): (i, n) for a, b, i, n in canon.lsh_pairs(sh, sig).collect()}
+    assert scored[frozenset((base, below))] == (19, 60)
+
+
+def test_xxhash64_is_injective_on_char_shingles(spark):
+    """The hashed verify sets are exact for Stage D's alphabet: xxhash64
+    maps all 37^3 = 50,653 3-shingles over [a-z0-9 ] to distinct values."""
+    alphabet = "abcdefghijklmnopqrstuvwxyz0123456789 "
+    shingles = [x + y + z for x in alphabet for y in alphabet for z in alphabet]
+    df = spark.createDataFrame([(s,) for s in shingles], "s string")
+    n = df.select(F.countDistinct(F.xxhash64("s"))).collect()[0][0]
+    assert n == len(shingles) == 50_653
 
 
 @settings(max_examples=60, deadline=None)

@@ -121,3 +121,61 @@ def test_cc_loop_raises_when_not_converged(spark, monkeypatch):
     edf = spark.createDataFrame(edges, "a string, b string")
     with pytest.raises(RuntimeError, match="did not converge in 25 rounds"):
         canon.connected_components(edf)
+
+
+@pytest.mark.parametrize("loop_path", [False, True])
+def test_cc_runs_its_edge_dag_once(spark, monkeypatch, loop_path):
+    """connected_components executes its (lazy) edge frame once: every edge
+    row passes a Python UDF that counts it, and the count equals the edge
+    count on both execution paths. Symmetrizing as a union of two
+    projections would run the edge DAG — on Stage D's path, the whole LSH
+    chain — once per branch."""
+    if loop_path:
+        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(a):
+        seen.add(1)
+        return a
+
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(12)]
+    edf = spark.createDataFrame(edges, "a string, b string").select(
+        F.udf(tap, "string")("a").alias("a"), "b"
+    )
+    cc = canon.connected_components(edf)
+    assert seen.value == len(edges)
+    assert {r["component"] for r in cc.collect()} == {"n000"}
+
+
+def _cached_plans(spark) -> int:
+    """Entries in the session's CacheManager (persisted, not yet
+    unpersisted plans); read by reflection, as Spark exposes only isEmpty."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_stage_canon_leaves_nothing_cached(spark, monkeypatch):
+    """Stage D on its LSH + iterative-loop path releases every frame it
+    persists (the unlinked surfaces, the symmetrized edges) once their
+    consumers are collected or checkpointed."""
+    monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
+    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    names = ["grace hopperr", "grace hoppe", "alan turingg", "alan turin", "zed"]
+    linked = spark.createDataFrame(
+        [(n, names[(i + 1) % len(names)]) for i, n in enumerate(names)],
+        "subj_raw string, obj_raw string",
+    ).select(
+        "subj_raw", F.lit("p").alias("pred"), "obj_raw",
+        F.lit("surface").alias("subj_kind"), F.lit("surface").alias("obj_kind"),
+        F.lit(None).cast("string").alias("subj_link"),
+        F.lit(None).cast("string").alias("obj_link"),
+        F.lit("c0").alias("conv_id"), F.lit(0).alias("turn_idx"),
+        F.lit("R3").alias("rule_id"),
+    )
+    before = _cached_plans(spark)
+    out = canon.stage_canon(linked)
+    assert _cached_plans(spark) == before
+    subj = {r["subj"] for r in out.collect()}
+    assert subj == {"alan turin", "grace hoppe", "zed"}

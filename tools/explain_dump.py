@@ -67,6 +67,12 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
         "shuffle carries batches*queries*k rows, not the corpus",
     ),
     # markers prefixed '!' must be ABSENT from the executed plan
+    "join_theta_selfjoin_lsh": (
+        ["HashJoin", "!NestedLoopJoin", "!CartesianProduct"],
+        "similar-name theta self-join: candidates only from the LSH band "
+        "equi-join, each scored by one array_intersect over xxhash64 "
+        "shingle arrays in the verify join's condition",
+    ),
     "join_range_asof": (
         ["RangeFrame", "!Join"],
         "interval count as a RANGE window over unix_micros(ts): one shuffle "
