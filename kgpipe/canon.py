@@ -30,6 +30,8 @@ once per action, not once per union branch.
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -86,11 +88,7 @@ def lsh_pairs(sh: DataFrame, sig: DataFrame) -> DataFrame:
     agreeing on at least one of the k 2-row bands, where
     inter = size(array_intersect(sh_a, sh_b)) and n = size(sh_a) + size(sh_b),
     so jaccard = inter / (n - inter). Callers own the signature hash, the
-    threshold and the jaccard projection: testing J >= t as
-    inter * (1 + t) >= t * n names the intersect once, where a filter on a
-    jaccard column would be pushed into the join condition with the
-    intersect repeated per reference (Catalyst does no common-
-    subexpression elimination there).
+    threshold (jaccard_at_least) and the jaccard projection.
 
     Band key xxhash64(mh_2b, mh_2b+1): a collision can only add a
     candidate, which the exact check then scores. The self-join is an
@@ -135,6 +133,17 @@ def lsh_pairs(sh: DataFrame, sig: DataFrame) -> DataFrame:
     )
 
 
+def jaccard_at_least(t: float) -> F.Column:
+    """jaccard >= t over an lsh_pairs row, as inter * (p + q) >= p * n for
+    t = p / q: it names the intersect once, where a filter on a jaccard
+    column would be pushed into the join condition with the intersect
+    repeated per reference (Catalyst does no common-subexpression
+    elimination there). Integer operands keep it exact at a t that is no
+    binary fraction (0.2)."""
+    r = Fraction(str(t))
+    return F.col("inter") * (r.numerator + r.denominator) >= F.col("n") * r.numerator
+
+
 def jaccard_col() -> F.Column:
     """jaccard of an lsh_pairs row. Shingle arrays are never empty (a
     string shorter than the shingle width is its own shingle), so
@@ -147,20 +156,18 @@ def candidate_pairs(surfaces: DataFrame) -> DataFrame:
     -> verified edges (a, b, jaccard), jaccard >= JACCARD_THRESHOLD.
 
     The verify side is a per-row projection: each surface's distinct char
-    shingles as xxhash64 values (see lsh_pairs for the collision bound)."""
-    # surfaces feeds two branches of this DAG (the signature and the
-    # verify side's shingle sets); Spark does not dedupe common subplans,
-    # so persist or the upstream distinct executes twice per action
-    surfaces = surfaces.persist()
+    shingles as xxhash64 values (see lsh_pairs for the collision bound).
+    `surfaces` feeds two branches of this DAG (the signature and the verify
+    side's shingle sets), so a caller whose surfaces are expensive persists
+    them for as long as it reads the result, as stage_canon does."""
     sig = minhash_signatures(surfaces).withColumnRenamed("surface", "id")
     sh = surfaces.select(
         F.col("surface").alias("id"),
         F.transform(shingles_col("surface"), lambda s: F.xxhash64(s)).alias("sh"),
     )
-    t = JACCARD_THRESHOLD
     return (
         lsh_pairs(sh, sig)
-        .filter(F.col("inter") * (1 + t) >= F.col("n") * t)
+        .filter(jaccard_at_least(JACCARD_THRESHOLD))
         .select("a", "b", jaccard_col())
     )
 

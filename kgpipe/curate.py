@@ -55,7 +55,7 @@ def curate(spark: SparkSession, sf: str) -> DataFrame:
     # cluster representative (min doc id; ids zero-padded so the string
     # min-label CC representative equals the numeric min)
     pad = lambda c: F.format_string("%012d", F.col(c).cast("long"))
-    pairs = doc_minhash_pairs(docs).filter(F.col("jaccard") >= DOC_JACCARD)
+    pairs = doc_minhash_pairs(docs, DOC_JACCARD)
     edges = pairs.select(pad("a").alias("a"), pad("b").alias("b"))
     cc = connected_components(edges)
     losers = cc.filter(F.col("node") != F.col("component")).select(

@@ -58,19 +58,21 @@ def word_shingles_from_tokens(tok_col: str) -> F.Column:
     )
 
 
-def doc_minhash_pairs(docs: DataFrame) -> DataFrame:
+def doc_minhash_pairs(docs: DataFrame, t: float) -> DataFrame:
     """MinHash-LSH candidate pairs of docs[doc_id, text] over word
     shingles, through the shared blocking core (canon.lsh_pairs) with
-    exact-Jaccard verification. Returns (a, b, jaccard), jaccard rounded
-    to 4 places."""
-    # sh feeds three DAG branches (signature + both verify sides) —
-    # persist, or the shingle computation runs three times per action.
+    exact-Jaccard verification at jaccard >= t. Returns (a, b, jaccard),
+    jaccard rounded to 4 places."""
+    # sh feeds three DAG branches (signature + both verify sides). An
+    # eager local checkpoint computes the shingles once and leaves no
+    # CacheManager entry behind; a persist here would outlive every
+    # caller, as nothing could unpersist it after their action.
     # The verify sets stay the string word shingles (Stage D hashes its
     # char shingles instead); the jaccard is exact either way.
     sh = (
         docs.select(F.col("doc_id").alias("id"), tokens_col("text").alias("toks"))
         .select("id", word_shingles_from_tokens("toks").alias("sh"))
-        .persist()
+        .localCheckpoint()
     )
     # Token hashing here stays xxhash64 DELIBERATELY (round-3 decision):
     # this is the dedup headline's hot loop, and the engine-neutral
@@ -84,8 +86,10 @@ def doc_minhash_pairs(docs: DataFrame) -> DataFrame:
     sig = ex.groupBy("id").agg(
         *[F.min(F.xxhash64(F.lit(i), F.col("s"))).alias(f"mh_{i}") for i in range(DOC_MINHASH)]
     )
-    return canon.lsh_pairs(sh, sig).select(
-        "a", "b", F.round(canon.jaccard_col(), 4).alias("jaccard")
+    return (
+        canon.lsh_pairs(sh, sig)
+        .filter(canon.jaccard_at_least(t))
+        .select("a", "b", F.round(canon.jaccard_col(), 4).alias("jaccard"))
     )
 
 
@@ -201,9 +205,7 @@ def dedup_minhash(spark, sf):
     corpus (verified empirically at sf0.001 and sf0.01 — near-dup pairs sit
     well above the 16x2-band recall cliff), and the jaccard values are exact
     integer-ratio arithmetic identical in both engines."""
-    return doc_minhash_pairs(load(spark, sf, "documents")).filter(
-        F.col("jaccard") >= DOC_JACCARD
-    )
+    return doc_minhash_pairs(load(spark, sf, "documents"), DOC_JACCARD)
 
 
 # full SQL twin of the SimHash operator: same tokenization, same 60-bit
@@ -291,6 +293,4 @@ def dedup_ngram_jaccard(spark, sf):
     so the 0.2 threshold selects exactly the >= 0.5 set LSH provably
     recovers. On data with genuine mid-similarity pairs this operator is
     honestly approximate (LSH recall at J=0.2 with 16x2 bands is ~50%)."""
-    return doc_minhash_pairs(load(spark, sf, "documents")).filter(
-        F.col("jaccard") >= 0.2
-    )
+    return doc_minhash_pairs(load(spark, sf, "documents"), 0.2)

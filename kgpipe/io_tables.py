@@ -12,6 +12,12 @@ and an Iceberg port would replace their bodies behind the same signatures
 The manifest carries the stage fingerprint and per-partition row counts that
 power exact resume (BASELINE.json: "checkpoints per-partition triple counts,
 lineage ids, and extraction metrics to enable exact resume").
+
+Append contract (the triple sink; pipeline.publish is its one writer): the
+delta's lineage ids are anti-joined against the sink whenever it holds
+data files (has_data), manifest or not, so a publish whose job committed
+but whose manifest was never written is not duplicated by its re-run. The
+manifest then counts every file in the sink: the cumulative table.
 """
 
 from __future__ import annotations
@@ -97,27 +103,26 @@ def read_stage(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql.types import StructType
 
     schema = StructType.fromJson(m["schema"])
-    has_data = any(
-        f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
-    )
-    if not has_data:
+    if not has_data(path):
         # zero-row checkpoint: no data files to scan at all
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(path)
 
 
-def stage_complete(path: str, fingerprint: str) -> bool:
-    """A stage is resumable-from iff its manifest exists and its fingerprint
-    (config hash + upstream fingerprint chain) matches."""
-    mpath = os.path.join(path, MANIFEST)
-    if not os.path.exists(mpath):
-        return False
+def has_data(path: str) -> bool:
+    """Whether any parquet data file sits under path (a missing path holds
+    none)."""
+    return any(f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs)
+
+
+def completed_manifest(path: str, fingerprint: str) -> dict | None:
+    """The manifest of a stage that is resumable-from: it exists, parses
+    and its fingerprint (config hash + upstream fingerprint chain) matches."""
     try:
-        with open(mpath) as f:
-            m = json.load(f)
+        m = read_manifest(path)
     except (OSError, json.JSONDecodeError):
-        return False
-    return m.get("fingerprint") == fingerprint
+        return None
+    return m if m is not None and m.get("fingerprint") == fingerprint else None
 
 
 def read_manifest(path: str) -> dict | None:

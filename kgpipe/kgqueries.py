@@ -528,13 +528,12 @@ def sink_metrics(spark, sf):
     """Per-stage / per-partition metrics surface: run the pipeline, return
     the manifest-derived metrics as a DataFrame (rows, partition counts,
     wall) — the lineage/metrics checkpointing of BASELINE.json."""
-    import json
     import os
 
     wd = _ckpt_run(spark, sf)
     rows = []
     for stage in ("B_extract", "C_link", "D_canon", "E_triples"):
-        m = json.load(open(os.path.join(wd, stage, "_MANIFEST.json")))
+        m = io_tables.read_manifest(os.path.join(wd, stage))
         for part, n in m["partition_counts"].items():
             rows.append((stage, part, int(n), m["fingerprint"]))
     return spark.createDataFrame(

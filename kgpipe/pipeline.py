@@ -251,6 +251,29 @@ def publish_triples(canoned: DataFrame, salt: int, n_tasks: int) -> DataFrame:
     return triples.withColumn("lineage_id", lineage_col())
 
 
+def publish(triples: DataFrame, source: DataFrame, path: str, fingerprint: str) -> dict:
+    """Stage E, the one path from a triple frame [subj, pred, obj, conv_id,
+    turn_idx, rule_id] to sink rows for the batch pipeline and the
+    streaming foreachBatch: publish_triples sized from the parquet footers
+    of `source`, the input the triples came from (no count job; the
+    sizing memoir is at publish_task_count), then the io_tables append
+    contract. Returns the sink's manifest (the cumulative table)."""
+    spark = triples.sparkSession
+    est_turns = input_rows_estimate(source)
+    est_rows = int(est_turns * TRIPLES_PER_TURN_EST) if est_turns else None
+    out = publish_triples(
+        triples,
+        publish_salt_factor(est_rows),
+        publish_task_count(est_rows, spark.sparkContext.defaultParallelism),
+    )
+    if io_tables.has_data(path):
+        published = io_tables.read_stage(spark, path).select("lineage_id")
+        out = out.join(published, "lineage_id", "left_anti")
+    return io_tables.write_stage(
+        out, path, "E_triples", fingerprint, partition_by=["part_key"], mode="append"
+    )
+
+
 INGEST_TURNS_PER_PART = 1_000_000
 INGEST_MAX_PARTS = 4096
 
@@ -401,28 +424,26 @@ class Pipeline:
             }
         )
 
+    def _resumed(self, path: str, fp: str, resume: bool) -> dict | None:
+        """The manifest of a stage that resume may skip, marked skipped."""
+        m = io_tables.completed_manifest(path, fp) if resume else None
+        if m is not None:
+            m["skipped"] = True
+        return m
+
     def _run_stage(
-        self,
-        spark: SparkSession,
-        stage: str,
-        upstream_fp: str,
-        build: "callable",
-        resume: bool,
-        partition_by: list[str] | None = None,
-        mode: str = "overwrite",
-    ) -> tuple[DataFrame | dict, str]:
-        """Build (or skip on resume) one stage. Returns its output for the
-        next stage plus its fingerprint; the sink (E_triples) has no next
-        stage, so it returns its manifest instead of a read-back."""
+        self, spark: SparkSession, stage: str, upstream_fp: str,
+        build: "callable", resume: bool,
+    ) -> tuple[DataFrame, str]:
+        """Build (or skip on resume) one of the B-D checkpoints. Returns its
+        output for the next stage plus its fingerprint."""
         fp = self._fp(stage, upstream_fp)
         path = self._path(stage)
-        if resume and io_tables.stage_complete(path, fp):
-            m = io_tables.read_manifest(path)
-            m["skipped"] = True
-        else:
+        m = self._resumed(path, fp, resume)
+        if m is None:
             t_build = time.time()
             df = build()
-            if not self.cfg.checkpoints and stage != "E_triples":
+            if not self.cfg.checkpoints:
                 # fused mode: in-memory stage boundary (final sink still
                 # writes). Only C_link persists: B feeds only C (persisting
                 # both doubles memory for nothing) and D feeds only E
@@ -440,11 +461,9 @@ class Pipeline:
                 }
                 self._record(stage, m)
                 return df, fp
-            m = io_tables.write_stage(df, path, stage, fp, partition_by, mode=mode)
+            m = io_tables.write_stage(df, path, stage, fp)
             m["total_ms"] = int((time.time() - t_build) * 1000)
         self._record(stage, m)
-        if stage == "E_triples":
-            return m, fp
         # read back: downstream plans hang off the checkpoint, not the
         # full upstream lineage (bounded plan size; exact resume)
         return io_tables.read_stage(spark, path), fp
@@ -487,39 +506,14 @@ class Pipeline:
         )
 
         # ---- Stage E: publish -------------------------------------------
-        def build_e() -> DataFrame:
-            # task count = buckets x salt factor (publish_task_count has
-            # the measured sizing memoir; the salt splits Zipf-hot buckets
-            # — the measured 4N-level straggler, see PUBLISH_SALT_ROWS).
-            # Row estimate from input parquet footers (None for non-file
-            # inputs): no count job.
-            est_turns = input_rows_estimate(transcripts)
-            est_rows = int(est_turns * TRIPLES_PER_TURN_EST) if est_turns else None
-            salt = publish_salt_factor(est_rows)
-            n_tasks = publish_task_count(
-                est_rows, spark.sparkContext.defaultParallelism
-            )
-            triples = publish_triples(canoned, salt, n_tasks)
-            # idempotent publish: drop lineage ids already in the sink
-            final_path = self._path("E_triples")
-            if io_tables.read_manifest(final_path) is not None:
-                published = io_tables.read_stage(spark, final_path).select(
-                    "lineage_id"
-                )
-                triples = triples.join(published, "lineage_id", "left_anti")
-            return triples
-
-        # append-mode sink: the anti-joined delta is appended, so re-runs
-        # are idempotent and the manifest always counts the cumulative set
-        sink, _ = self._run_stage(
-            spark,
-            "E_triples",
-            fp_d,
-            build_e,
-            resume,
-            partition_by=["part_key"],
-            mode="append",
-        )
+        fp_e = self._fp("E_triples", fp_d)
+        path = self._path("E_triples")
+        sink = self._resumed(path, fp_e, resume)
+        if sink is None:
+            t_build = time.time()
+            sink = publish(canoned, transcripts, path, fp_e)
+            sink["total_ms"] = int((time.time() - t_build) * 1000)
+        self._record("E_triples", sink)
         self._flush_metrics(t0)
         return sink
 

@@ -370,16 +370,12 @@ def incremental_triples(
     sink_dir: str,
     checkpoint_dir: str,
 ) -> None:
-    """stream_sink: streaming ingestion of arriving transcript files ->
-    foreachBatch reuses the BATCH extraction/linking stages and appends
-    idempotently by lineage_id (late re-delivered files cannot duplicate
-    triples). This is the production shape for continuous KG construction:
-    the per-batch work is the same code path the batch pipeline runs.
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
+    """stream_sink: streaming ingestion of arriving transcript files. Each
+    micro-batch runs the batch pipeline's Stages A (dedup within the
+    batch), B and C, takes the link or else the raw surface per side, and
+    publishes through pipeline.publish, the batch Stage E: re-delivered
+    files cannot duplicate triples. Stage D stays batch-only, as
+    canonicalization groups surfaces across the whole corpus."""
     from . import extract, link, pipeline, schemas
 
     stream = (
@@ -389,25 +385,17 @@ def incremental_triples(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        raw = extract.stage_extract(batch_df)
+        raw = extract.stage_extract(pipeline.stage_ingest(batch_df))
         linked = link.stage_link(raw, entity_dict)
-        triples = (
-            linked.withColumn(
-                "subj", F.coalesce("subj_link", "subj_raw")
-            )
-            .withColumn("obj", F.coalesce("obj_link", "obj_raw"))
-            .select("subj", "pred", "obj", "conv_id", "turn_idx", "rule_id")
-            .dropDuplicates()
-            .withColumn("lineage_id", pipeline.lineage_col())
+        triples = linked.select(
+            F.coalesce("subj_link", "subj_raw").alias("subj"),
+            "pred",
+            F.coalesce("obj_link", "obj_raw").alias("obj"),
+            "conv_id",
+            "turn_idx",
+            "rule_id",
         )
-        if os.path.exists(sink_dir) and any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(sink_dir)
-            for f in fs
-        ):
-            published = spark.read.parquet(sink_dir).select("lineage_id")
-            triples = triples.join(published, "lineage_id", "left_anti")
-        triples.write.mode("append").parquet(sink_dir)
+        pipeline.publish(triples, batch_df, sink_dir, f"stream-batch-{batch_id}")
 
     q = (
         stream.writeStream.foreachBatch(process)
@@ -420,8 +408,9 @@ def incremental_triples(
 
 def _stream_sink_sql() -> str:
     """SQL twin of the foreachBatch sink: extraction + linking + coalesce
-    rewrite (no canon stage in the incremental path) + distinct + lineage,
-    over the staged 40-conv corpus both engines read."""
+    rewrite (no canon stage in the incremental path) + distinct + lineage
+    + part_key (the formula of _kg_sql's `mat` CTE), over the staged
+    40-conv corpus both engines read."""
     from . import synth
     from .kgqueries import _kg_sql
 
@@ -429,7 +418,9 @@ def _stream_sink_sql() -> str:
         """SELECT subj, pred, obj, conv_id, turn_idx, rule_id,
                   substr(sha256(concat_ws(chr(31), subj, pred, obj, conv_id,
                                    CAST(turn_idx AS VARCHAR), rule_id)), 1, 32)
-                    AS lineage_id
+                    AS lineage_id,
+                  CAST(CAST('0x' || substr(sha256(subj), 1, 15) AS BIGINT) % 128
+                       AS INTEGER) AS part_key
            FROM (SELECT DISTINCT COALESCE(subj_link, subj_raw) AS subj, pred,
                         COALESCE(obj_link, obj_raw) AS obj,
                         conv_id, turn_idx, rule_id
@@ -441,12 +432,13 @@ def _stream_sink_sql() -> str:
 @register("stream_sink_incremental", sql=_stream_sink_sql())
 def stream_sink_incremental(spark, sf):
     """End-to-end streaming triples: stream the staged corpus in,
-    extract+link per micro-batch, idempotent append. Draining the full
+    ingest+extract+link per micro-batch, publish. Draining the full
     backlog must equal the batch extraction+linking semantics exactly —
-    pinned by the SQL value oracle over the same staged parquet."""
+    sink layout (part_key) included — pinned by the SQL value oracle over
+    the same staged parquet."""
     import shutil
 
-    from . import synth
+    from . import io_tables, synth
 
     d = synth.stage_corpus(40)
     src = tempfile.mkdtemp(prefix="stream_in_")
@@ -455,4 +447,4 @@ def stream_sink_incremental(spark, sf):
     sink = tempfile.mkdtemp(prefix="stream_sink_")
     ck = tempfile.mkdtemp(prefix="stream_ck_")
     incremental_triples(spark, src, edf, sink, ck)
-    return spark.read.parquet(sink)
+    return io_tables.read_stage(spark, sink)

@@ -143,6 +143,27 @@ def test_resume_idempotent(
     )
 
 
+def test_publish_without_manifest_does_not_duplicate(
+    spark, transcripts_df, entity_dict_df, tmp_path, final_triples
+):
+    """A first publish whose Spark job committed but whose manifest was
+    never written (a crash between the two): the re-run anti-joins against
+    the data files the sink holds, manifest or not, and ends in the exact
+    triple set with no duplicate row."""
+    wd = str(tmp_path / "nomanifest")
+    cfg = pipeline.PipelineConfig(
+        work_dir=wd, input_fingerprint="fix120", checkpoints=False
+    )
+    pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict_df)
+    os.remove(os.path.join(wd, "E_triples", io_tables.MANIFEST))
+    sink = pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict_df)
+    got = io_tables.read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "rule_id", "lineage_id"]
+    rows = list(map(tuple, got[cols].itertuples(index=False)))
+    assert sink["rows"] == len(rows) == len(set(rows)) == len(final_triples)
+    assert set(rows) == set(map(tuple, final_triples[cols].itertuples(index=False)))
+
+
 def test_lineage_deterministic(final_triples):
     """lineage_id is a pure function of the triple row — recompute in pandas.
     128-bit truncated sha256 hex (see pipeline.lineage_col's byte-diet

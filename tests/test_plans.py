@@ -82,7 +82,7 @@ def test_lsh_candidates_never_nested_loop(spark, blocking):
             spark.createDataFrame([(n,) for n in names], "surface string")
         )
     else:
-        df = dedup.doc_minhash_pairs(load(spark, SF, "documents"))
+        df = dedup.doc_minhash_pairs(load(spark, SF, "documents"), dedup.DOC_JACCARD)
     df.collect()
     plan = plan_of(df)
     assert "SortMergeJoin" in plan or "HashJoin" in plan, plan
@@ -293,21 +293,24 @@ def test_corpus_curation_gate_is_single_scan(spark):
 
 
 def test_lsh_threshold_names_one_intersect(spark):
-    """Stage D tests J >= t as inter * (1 + t) >= t * (|A| + |B|): the join
-    condition or Filter that applies the threshold in candidate_pairs'
-    final plan computes array_intersect once per candidate. A filter on a
-    projected jaccard column gets pushed into the join condition with the
-    intersect repeated per reference (no common-subexpression elimination
-    there)."""
+    """Stage D (candidate_pairs) and document dedup (the dedup_minhash
+    entry) test J >= t = p / q as inter * (p + q) >= p * (|A| + |B|): the
+    join condition or Filter that applies the threshold in the final plan
+    computes array_intersect once per candidate. A filter on a projected
+    jaccard column gets pushed into the join condition with the intersect
+    repeated per reference (no common-subexpression elimination there)."""
     from kgpipe import canon
 
     names = ["grace hopper", "grace hoppe", "alan turing", "alan turin", "zed"]
-    df = canon.candidate_pairs(spark.createDataFrame([(n,) for n in names], "surface string"))
-    df.collect()
-    final = plan_of(df).split("== Initial Plan ==")[0]
-    tests = [
-        line for line in final.splitlines()
-        if "array_intersect" in line and ("Join" in line or "Filter" in line)
-    ]
-    assert len(tests) == 1, final
-    assert tests[0].count("array_intersect") == 1, tests[0]
+    for df in (
+        canon.candidate_pairs(spark.createDataFrame([(n,) for n in names], "surface string")),
+        E.queries()["dedup_minhash"](spark, SF),
+    ):
+        df.collect()
+        final = plan_of(df).split("== Initial Plan ==")[0]
+        tests = [
+            line for line in final.splitlines()
+            if "array_intersect" in line and ("Join" in line or "Filter" in line)
+        ]
+        assert len(tests) == 1, final
+        assert tests[0].count("array_intersect") == 1, tests[0]

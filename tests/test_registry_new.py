@@ -156,9 +156,7 @@ def test_corpus_curation_invariants(spark):
     texts = kept_docs.select(F.lower(F.trim("text")).alias("k"))
     assert texts.count() == texts.distinct().count()
     # no near-dup pair (>= threshold) survives within the kept set
-    surviving_pairs = doc_minhash_pairs(kept_docs).filter(
-        F.col("jaccard") >= DOC_JACCARD
-    )
+    surviving_pairs = doc_minhash_pairs(kept_docs, DOC_JACCARD)
     assert surviving_pairs.count() == 0
 
 

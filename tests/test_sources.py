@@ -1,5 +1,5 @@
 """Source-level guards that need no Spark session: every top-level name in
-kgpipe/ has a reader."""
+kgpipe/ has a reader, and only the table shim touches sink files."""
 
 from __future__ import annotations
 
@@ -54,3 +54,16 @@ def test_no_unread_top_level_names():
         if not (name.startswith("__") and name.endswith("__")) and words[name] < 2
     ]
     assert not dead, dead
+
+
+def test_only_io_tables_writes_tables_or_manifests():
+    """io_tables is the one module that knows the manifest file and picks a
+    writer's save mode: every other module of kgpipe/ reads and writes
+    stages through it, so a second sink writer cannot drift from the
+    append contract."""
+    offenders = [
+        p.name
+        for p in sorted(ROOT.glob("kgpipe/*.py"))
+        if p.name != "io_tables.py" and re.search(r"_MANIFEST|\.mode\(", p.read_text())
+    ]
+    assert not offenders, offenders

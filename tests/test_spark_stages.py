@@ -179,3 +179,31 @@ def test_stage_canon_leaves_nothing_cached(spark, monkeypatch):
     assert _cached_plans(spark) == before
     subj = {r["subj"] for r in out.collect()}
     assert subj == {"alan turin", "grace hoppe", "zed"}
+
+
+@pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs"])
+def test_lsh_blocking_leaves_nothing_cached(spark, blocking):
+    """Neither MinHash-LSH caller leaves a CacheManager entry behind after
+    its result is collected: nothing could unpersist it afterwards."""
+    from kgpipe import dedup
+
+    names = ["grace hopper", "grace hoppe", "alan turing", "alan turin", "zed"]
+    before = _cached_plans(spark)
+    if blocking == "candidate_pairs":
+        df = canon.candidate_pairs(spark.createDataFrame([(n,) for n in names], "surface string"))
+    else:
+        docs = spark.createDataFrame(
+            [(i, f"{n} wrote the first compiler for the machine") for i, n in enumerate(names)],
+            "doc_id long, text string",
+        )
+        df = dedup.doc_minhash_pairs(docs, dedup.DOC_JACCARD)
+    assert df.collect()
+    assert _cached_plans(spark) == before
+
+
+def test_jaccard_threshold_is_exact_at_the_boundary(spark):
+    """jaccard_at_least keeps a pair whose Jaccard equals t, also at a t
+    that is no binary fraction: in doubles, 6 * 0.2 > 1 * 1.2."""
+    pairs = spark.createDataFrame([(1, 6), (1, 7), (2, 6)], "inter int, n int")
+    kept = pairs.filter(canon.jaccard_at_least(0.2)).collect()  # J = 1/5, 1/6, 1/2
+    assert sorted((r.inter, r.n) for r in kept) == [(1, 6), (2, 6)]

@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kgpipe import rules, schemas, streaming, synth
+from kgpipe import io_tables, rules, schemas, streaming, synth
 
 
 @pytest.fixture(scope="module")
@@ -24,6 +24,7 @@ def test_incremental_stream_matches_batch_extraction(spark, small_corpus, tmp_pa
     ck = str(tmp_path / "ck")
     streaming.incremental_triples(spark, str(src), edf, sink, ck)
     got = spark.read.parquet(sink).toPandas()
+    assert io_tables.read_manifest(sink)["rows"] == len(got)
 
     t = c.transcripts.copy()
     t["text_norm"] = rules.normalize_series(t["text"])
@@ -36,13 +37,53 @@ def test_incremental_stream_matches_batch_extraction(spark, small_corpus, tmp_pa
     # must append zero rows (lineage_id anti-join)
     streaming.incremental_triples(spark, str(src), edf, sink, str(tmp_path / "ck2"))
     again = spark.read.parquet(sink)
-    assert again.count() == len(got)
+    assert again.count() == len(got) == io_tables.read_manifest(sink)["rows"]
     # late NEW data flows through incrementally
     extra = c.transcripts.copy()
     extra["conv_id"] = extra["conv_id"] + "x"
     extra.to_parquet(src / "p1.parquet", index=False)
     streaming.incremental_triples(spark, str(src), edf, sink, ck)
     assert spark.read.parquet(sink).count() == 2 * len(got)
+    assert io_tables.read_manifest(sink)["rows"] == 2 * len(got)
+
+
+def test_stream_sink_equals_batch_stages_on_dirty_input(spark, small_corpus, tmp_path):
+    """A micro-batch runs the batch pipeline's Stages A, B, C and E: on
+    input with a re-sent (conv_id, turn_idx) carrying a later ts and other
+    text, the stream sink holds exactly what batch Stage A (which keeps
+    the earliest copy) + B + C + publish_triples give, with part_key."""
+    from kgpipe import extract, link, pipeline
+
+    t = small_corpus.transcripts
+    tool = t[t["role"] == "tool"]
+    orig, donor = tool.iloc[0], tool.iloc[1]
+    dup = donor.copy()
+    dup[["conv_id", "turn_idx"]] = orig[["conv_id", "turn_idx"]]
+    dup["ts"] = orig["ts"] + pd.Timedelta(hours=1)
+    dirty = pd.concat([t, dup.to_frame().T.astype(t.dtypes)], ignore_index=True)
+    src = tmp_path / "in"
+    src.mkdir()
+    dirty.to_parquet(src / "p0.parquet", index=False)
+    edf = spark.createDataFrame(small_corpus.entity_dict, schema=schemas.ENTITY_DICT)
+    sink = str(tmp_path / "sink")
+    streaming.incremental_triples(spark, str(src), edf, sink, str(tmp_path / "ck"))
+
+    tdf = spark.read.parquet(str(src / "p0.parquet"))
+    linked = link.stage_link(extract.stage_extract(pipeline.stage_ingest(tdf)), edf)
+    batch = pipeline.publish_triples(
+        linked.select(
+            F.coalesce("subj_link", "subj_raw").alias("subj"), "pred",
+            F.coalesce("obj_link", "obj_raw").alias("obj"),
+            "conv_id", "turn_idx", "rule_id",
+        ),
+        1,
+        8,
+    )
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "rule_id", "lineage_id", "part_key"]
+    got = io_tables.read_stage(spark, sink).select(cols).collect()
+    want = batch.select(cols).collect()
+    assert len(got) == len(set(got)) == io_tables.read_manifest(sink)["rows"]
+    assert set(got) == set(want)
 
 
 def test_windowed_rates_drop_late_rows(spark, tmp_path):

@@ -73,6 +73,12 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
         "equi-join, each scored by one array_intersect over xxhash64 "
         "shingle arrays in the verify join's condition",
     ),
+    "dedup_minhash": (
+        ["HashJoin", "!NestedLoopJoin", "!CartesianProduct"],
+        "document near-dup pairs through the same LSH core: candidates "
+        "only from the band equi-join, each scored by one array_intersect "
+        "over the locally checkpointed word-shingle sets",
+    ),
     "join_range_asof": (
         ["RangeFrame", "!Join"],
         "interval count as a RANGE window over unix_micros(ts): one shuffle "
