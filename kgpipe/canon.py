@@ -5,17 +5,15 @@ O(n²) loop over name pairs (SURVEY.md §0.3). At 10^12-turn scale that is
 impossible, so per BASELINE.json: "candidate canonicalization via
 MinHash-LSH blocking plus GraphFrames/iterative-join connected components".
 GraphFrames is absent in the sandbox (SURVEY.md §0.5), so connected
-components is the iterative-join min-label-propagation variant with
-per-round localCheckpoint to truncate lineage.
+components is an iterative-join loop over parent pointers (min-hooking plus
+pointer jumping, O(log n) rounds) with per-round localCheckpoint to
+truncate lineage.
 
 Everything up to the pair list is Spark-builtin expressions (engine-neutral
 md5-prefix MinHash, kgpipe/nhash.py — JVM-side, deterministic,
-whole-stage-codegen friendly); zero Python on this path. The hash family
-was switched from xxhash64 to the md5-affine scheme in round 3 so the
-signature values themselves are reproducible by an external SQL engine
-(the DuckDB oracle) — one md5 per shingle fans out to all hash functions
-via integer multiply-adds, so the swap is performance-neutral (measured;
-see kgqueries.py oracle-ability header). The banding, band self-join and
+whole-stage-codegen friendly, and value-reproducible by the DuckDB oracle;
+one md5 per shingle fans out to all hash functions via integer
+multiply-adds); zero Python on this path. The banding, band self-join and
 exact-Jaccard verify (lsh_pairs) are the one MinHash-LSH blocking core of
 the package: document dedup (dedup.doc_minhash_pairs) feeds it its own
 signature.
@@ -199,11 +197,12 @@ def _driver_labels(spark, labels: dict[str, str]) -> DataFrame:
     )
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
-    """Connected components: min-label propagation.
-
-    labels converge to the lexicographically smallest surface in each
-    component — the same representative rule as rules.UnionFind.
+def connected_components(edges: DataFrame, max_iter: int = 64) -> DataFrame:
+    """Connected components: parent pointers with min-hooking and pointer
+    jumping (the parent-connect + shortcut family of Liu & Tarjan, "Simple
+    Concurrent Labeling Algorithms for Connected Components", SOSA 2019).
+    Every node is labelled with the smallest surface of its component — the
+    same representative rule as rules.UnionFind.
 
     The edges are symmetrized in one pass (each row explodes into both
     directions), so the edge DAG — the lazy LSH chain on Stage D's path —
@@ -212,16 +211,22 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
 
     Hybrid execution (both paths produce identical labels, tested):
     - edge set under DRIVER_CC_MAX_EDGES: collect + union-find on the
-      driver (one job; the K-iteration loop is pure overhead there);
-    - otherwise the iterative-join loop: per round, join labels across
-      symmetrized edges and take the min neighbor label, localCheckpoint
-      truncating lineage so plans stay O(1) per round. Parallelism is
-      sized to the edge count, not the global shuffle setting.
+      driver (one job; the round loop is pure overhead there);
+    - otherwise a loop over pointers p(x) <= x, each a node of x's
+      component. Start: p(x) = min(x, min neighbour). Each round:
+        hook(x) = min{p(v) : edge (u, v), p(u) = x, p(v) < x}
+        p'(x)   = min(p(p(p(x))), hook(x))
+      until no pointer moves. Pointers only decrease, so the fixpoint is
+      one star per component rooted at its minimum; rounds grow with
+      log(nodes), not the diameter (measured: 6 on canon_chains, 8 on a
+      1,000-hop path). One action per round: the count of changed
+      pointers reads a lazy localCheckpoint, which keeps plans O(1).
 
     Returns DataFrame[node, component], broadcast-hinted on the driver
     path. Nodes appearing in no edge are NOT returned (callers treat
-    missing as singleton = itself). Raises RuntimeError when labels still
-    change after max_iter rounds (a component wider than max_iter hops).
+    missing as singleton = itself). Raises RuntimeError when a pointer
+    still moves after max_iter rounds (pointers strictly decrease, so the
+    cap only stops a runaway loop).
     """
     both_ways = F.array(
         F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
@@ -239,50 +244,39 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         return _driver_labels(spark, labels)
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_parts = max(1, min(max_parts, n_edges // 100_000 + 1))
-    ckpt = sym.repartition(n_parts, "dst").localCheckpoint()
-    sym.unpersist()  # the eager checkpoint holds the edges from here on
-    sym = ckpt
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node")).repartition(
-        n_parts, "node"
-    ).localCheckpoint()
+    # a hook is symmetric in an edge's ends, so rounds read each undirected
+    # edge once; the eager checkpoints hold what the loop reads of sym
+    half = sym.filter("src < dst").repartition(n_parts, "dst").localCheckpoint()
+    p = (
+        sym.groupBy(F.col("src").alias("node"))
+        .agg(F.least(F.min("src"), F.min("dst")).alias("component"))
+        .repartition(n_parts, "node")
+        .localCheckpoint()
+    )
+    sym.unpersist()
     for _ in range(max_iter):
-        neigh = (
-            sym.join(labels, sym.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("component").alias("nmin"))
+        ends = half.join(p.toDF("dst", "pv"), "dst").join(p.toDF("src", "pu"), "src")
+        hook = (
+            ends.filter("pu != pv")
+            .groupBy(F.greatest("pu", "pv").alias("node"))
+            .agg(F.min(F.least("pu", "pv")).alias("hook"))
         )
-        # convergence flag computed IN the propagation pass: new label =
-        # least(old, nmin), so "changed" is exactly nmin < old — carrying
-        # it as a column means the check is a filter over the freshly
-        # checkpointed blocks instead of the old new-vs-old label JOIN
-        # (round 3 shape), which cost one extra shuffle job per iteration
-        # at both cluster sizes — pure serial-latency tax on the 4N level.
-        new_labels = (
-            labels.join(neigh, labels.node == neigh.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce(F.col("nmin"), F.col("component"))
-                    < F.col("component")
-                ).alias("_chg"),
-            )
+        new = F.least("p3", "hook")  # least() skips a null (absent) hook
+        nxt = (
+            p.toDF("node", "p1")
+            .join(p.toDF("p1", "p2"), "p1")
+            .join(p.toDF("p2", "p3"), "p2")
+            .join(hook, "node", "left")
+            .select("node", new.alias("component"), (new < F.col("p1")).alias("_chg"))
+            .localCheckpoint(eager=False)
         )
-        new_labels = new_labels.localCheckpoint()
-        changed = new_labels.filter(F.col("_chg")).limit(1).count()
-        labels = new_labels.drop("_chg")
+        changed = nxt.filter("_chg").count()
+        p = nxt.drop("_chg")
         if changed == 0:
-            break
-    else:
-        # a label still moved in the last round: some component is wider
-        # than max_iter hops, and returning now would split it
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    return labels
+            return p
+    # a pointer still moved in the last round: returning now would split a
+    # component
+    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
 def unlinked_surfaces(linked: DataFrame) -> DataFrame:

@@ -53,7 +53,7 @@ def curate(spark: SparkSession, sf: str) -> DataFrame:
 
     # near-dup clustering among survivors: LSH pairs -> CC -> keep the
     # cluster representative (min doc id; ids zero-padded so the string
-    # min-label CC representative equals the numeric min)
+    # component minimum equals the numeric min)
     pad = lambda c: F.format_string("%012d", F.col(c).cast("long"))
     pairs = doc_minhash_pairs(docs, DOC_JACCARD)
     edges = pairs.select(pad("a").alias("a"), pad("b").alias("b"))
@@ -68,8 +68,8 @@ def curate(spark: SparkSession, sf: str) -> DataFrame:
 def _curate_sql() -> str:
     """SQL twin of curate(): lang-ID -> length gate -> exact dedup ->
     all-pairs shingle Jaccard edges -> recursive-CTE CC -> keep the numeric
-    min doc per cluster. The Spark side pads doc ids so its string min-label
-    CC equals this numeric min; LSH recall is total on this corpus (same
+    min doc per cluster. The Spark side pads doc ids so its string component
+    minimum equals this numeric min; LSH recall is total on this corpus (same
     evidence as dedup_minhash)."""
     from .dedup import DOC_EDGES_SQL, DOC_SHINGLES_SQL
     from .textstats import LANG_STOPWORDS

@@ -28,7 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import canon, extract, io_tables, link
+from . import canon, extract, io_tables, link, rules
 
 SEP = "\x1f"
 # bucket count for part_key = sha2(subj)-derived bucket. Also the parallelism
@@ -177,8 +177,12 @@ class PipelineConfig:
     checkpoints: bool = True
 
     def config_hash(self) -> str:
+        """The input, the sink layout, the extraction rules and the Stage D
+        constants, read at call time."""
+        d = [rules.SHINGLE_K, rules.MINHASH_HASHES, rules.JACCARD_THRESHOLD]
         blob = json.dumps(
-            {"input": self.input_fingerprint, "triple_parts": N_TRIPLE_PARTS},
+            {"input": self.input_fingerprint, "triple_parts": N_TRIPLE_PARTS,
+             "rules": repr(rules.RULES), "stage_d": d},
             sort_keys=True,
         )
         return hashlib.sha256(blob.encode()).hexdigest()[:16]

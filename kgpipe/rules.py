@@ -304,8 +304,8 @@ def jaccard(a: set[str], b: set[str]) -> float:
 # --------------------------------------------------------------------------
 # Union-find clustering shared by the oracle and Stage D's driver paths.
 # Every root is the smallest name of its set, so the labels match the
-# iterative min-label propagation of canon.connected_components whatever
-# order the pairs arrive in.
+# parent-pointer fixpoint of canon.connected_components whatever order the
+# pairs arrive in.
 # --------------------------------------------------------------------------
 class UnionFind:
     def __init__(self) -> None:

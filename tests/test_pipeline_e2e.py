@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from kgpipe import canon, extract, io_tables, oracle, pipeline, schemas
+from kgpipe import canon, extract, io_tables, oracle, pipeline, rules, schemas
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 
@@ -261,6 +261,27 @@ def test_publish_salt_sizing():
     assert f(10**12) == pipeline.PUBLISH_MAX_SALT
     assert pipeline.publish_task_count(18_000_000, 8) == 512
     assert pipeline.publish_task_count(None, 8) == 128
+
+
+@pytest.mark.parametrize(
+    "name, changed",
+    [
+        ("RULES", lambda r: r[:-1]),
+        ("SHINGLE_K", lambda k: k + 1),
+        ("MINHASH_HASHES", lambda n: n * 2),
+        ("JACCARD_THRESHOLD", lambda t: t + 0.1),
+    ],
+)
+def test_config_hash_covers_rules_and_stage_d_constants(monkeypatch, name, changed):
+    """A checkpoint built under other extraction rules or other Stage D
+    constants is not resumed: each one is part of config_hash, read at
+    call time."""
+    cfg = pipeline.PipelineConfig(work_dir="w", input_fingerprint="fp")
+    before = cfg.config_hash()
+    monkeypatch.setattr(rules, name, changed(getattr(rules, name)))
+    assert cfg.config_hash() != before
+    monkeypatch.undo()
+    assert cfg.config_hash() == before
 
 
 def test_ingest_partition_sizing():

@@ -191,9 +191,9 @@ def test_no_row_udfs_in_engine():
 def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
     """cc_iterate at scale: localCheckpoint truncates lineage every round,
     so the executed plan of the label frame is the SAME small checkpoint
-    scan regardless of how many propagation rounds ran — without it, each
+    scan regardless of how many pointer rounds ran — without it, each
     round would nest the previous round's join/agg DAG and the plan (and
-    Catalyst analysis time) would grow linearly with graph diameter."""
+    Catalyst analysis time) would grow with the round count."""
     from kgpipe import canon
 
     monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)  # force loop path
@@ -202,7 +202,8 @@ def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
         edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)]
         return spark.createDataFrame(edges, "a string, b string")
 
-    # diameter 2 -> converges in ~2 rounds; diameter 16 -> ~5+ rounds
+    # diameter 2 -> 2 rounds; diameter 16 -> 4 (each counts the last,
+    # unchanged one)
     short = canon.connected_components(chain(2))
     long = canon.connected_components(chain(16))
     assert set(r["component"] for r in long.collect()) == {"n000"}

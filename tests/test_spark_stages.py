@@ -113,14 +113,70 @@ def test_cc_random_graph_vs_unionfind(spark):
 
 
 def test_cc_loop_raises_when_not_converged(spark, monkeypatch):
-    """A 60-node path needs 60 propagation rounds to carry n000 to the far
-    end; with the default 25-round cap the loop must fail loudly instead
-    of returning the half-propagated labels (35 components)."""
+    """A 60-node path needs about 5 pointer rounds; capped at 2 the loop
+    must fail loudly instead of returning the half-merged pointers (split
+    components)."""
     monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)  # force loop path
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)]
     edf = spark.createDataFrame(edges, "a string, b string")
-    with pytest.raises(RuntimeError, match="did not converge in 25 rounds"):
-        canon.connected_components(edf)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        canon.connected_components(edf, max_iter=2)
+
+
+def _shape(name: str) -> list[tuple[str, str]]:
+    """Edge lists of the loop-path shape tests, over zero-padded ids."""
+    import random
+
+    ids = lambda n: [f"n{i:04d}" for i in range(n)]  # noqa: E731
+    if name == "path":
+        v = ids(1001)
+        return list(zip(v, v[1:]))
+    if name == "shuffled_path":
+        v = ids(1001)
+        random.Random(5).shuffle(v)
+        return list(zip(v, v[1:]))
+    if name == "star":
+        v = ids(501)
+        return [(v[250], x) for x in v if x != v[250]]
+    if name == "comb":  # a 20-node spine, a 49-node tooth hanging off each
+        v = ids(1000)
+        spine = v[::50]
+        teeth = [(v[i], v[i + 1]) for i in range(1000) if (i + 1) % 50]
+        return list(zip(spine, spine[1:])) + teeth
+    if name == "interleaved_chains":  # even ids and odd ids, two components
+        v = ids(1000)
+        return list(zip(v[0::2], v[2::2])) + list(zip(v[1::2], v[3::2]))
+    raise ValueError(name)
+
+
+@pytest.mark.parametrize(
+    "shape", ["path", "shuffled_path", "star", "comb", "interleaved_chains"]
+)
+def test_cc_loop_rounds_grow_with_log_nodes(spark, monkeypatch, shape):
+    """The loop path labels long paths, stars, combs and interleaved chains
+    like the driver union-find, in at most 2*log2(nodes) rounds: one hop
+    per round would need about 1,000 rounds for the path. Rounds are
+    counted as the benchmark's tracing counts them: DataFrame.count calls
+    after the first (the symmetrized edge count)."""
+    import math
+
+    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    edges = _shape(shape)
+    edf = spark.createDataFrame(edges, "a string, b string")
+    counts = []
+    df_cls = type(edf)
+    orig = df_cls.count
+
+    def count(df):
+        counts.append(1)
+        return orig(df)
+
+    monkeypatch.setattr(df_cls, "count", count)
+    got = {r["node"]: r["component"] for r in canon.connected_components(edf).collect()}
+    monkeypatch.undo()
+    assert got == rules.component_labels(edges)
+    n_nodes = len(got)
+    assert len(counts) - 1 <= 2 * math.log2(n_nodes), (len(counts) - 1, n_nodes)
 
 
 @pytest.mark.parametrize("loop_path", [False, True])

@@ -100,12 +100,12 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
 
 
 def _cc_loop_plan(spark):
-    """cc_iterate with the iterative-join loop path FORCED (driver fast
+    """cc_iterate with the parent-pointer loop path FORCED (driver fast
     path disabled), on a diameter-16 chain — the plan test
     (tests/test_plans.py::test_cc_iterative_plan_stays_constant) pins that
-    this plan has the SAME line count as the 2-round case; this dump shows
-    what that O(1) plan is: a lineage-truncated checkpoint scan, no nested
-    join DAG."""
+    this plan has the SAME line count as the diameter-2 case; this dump
+    shows what that O(1) plan is: a lineage-truncated checkpoint scan of
+    the final pointer table, no nested hook/jump join DAG."""
     from kgpipe import canon
 
     saved = canon.DRIVER_CC_MAX_EDGES
@@ -136,9 +136,9 @@ SPECIAL: dict = {
     "cc_iterate (forced loop path, diameter 16)": (
         _cc_loop_plan,
         ["!Join", "Scan ExistingRDD"],
-        "per-round localCheckpoint truncates lineage: the label frame's "
+        "per-round localCheckpoint truncates lineage: the pointer table's "
         "executed plan is a constant-size checkpoint scan no matter how "
-        "many propagation rounds ran",
+        "many hook-and-jump rounds ran",
     ),
     "corpus_curation gate (lang+quality)": (
         _curate_gate_plan,
