@@ -49,7 +49,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         choices=["fused", "ckpt"],
         default="fused",
         help="fused = in-memory stage boundaries (throughput config); "
-        "ckpt = parquet checkpoints every stage (resumable config)",
+        "ckpt = parquet checkpoints of B and D (resumable config)",
     )
     ap.add_argument("--n", type=int, default=2, help="small level cores (N)")
     ap.add_argument("--n4", type=int, default=8, help="large level cores (4N)")

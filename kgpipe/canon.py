@@ -190,8 +190,8 @@ DRIVER_ALLPAIRS_MAX_SURFACES = 1_000
 
 def _driver_labels(spark, labels: dict[str, str]) -> DataFrame:
     """Label table of a driver path, hinted for broadcast: its row count is
-    bounded by the driver threshold that selected the path, so the rewrite
-    joins in stage_canon never shuffle the triple set against it."""
+    bounded by the driver threshold that selected the path, so the joins
+    of rewrite never shuffle the triple set against it."""
     return F.broadcast(
         spark.createDataFrame(list(labels.items()), "node string, component string")
     )
@@ -300,14 +300,13 @@ def unlinked_surfaces(linked: DataFrame) -> DataFrame:
 
 
 def stage_canon(linked: DataFrame) -> DataFrame:
-    """Resolve unlinked surfaces to component representatives.
-
-    Input: Stage C output (…, subj_raw/obj_raw, subj_kind/obj_kind,
-    subj_link/obj_link). Output: triples with final subj/obj.
-    """
+    """Stage D's decision over Stage C output (…, subj_raw/obj_raw,
+    subj_kind/obj_kind, subj_link/obj_link): the label table
+    DataFrame[node, component] of every unlinked surface with a similar
+    partner — a broadcast-hinted driver table or the loop's checkpoint
+    scan. rewrite applies it to the triples."""
     unlinked = unlinked_surfaces(linked).persist()
-    n_unl = unlinked.count()
-    if n_unl <= DRIVER_ALLPAIRS_MAX_SURFACES:
+    if unlinked.count() <= DRIVER_ALLPAIRS_MAX_SURFACES:
         # pure-driver fast path: all-pairs edges AND union-find on the one
         # collected surface list, in a single job. Handing a driver edge
         # DataFrame to connected_components instead would re-count and
@@ -316,47 +315,47 @@ def stage_canon(linked: DataFrame) -> DataFrame:
         # Amdahl tax on the 4N level of the production scaling pair (ckpt
         # Stage D scaled 0.53 in r3).
         names = [r["surface"] for r in unlinked.collect()]
-        unlinked.unpersist()  # collected already; nothing downstream reads it
-        cc = _driver_labels(linked.sparkSession, similar_pair_labels(names))
+        labels = _driver_labels(linked.sparkSession, similar_pair_labels(names))
     else:
-        edges = candidate_pairs(unlinked)  # lazy — keep unlinked persisted
-        cc = connected_components(edges)
-        # cc's labels are collected or checkpointed: nothing reads the
-        # LSH chain, so nothing needs unlinked cached any more
-        unlinked.unpersist()
+        labels = connected_components(candidate_pairs(unlinked))
+    # the labels are collected or checkpointed: nothing reads the surfaces
+    # (or the LSH chain over them) any more
+    unlinked.unpersist()
+    return labels
 
-    # canon_rewrite: two joins against cc_labels (subj then obj); missing
-    # nodes stay themselves (singleton components). Labels from a driver
-    # path carry a broadcast hint (_driver_labels) that survives these
-    # selects — without it Spark planned SortMergeJoins, i.e. two full
-    # shuffles + sorts of the ENTIRE triple set against a few-hundred-row
-    # table (measured: the bulk of stage D wall). Labels from the
-    # iterative loop can be arbitrarily large, so they stay a shuffle join.
-    subj_cc = cc.select(
-        F.col("node").alias("_s_node"), F.col("component").alias("_s_comp")
-    )
-    obj_cc = cc.select(
-        F.col("node").alias("_o_node"), F.col("component").alias("_o_comp")
-    )
-    return (
-        linked.join(subj_cc, linked.subj_raw == F.col("_s_node"), "left")
-        .join(obj_cc, linked.obj_raw == F.col("_o_node"), "left")
-        .select(
-            F.coalesce(
-                "subj_link",
-                F.when(F.col("subj_kind") == "node", F.col("subj_raw")),
-                "_s_comp",
-                "subj_raw",
-            ).alias("subj"),
-            "pred",
-            F.coalesce(
-                "obj_link",
-                F.when(F.col("obj_kind") == "node", F.col("obj_raw")),
-                "_o_comp",
-                "obj_raw",
-            ).alias("obj"),
-            "conv_id",
-            "turn_idx",
-            "rule_id",
-        )
+
+def rewrite(linked: DataFrame, labels: DataFrame | None) -> DataFrame:
+    """Final subj/obj of Stage C output: the link, else a node value, else
+    the surface's component label, else the surface itself (singleton).
+    labels None (the stream: no Stage D) skips the label step.
+
+    Two left joins against the labels (subj then obj). Driver-path labels
+    carry a broadcast hint (_driver_labels) and a small label checkpoint
+    falls under Spark's size-based broadcast — without either Spark plans
+    SortMergeJoins, two full shuffles + sorts of the ENTIRE triple set
+    against a few-hundred-row table. Labels from the iterative loop can
+    be arbitrarily large, so they stay a shuffle join."""
+    out = linked
+    if labels is not None:
+        # one right side for both joins, renamed after each: the two joins
+        # share one broadcast (a reused exchange)
+        lab = labels.select(F.col("node").alias("_node"), F.col("component").alias("_comp"))
+        for side in ("subj", "obj"):
+            out = (
+                out.join(lab, F.col(f"{side}_raw") == F.col("_node"), "left")
+                .drop("_node")
+                .withColumnRenamed("_comp", f"_{side}_comp")
+            )
+
+    def final(side: str) -> F.Column:
+        steps = [
+            F.col(f"{side}_link"),
+            F.when(F.col(f"{side}_kind") == "node", F.col(f"{side}_raw")),
+        ]
+        if labels is not None:
+            steps.append(F.col(f"_{side}_comp"))
+        return F.coalesce(*steps, F.col(f"{side}_raw")).alias(side)
+
+    return out.select(
+        final("subj"), "pred", final("obj"), "conv_id", "turn_idx", "rule_id"
     )

@@ -429,7 +429,8 @@ def cc_iterate(spark, sf):
     ),
 )
 def canon_rewrite(spark, sf):
-    return canon.stage_canon(_stage(spark, sf, "linked"))
+    linked = _stage(spark, sf, "linked")
+    return canon.rewrite(linked, canon.stage_canon(linked))
 
 
 # the oracle replays the exact MinHash definition: md5-prefix base hash per
@@ -532,7 +533,7 @@ def sink_metrics(spark, sf):
 
     wd = _ckpt_run(spark, sf)
     rows = []
-    for stage in ("B_extract", "C_link", "D_canon", "E_triples"):
+    for stage in ("B_extract", "D_canon", "E_triples"):
         m = io_tables.read_manifest(os.path.join(wd, stage))
         for part, n in m["partition_counts"].items():
             rows.append((stage, part, int(n), m["fingerprint"]))

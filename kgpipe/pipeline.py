@@ -4,17 +4,18 @@ Lifecycle (SURVEY.md §3.2):
 
   A ingest   : validate transcripts, repartition(conv_id), stable ordering
   B extract  : normalize -> mention filter -> triple extraction   [ckpt 1]
-  C link     : broadcast-dictionary linking                        [ckpt 2]
-  D canon    : LSH blocking + connected components + rewrite       [ckpt 3]
-  E publish  : distinct triples + deterministic lineage ids + partitioned
-               sink + per-stage metrics                            [final]
+  C link     : broadcast-dictionary linking (lazy, read by D and E)
+  D canon    : LSH blocking + connected components -> labels      [ckpt 2]
+  E publish  : C + label rewrite, distinct triples + deterministic
+               lineage ids + partitioned sink + per-stage metrics [final]
 
 Resume (BASELINE.json: "resumable from checkpoint with per-partition lineage
 + metrics"): each checkpoint writes a manifest whose fingerprint chains the
-config hash with the upstream fingerprint; `run(resume=True)` skips stages
-whose manifests match and recomputes from the last good checkpoint. The
-publish step anti-joins already-published lineage_ids so re-runs are
-idempotent.
+config hash with the upstream fingerprint; D's upstream also covers the
+dictionary's content (dict_fingerprint), which E re-reads. `run(resume=True)`
+skips stages whose manifests match and recomputes from the last good
+checkpoint. The publish step anti-joins already-published lineage_ids so
+re-runs are idempotent.
 """
 
 from __future__ import annotations
@@ -170,10 +171,10 @@ def part_key_col() -> F.Column:
 class PipelineConfig:
     work_dir: str
     input_fingerprint: str  # content identity of the input (seed/path/etc.)
-    # True: every stage materializes to parquet + manifest (exact resume,
-    # the production default per BASELINE.json). False: stage boundaries
-    # are in-memory persist() only — no resume, ~2x faster end-to-end when
-    # the job comfortably fits one run (bench fast path).
+    # True: B's triples and D's labels materialize to parquet + manifest
+    # (exact resume, the production default per BASELINE.json). False: only
+    # the sink is written, B's output is persist()ed for the run — no
+    # resume, ~2x faster end-to-end when the job comfortably fits one run.
     checkpoints: bool = True
 
     def config_hash(self) -> str:
@@ -402,6 +403,16 @@ def stage_ingest(transcripts: DataFrame) -> DataFrame:
     )
 
 
+def dict_fingerprint(entity_dict: DataFrame) -> str:
+    """Content identity of the (broadcast-sized) entity dictionary in one
+    aggregate job: row count and the XOR of a per-row xxhash64 over every
+    column — order-free, and unlike a sum it cannot overflow in ANSI mode."""
+    n, h = entity_dict.select(
+        F.count(F.lit(1)), F.bit_xor(F.xxhash64(*entity_dict.columns))
+    ).first()
+    return f"{n}:{h}"
+
+
 class Pipeline:
     def __init__(self, cfg: PipelineConfig):
         self.cfg = cfg
@@ -439,8 +450,8 @@ class Pipeline:
         self, spark: SparkSession, stage: str, upstream_fp: str,
         build: "callable", resume: bool,
     ) -> tuple[DataFrame, str]:
-        """Build (or skip on resume) one of the B-D checkpoints. Returns its
-        output for the next stage plus its fingerprint."""
+        """Build (or skip on resume) one of the B and D checkpoints. Returns
+        its output for the next stage plus its fingerprint."""
         fp = self._fp(stage, upstream_fp)
         path = self._path(stage)
         m = self._resumed(path, fp, resume)
@@ -449,13 +460,7 @@ class Pipeline:
             df = build()
             if not self.cfg.checkpoints:
                 # fused mode: in-memory stage boundary (final sink still
-                # writes). Only C_link persists: B feeds only C (persisting
-                # both doubles memory for nothing) and D feeds only E
-                # (straight pipeline). C is read by two consumers — the
-                # unlinked-surface derivation driving CC, and the final
-                # rewrite — so it must materialize.
-                if stage == "C_link":
-                    df = df.persist()
+                # writes)
                 m = {
                     "stage": stage,
                     "fingerprint": fp,
@@ -494,29 +499,29 @@ class Pipeline:
             lambda: extract.stage_extract(stage_ingest(transcripts)),
             resume,
         )
-
-        # ---- Stage C: linking ------------------------------------------
-        linked, fp_c = self._run_stage(
-            spark,
-            "C_link",
-            fp_b,
-            lambda: link.stage_link(raw, entity_dict),
-            resume,
-        )
-
-        # ---- Stage D: canonicalization ----------------------------------
-        canoned, fp_d = self._run_stage(
-            spark, "D_canon", fp_c, lambda: canon.stage_canon(linked), resume
-        )
-
-        # ---- Stage E: publish -------------------------------------------
-        fp_e = self._fp("E_triples", fp_d)
-        path = self._path("E_triples")
-        sink = self._resumed(path, fp_e, resume)
-        if sink is None:
-            t_build = time.time()
-            sink = publish(canoned, transcripts, path, fp_e)
-            sink["total_ms"] = int((time.time() - t_build) * 1000)
+        if not self.cfg.checkpoints:
+            # fused mode: B's output is the one frame read twice (D's
+            # unlinked surfaces, E's rewrite); held until the sink commits
+            raw = raw.persist()
+        try:
+            # ---- Stage C: linking, a lazy broadcast join over B ---------
+            linked = link.stage_link(raw, entity_dict)
+            # ---- Stage D: the label table (E re-reads the dictionary) --
+            labels, fp_d = self._run_stage(
+                spark, "D_canon", f"{fp_b}|{dict_fingerprint(entity_dict)}",
+                lambda: canon.stage_canon(linked), resume,
+            )
+            # ---- Stage E: link + rewrite + publish, one DAG -------------
+            fp_e = self._fp("E_triples", fp_d)
+            path = self._path("E_triples")
+            sink = self._resumed(path, fp_e, resume)
+            if sink is None:
+                t_build = time.time()
+                sink = publish(canon.rewrite(linked, labels), transcripts, path, fp_e)
+                sink["total_ms"] = int((time.time() - t_build) * 1000)
+        finally:
+            if not self.cfg.checkpoints:
+                raw.unpersist()
         self._record("E_triples", sink)
         self._flush_metrics(t0)
         return sink

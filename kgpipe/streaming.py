@@ -372,11 +372,12 @@ def incremental_triples(
 ) -> None:
     """stream_sink: streaming ingestion of arriving transcript files. Each
     micro-batch runs the batch pipeline's Stages A (dedup within the
-    batch), B and C, takes the link or else the raw surface per side, and
-    publishes through pipeline.publish, the batch Stage E: re-delivered
-    files cannot duplicate triples. Stage D stays batch-only, as
-    canonicalization groups surfaces across the whole corpus."""
-    from . import extract, link, pipeline, schemas
+    batch), B and C, then the batch rewrite without labels (canon.rewrite
+    with None: the link, else the raw surface) and publishes through
+    pipeline.publish, the batch Stage E: re-delivered files cannot
+    duplicate triples. Stage D stays batch-only, as canonicalization
+    groups surfaces across the whole corpus."""
+    from . import canon, extract, link, pipeline, schemas
 
     stream = (
         spark.readStream.schema(schemas.TRANSCRIPTS)
@@ -386,15 +387,7 @@ def incremental_triples(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         raw = extract.stage_extract(pipeline.stage_ingest(batch_df))
-        linked = link.stage_link(raw, entity_dict)
-        triples = linked.select(
-            F.coalesce("subj_link", "subj_raw").alias("subj"),
-            "pred",
-            F.coalesce("obj_link", "obj_raw").alias("obj"),
-            "conv_id",
-            "turn_idx",
-            "rule_id",
-        )
+        triples = canon.rewrite(link.stage_link(raw, entity_dict), None)
         pipeline.publish(triples, batch_df, sink_dir, f"stream-batch-{batch_id}")
 
     q = (

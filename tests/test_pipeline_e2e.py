@@ -92,8 +92,7 @@ def test_resume_idempotent(
         m.setattr(canon, "stage_canon", crash)
         with pytest.raises(RuntimeError, match="simulated crash"):
             pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict_df)
-    for stage in ("B_extract", "C_link"):
-        assert io_tables.read_manifest(os.path.join(wd, stage)) is not None
+    assert io_tables.read_manifest(os.path.join(wd, "B_extract")) is not None
     for stage in ("D_canon", "E_triples"):
         assert io_tables.read_manifest(os.path.join(wd, stage)) is None
 
@@ -119,9 +118,9 @@ def test_resume_idempotent(
     assert len(sink_reads) == 0  # first publish: nothing to anti-join
     assert len(ingest_calls) == 0  # B's manifest matches: no Stage A
     stages = {m["stage"]: m for m in p2.metrics}
-    assert stages["B_extract"]["skipped"] and stages["C_link"]["skipped"]
+    assert stages["B_extract"]["skipped"] and not stages["D_canon"]["skipped"]
     assert sorted(os.listdir(wd)) == [
-        "B_extract", "C_link", "D_canon", "E_triples", "stage_metrics.json",
+        "B_extract", "D_canon", "E_triples", "stage_metrics.json",
     ]
     got = read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
     assert sink["rows"] == len(got)
@@ -141,6 +140,115 @@ def test_resume_idempotent(
     assert set(map(tuple, again[cols].itertuples(index=False))) == set(
         map(tuple, final_triples[cols].itertuples(index=False))
     )
+
+
+def _run_crashing_in_publish(spark, cfg, transcripts, entity_dict, monkeypatch):
+    def crash(*args):
+        raise RuntimeError("simulated crash in Stage E")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "publish", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pipeline.Pipeline(cfg).run(spark, transcripts, entity_dict)
+
+
+def _key_set(df: pd.DataFrame) -> set:
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "rule_id", "lineage_id"]
+    return set(map(tuple, df[cols].itertuples(index=False)))
+
+
+def test_resume_after_crash_in_publish(
+    spark, transcripts_df, entity_dict_df, tmp_path, final_triples, monkeypatch
+):
+    """The checkpoints hold what B and D decide: a run that crashes in
+    Stage E leaves B's triples and D's label table (node, component) and
+    nothing else. The resumed run skips both, publishes the exact set,
+    lineage ids included, and leaves B_extract, D_canon, E_triples and the
+    metrics file."""
+    from pyspark.sql.types import StructType
+
+    wd = str(tmp_path / "crash_e")
+    cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint="fix120")
+    _run_crashing_in_publish(spark, cfg, transcripts_df, entity_dict_df, monkeypatch)
+    assert sorted(os.listdir(wd)) == ["B_extract", "D_canon"]
+    labels = io_tables.read_manifest(os.path.join(wd, "D_canon"))
+    assert labels["rows"] > 0
+    assert (
+        StructType.fromJson(labels["schema"]).simpleString()
+        == "struct<node:string,component:string>"
+    )
+
+    p = pipeline.Pipeline(cfg)
+    sink = p.run(spark, transcripts_df, entity_dict_df, resume=True)
+    assert [(m["stage"], m["skipped"]) for m in p.metrics] == [
+        ("B_extract", True), ("D_canon", True), ("E_triples", False),
+    ]
+    assert sorted(os.listdir(wd)) == [
+        "B_extract", "D_canon", "E_triples", "stage_metrics.json",
+    ]
+    got = io_tables.read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
+    assert sink["rows"] == len(got) == len(final_triples)
+    assert _key_set(got) == _key_set(final_triples)
+
+
+def test_zero_row_label_table_resumes(spark, corpus, entity_dict_df, tmp_path, monkeypatch):
+    """The fixture's first three conversations leave two unlinked surfaces
+    with no similar partner, so D's label table has no rows (Spark writes
+    it as one schema-only parquet file). A run that crashes in E resumes
+    from it and publishes what a clean run does."""
+    t = corpus.transcripts
+    convs = sorted(t["conv_id"].unique())[:3]
+    tdf = spark.createDataFrame(t[t["conv_id"].isin(convs)], schema=schemas.TRANSCRIPTS)
+    wd = str(tmp_path / "zero")
+    cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint="zero")
+    _run_crashing_in_publish(spark, cfg, tdf, entity_dict_df, monkeypatch)
+    d = os.path.join(wd, "D_canon")
+    assert io_tables.read_manifest(d)["rows"] == 0
+    assert io_tables.read_stage(spark, d).columns == ["node", "component"]
+
+    p = pipeline.Pipeline(cfg)
+    p.run(spark, tdf, entity_dict_df, resume=True)
+    assert [m["skipped"] for m in p.metrics] == [True, True, False]
+    got = io_tables.read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
+    clean = pipeline.run_simple(
+        spark, tdf, entity_dict_df, str(tmp_path / "zero_clean"), input_fingerprint="zero"
+    ).toPandas()
+    assert len(got) == len(clean) > 0
+    assert _key_set(got) == _key_set(clean)
+
+
+def test_resume_recomputes_d_after_dictionary_change(
+    spark, corpus, transcripts_df, entity_dict_df, tmp_path, final_triples, monkeypatch
+):
+    """E re-reads the dictionary, so its content is part of D's (and so
+    E's) fingerprint: a run that crashed after D, resumed with one
+    entity's aliases changed, rebuilds D (B, which does not read the
+    dictionary, is skipped) and publishes exactly what a clean run with
+    the new dictionary publishes."""
+    ed = corpus.entity_dict.copy()
+    eid = next(e for e in ed["entity_id"] if e in set(final_triples["subj"]))
+    ed["aliases"] = [
+        ["an alias no turn mentions"] if e == eid else list(a)
+        for e, a in zip(ed["entity_id"], ed["aliases"])
+    ]
+    new_dict = spark.createDataFrame(ed, schema=schemas.ENTITY_DICT)
+    assert pipeline.dict_fingerprint(new_dict) != pipeline.dict_fingerprint(entity_dict_df)
+
+    wd = str(tmp_path / "dict")
+    cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint="fix120")
+    _run_crashing_in_publish(spark, cfg, transcripts_df, entity_dict_df, monkeypatch)
+    p = pipeline.Pipeline(cfg)
+    p.run(spark, transcripts_df, new_dict, resume=True)
+    stages = {m["stage"]: m for m in p.metrics}
+    assert stages["B_extract"]["skipped"] and not stages["D_canon"]["skipped"]
+    got = io_tables.read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
+    clean = pipeline.run_simple(
+        spark, transcripts_df, new_dict, str(tmp_path / "dict_clean"),
+        input_fingerprint="fix120",
+    ).toPandas()
+    assert eid not in set(clean["subj"])  # the change reaches the output
+    assert len(got) == len(clean)
+    assert _key_set(got) == _key_set(clean)
 
 
 def test_publish_without_manifest_does_not_duplicate(
@@ -347,7 +455,7 @@ def test_bench_harnesses_import_and_scaling_level_runs(spark, monkeypatch, capsy
         assert env["SPARK_GRAFT_CPUS"] == "1"
     assert results["ckpt"]["triples"] == results["fused"]["triples"] > 0
     for r in results.values():
-        assert set(r["stage_ms"]) == {"B_extract", "C_link", "D_canon", "E_triples"}
+        assert set(r["stage_ms"]) == {"B_extract", "D_canon", "E_triples"}
         assert len(r["all_walls"]) == 2  # warm-up + 1 trial
     assert work_dirs() == before
 
@@ -379,7 +487,7 @@ def test_run_entry_points_publish_then_resume(spark, tmp_path, capsys, entry):
     assert not any(s["skipped"] for s in first["stages"])
     again = run(argv + ["--resume"])
     assert [s["stage"] for s in again["stages"]] == [
-        "B_extract", "C_link", "D_canon", "E_triples"
+        "B_extract", "D_canon", "E_triples"
     ]
     assert all(s["skipped"] for s in again["stages"])
     assert again["triples"] == first["triples"]

@@ -67,6 +67,34 @@ def test_stage_e_is_single_shuffle(spark):
         assert "Sort" not in plan
 
 
+def test_stage_e_links_and_rewrites_over_checkpoints_in_one_shuffle(
+    spark, transcripts_df, entity_dict_df, tmp_path
+):
+    """Stage E as a checkpointed run plans it, before the anti-join: B's
+    checkpoint, link, the driver-path label checkpoint, publish_triples.
+    With session defaults the two link joins (hinted) and both label joins
+    (a small parquet, under Spark's size-based broadcast) are
+    BroadcastHashJoins, and the triples cross one shuffle, the publish
+    repartition. The only other Exchange is the dictionary's alias dedup
+    window inside the link joins' broadcast side."""
+    from kgpipe import canon, extract, io_tables, link, pipeline
+
+    b, d = str(tmp_path / "B_extract"), str(tmp_path / "D_canon")
+    raw = extract.stage_extract(pipeline.stage_ingest(transcripts_df))
+    io_tables.write_stage(raw, b, "B_extract", "fp")
+    linked = link.stage_link(io_tables.read_stage(spark, b), entity_dict_df)
+    io_tables.write_stage(canon.stage_canon(linked), d, "D_canon", "fp")
+    assert io_tables.read_manifest(d)["rows"] > 0  # the fixture's labels
+    triples = canon.rewrite(linked, io_tables.read_stage(spark, d))
+    plan = plan_of(pipeline.publish_triples(triples, 1, 8))
+    assert plan.count("BroadcastHashJoin") == 4, plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
+    shuffles = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+    triple_shuffles = [ln for ln in shuffles if "alias_norm" not in ln]
+    assert len(triple_shuffles) == 1 and "part_key" in triple_shuffles[0], plan
+    assert len(shuffles) == 3, plan  # one alias dedup per link join
+
+
 @pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs"])
 def test_lsh_candidates_never_nested_loop(spark, blocking):
     """Both MinHash-LSH callers get their candidates from the band
@@ -214,7 +242,7 @@ def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
 
 
 def test_canon_rewrite_broadcasts_driver_labels_only(spark, monkeypatch):
-    """stage_canon's two rewrite joins broadcast the label table when a
+    """rewrite's two joins broadcast stage_canon's label table when a
     driver path built it (its size is bounded by the driver thresholds)
     and shuffle it when the iterative loop did (unbounded). Auto-broadcast
     is off so only the explicit hint can produce a BroadcastHashJoin."""
@@ -236,12 +264,15 @@ def test_canon_rewrite_broadcasts_driver_labels_only(spark, monkeypatch):
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        driver_out = canon.stage_canon(linked)  # LSH + driver union-find
+        # LSH + driver union-find
+        driver_out = canon.rewrite(linked, canon.stage_canon(linked))
         monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
-        loop_out = canon.stage_canon(linked)  # LSH + iterative loop
+        # LSH + iterative loop
+        loop_out = canon.rewrite(linked, canon.stage_canon(linked))
         driver_plan, loop_plan = plan_of(driver_out), plan_of(loop_out)
         monkeypatch.undo()
-        allpairs_out = canon.stage_canon(linked)  # all-pairs on the driver
+        # all-pairs on the driver
+        allpairs_out = canon.rewrite(linked, canon.stage_canon(linked))
         allpairs_plan = plan_of(allpairs_out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)

@@ -25,7 +25,7 @@ def test_sink_triples_layout_consistent(spark):
 
 def test_sink_checkpoint_resume_skips_all_stages(spark):
     rows = q("sink_checkpoint")(spark, SF).toPandas().set_index("stage")
-    assert set(rows.index) == {"B_extract", "C_link", "D_canon", "E_triples"}
+    assert set(rows.index) == {"B_extract", "D_canon", "E_triples"}
     assert rows["skipped"].all()
 
 
@@ -100,8 +100,8 @@ def test_stateful_applyinpandas_accumulates_across_batches(spark):
 def test_resume_from_mid_pipeline_crash(
     spark, transcripts_df, entity_dict_df, tmp_path, monkeypatch
 ):
-    """Simulated crash in Stage D: a resumed full run must skip B and C
-    (manifest fingerprints) and produce the same triples as a clean run."""
+    """Simulated crash in Stage D: a resumed full run must skip B
+    (manifest fingerprint) and produce the same triples as a clean run."""
     import os
 
     import pytest
@@ -119,16 +119,15 @@ def test_resume_from_mid_pipeline_crash(
         m.setattr(canon, "stage_canon", crash)
         with pytest.raises(RuntimeError, match="simulated crash"):
             p1.run(spark, transcripts_df, entity_dict_df)
-    assert {m["stage"] for m in p1.metrics} == {"B_extract", "C_link"}
-    for stage in ("B_extract", "C_link"):
-        assert io_tables.read_manifest(os.path.join(wd_crash, stage)) is not None
+    assert {m["stage"] for m in p1.metrics} == {"B_extract"}
+    assert io_tables.read_manifest(os.path.join(wd_crash, "B_extract")) is not None
     for stage in ("D_canon", "E_triples"):
         assert io_tables.read_manifest(os.path.join(wd_crash, stage)) is None
 
     p2 = pipeline.Pipeline(pipeline.PipelineConfig(work_dir=wd_crash, input_fingerprint="crash"))
     p2.run(spark, transcripts_df, entity_dict_df, resume=True)
     by_stage = {m["stage"]: m for m in p2.metrics}
-    assert by_stage["B_extract"]["skipped"] and by_stage["C_link"]["skipped"]
+    assert by_stage["B_extract"]["skipped"]
     assert not by_stage["D_canon"]["skipped"]
     out = io_tables.read_stage(spark, os.path.join(wd_crash, "E_triples"))
 
@@ -357,7 +356,7 @@ def test_sink_metrics_counts_match_stages(spark):
     per_stage = m.groupby("stage").agg(
         rows=("rows", "sum"), fps=("fingerprint", "nunique")
     )
-    assert set(per_stage.index) == {"B_extract", "C_link", "D_canon", "E_triples"}
+    assert set(per_stage.index) == {"B_extract", "D_canon", "E_triples"}
     assert (per_stage["fps"] == 1).all()
     total = q("triple_materialize")(spark, SF).count()
     assert per_stage.loc["E_triples", "rows"] == total

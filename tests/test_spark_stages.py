@@ -231,10 +231,24 @@ def test_stage_canon_leaves_nothing_cached(spark, monkeypatch):
         F.lit("R3").alias("rule_id"),
     )
     before = _cached_plans(spark)
-    out = canon.stage_canon(linked)
+    labels = canon.stage_canon(linked)
     assert _cached_plans(spark) == before
-    subj = {r["subj"] for r in out.collect()}
+    subj = {r["subj"] for r in canon.rewrite(linked, labels).collect()}
     assert subj == {"alan turin", "grace hoppe", "zed"}
+
+
+def test_fused_run_leaves_nothing_cached(spark, transcripts_df, entity_dict_df, tmp_path):
+    """A fused Pipeline.run persists B's output, the one frame D and E
+    both read, and releases it after the publish: the CacheManager holds
+    as many entries after the run as before it."""
+    from kgpipe import pipeline
+
+    cfg = pipeline.PipelineConfig(
+        work_dir=str(tmp_path), input_fingerprint="fused", checkpoints=False
+    )
+    before = _cached_plans(spark)
+    assert pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict_df)["rows"] > 0
+    assert _cached_plans(spark) == before
 
 
 @pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs"])

@@ -67,6 +67,12 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
         "shuffle carries batches*queries*k rows, not the corpus",
     ),
     # markers prefixed '!' must be ABSENT from the executed plan
+    "canon_rewrite": (
+        ["BroadcastHashJoin", "!SortMergeJoin", "!ShuffledHashJoin"],
+        "canon.rewrite over stage_canon's driver-path label table: both "
+        "label joins (subj, obj) broadcast the labels, so the linked "
+        "triples never shuffle against them",
+    ),
     "join_theta_selfjoin_lsh": (
         ["HashJoin", "!NestedLoopJoin", "!CartesianProduct"],
         "similar-name theta self-join: candidates only from the LSH band "
