@@ -188,10 +188,10 @@ DRIVER_CC_MAX_EDGES = 200_000
 DRIVER_ALLPAIRS_MAX_SURFACES = 1_000
 
 
-def _driver_labels(spark, labels: dict[str, str]) -> DataFrame:
-    """Label table of a driver path, hinted for broadcast: its row count is
-    bounded by the driver threshold that selected the path, so the joins
-    of rewrite never shuffle the triple set against it."""
+def driver_labels(spark, labels: dict[str, str]) -> DataFrame:
+    """Label table of a driver path (or the stream's empty one), hinted for
+    broadcast: its row count is bounded by the driver threshold that
+    selected the path, so rewrite never shuffles the triples against it."""
     return F.broadcast(
         spark.createDataFrame(list(labels.items()), "node string, component string")
     )
@@ -241,7 +241,7 @@ def connected_components(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     if n_edges <= DRIVER_CC_MAX_EDGES:
         labels = component_labels((r["src"], r["dst"]) for r in sym.collect())
         sym.unpersist()
-        return _driver_labels(spark, labels)
+        return driver_labels(spark, labels)
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_parts = max(1, min(max_parts, n_edges // 100_000 + 1))
     # a hook is symmetric in an edge's ends, so rounds read each undirected
@@ -279,33 +279,32 @@ def connected_components(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
-def unlinked_surfaces(linked: DataFrame) -> DataFrame:
-    """Distinct surface strings Stage C could not link (subj or obj side).
+def unlinked_surfaces(raw: DataFrame, links: DataFrame) -> DataFrame:
+    """Distinct surface-kind values of Stage B output (subj or obj side)
+    that Stage C's alias map (link.stage_link) does not hold.
 
     THE definition of Stage D's input population — shared by stage_canon
     and the registry's stage cache (kgqueries._stage) so the driver
     entries can never diverge from the pipeline; the DuckDB oracle's
-    `unl` CTE mirrors it in SQL.
-    """
-    return (
-        linked.filter((F.col("subj_kind") == "surface") & F.col("subj_link").isNull())
-        .select(F.col("subj_raw").alias("surface"))
-        .unionByName(
-            linked.filter(
-                (F.col("obj_kind") == "surface") & F.col("obj_link").isNull()
-            ).select(F.col("obj_raw").alias("surface"))
-        )
-        .distinct()
+    `unl` CTE mirrors it in SQL. The map is probed once per distinct
+    surface by a left join and a null test: Catalyst would push a
+    left_anti join below the distinct and the union, onto every triple."""
+    subj, obj = (
+        raw.filter(F.col(f"{s}_kind") == "surface").select(F.col(f"{s}_raw").alias("surface"))
+        for s in ("subj", "obj")
     )
+    surfaces = subj.unionByName(obj).distinct()
+    on = F.col("surface") == F.col("node")
+    return surfaces.join(F.broadcast(links), on, "left").filter("node IS NULL").select("surface")
 
 
-def stage_canon(linked: DataFrame) -> DataFrame:
-    """Stage D's decision over Stage C output (…, subj_raw/obj_raw,
-    subj_kind/obj_kind, subj_link/obj_link): the label table
+def stage_canon(raw: DataFrame, links: DataFrame) -> DataFrame:
+    """Stage D's decision over Stage B output (…, subj_raw/obj_raw,
+    subj_kind/obj_kind) and Stage C's alias map: the label table
     DataFrame[node, component] of every unlinked surface with a similar
     partner — a broadcast-hinted driver table or the loop's checkpoint
     scan. rewrite applies it to the triples."""
-    unlinked = unlinked_surfaces(linked).persist()
+    unlinked = unlinked_surfaces(raw, links).persist()
     if unlinked.count() <= DRIVER_ALLPAIRS_MAX_SURFACES:
         # pure-driver fast path: all-pairs edges AND union-find on the one
         # collected surface list, in a single job. Handing a driver edge
@@ -315,7 +314,7 @@ def stage_canon(linked: DataFrame) -> DataFrame:
         # Amdahl tax on the 4N level of the production scaling pair (ckpt
         # Stage D scaled 0.53 in r3).
         names = [r["surface"] for r in unlinked.collect()]
-        labels = _driver_labels(linked.sparkSession, similar_pair_labels(names))
+        labels = driver_labels(raw.sparkSession, similar_pair_labels(names))
     else:
         labels = connected_components(candidate_pairs(unlinked))
     # the labels are collected or checkpointed: nothing reads the surfaces
@@ -324,37 +323,29 @@ def stage_canon(linked: DataFrame) -> DataFrame:
     return labels
 
 
-def rewrite(linked: DataFrame, labels: DataFrame | None) -> DataFrame:
-    """Final subj/obj of Stage C output: the link, else a node value, else
-    the surface's component label, else the surface itself (singleton).
-    labels None (the stream: no Stage D) skips the label step.
+def rewrite(raw: DataFrame, links: DataFrame, labels: DataFrame) -> DataFrame:
+    """Final subj/obj of Stage B output: a node-kind value as it is; a
+    surface resolved through the one (node, target) table links ∪ labels —
+    its entity_id, else its component label, else itself (singleton). The
+    key sets are disjoint (labels cover only surfaces outside the alias
+    map) and each is unique, so a side's left join cannot fan a triple out.
 
-    Two left joins against the labels (subj then obj). Driver-path labels
-    carry a broadcast hint (_driver_labels) and a small label checkpoint
-    falls under Spark's size-based broadcast — without either Spark plans
-    SortMergeJoins, two full shuffles + sorts of the ENTIRE triple set
-    against a few-hundred-row table. Labels from the iterative loop can
-    be arbitrarily large, so they stay a shuffle join."""
-    out = linked
-    if labels is not None:
-        # one right side for both joins, renamed after each: the two joins
-        # share one broadcast (a reused exchange)
-        lab = labels.select(F.col("node").alias("_node"), F.col("component").alias("_comp"))
-        for side in ("subj", "obj"):
-            out = (
-                out.join(lab, F.col(f"{side}_raw") == F.col("_node"), "left")
-                .drop("_node")
-                .withColumnRenamed("_comp", f"_{side}_comp")
-            )
+    A union drops its children's hints, so a broadcast hint on the labels
+    (a driver path's table, or a checkpoint no driver path could exceed:
+    Pipeline.run) is moved onto the union. Loop labels can be arbitrarily
+    large and leave the union to Spark's size-based planning."""
+    targets = links.unionByName(labels.withColumnRenamed("component", "target"))
+    plan = labels._jdf.queryExecution().logical()
+    if plan.nodeName() == "UnresolvedHint" and plan.name().lower() == "broadcast":
+        targets = F.broadcast(targets)
+    out = raw
+    for side in ("subj", "obj"):
+        out = out.join(targets.toDF(f"{side}_raw", f"_{side}_target"), f"{side}_raw", "left")
 
     def final(side: str) -> F.Column:
-        steps = [
-            F.col(f"{side}_link"),
-            F.when(F.col(f"{side}_kind") == "node", F.col(f"{side}_raw")),
-        ]
-        if labels is not None:
-            steps.append(F.col(f"_{side}_comp"))
-        return F.coalesce(*steps, F.col(f"{side}_raw")).alias(side)
+        value = F.col(f"{side}_raw")
+        resolved = F.coalesce(F.col(f"_{side}_target"), value)
+        return F.when(F.col(f"{side}_kind") == "node", value).otherwise(resolved).alias(side)
 
     return out.select(
         final("subj"), "pred", final("obj"), "conv_id", "turn_idx", "rule_id"

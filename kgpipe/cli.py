@@ -54,8 +54,11 @@ def cmd_run(args: argparse.Namespace, spark: SparkSession | None) -> int:
         spark.sparkContext.setLogLevel("ERROR")
     transcripts = spark.read.schema(schemas.TRANSCRIPTS).parquet(args.input)
     entity_dict = spark.read.schema(schemas.ENTITY_DICT).parquet(args.dict)
+    # the input's files, sizes and footer row counts (the path if it is no
+    # parquet scan): an input rewritten in place is rebuilt on --resume
+    footers = pipeline.input_footers(transcripts) or args.input
     cfg = pipeline.PipelineConfig(
-        work_dir=args.work, input_fingerprint=args.fingerprint or args.input
+        work_dir=args.work, input_fingerprint=args.fingerprint or json.dumps(footers)
     )
     t0 = time.time()
     p = pipeline.Pipeline(cfg)

@@ -106,11 +106,9 @@ def _stage(spark: SparkSession, sf: str, which: str) -> DataFrame:
         d = corpus_dfs(spark, sf)
         if which == "raw":
             df = extract.stage_extract(d["transcripts"])
-        elif which == "linked":
-            df = link.stage_link(_stage(spark, sf, "raw"), d["entity_dict"])
         elif which == "pairs":
-            linked = _stage(spark, sf, "linked")
-            df = canon.candidate_pairs(canon.unlinked_surfaces(linked))
+            links = link.stage_link(d["entity_dict"])
+            df = canon.candidate_pairs(canon.unlinked_surfaces(_stage(spark, sf, "raw"), links))
         else:  # pragma: no cover - internal misuse
             raise ValueError(which)
         # cap the cache to the live application: entries keyed by a dead
@@ -429,8 +427,8 @@ def cc_iterate(spark, sf):
     ),
 )
 def canon_rewrite(spark, sf):
-    linked = _stage(spark, sf, "linked")
-    return canon.rewrite(linked, canon.stage_canon(linked))
+    raw, links = _stage(spark, sf, "raw"), link.stage_link(corpus_dfs(spark, sf)["entity_dict"])
+    return canon.rewrite(raw, links, canon.stage_canon(raw, links))
 
 
 # the oracle replays the exact MinHash definition: md5-prefix base hash per

@@ -6,6 +6,10 @@ Re-expressed as a broadcast hash join: the alias dictionary is exploded to
 (alias_norm -> entity) rows and broadcast; linking a surface is an equi-join,
 never a per-row lookup (BASELINE.json: "entity-link scoring against a
 broadcast dictionary of canonical entities").
+
+Stage C's output is the (node, target) alias map, not a triple column: D
+probes it once per distinct surface (canon.unlinked_surfaces), E once per
+triple side, together with D's labels (canon.rewrite).
 """
 
 from __future__ import annotations
@@ -19,7 +23,7 @@ from .extract import normalize_text_col
 
 def alias_table(entity_dict: DataFrame) -> DataFrame:
     """Explode aliases -> one row per normalized alias. Alias norms are
-    unique by dictionary construction; dropDuplicates guards regardless
+    unique by dictionary construction; the window guards regardless
     (deterministic: keep lowest entity_id)."""
     w = Window.partitionBy("alias_norm").orderBy("entity_id")
     return (
@@ -37,29 +41,13 @@ def alias_table(entity_dict: DataFrame) -> DataFrame:
     )
 
 
-def link_column(df: DataFrame, aliases: DataFrame, col: str, kind_col: str, out: str) -> DataFrame:
-    """Left-broadcast-join df[col] against alias_norm; node-kind values pass
-    through unlinked. Produces `out` = entity_id or null."""
-    a = aliases.select(
-        F.col("alias_norm").alias(f"_{out}_alias"),
-        F.col("entity_id").alias(out),
+def stage_link(entity_dict: DataFrame) -> DataFrame:
+    """Stage C's alias map DataFrame[node, target]: each normalized alias
+    and the lowest entity_id carrying it, as oracle.link_map. canon.rewrite
+    applies it to surface-kind values only."""
+    return alias_table(entity_dict).select(
+        F.col("alias_norm").alias("node"), F.col("entity_id").alias("target")
     )
-    joined = df.join(
-        F.broadcast(a),
-        (F.col(kind_col) == F.lit("surface")) & (F.col(col) == F.col(f"_{out}_alias")),
-        "left",
-    )
-    return joined.drop(f"_{out}_alias")
-
-
-def stage_link(raw_triples: DataFrame, entity_dict: DataFrame) -> DataFrame:
-    """Link subj_raw / obj_raw to entity ids (exact alias-norm match — the
-    same semantics as oracle.link_map). Output adds subj_link / obj_link
-    (nullable)."""
-    aliases = alias_table(entity_dict)
-    out = link_column(raw_triples, aliases, "subj_raw", "subj_kind", "subj_link")
-    out = link_column(out, aliases, "obj_raw", "obj_kind", "obj_link")
-    return out
 
 
 def score_candidates(surfaces: DataFrame, entity_dict: DataFrame, topk: int = 1) -> DataFrame:

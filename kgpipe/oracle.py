@@ -32,11 +32,13 @@ def cluster_surfaces(surfaces: list[str], threshold: float = JACCARD_THRESHOLD) 
 
 
 def link_map(entity_dict: pd.DataFrame) -> dict[str, str]:
-    """normalized alias -> entity_id (aliases are unique by construction)."""
+    """normalized alias -> lowest entity_id carrying it (aliases are unique
+    by construction; link.alias_table keeps the same one regardless)."""
     m: dict[str, str] = {}
     for eid, aliases in zip(entity_dict["entity_id"], entity_dict["aliases"]):
         for a in aliases:
-            m.setdefault(normalize_surface(a), eid)
+            k = normalize_surface(a)
+            m[k] = min(m.get(k, eid), eid)
     return m
 
 

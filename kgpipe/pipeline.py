@@ -4,10 +4,10 @@ Lifecycle (SURVEY.md §3.2):
 
   A ingest   : validate transcripts, repartition(conv_id), stable ordering
   B extract  : normalize -> mention filter -> triple extraction   [ckpt 1]
-  C link     : broadcast-dictionary linking (lazy, read by D and E)
-  D canon    : LSH blocking + connected components -> labels      [ckpt 2]
-  E publish  : C + label rewrite, distinct triples + deterministic
-               lineage ids + partitioned sink + per-stage metrics [final]
+  C link     : the dictionary's alias -> entity map (lazy, read by D, E)
+  D canon    : unmapped surfaces -> LSH + connected components    [ckpt 2]
+  E publish  : one join per triple side against C's map ∪ D's labels,
+               distinct triples + lineage ids + partitioned sink  [final]
 
 Resume (BASELINE.json: "resumable from checkpoint with per-partition lineage
 + metrics"): each checkpoint writes a manifest whose fingerprint chains the
@@ -129,12 +129,11 @@ def publish_salt_factor(est_rows: int | None) -> int:
     return max(1, min(PUBLISH_MAX_SALT, -(-est_rows // PUBLISH_SALT_ROWS)))
 
 
-def input_rows_estimate(df) -> int | None:
-    """Cheap row-count estimate for a parquet-backed DataFrame: sum of the
-    footer counts of its input files — no Spark job, no data read. At
-    cluster scale the Iceberg table metadata carries the same number for
-    free. Returns None when the plan is not a plain file scan (e.g. a
-    createDataFrame in tests) — callers must degrade gracefully."""
+def input_footers(df) -> list[tuple[str, int, int]] | None:
+    """(file, bytes, rows) of each input file of a parquet-backed DataFrame,
+    sorted, from file sizes and parquet footers — no Spark job, no data
+    read (Iceberg table metadata carries the same at cluster scale). None
+    when the plan is not a plain file scan: callers degrade gracefully."""
     try:
         files = df.inputFiles()
         if not files:
@@ -143,14 +142,20 @@ def input_rows_estimate(df) -> int | None:
 
         import pyarrow.parquet as pq
 
-        total = 0
-        for uri in files:
+        out = []
+        for uri in sorted(files):
             p = urllib.parse.urlparse(uri)
             path = urllib.parse.unquote(p.path) if p.scheme else uri
-            total += pq.ParquetFile(path).metadata.num_rows
-        return total
+            out.append((uri, os.path.getsize(path), pq.read_metadata(path).num_rows))
+        return out
     except Exception:
         return None
+
+
+def input_rows_estimate(df) -> int | None:
+    """Sum of input_footers' row counts, None when unknown."""
+    footers = input_footers(df)
+    return None if footers is None else sum(rows for _, _, rows in footers)
 
 
 def part_key_col() -> F.Column:
@@ -449,9 +454,9 @@ class Pipeline:
     def _run_stage(
         self, spark: SparkSession, stage: str, upstream_fp: str,
         build: "callable", resume: bool,
-    ) -> tuple[DataFrame, str]:
+    ) -> tuple[DataFrame, dict]:
         """Build (or skip on resume) one of the B and D checkpoints. Returns
-        its output for the next stage plus its fingerprint."""
+        its output for the next stage plus its manifest (fused: rows -1)."""
         fp = self._fp(stage, upstream_fp)
         path = self._path(stage)
         m = self._resumed(path, fp, resume)
@@ -469,13 +474,13 @@ class Pipeline:
                     "total_ms": int((time.time() - t_build) * 1000),
                 }
                 self._record(stage, m)
-                return df, fp
+                return df, m
             m = io_tables.write_stage(df, path, stage, fp)
             m["total_ms"] = int((time.time() - t_build) * 1000)
         self._record(stage, m)
         # read back: downstream plans hang off the checkpoint, not the
         # full upstream lineage (bounded plan size; exact resume)
-        return io_tables.read_stage(spark, path), fp
+        return io_tables.read_stage(spark, path), m
 
     def run(
         self,
@@ -492,7 +497,7 @@ class Pipeline:
 
         # ---- Stage A+B: ingest + stable ordering (no checkpoint of its
         # own: it runs only when B is built), then extraction -----------
-        raw, fp_b = self._run_stage(
+        raw, m_b = self._run_stage(
             spark,
             "B_extract",
             self.cfg.input_fingerprint,
@@ -504,20 +509,25 @@ class Pipeline:
             # unlinked surfaces, E's rewrite); held until the sink commits
             raw = raw.persist()
         try:
-            # ---- Stage C: linking, a lazy broadcast join over B ---------
-            linked = link.stage_link(raw, entity_dict)
+            # ---- Stage C: the alias map, lazy (read by D and E) ---------
+            links = link.stage_link(entity_dict)
             # ---- Stage D: the label table (E re-reads the dictionary) --
-            labels, fp_d = self._run_stage(
-                spark, "D_canon", f"{fp_b}|{dict_fingerprint(entity_dict)}",
-                lambda: canon.stage_canon(linked), resume,
+            labels, m_d = self._run_stage(
+                spark, "D_canon",
+                f"{m_b['fingerprint']}|{dict_fingerprint(entity_dict)}",
+                lambda: canon.stage_canon(raw, links), resume,
             )
-            # ---- Stage E: link + rewrite + publish, one DAG -------------
-            fp_e = self._fp("E_triples", fp_d)
+            if 0 <= m_d["rows"] <= canon.DRIVER_CC_MAX_EDGES:
+                # a label checkpoint no driver path could exceed is
+                # broadcast like the driver path's table (canon.rewrite)
+                labels = F.broadcast(labels)
+            # ---- Stage E: rewrite + publish, one DAG --------------------
+            fp_e = self._fp("E_triples", m_d["fingerprint"])
             path = self._path("E_triples")
             sink = self._resumed(path, fp_e, resume)
             if sink is None:
                 t_build = time.time()
-                sink = publish(canon.rewrite(linked, labels), transcripts, path, fp_e)
+                sink = publish(canon.rewrite(raw, links, labels), transcripts, path, fp_e)
                 sink["total_ms"] = int((time.time() - t_build) * 1000)
         finally:
             if not self.cfg.checkpoints:

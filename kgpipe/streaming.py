@@ -372,11 +372,10 @@ def incremental_triples(
 ) -> None:
     """stream_sink: streaming ingestion of arriving transcript files. Each
     micro-batch runs the batch pipeline's Stages A (dedup within the
-    batch), B and C, then the batch rewrite without labels (canon.rewrite
-    with None: the link, else the raw surface) and publishes through
-    pipeline.publish, the batch Stage E: re-delivered files cannot
-    duplicate triples. Stage D stays batch-only, as canonicalization
-    groups surfaces across the whole corpus."""
+    batch) and B, canon.rewrite against Stage C's alias map with no labels
+    (the link, else the raw surface), and pipeline.publish, the batch
+    Stage E: re-delivered files cannot duplicate triples. Stage D stays
+    batch-only, as canonicalization groups surfaces across the corpus."""
     from . import canon, extract, link, pipeline, schemas
 
     stream = (
@@ -385,9 +384,11 @@ def incremental_triples(
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
 
+    links, no_labels = link.stage_link(entity_dict), canon.driver_labels(spark, {})
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
         raw = extract.stage_extract(pipeline.stage_ingest(batch_df))
-        triples = canon.rewrite(link.stage_link(raw, entity_dict), None)
+        triples = canon.rewrite(raw, links, no_labels)
         pipeline.publish(triples, batch_df, sink_dir, f"stream-batch-{batch_id}")
 
     q = (

@@ -85,7 +85,7 @@ def test_resume_idempotent(
     wd = str(tmp_path / "resume")
     cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint="fix120")
 
-    def crash(linked):
+    def crash(raw, links):
         raise RuntimeError("simulated crash in Stage D")
 
     with monkeypatch.context() as m:
@@ -336,6 +336,30 @@ def test_salted_publish_matches_unsalted(
     assert "_salt" not in out.columns
 
 
+@pytest.mark.parametrize("stage_d", ["driver", "forced_loop"])
+def test_fused_sink_matches_checkpointed(
+    spark, transcripts_df, entity_dict_df, tmp_path, final_triples, monkeypatch, stage_d
+):
+    """A fused run publishes the checkpointed run's sink row for row —
+    lineage ids and part_key included — with Stage D on its driver path
+    (labels broadcast into rewrite) and forced onto LSH + the iterative
+    loop (labels left to size-based planning)."""
+    if stage_d == "forced_loop":
+        monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
+        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    wd = str(tmp_path / stage_d)
+    cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint=stage_d, checkpoints=False)
+    pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict_df)
+    cols = [
+        "subj", "pred", "obj", "conv_id", "turn_idx", "rule_id",
+        "lineage_id", "part_key",
+    ]
+    got = io_tables.read_stage(spark, os.path.join(wd, "E_triples")).toPandas()
+    got = got[cols].sort_values(cols).reset_index(drop=True)
+    want = final_triples[cols].sort_values(cols).reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_torn_manifest_write_keeps_previous_manifest(spark, tmp_path, monkeypatch):
     """A crash while a stage's manifest is being dumped (here: the second
     append to a sink) must leave the previous manifest readable — never a
@@ -491,3 +515,31 @@ def test_run_entry_points_publish_then_resume(spark, tmp_path, capsys, entry):
     ]
     assert all(s["skipped"] for s in again["stages"])
     assert again["triples"] == first["triples"]
+
+
+def test_resume_rebuilds_b_after_input_rewritten_in_place(spark, corpus, tmp_path, capsys):
+    """`cli run` fingerprints --input by its files, their sizes and their
+    parquet-footer row counts, not by the path string: an input rewritten
+    at the same path rebuilds B on --resume and publishes the new turns'
+    triples."""
+    from kgpipe import cli
+
+    t = corpus.transcripts
+    convs = sorted(t["conv_id"].unique())
+    inp, dict_path = tmp_path / "transcripts.parquet", tmp_path / "dict.parquet"
+    corpus.entity_dict.to_parquet(dict_path, index=False)
+    argv = [
+        "run", "--input", str(inp), "--dict", str(dict_path),
+        "--work", str(tmp_path / "work"), "--resume",
+    ]
+
+    def run(conv_ids: list[str]) -> dict:
+        t[t["conv_id"].isin(conv_ids)].to_parquet(inp, index=False)
+        capsys.readouterr()
+        assert cli.main(argv, spark) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    first = run(convs[:4])
+    again = run(convs[4:8])
+    assert [s["skipped"] for s in again["stages"]] == [False, False, False]
+    assert again["triples"] > first["triples"] > 0

@@ -26,17 +26,25 @@ def test_scan_parquet_pushdown_and_pruning(spark):
 
 
 def test_link_join_is_broadcast(spark, entity_dict_df):
-    from kgpipe import link
+    """Stage D probes Stage C's alias map once per distinct surface: the
+    one join of unlinked_surfaces (and so of stage_canon's plan over B's
+    output) is a broadcast join above the distinct, never one per triple
+    side below it."""
+    from kgpipe import canon, link
 
-    surf = spark.createDataFrame([("ada lovelace",)], "subj_raw string").select(
-        "subj_raw",
-        F.lit("p").alias("pred"),
-        F.lit("o").alias("obj_raw"),
-        F.lit("R1").alias("rule_id"),
-        F.lit("surface").alias("subj_kind"),
-        F.lit("node").alias("obj_kind"),
+    raw = spark.createDataFrame(
+        [("ada lovelace", "c0#1"), ("zed", "ada lovelace")], "subj_raw string, obj_raw string"
+    ).select(
+        "subj_raw", F.lit("p").alias("pred"), "obj_raw", F.lit("R1").alias("rule_id"),
+        F.lit("surface").alias("subj_kind"), F.lit("node").alias("obj_kind"),
     )
-    assert "BroadcastHashJoin" in plan_of(link.stage_link(surf, entity_dict_df))
+    unlinked = canon.unlinked_surfaces(raw, link.stage_link(entity_dict_df))
+    lines = plan_of(unlinked).splitlines()  # the initial plan: one tree
+    assert [r["surface"] for r in unlinked.collect()] == ["zed"]
+    joins = [i for i, ln in enumerate(lines) if "Join" in ln]
+    assert len(joins) == 1 and "BroadcastHashJoin" in lines[joins[0]], lines
+    distinct = min(i for i, ln in enumerate(lines) if "HashAggregate" in ln)
+    assert joins[0] < distinct, lines  # the join reads the aggregate's output
 
 
 def test_join_broadcast_query_plan(spark):
@@ -67,32 +75,65 @@ def test_stage_e_is_single_shuffle(spark):
         assert "Sort" not in plan
 
 
-def test_stage_e_links_and_rewrites_over_checkpoints_in_one_shuffle(
-    spark, transcripts_df, entity_dict_df, tmp_path
-):
-    """Stage E as a checkpointed run plans it, before the anti-join: B's
-    checkpoint, link, the driver-path label checkpoint, publish_triples.
-    With session defaults the two link joins (hinted) and both label joins
-    (a small parquet, under Spark's size-based broadcast) are
-    BroadcastHashJoins, and the triples cross one shuffle, the publish
-    repartition. The only other Exchange is the dictionary's alias dedup
-    window inside the link joins' broadcast side."""
-    from kgpipe import canon, extract, io_tables, link, pipeline
+class _Captured(Exception):
+    pass
 
-    b, d = str(tmp_path / "B_extract"), str(tmp_path / "D_canon")
-    raw = extract.stage_extract(pipeline.stage_ingest(transcripts_df))
-    io_tables.write_stage(raw, b, "B_extract", "fp")
-    linked = link.stage_link(io_tables.read_stage(spark, b), entity_dict_df)
-    io_tables.write_stage(canon.stage_canon(linked), d, "D_canon", "fp")
-    assert io_tables.read_manifest(d)["rows"] > 0  # the fixture's labels
-    triples = canon.rewrite(linked, io_tables.read_stage(spark, d))
-    plan = plan_of(pipeline.publish_triples(triples, 1, 8))
-    assert plan.count("BroadcastHashJoin") == 4, plan
+
+def test_stage_e_links_and_rewrites_over_checkpoints_in_one_shuffle(
+    spark, corpus, transcripts_df, tmp_path, monkeypatch
+):
+    """Stage E as a checkpointed Pipeline.run plans it over the B and D
+    checkpoints, before the anti-join: rewrite, then publish_triples.
+    The dictionary is a parquet scan, as the CLI reads it.
+
+    With session defaults both triple sides join one broadcast of the
+    alias map ∪ the driver-path labels: in the executed plan two
+    BroadcastHashJoins, the second broadcast reused, and the triples cross
+    one shuffle, the publish repartition; the only other Exchange is the
+    dictionary's alias dedup window inside the broadcast. With
+    auto-broadcast off the labels' manifest row count (at most
+    DRIVER_CC_MAX_EDGES) still gives both broadcasts; a label checkpoint
+    above it is left to size-based planning, here two SortMergeJoins."""
+    from kgpipe import canon, io_tables, pipeline, schemas
+
+    corpus.entity_dict.to_parquet(tmp_path / "dict.parquet", index=False)
+    entity_dict = spark.read.schema(schemas.ENTITY_DICT).parquet(str(tmp_path / "dict.parquet"))
+    cfg = pipeline.PipelineConfig(work_dir=str(tmp_path / "work"), input_fingerprint="plan")
+
+    def stage_e(resume: bool):
+        def capture(triples, *args):
+            raise _Captured(triples)
+
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "publish", capture)
+            with pytest.raises(_Captured) as got:
+                pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict, resume)
+        return pipeline.publish_triples(got.value.args[0], 1, 8)
+
+    out = stage_e(resume=False)
+    out.collect()
+    plan = plan_of(out).split("== Initial Plan ==")[0]
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    assert plan.count("ReusedExchange") == 1, plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
     shuffles = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
     triple_shuffles = [ln for ln in shuffles if "alias_norm" not in ln]
     assert len(triple_shuffles) == 1 and "part_key" in triple_shuffles[0], plan
-    assert len(shuffles) == 3, plan  # one alias dedup per link join
+    assert len(shuffles) == 2, plan  # one alias dedup
+
+    rows = io_tables.read_manifest(str(tmp_path / "work" / "D_canon"))["rows"]
+    assert 0 < rows <= canon.DRIVER_CC_MAX_EDGES  # the fixture's labels
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        bounded = plan_of(stage_e(resume=True))
+        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", rows - 1)
+        unbounded = plan_of(stage_e(resume=True))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert bounded.count("BroadcastHashJoin") == 2, bounded
+    assert "BroadcastHashJoin" not in unbounded, unbounded
+    assert unbounded.count("SortMergeJoin") == 2, unbounded
 
 
 @pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs"])
@@ -241,38 +282,38 @@ def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
     assert "Join" not in p_long and "Scan ExistingRDD" in p_long
 
 
-def test_canon_rewrite_broadcasts_driver_labels_only(spark, monkeypatch):
-    """rewrite's two joins broadcast stage_canon's label table when a
-    driver path built it (its size is bounded by the driver thresholds)
-    and shuffle it when the iterative loop did (unbounded). Auto-broadcast
-    is off so only the explicit hint can produce a BroadcastHashJoin."""
-    from kgpipe import canon
+def test_canon_rewrite_broadcasts_driver_labels_only(spark, entity_dict_df, monkeypatch):
+    """rewrite's two joins broadcast the alias map ∪ stage_canon's label
+    table when a driver path built the labels (their size is bounded by
+    the driver thresholds) and shuffle it when the iterative loop did
+    (unbounded). Auto-broadcast is off so only the explicit hint can
+    produce a BroadcastHashJoin."""
+    from kgpipe import canon, link
 
     names = ["grace hopperr", "grace hoppe", "alan turingg", "alan turin", "zed"]
-    linked = spark.createDataFrame(
+    raw = spark.createDataFrame(
         [(n, "p", names[(i + 1) % len(names)]) for i, n in enumerate(names)],
         "subj_raw string, pred string, obj_raw string",
     ).select(
         "subj_raw", "pred", "obj_raw",
         F.lit("surface").alias("subj_kind"), F.lit("surface").alias("obj_kind"),
-        F.lit(None).cast("string").alias("subj_link"),
-        F.lit(None).cast("string").alias("obj_link"),
         F.lit("c0").alias("conv_id"), F.lit(0).alias("turn_idx"),
         F.lit("R3").alias("rule_id"),
     )
+    links = link.stage_link(entity_dict_df)
     monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         # LSH + driver union-find
-        driver_out = canon.rewrite(linked, canon.stage_canon(linked))
+        driver_out = canon.rewrite(raw, links, canon.stage_canon(raw, links))
         monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
         # LSH + iterative loop
-        loop_out = canon.rewrite(linked, canon.stage_canon(linked))
+        loop_out = canon.rewrite(raw, links, canon.stage_canon(raw, links))
         driver_plan, loop_plan = plan_of(driver_out), plan_of(loop_out)
         monkeypatch.undo()
         # all-pairs on the driver
-        allpairs_out = canon.rewrite(linked, canon.stage_canon(linked))
+        allpairs_out = canon.rewrite(raw, links, canon.stage_canon(raw, links))
         allpairs_plan = plan_of(allpairs_out)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)

@@ -111,7 +111,7 @@ def test_resume_from_mid_pipeline_crash(
     wd_crash = str(tmp_path / "crash")
     cfg = pipeline.PipelineConfig(work_dir=wd_crash, input_fingerprint="crash")
 
-    def crash(linked):
+    def crash(raw, links):
         raise RuntimeError("simulated crash in Stage D")
 
     p1 = pipeline.Pipeline(cfg)

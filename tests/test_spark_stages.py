@@ -39,23 +39,84 @@ def test_mentions_detected(spark, transcripts_df, entity_dict_df):
     assert sample >= 2
 
 
+def _triples(spark, rows: list[tuple[str, str, str, str]]):
+    """Stage B-shaped frame from (subj_raw, subj_kind, obj_raw, obj_kind)."""
+    return spark.createDataFrame(
+        rows, "subj_raw string, subj_kind string, obj_raw string, obj_kind string"
+    ).select(
+        "subj_raw", F.lit("p").alias("pred"), "obj_raw", "subj_kind", "obj_kind",
+        F.lit("c0").alias("conv_id"), F.lit(0).alias("turn_idx"),
+        F.lit("R1").alias("rule_id"),
+    )
+
+
 def test_link_exact_alias(spark, corpus, entity_dict_df):
+    """Stage C's alias map holds the oracle's alias -> entity pairs, and
+    rewrite links a surface through it but never a node-kind value."""
     lm = oracle.link_map(corpus.entity_dict)
     surfaces = list(lm.items())[:50]
-    df = spark.createDataFrame(
-        [(s,) for s, _ in surfaces], "subj_raw string"
-    ).select(
-        "subj_raw",
-        F.lit("p").alias("pred"),
-        F.lit("o").alias("obj_raw"),
-        F.lit("R1").alias("rule_id"),
-        F.lit("surface").alias("subj_kind"),
-        F.lit("node").alias("obj_kind"),
-    )
-    out = link.stage_link(df, entity_dict_df).toPandas().set_index("subj_raw")
+    links = link.stage_link(entity_dict_df)
+    out = links.toPandas().set_index("node")["target"]
+    assert out.index.is_unique
     for s, eid in surfaces:
-        assert out.loc[s, "subj_link"] == eid
-    assert out["obj_link"].isna().all()  # node kind never links
+        assert out[s] == eid
+    raw = _triples(spark, [(s, "surface", s, "node") for s, _ in surfaces])
+    got = canon.rewrite(raw, links, canon.driver_labels(spark, {})).collect()
+    assert sorted((r["subj"], r["obj"]) for r in got) == sorted(
+        (eid, s) for s, eid in surfaces
+    )
+
+
+def test_link_keeps_lowest_entity_per_alias(spark):
+    """Two entities share a normalized alias, the higher id listed first:
+    the pandas oracle and Stage C both link it to the lower id."""
+    from kgpipe import schemas
+
+    ed = pd.DataFrame(
+        {
+            "entity_id": ["E000009", "E000002"],
+            "canonical": ["Grace Hopper", "Grace Hopper"],
+            "aliases": [["Grace  Hopper"], ["grace hopper", "amazing grace"]],
+            "etype": ["person", "person"],
+            "prior": [0.5, 0.5],
+        }
+    )
+    assert oracle.link_map(ed) == {"grace hopper": "E000002", "amazing grace": "E000002"}
+    links = link.stage_link(spark.createDataFrame(ed, schema=schemas.ENTITY_DICT))
+    assert dict(map(tuple, links.collect())) == oracle.link_map(ed)
+
+
+def test_rewrite_cannot_fan_out_or_touch_node_values(
+    spark, transcripts_df, entity_dict_df
+):
+    """The (node, target) table rewrite joins each side against is unique
+    on its key on the fixture (alias norms and label nodes are disjoint),
+    so the rewrite keeps one row per triple; and a node-kind value equal
+    to an alias norm or a label node passes through unchanged."""
+    from kgpipe import pipeline
+
+    raw = extract.stage_extract(pipeline.stage_ingest(transcripts_df)).persist()
+    links = link.stage_link(entity_dict_df)
+    labels = canon.stage_canon(raw, links).collect()
+    assert labels  # the fixture has similar unlinked surfaces
+    keys = links.select("node").unionByName(
+        spark.createDataFrame([(r["node"],) for r in labels], "node string")
+    )
+    assert keys.count() == keys.distinct().count()
+    label_tbl = canon.driver_labels(spark, {r["node"]: r["component"] for r in labels})
+    assert canon.rewrite(raw, links, label_tbl).count() == raw.count()
+    raw.unpersist()
+
+    alias, eid = links.first()
+    node = next(r for r in labels if r["node"] != r["component"])
+    probe = _triples(spark, [
+        (alias, "node", node["node"], "node"),
+        (alias, "surface", node["node"], "surface"),
+    ])
+    got = {
+        r["subj"]: r["obj"] for r in canon.rewrite(probe, links, label_tbl).collect()
+    }
+    assert got == {alias: node["node"], eid: node["component"]}
 
 
 def test_link_score_topk_deterministic(spark, entity_dict_df):
@@ -219,21 +280,14 @@ def test_stage_canon_leaves_nothing_cached(spark, monkeypatch):
     monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
     monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
     names = ["grace hopperr", "grace hoppe", "alan turingg", "alan turin", "zed"]
-    linked = spark.createDataFrame(
-        [(n, names[(i + 1) % len(names)]) for i, n in enumerate(names)],
-        "subj_raw string, obj_raw string",
-    ).select(
-        "subj_raw", F.lit("p").alias("pred"), "obj_raw",
-        F.lit("surface").alias("subj_kind"), F.lit("surface").alias("obj_kind"),
-        F.lit(None).cast("string").alias("subj_link"),
-        F.lit(None).cast("string").alias("obj_link"),
-        F.lit("c0").alias("conv_id"), F.lit(0).alias("turn_idx"),
-        F.lit("R3").alias("rule_id"),
-    )
+    raw = _triples(spark, [
+        (n, "surface", names[(i + 1) % len(names)], "surface") for i, n in enumerate(names)
+    ])
+    links = spark.createDataFrame([], "node string, target string")
     before = _cached_plans(spark)
-    labels = canon.stage_canon(linked)
+    labels = canon.stage_canon(raw, links)
     assert _cached_plans(spark) == before
-    subj = {r["subj"] for r in canon.rewrite(linked, labels).collect()}
+    subj = {r["subj"] for r in canon.rewrite(raw, links, labels).collect()}
     assert subj == {"alan turin", "grace hoppe", "zed"}
 
 

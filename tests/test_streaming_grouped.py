@@ -52,7 +52,7 @@ def test_stream_sink_equals_batch_stages_on_dirty_input(spark, small_corpus, tmp
     input with a re-sent (conv_id, turn_idx) carrying a later ts and other
     text, the stream sink holds exactly what batch Stage A (which keeps
     the earliest copy) + B + C + publish_triples give, with part_key."""
-    from kgpipe import extract, link, pipeline
+    from kgpipe import canon, extract, link, pipeline
 
     t = small_corpus.transcripts
     tool = t[t["role"] == "tool"]
@@ -69,15 +69,9 @@ def test_stream_sink_equals_batch_stages_on_dirty_input(spark, small_corpus, tmp
     streaming.incremental_triples(spark, str(src), edf, sink, str(tmp_path / "ck"))
 
     tdf = spark.read.parquet(str(src / "p0.parquet"))
-    linked = link.stage_link(extract.stage_extract(pipeline.stage_ingest(tdf)), edf)
+    raw = extract.stage_extract(pipeline.stage_ingest(tdf))
     batch = pipeline.publish_triples(
-        linked.select(
-            F.coalesce("subj_link", "subj_raw").alias("subj"), "pred",
-            F.coalesce("obj_link", "obj_raw").alias("obj"),
-            "conv_id", "turn_idx", "rule_id",
-        ),
-        1,
-        8,
+        canon.rewrite(raw, link.stage_link(edf), canon.driver_labels(spark, {})), 1, 8
     )
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "rule_id", "lineage_id", "part_key"]
     got = io_tables.read_stage(spark, sink).select(cols).collect()
