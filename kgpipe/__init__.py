@@ -12,7 +12,8 @@ Layout:
   schemas.py     explicit StructType for every dataset (never inferSchema)
   rules.py       declarative extraction rule set — single source of truth
                  executed by BOTH the Spark pipeline and the pandas oracle —
-                 plus the union-find clustering both use for Stage D
+                 plus the union-find clustering the oracle and Stage D's
+                 small-input (all-pairs) path share
   synth.py       deterministic synthetic transcript/entity-dict generator
   oracle.py      single-process pandas oracle (golden-fixture producer)
   extract.py     Stage B: mention detection + triple extraction (Arrow UDFs)
@@ -20,6 +21,7 @@ Layout:
   canon.py       Stage D: MinHash-LSH blocking (lsh_pairs, the one band
                  join + Jaccard check, also used by dedup.py) +
                  iterative-join connected components + canonical rewrite
+                 (the one owner of the label table's broadcast)
   pipeline.py    Stage A..E orchestration, checkpoint/resume, metrics
   io_tables.py   Iceberg-style table shim (partitioned parquet + manifest)
   relational.py  SURVEY.md §2 relational operator matrix (queries/oracles)

@@ -9,6 +9,12 @@ components is an iterative-join loop over parent pointers (min-hooking plus
 pointer jumping, O(log n) rounds) with per-round localCheckpoint to
 truncate lineage.
 
+Stage D's output is one label table DataFrame[node, component] with two
+producers: exact all-pairs Jaccard + union-find on the driver for at most
+DRIVER_ALLPAIRS_MAX_SURFACES unlinked surfaces, LSH blocking + the loop
+above it. rewrite alone decides, by the table's row count, whether Stage E
+broadcasts it.
+
 Everything up to the pair list is Spark-builtin expressions (engine-neutral
 md5-prefix MinHash, kgpipe/nhash.py — JVM-side, deterministic,
 whole-stage-codegen friendly, and value-reproducible by the DuckDB oracle;
@@ -38,7 +44,6 @@ from .rules import (
     JACCARD_THRESHOLD,
     MINHASH_HASHES,
     SHINGLE_K,
-    component_labels,
     similar_pair_labels,
 )
 
@@ -170,9 +175,10 @@ def candidate_pairs(surfaces: DataFrame) -> DataFrame:
     )
 
 
-# Below this many (symmetrized) edges the component graph fits trivially on
-# the driver: a collect + union-find costs one job instead of K iterations x
-# 2 shuffles. Above it, the iterative-join path scales arbitrarily.
+# Largest label table canon.rewrite broadcasts with Stage C's alias map:
+# at most this many (node, component) rows go to every executor, so the
+# triples only probe them. Above it the union is left to Spark's size-based
+# planning, which can shuffle the triples against it.
 DRIVER_CC_MAX_EDGES = 200_000
 
 # Below this many distinct unlinked surfaces, exact all-pairs Jaccard on the
@@ -182,19 +188,16 @@ DRIVER_CC_MAX_EDGES = 200_000
 # surfaces are the dictionary MISSES, not the corpus. 1000 surfaces =
 # ~500k pairs of set-intersections, well under a second of driver CPU.
 # Above it, candidate_pairs (LSH blocking, equi-joins only) scales
-# arbitrarily. Same hybrid-design precedent as DRIVER_CC_MAX_EDGES; the
-# all-pairs form is exactly the pandas/SQL oracle semantics, so on corpora
-# where LSH recall is total (tested) the two paths emit identical edges.
+# arbitrarily. The all-pairs form is exactly the pandas/SQL oracle
+# semantics, so on corpora where LSH recall is total (tested) the two paths
+# emit identical edges.
 DRIVER_ALLPAIRS_MAX_SURFACES = 1_000
 
 
 def driver_labels(spark, labels: dict[str, str]) -> DataFrame:
-    """Label table of a driver path (or the stream's empty one), hinted for
-    broadcast: its row count is bounded by the driver threshold that
-    selected the path, so rewrite never shuffles the triples against it."""
-    return F.broadcast(
-        spark.createDataFrame(list(labels.items()), "node string, component string")
-    )
+    """Label table DataFrame[node, component] of the all-pairs path (or the
+    stream's empty one) from a dict computed on the driver."""
+    return spark.createDataFrame(list(labels.items()), "node string, component string")
 
 
 def connected_components(edges: DataFrame, max_iter: int = 64) -> DataFrame:
@@ -209,40 +212,32 @@ def connected_components(edges: DataFrame, max_iter: int = 64) -> DataFrame:
     executes once for the count that persists it; a union of two
     projections would run it once per branch.
 
-    Hybrid execution (both paths produce identical labels, tested):
-    - edge set under DRIVER_CC_MAX_EDGES: collect + union-find on the
-      driver (one job; the round loop is pure overhead there);
-    - otherwise a loop over pointers p(x) <= x, each a node of x's
-      component. Start: p(x) = min(x, min neighbour). Each round:
+    Each pointer p(x) <= x is a node of x's component. Start:
+    p(x) = min(x, min neighbour). Each round:
         hook(x) = min{p(v) : edge (u, v), p(u) = x, p(v) < x}
         p'(x)   = min(p(p(p(x))), hook(x))
-      until no pointer moves. Pointers only decrease, so the fixpoint is
-      one star per component rooted at its minimum; rounds grow with
-      log(nodes), not the diameter (measured: 6 on canon_chains, 8 on a
-      1,000-hop path). One action per round: the count of changed
-      pointers reads a lazy localCheckpoint, which keeps plans O(1).
+    until no pointer moves. Pointers only decrease, so the fixpoint is one
+    star per component rooted at its minimum; rounds grow with log(nodes),
+    not the diameter (measured: 6 on canon_chains, 8 on a 1,000-hop path).
+    One action per round: the count of changed pointers reads a lazy
+    localCheckpoint, which keeps plans O(1).
 
-    Returns DataFrame[node, component], broadcast-hinted on the driver
-    path. Nodes appearing in no edge are NOT returned (callers treat
-    missing as singleton = itself). Raises RuntimeError when a pointer
-    still moves after max_iter rounds (pointers strictly decrease, so the
-    cap only stops a runaway loop).
+    Returns DataFrame[node, component]. Nodes appearing in no edge are NOT
+    returned (callers treat missing as singleton = itself). Raises
+    RuntimeError when a pointer still moves after max_iter rounds
+    (pointers strictly decrease, so the cap only stops a runaway loop).
     """
     both_ways = F.array(
         F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
         F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
     )
     sym = edges.select(F.explode(both_ways).alias("e")).select("e.src", "e.dst")
-    # the count decides the execution path and the collect/loop reuses the
-    # edge chain — persist so the (expensive) LSH chain runs exactly once
+    # the count sizes the loop's partitions and the loop's two checkpoints
+    # reread the edge chain — persist so the (expensive) LSH chain runs
+    # exactly once
     sym = sym.persist()
     n_edges = sym.count()
-    spark = edges.sparkSession
-    if n_edges <= DRIVER_CC_MAX_EDGES:
-        labels = component_labels((r["src"], r["dst"]) for r in sym.collect())
-        sym.unpersist()
-        return driver_labels(spark, labels)
-    max_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    max_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_parts = max(1, min(max_parts, n_edges // 100_000 + 1))
     # a hook is symmetric in an edge's ends, so rounds read each undirected
     # edge once; the eager checkpoints hold what the loop reads of sym
@@ -302,7 +297,7 @@ def stage_canon(raw: DataFrame, links: DataFrame) -> DataFrame:
     """Stage D's decision over Stage B output (…, subj_raw/obj_raw,
     subj_kind/obj_kind) and Stage C's alias map: the label table
     DataFrame[node, component] of every unlinked surface with a similar
-    partner — a broadcast-hinted driver table or the loop's checkpoint
+    partner — the all-pairs path's driver table or the loop's checkpoint
     scan. rewrite applies it to the triples."""
     unlinked = unlinked_surfaces(raw, links).persist()
     if unlinked.count() <= DRIVER_ALLPAIRS_MAX_SURFACES:
@@ -330,13 +325,13 @@ def rewrite(raw: DataFrame, links: DataFrame, labels: DataFrame) -> DataFrame:
     key sets are disjoint (labels cover only surfaces outside the alias
     map) and each is unique, so a side's left join cannot fan a triple out.
 
-    A union drops its children's hints, so a broadcast hint on the labels
-    (a driver path's table, or a checkpoint no driver path could exceed:
-    Pipeline.run) is moved onto the union. Loop labels can be arbitrarily
-    large and leave the union to Spark's size-based planning."""
+    THE broadcast decision of Stage E, the same in fused, checkpointed and
+    stream runs: the union is broadcast iff the labels hold at most
+    DRIVER_CC_MAX_EDGES rows, whichever path built them (the count reads
+    the driver table or the checkpoint, never the triples). Larger label
+    tables are left to Spark's size-based planning."""
     targets = links.unionByName(labels.withColumnRenamed("component", "target"))
-    plan = labels._jdf.queryExecution().logical()
-    if plan.nodeName() == "UnresolvedHint" and plan.name().lower() == "broadcast":
+    if labels.count() <= DRIVER_CC_MAX_EDGES:
         targets = F.broadcast(targets)
     out = raw
     for side in ("subj", "obj"):

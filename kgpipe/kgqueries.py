@@ -82,7 +82,9 @@ def corpus_dfs(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     if key not in _CACHE:
         d = synth.stage_corpus(ORACLE_CONVS)
         t = spark.read.parquet(f"{d}/transcripts.parquet").cache()
-        e = spark.read.parquet(f"{d}/entity_dict.parquet").cache()
+        # the dictionary is not cached: Spark reuses the broadcast of a
+        # plan over a parquet scan, not over a cached relation
+        e = spark.read.parquet(f"{d}/entity_dict.parquet")
         _CACHE[key] = {"transcripts": t, "entity_dict": e}
     return _CACHE[key]
 
@@ -197,6 +199,18 @@ _SHINGLES = (
 )
 
 
+# the sink rows of a distinct triple set: lineage_id and part_key written
+# out in SQL (pipeline.lineage_col and part_key_col are the Spark side),
+# shared by the batch `mat` CTE and the streaming sink's twin
+SINK_SQL = """  SELECT subj, pred, obj, conv_id, turn_idx, rule_id,
+         substr(sha256(concat_ws(chr(31), subj, pred, obj, conv_id,
+                          CAST(turn_idx AS VARCHAR), rule_id)), 1, 32)
+           AS lineage_id,
+         CAST(CAST('0x' || substr(sha256(subj), 1, 15) AS BIGINT) % 128
+              AS INTEGER) AS part_key
+  FROM {src}"""
+
+
 def _kg_sql(select: str, corpus_dir: str | None = None) -> str:
     """Wrap a final SELECT with the full pipeline CTE chain."""
     corpus = corpus_dir or CORPUS_DIR
@@ -259,13 +273,7 @@ final AS (
 trip AS (
   SELECT DISTINCT subj, pred, obj, conv_id, turn_idx, rule_id FROM final),
 mat AS (
-  SELECT subj, pred, obj, conv_id, turn_idx, rule_id,
-         substr(sha256(concat_ws(chr(31), subj, pred, obj, conv_id,
-                          CAST(turn_idx AS VARCHAR), rule_id)), 1, 32)
-           AS lineage_id,
-         CAST(CAST('0x' || substr(sha256(subj), 1, 15) AS BIGINT) % 128
-              AS INTEGER) AS part_key
-  FROM trip)
+{SINK_SQL.format(src="trip")})
 {select}
 """
 

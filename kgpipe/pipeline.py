@@ -61,8 +61,8 @@ N_TRIPLE_PARTS = 128
 # Iceberg buckets at 10^12 turns), never with cores.
 PUBLISH_ROWS_PER_TASK = 500_000  # small-corpus task sizing (publish_task_count)
 
-# Hot-bucket salting for the publish stage (round-4 event-log finding,
-# BENCH/evtlog_16M_fused_2_8.json): part_key = hash(subj) concentrates the
+# Hot-bucket salting for the publish stage (round-4 event-log finding, log
+# not committed): part_key = hash(subj) concentrates the
 # Zipf-hot subjects' triples into single buckets — at 16M turns the hottest
 # of the 128 dedup+write tasks carried 11.5% of the stage's work (10.6 s
 # vs 0.34 s median at local[8]), a straggler that is invisible at 2 cores
@@ -293,8 +293,8 @@ def ingest_partitions(est_turns: int | None, shuffle_parts: int) -> int:
 
     2x-cores shuffle partitions (the session default) stop being a sane
     task size once per-partition data outgrows executor memory: at 64M
-    turns / local[8] that is 16 tasks x 4M turns, and the event-log
-    profile (BENCH/evtlog_64M_fused_2_8.json) shows the window-dedup sort
+    turns / local[8] that is 16 tasks x 4M turns, and the round-4
+    event-log profile (not committed) shows the window-dedup sort
     spilling 1.4-2.2 GB per level (zero at 16M), task density at the 4N
     level dropping to 76% (two waves of uneven ~122 s tasks), and
     executor CPU inflating ~12%. A production job sizes shuffle
@@ -454,9 +454,9 @@ class Pipeline:
     def _run_stage(
         self, spark: SparkSession, stage: str, upstream_fp: str,
         build: "callable", resume: bool,
-    ) -> tuple[DataFrame, dict]:
+    ) -> tuple[DataFrame, str]:
         """Build (or skip on resume) one of the B and D checkpoints. Returns
-        its output for the next stage plus its manifest (fused: rows -1)."""
+        its output for the next stage plus its fingerprint."""
         fp = self._fp(stage, upstream_fp)
         path = self._path(stage)
         m = self._resumed(path, fp, resume)
@@ -466,21 +466,20 @@ class Pipeline:
             if not self.cfg.checkpoints:
                 # fused mode: in-memory stage boundary (final sink still
                 # writes)
-                m = {
+                self._record(stage, {
                     "stage": stage,
                     "fingerprint": fp,
                     "rows": -1,  # lazily evaluated; counts live in the sink
                     "wall_ms": 0,
                     "total_ms": int((time.time() - t_build) * 1000),
-                }
-                self._record(stage, m)
-                return df, m
+                })
+                return df, fp
             m = io_tables.write_stage(df, path, stage, fp)
             m["total_ms"] = int((time.time() - t_build) * 1000)
         self._record(stage, m)
         # read back: downstream plans hang off the checkpoint, not the
         # full upstream lineage (bounded plan size; exact resume)
-        return io_tables.read_stage(spark, path), m
+        return io_tables.read_stage(spark, path), fp
 
     def run(
         self,
@@ -497,7 +496,7 @@ class Pipeline:
 
         # ---- Stage A+B: ingest + stable ordering (no checkpoint of its
         # own: it runs only when B is built), then extraction -----------
-        raw, m_b = self._run_stage(
+        raw, fp_b = self._run_stage(
             spark,
             "B_extract",
             self.cfg.input_fingerprint,
@@ -512,17 +511,12 @@ class Pipeline:
             # ---- Stage C: the alias map, lazy (read by D and E) ---------
             links = link.stage_link(entity_dict)
             # ---- Stage D: the label table (E re-reads the dictionary) --
-            labels, m_d = self._run_stage(
-                spark, "D_canon",
-                f"{m_b['fingerprint']}|{dict_fingerprint(entity_dict)}",
+            labels, fp_d = self._run_stage(
+                spark, "D_canon", f"{fp_b}|{dict_fingerprint(entity_dict)}",
                 lambda: canon.stage_canon(raw, links), resume,
             )
-            if 0 <= m_d["rows"] <= canon.DRIVER_CC_MAX_EDGES:
-                # a label checkpoint no driver path could exceed is
-                # broadcast like the driver path's table (canon.rewrite)
-                labels = F.broadcast(labels)
             # ---- Stage E: rewrite + publish, one DAG --------------------
-            fp_e = self._fp("E_triples", m_d["fingerprint"])
+            fp_e = self._fp("E_triples", fp_d)
             path = self._path("E_triples")
             sink = self._resumed(path, fp_e, resume)
             if sink is None:

@@ -11,7 +11,7 @@ are DATA, executed by two engines:
 
 Both call the batch functions below, so P/R vs the fixture measures the
 distributed machinery (ordering, shuffles, joins, CC), not rule drift. The
-oracle's name clustering and Stage D's driver paths likewise share one
+oracle's name clustering and Stage D's all-pairs path likewise share one
 union-find (UnionFind / component_labels at the end of this module).
 
 Everything in this module is pure pandas/regex — no Spark imports — so it is
@@ -302,7 +302,7 @@ def jaccard(a: set[str], b: set[str]) -> float:
 
 
 # --------------------------------------------------------------------------
-# Union-find clustering shared by the oracle and Stage D's driver paths.
+# Union-find clustering shared by the oracle and Stage D's all-pairs path.
 # Every root is the smallest name of its set, so the labels match the
 # parent-pointer fixpoint of canon.connected_components whatever order the
 # pairs arrive in.

@@ -402,25 +402,16 @@ def incremental_triples(
 
 def _stream_sink_sql() -> str:
     """SQL twin of the foreachBatch sink: extraction + linking + coalesce
-    rewrite (no canon stage in the incremental path) + distinct + lineage
-    + part_key (the formula of _kg_sql's `mat` CTE), over the staged
-    40-conv corpus both engines read."""
+    rewrite (no canon stage in the incremental path) + distinct, then the
+    sink columns of _kg_sql's `mat` CTE (kgqueries.SINK_SQL), over the
+    staged 40-conv corpus both engines read."""
     from . import synth
-    from .kgqueries import _kg_sql
+    from .kgqueries import SINK_SQL, _kg_sql
 
-    return _kg_sql(
-        """SELECT subj, pred, obj, conv_id, turn_idx, rule_id,
-                  substr(sha256(concat_ws(chr(31), subj, pred, obj, conv_id,
-                                   CAST(turn_idx AS VARCHAR), rule_id)), 1, 32)
-                    AS lineage_id,
-                  CAST(CAST('0x' || substr(sha256(subj), 1, 15) AS BIGINT) % 128
-                       AS INTEGER) AS part_key
-           FROM (SELECT DISTINCT COALESCE(subj_link, subj_raw) AS subj, pred,
-                        COALESCE(obj_link, obj_raw) AS obj,
-                        conv_id, turn_idx, rule_id
-                 FROM linked)""",
-        corpus_dir=synth.stage_corpus(40),
-    )
+    trip = """(SELECT DISTINCT COALESCE(subj_link, subj_raw) AS subj, pred,
+                COALESCE(obj_link, obj_raw) AS obj, conv_id, turn_idx, rule_id
+         FROM linked)"""
+    return _kg_sql(SINK_SQL.format(src=trip), corpus_dir=synth.stage_corpus(40))
 
 
 @register("stream_sink_incremental", sql=_stream_sink_sql())

@@ -341,12 +341,11 @@ def test_fused_sink_matches_checkpointed(
     spark, transcripts_df, entity_dict_df, tmp_path, final_triples, monkeypatch, stage_d
 ):
     """A fused run publishes the checkpointed run's sink row for row —
-    lineage ids and part_key included — with Stage D on its driver path
-    (labels broadcast into rewrite) and forced onto LSH + the iterative
-    loop (labels left to size-based planning)."""
+    lineage ids and part_key included — with Stage D on its all-pairs
+    driver path and forced onto LSH + the iterative loop; rewrite
+    broadcasts either label table."""
     if stage_d == "forced_loop":
         monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
-        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
     wd = str(tmp_path / stage_d)
     cfg = pipeline.PipelineConfig(work_dir=wd, input_fingerprint=stage_d, checkpoints=False)
     pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict_df)

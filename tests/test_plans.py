@@ -91,7 +91,7 @@ def test_stage_e_links_and_rewrites_over_checkpoints_in_one_shuffle(
     BroadcastHashJoins, the second broadcast reused, and the triples cross
     one shuffle, the publish repartition; the only other Exchange is the
     dictionary's alias dedup window inside the broadcast. With
-    auto-broadcast off the labels' manifest row count (at most
+    auto-broadcast off the label table's row count (at most
     DRIVER_CC_MAX_EDGES) still gives both broadcasts; a label checkpoint
     above it is left to size-based planning, here two SortMergeJoins."""
     from kgpipe import canon, io_tables, pipeline, schemas
@@ -257,15 +257,13 @@ def test_no_row_udfs_in_engine():
     assert not offenders, offenders
 
 
-def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
+def test_cc_iterative_plan_stays_constant(spark):
     """cc_iterate at scale: localCheckpoint truncates lineage every round,
     so the executed plan of the label frame is the SAME small checkpoint
     scan regardless of how many pointer rounds ran — without it, each
     round would nest the previous round's join/agg DAG and the plan (and
     Catalyst analysis time) would grow with the round count."""
     from kgpipe import canon
-
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)  # force loop path
 
     def chain(n):
         edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n)]
@@ -282,12 +280,13 @@ def test_cc_iterative_plan_stays_constant(spark, monkeypatch):
     assert "Join" not in p_long and "Scan ExistingRDD" in p_long
 
 
-def test_canon_rewrite_broadcasts_driver_labels_only(spark, entity_dict_df, monkeypatch):
+def test_canon_rewrite_broadcasts_labels_by_row_count(spark, entity_dict_df, monkeypatch):
     """rewrite's two joins broadcast the alias map ∪ stage_canon's label
-    table when a driver path built the labels (their size is bounded by
-    the driver thresholds) and shuffle it when the iterative loop did
-    (unbounded). Auto-broadcast is off so only the explicit hint can
-    produce a BroadcastHashJoin."""
+    table iff the labels hold at most DRIVER_CC_MAX_EDGES rows, whichever
+    path built them: the all-pairs driver table and the LSH + loop
+    checkpoint each give 2 BroadcastHashJoins, and 2 SortMergeJoins once
+    the bound is below their row count. Auto-broadcast is off, so only
+    rewrite's own decision can produce a BroadcastHashJoin."""
     from kgpipe import canon, link
 
     names = ["grace hopperr", "grace hoppe", "alan turingg", "alan turin", "zed"]
@@ -301,30 +300,80 @@ def test_canon_rewrite_broadcasts_driver_labels_only(spark, entity_dict_df, monk
         F.lit("R3").alias("rule_id"),
     )
     links = link.stage_link(entity_dict_df)
+    allpairs = canon.stage_canon(raw, links)
     monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
+    loop = canon.stage_canon(raw, links)
+    # the loop's labels scan its last pointer checkpoint (node, component, _chg)
+    assert "_chg" not in plan_of(allpairs) and "_chg" in plan_of(loop)
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    outs = []
     try:
-        # LSH + driver union-find
-        driver_out = canon.rewrite(raw, links, canon.stage_canon(raw, links))
-        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
-        # LSH + iterative loop
-        loop_out = canon.rewrite(raw, links, canon.stage_canon(raw, links))
-        driver_plan, loop_plan = plan_of(driver_out), plan_of(loop_out)
-        monkeypatch.undo()
-        # all-pairs on the driver
-        allpairs_out = canon.rewrite(raw, links, canon.stage_canon(raw, links))
-        allpairs_plan = plan_of(allpairs_out)
+        for labels in (allpairs, loop):
+            rows = labels.count()
+            assert 0 < rows <= canon.DRIVER_CC_MAX_EDGES
+            out = canon.rewrite(raw, links, labels)
+            bounded = plan_of(out)
+            with monkeypatch.context() as m:
+                m.setattr(canon, "DRIVER_CC_MAX_EDGES", rows - 1)
+                unbounded = plan_of(canon.rewrite(raw, links, labels))
+            assert bounded.count("BroadcastHashJoin") == 2, bounded
+            assert "SortMergeJoin" not in bounded, bounded
+            assert "BroadcastHashJoin" not in unbounded, unbounded
+            assert unbounded.count("SortMergeJoin") == 2, unbounded
+            outs.append(sorted(map(tuple, out.select("subj", "obj").collect())))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-    assert allpairs_plan.count("BroadcastHashJoin") == 2, allpairs_plan
-    assert driver_plan.count("BroadcastHashJoin") == 2, driver_plan
-    assert "BroadcastHashJoin" not in loop_plan, loop_plan
-    assert loop_plan.count("SortMergeJoin") == 2, loop_plan
-    # all three paths agree on the rewrite
-    rows = [sorted(map(tuple, df.select("subj", "obj").collect()))
-            for df in (allpairs_out, driver_out, loop_out)]
-    assert rows[0] == rows[1] == rows[2]
+    assert outs[0] == outs[1]  # both producers agree on the rewrite
+
+
+def test_registry_canon_rewrite_reuses_its_broadcast(spark):
+    """The registry's Stage E (canon_rewrite over corpus_dfs' dictionary)
+    broadcasts the alias map ∪ labels once: the second side's broadcast is
+    a ReusedExchange, so the alias dedup window shuffles once. Over a
+    cached dictionary Spark matches neither and builds both twice."""
+    df = E.queries()["canon_rewrite"](spark, SF)
+    df.collect()
+    final = plan_of(df).split("== Initial Plan ==")[0]
+    assert final.count("BroadcastHashJoin") == 2, final
+    assert final.count("ReusedExchange") == 1, final
+    assert final.count("Exchange hashpartitioning(alias_norm") == 1, final
+
+
+def test_fused_stage_e_broadcasts_loop_labels(spark, corpus, transcripts_df, tmp_path, monkeypatch):
+    """Stage E of a fused run with Stage D forced onto LSH + the loop,
+    captured inside publish while B's output is still persisted: the
+    loop's label checkpoint is broadcast with the alias map like any label
+    table of at most DRIVER_CC_MAX_EDGES rows. So the initial plan (what
+    Spark plans from its size estimates, before AQE re-plans) and the
+    final plan both hold 2 BroadcastHashJoins and no SortMergeJoin, and
+    the triples cross one shuffle, the publish repartition on part_key."""
+    from kgpipe import canon, pipeline, schemas
+
+    monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
+    corpus.entity_dict.to_parquet(tmp_path / "dict.parquet", index=False)
+    entity_dict = spark.read.schema(schemas.ENTITY_DICT).parquet(str(tmp_path / "dict.parquet"))
+    cfg = pipeline.PipelineConfig(
+        work_dir=str(tmp_path / "work"), input_fingerprint="fused-loop", checkpoints=False
+    )
+
+    def capture(triples, *args):
+        out = pipeline.publish_triples(triples, 1, 8)
+        out.collect()
+        raise _Captured(plan_of(out))
+
+    monkeypatch.setattr(pipeline, "publish", capture)
+    with pytest.raises(_Captured) as got:
+        pipeline.Pipeline(cfg).run(spark, transcripts_df, entity_dict)
+    final, initial = got.value.args[0].split("== Initial Plan ==")
+    assert "_chg" in final, final  # the labels scan the loop's pointer checkpoint
+    assert final.count("ReusedExchange") == 1, final
+    for plan in (final, initial):
+        assert plan.count("BroadcastHashJoin") == 2, plan
+        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
+        shuffles = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
+        triple_shuffles = [ln for ln in shuffles if "alias_norm" not in ln]
+        assert len(triple_shuffles) == 1 and "part_key" in triple_shuffles[0], plan
 
 
 def test_only_session_reads_env():

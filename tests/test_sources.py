@@ -67,3 +67,18 @@ def test_only_io_tables_writes_tables_or_manifests():
         if p.name != "io_tables.py" and re.search(r"_MANIFEST|\.mode\(", p.read_text())
     ]
     assert not offenders, offenders
+
+
+def test_cited_bench_artifacts_exist():
+    """Every BENCH/<file> that the package, the tools, README.md or
+    DEPLOY.md cite as evidence is committed; a glob must match a file. A
+    citation may break after `BENCH/` onto the next (comment) line."""
+    texts = [p.read_text() for d in ("kgpipe", "tools") for p in (ROOT / d).rglob("*.py")]
+    texts += [(ROOT / f).read_text() for f in ("README.md", "DEPLOY.md")]
+    cited = {
+        m for text in texts
+        for m in re.findall(r"BENCH/(?:\s*#?\s*)(\w[\w*.-]*\.\w+)", text)
+    }
+    assert cited
+    missing = sorted(c for c in cited if not list((ROOT / "BENCH").glob(c)))
+    assert not missing, missing

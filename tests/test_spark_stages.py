@@ -140,6 +140,9 @@ def test_candidate_pairs_and_cc_match_oracle(spark, corpus):
 
 
 def test_cc_random_graph_vs_unionfind(spark):
+    """The parent-pointer loop labels a random 80-node graph, edges in
+    either orientation (a > b in 37 of 60), exactly like the driver
+    union-find."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -150,34 +153,15 @@ def test_cc_random_graph_vs_unionfind(spark):
         for a, b in rng.integers(0, n, size=(60, 2))
         if a != b
     ]
-    uf = oracle.UnionFind()
-    for a, b in edges:
-        uf.union(a, b)
-    want = {x: uf.find(x) for x in {v for e in edges for v in e}}
-    edf = spark.createDataFrame(
-        [(min(a, b), max(a, b)) for a, b in edges], "a string, b string"
-    ).distinct()
-    # driver union-find fast path
+    edf = spark.createDataFrame(edges, "a string, b string")
     cc = canon.connected_components(edf).toPandas()
-    got = dict(zip(cc.node, cc.component))
-    assert got == want
-    # iterative-join at-scale path must produce identical labels
-    import kgpipe.canon as canon_mod
-
-    orig = canon_mod.DRIVER_CC_MAX_EDGES
-    canon_mod.DRIVER_CC_MAX_EDGES = 0
-    try:
-        cc2 = canon.connected_components(edf).toPandas()
-    finally:
-        canon_mod.DRIVER_CC_MAX_EDGES = orig
-    assert dict(zip(cc2.node, cc2.component)) == want
+    assert dict(zip(cc.node, cc.component)) == rules.component_labels(edges)
 
 
-def test_cc_loop_raises_when_not_converged(spark, monkeypatch):
+def test_cc_loop_raises_when_not_converged(spark):
     """A 60-node path needs about 5 pointer rounds; capped at 2 the loop
     must fail loudly instead of returning the half-merged pointers (split
     components)."""
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)  # force loop path
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(59)]
     edf = spark.createDataFrame(edges, "a string, b string")
     with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
@@ -214,14 +198,13 @@ def _shape(name: str) -> list[tuple[str, str]]:
     "shape", ["path", "shuffled_path", "star", "comb", "interleaved_chains"]
 )
 def test_cc_loop_rounds_grow_with_log_nodes(spark, monkeypatch, shape):
-    """The loop path labels long paths, stars, combs and interleaved chains
+    """The loop labels long paths, stars, combs and interleaved chains
     like the driver union-find, in at most 2*log2(nodes) rounds: one hop
     per round would need about 1,000 rounds for the path. Rounds are
     counted as the benchmark's tracing counts them: DataFrame.count calls
     after the first (the symmetrized edge count)."""
     import math
 
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
     edges = _shape(shape)
     edf = spark.createDataFrame(edges, "a string, b string")
     counts = []
@@ -240,15 +223,11 @@ def test_cc_loop_rounds_grow_with_log_nodes(spark, monkeypatch, shape):
     assert len(counts) - 1 <= 2 * math.log2(n_nodes), (len(counts) - 1, n_nodes)
 
 
-@pytest.mark.parametrize("loop_path", [False, True])
-def test_cc_runs_its_edge_dag_once(spark, monkeypatch, loop_path):
+def test_cc_runs_its_edge_dag_once(spark):
     """connected_components executes its (lazy) edge frame once: every edge
     row passes a Python UDF that counts it, and the count equals the edge
-    count on both execution paths. Symmetrizing as a union of two
-    projections would run the edge DAG — on Stage D's path, the whole LSH
-    chain — once per branch."""
-    if loop_path:
-        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
+    count. Symmetrizing as a union of two projections would run the edge
+    DAG — on Stage D's path, the whole LSH chain — once per branch."""
     seen = spark.sparkContext.accumulator(0)
 
     def tap(a):
@@ -278,7 +257,6 @@ def test_stage_canon_leaves_nothing_cached(spark, monkeypatch):
     persists (the unlinked surfaces, the symmetrized edges) once their
     consumers are collected or checkpointed."""
     monkeypatch.setattr(canon, "DRIVER_ALLPAIRS_MAX_SURFACES", 0)
-    monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
     names = ["grace hopperr", "grace hoppe", "alan turingg", "alan turin", "zed"]
     raw = _triples(spark, [
         (n, "surface", names[(i + 1) % len(names)], "surface") for i, n in enumerate(names)

@@ -68,11 +68,11 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
         "shuffle carries batches*queries*k rows, not the corpus",
     ),
     "canon_rewrite": (
-        ["2x BroadcastHashJoin", "!SortMergeJoin", "!ShuffledHashJoin"],
-        "canon.rewrite over stage_canon's driver-path label table: each "
-        "triple side (subj, obj) is resolved by one join against the "
-        "alias map ∪ the labels, broadcast, so the triples never shuffle "
-        "against them",
+        ["2x BroadcastHashJoin", "ReusedExchange", "!SortMergeJoin", "!ShuffledHashJoin"],
+        "canon.rewrite over stage_canon's label table: each triple side "
+        "(subj, obj) is resolved by one join against one broadcast of the "
+        "alias map ∪ the labels (the second side's a reused exchange), so "
+        "the triples never shuffle against them",
     ),
     "join_theta_selfjoin_lsh": (
         ["HashJoin", "!NestedLoopJoin", "!CartesianProduct"],
@@ -107,50 +107,74 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
 
 
 def _cc_loop_plan(spark):
-    """cc_iterate with the parent-pointer loop path FORCED (driver fast
-    path disabled), on a diameter-16 chain — the plan test
-    (tests/test_plans.py::test_cc_iterative_plan_stays_constant) pins that
-    this plan has the SAME line count as the diameter-2 case; this dump
-    shows what that O(1) plan is: a lineage-truncated checkpoint scan of
-    the final pointer table, no nested hook/jump join DAG."""
+    """cc_iterate's parent-pointer loop on a diameter-16 chain — the plan
+    test (tests/test_plans.py::test_cc_iterative_plan_stays_constant) pins
+    that this plan has the SAME line count as the diameter-2 case; this
+    dump shows what that O(1) plan is: a lineage-truncated checkpoint scan
+    of the final pointer table, no nested hook/jump join DAG."""
     from kgpipe import canon
 
-    saved = canon.DRIVER_CC_MAX_EDGES
-    canon.DRIVER_CC_MAX_EDGES = 0
-    try:
-        edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(16)]
-        return canon.connected_components(
-            spark.createDataFrame(edges, "a string, b string")
-        )
-    finally:
-        canon.DRIVER_CC_MAX_EDGES = saved
+    edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(16)]
+    return canon.connected_components(spark.createDataFrame(edges, "a string, b string"))
+
+
+def _entity_dict(spark):
+    """The registry corpus' dictionary, read as the CLI reads it."""
+    from kgpipe import kgqueries, schemas, synth
+
+    corpus = synth.stage_corpus(kgqueries.ORACLE_CONVS)
+    return spark.read.schema(schemas.ENTITY_DICT).parquet(f"{corpus}/entity_dict.parquet")
 
 
 def _stage_e_plan(spark):
     """Stage E as a checkpointed run plans it, before the sink anti-join:
     the B and D checkpoints of the registry's shared run read back, the
-    labels hinted as Pipeline.run hints a label checkpoint of at most
-    DRIVER_CC_MAX_EDGES rows, the dictionary read as the CLI reads it,
-    then rewrite and publish_triples. The dictionary is a copy: the
-    registry caches the staged file, and Spark would serve any scan of
-    that path from the cache."""
+    dictionary read as the CLI reads it, then rewrite and
+    publish_triples."""
     import os
-    import shutil
 
-    from pyspark.sql import functions as F
-
-    from kgpipe import canon, io_tables, kgqueries, link, pipeline, schemas, synth
+    from kgpipe import canon, io_tables, kgqueries, link, pipeline
 
     work = kgqueries._ckpt_run(spark, SF)
-    raw = io_tables.read_stage(spark, os.path.join(work, "B_extract"))
-    d = os.path.join(work, "D_canon")
-    labels = io_tables.read_stage(spark, d)
-    if io_tables.read_manifest(d)["rows"] <= canon.DRIVER_CC_MAX_EDGES:
-        labels = F.broadcast(labels)
-    corpus = synth.stage_corpus(kgqueries.ORACLE_CONVS)
-    dict_copy = shutil.copy(f"{corpus}/entity_dict.parquet", work)
-    links = link.stage_link(spark.read.schema(schemas.ENTITY_DICT).parquet(dict_copy))
+    raw, labels = (io_tables.read_stage(spark, os.path.join(work, s))
+                   for s in ("B_extract", "D_canon"))
+    links = link.stage_link(_entity_dict(spark))
     return pipeline.publish_triples(canon.rewrite(raw, links, labels), 1, 8)
+
+
+class _Captured(Exception):
+    pass
+
+
+def _fused_loop_plan(spark):
+    """Stage E of a fused run over the registry corpus with Stage D forced
+    onto LSH + the iterative loop (no all-pairs path), captured inside
+    publish while B's output is still persisted: the triples as
+    Pipeline.run hands them to publish, then publish_triples."""
+    import tempfile
+
+    from kgpipe import canon, kgqueries, pipeline
+
+    d = kgqueries.corpus_dfs(spark, SF)
+
+    def capture(triples, *args):
+        out = pipeline.publish_triples(triples, 1, 8)
+        out.collect()
+        raise _Captured(out)
+
+    saved = canon.DRIVER_ALLPAIRS_MAX_SURFACES, pipeline.publish
+    canon.DRIVER_ALLPAIRS_MAX_SURFACES, pipeline.publish = 0, capture
+    # fused: the run writes nothing before publish, and the plan reads no file
+    # of its work dir
+    with tempfile.TemporaryDirectory(prefix="plans_") as wd:
+        cfg = pipeline.PipelineConfig(wd, input_fingerprint="plans", checkpoints=False)
+        try:
+            pipeline.Pipeline(cfg).run(spark, d["transcripts"], _entity_dict(spark))
+        except _Captured as got:
+            return got.args[0]
+        finally:
+            canon.DRIVER_ALLPAIRS_MAX_SURFACES, pipeline.publish = saved
+    raise RuntimeError("Pipeline.run did not reach publish")
 
 
 def _curate_gate_plan(spark):
@@ -164,10 +188,10 @@ def _curate_gate_plan(spark):
 
 
 # name -> (builder, markers, why): plans whose interesting shape needs a
-# constructed input (loop path forced, sub-stage isolated) instead of the
-# registry entry at sf0.001
+# constructed input (a long chain, a forced path, a sub-stage isolated)
+# instead of the registry entry at sf0.001
 SPECIAL: dict = {
-    "cc_iterate (forced loop path, diameter 16)": (
+    "cc_iterate (diameter-16 chain)": (
         _cc_loop_plan,
         ["!Join", "Scan ExistingRDD"],
         "per-round localCheckpoint truncates lineage: the pointer table's "
@@ -180,6 +204,15 @@ SPECIAL: dict = {
         "both triple sides probe one broadcast (the second a reused "
         "exchange) of the alias map ∪ the label checkpoint; the triples "
         "cross one shuffle, the part_key repartition",
+    ),
+    "Stage E, fused, loop labels": (
+        _fused_loop_plan,
+        ["2x BroadcastHashJoin", "!SortMergeJoin"],
+        "the loop's label checkpoint holds at most DRIVER_CC_MAX_EDGES "
+        "rows, so rewrite broadcasts it with the alias map as it does the "
+        "all-pairs table: Spark plans the two broadcast joins up front "
+        "(initial plan included) instead of shuffling the triples on "
+        "subj_raw/obj_raw for a sort-merge join",
     ),
     "corpus_curation gate (lang+quality)": (
         _curate_gate_plan,
