@@ -223,11 +223,17 @@ def test_cc_loop_rounds_grow_with_log_nodes(spark, monkeypatch, shape):
     assert len(counts) - 1 <= 2 * math.log2(n_nodes), (len(counts) - 1, n_nodes)
 
 
-def test_cc_runs_its_edge_dag_once(spark):
+@pytest.mark.parametrize("broadcast_labels", [False, True])
+def test_cc_runs_its_edge_dag_once(spark, monkeypatch, broadcast_labels):
     """connected_components executes its (lazy) edge frame once: every edge
     row passes a Python UDF that counts it, and the count equals the edge
     count. Symmetrizing as a union of two projections would run the edge
-    DAG — on Stage D's path, the whole LSH chain — once per branch."""
+    DAG — on Stage D's path, the whole LSH chain — once per branch. The
+    labels then go through rewrite, broadcast or left to Spark's planning;
+    either way its row count and its joins read the loop's checkpoint, not
+    the edges."""
+    if not broadcast_labels:
+        monkeypatch.setattr(canon, "DRIVER_CC_MAX_EDGES", 0)
     seen = spark.sparkContext.accumulator(0)
 
     def tap(a):
@@ -241,6 +247,15 @@ def test_cc_runs_its_edge_dag_once(spark):
     cc = canon.connected_components(edf)
     assert seen.value == len(edges)
     assert {r["component"] for r in cc.collect()} == {"n000"}
+    raw = spark.createDataFrame(
+        [("n005", "surface", "knows", "n011", "surface", "c0", 0, "r0")],
+        "subj_raw string, subj_kind string, pred string, obj_raw string, obj_kind string,"
+        " conv_id string, turn_idx int, rule_id string",
+    )
+    links = spark.createDataFrame([], "node string, target string")
+    out = canon.rewrite(raw, links, cc).collect()
+    assert [(r["subj"], r["obj"]) for r in out] == [("n000", "n000")]
+    assert seen.value == len(edges)
 
 
 def _cached_plans(spark) -> int:
