@@ -49,7 +49,9 @@ def curate(spark: SparkSession, sf: str) -> DataFrame:
     winners = docs.groupBy(F.lower(F.trim("text")).alias("k")).agg(
         F.min("doc_id").alias("doc_id")
     )
-    docs = docs.join(winners.select("doc_id"), "doc_id", "left_semi").persist()
+    # read by the pairs and the anti-join: computed once by an eager local
+    # checkpoint, as a persist would outlive the caller's action
+    docs = docs.join(winners.select("doc_id"), "doc_id", "left_semi").localCheckpoint()
 
     # near-dup clustering among survivors: LSH pairs -> CC -> keep the
     # cluster representative (min doc id; ids zero-padded so the string

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import canon, nhash
+from .extract import normalize_text_col
 from .qreg import load, register
 
 WORD_NGRAM = 3
@@ -38,7 +39,7 @@ SIMHASH_BANDS = 4  # 4 x 15-bit bands; guaranteed recall at hamming <= 3
 
 def tokens_col(col: str) -> F.Column:
     """Normalized word tokens of a text column (one regexp pass)."""
-    return F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " ")
+    return F.split(normalize_text_col(F.col(col)), " ")
 
 
 def word_shingles_from_tokens(tok_col: str) -> F.Column:

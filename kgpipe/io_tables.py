@@ -44,6 +44,9 @@ def write_stage(
     mode="append" is the idempotent-publish path (final triple sink): the
     delta is appended and the manifest reflects the cumulative table."""
     t0 = time.time()
+    # an append opens only the footers of files the sink's manifest does not
+    # count (its own, and any of a publish that crashed before its manifest)
+    known = (read_manifest(path) or {}).get("file_rows", {}) if mode == "append" else {}
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -57,27 +60,23 @@ def write_stage(
 
     import pyarrow.parquet as pq
 
-    targets: list[tuple[str, str]] = []
-    for root, _dirs, files in os.walk(path):
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            key = os.path.relpath(root, path)
-            key = key if key != "." else fname
-            targets.append((key, os.path.join(root, fname)))
-
-    def footer_rows(t: tuple[str, str]) -> tuple[str, int]:
-        return t[0], pq.ParquetFile(t[1]).metadata.num_rows
-
-    partition_counts: dict[str, int] = {}
+    files = [os.path.relpath(os.path.join(root, f), path)
+             for root, _dirs, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
+    new = [f for f in files if f not in known]
     with ThreadPoolExecutor(max_workers=16) as ex:
-        for key, n in ex.map(footer_rows, targets):
-            partition_counts[key] = partition_counts.get(key, 0) + n
+        rows = ex.map(lambda f: pq.ParquetFile(os.path.join(path, f)).metadata.num_rows, new)
+        opened = dict(zip(new, rows))
+    file_rows = {f: known[f] if f in known else opened[f] for f in files}
+    partition_counts: dict[str, int] = {}
+    for f, n in file_rows.items():
+        key = os.path.dirname(f) or f
+        partition_counts[key] = partition_counts.get(key, 0) + n
     manifest = {
         "stage": stage,
         "fingerprint": fingerprint,
         "rows": int(sum(partition_counts.values())),
         "partition_counts": partition_counts,
+        "file_rows": file_rows,
         "wall_ms": int((time.time() - t0) * 1000),
         "format": "parquet-shim",  # prod: "iceberg" (manifest comes free)
         # schema travels with the checkpoint: a zero-row stage writes no

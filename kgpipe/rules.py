@@ -53,9 +53,9 @@ class Rule:
     roles: tuple[str, ...]  # roles this rule applies to
     pattern: str  # regex over normalized text, named groups
     emits: tuple[tuple[str, str, str], ...]  # (subj_group, pred, obj_group)
-    # a literal substring of every text the pattern can match — the
-    # pushdown key: checked JVM-side (codegen `contains`) before any text
-    # reaches Python, and as a C-substring gate before the regex runs.
+    # a literal substring of every text the pattern can match — the pushdown
+    # key: checked JVM-side (one anchor regex, extract.ANCHOR_RE) before any
+    # text reaches Python, and as a C-substring gate before the regex runs.
     # INVARIANT (tested): pattern matches text => anchor in text.
     anchor: str = ""
 

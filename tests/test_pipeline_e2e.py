@@ -379,6 +379,36 @@ def test_torn_manifest_write_keeps_previous_manifest(spark, tmp_path, monkeypatc
     assert io_tables.read_manifest(path) == first
 
 
+def test_append_opens_only_the_delta_footers(spark, tmp_path, monkeypatch):
+    """An append into a multi-file sink reads the row counts of the files
+    the manifest lists from the manifest, and opens the footer of the one
+    file it wrote; the counts match a write that opens every footer."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "sink")
+    base = spark.range(0, 40, numPartitions=4).select(
+        F.col("id").cast("string").alias("subj"), (F.col("id") % 4).alias("part_key")
+    )
+    first = io_tables.write_stage(base, path, "E_triples", "fp1", ["part_key"], "append")
+    assert len(glob.glob(f"{path}/*/*.parquet")) > 4
+    opened = []
+
+    class Counting(pq.ParquetFile):
+        def __init__(self, source, *args, **kwargs):
+            opened.append(source)
+            super().__init__(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", Counting)
+    delta = spark.createDataFrame([("x", 2)], "subj string, part_key long").coalesce(1)
+    got = io_tables.write_stage(delta, path, "E_triples", "fp2", ["part_key"], "append")
+    assert len(opened) == 1 and "part_key=2" in opened[0], opened
+    assert got["rows"] == 41 and got["partition_counts"]["part_key=2"] == 11
+    # overwrite reuses nothing: it opens every footer it leaves
+    again = io_tables.write_stage(base, path, "E_triples", "fp3", ["part_key"])
+    assert len(opened) == 1 + len(glob.glob(f"{path}/*/*.parquet"))
+    assert again["partition_counts"] == first["partition_counts"]
+
+
 def test_publish_salt_sizing():
     """Salt factor: data-volume-sized with floor 1 (unsalted small-corpus
     plan byte-identical to round 3) and the documented cap."""

@@ -75,6 +75,25 @@ def test_stage_e_is_single_shuffle(spark):
         assert "Sort" not in plan
 
 
+def test_stage_extract_filter_normalizes_once(spark):
+    """Catalyst inlines text_norm into Stage B's anchor prefilter, and a
+    Filter evaluates every reference to an expression: the Filter of the
+    executed plan names the normalization (its regexp_replace) exactly
+    once, where a `contains` per rule anchor named it once per rule. The
+    turns are read from parquet, as a run reads them (over an in-memory
+    local relation the optimizer folds the filter away)."""
+    from kgpipe import extract, schemas, synth
+    from tools.explain_dump import node_lines
+
+    d = synth.stage_corpus(120)  # the conftest fixture corpus, as parquet
+    turns = spark.read.schema(schemas.TRANSCRIPTS).parquet(f"{d}/transcripts.parquet")
+    df = extract.stage_extract(turns)
+    df.collect()
+    filters = node_lines(plan_of(df), "Filter")
+    assert len(filters.splitlines()) == 1, plan_of(df)
+    assert filters.count("regexp_replace") == 1, filters
+
+
 class _Captured(Exception):
     pass
 

@@ -150,6 +150,59 @@ def test_prefilter_preserves_triple_set(spark, transcripts_df, corpus):
     )
 
 
+def test_anchor_regex_is_the_or_of_the_anchors(spark):
+    """Stage B's one anchor regex, evaluated by Spark's `rlike` over the
+    normalized text, keeps exactly the turns that contain some rule's
+    anchor: anchors at the start and the end of a text, split by runs of
+    whitespace, and next to regex metacharacters."""
+    from pyspark.sql import functions as F
+
+    from kgpipe import extract
+
+    anchors = [r.anchor for r in rules.RULES]
+    texts = [
+        *anchors,
+        *(a.strip() for a in anchors),
+        *(f"x{a}y" for a in anchors),
+        *(f"{a}tail" for a in anchors),
+        *(f"head{a}" for a in anchors),
+        *(f"({a})" for a in anchors),
+        "ada works with bob on kgpipe.",
+        "ada   works \t\n with  bob",
+        "  called   search(",
+        "ada worksXwith bob",
+        "ada works.with bob",
+        "ada is a member  \n\r of acme.",
+        "called\tsearch",
+        "called",
+        "we mentioned that",
+        "mentioned that\n",
+        "a created b",
+        "created b",
+        "re-created+ b",
+        "a.created.b",
+        "x | called y",
+        "x|called y",
+        "x (works with) y",
+        "\\Q works with \\E",
+        "x $ created ^ y",
+        "[is a member of]",
+        "ada .* bob",
+        "ada works_with bob",
+        "CALLED foo",
+        "Ada Works With Bob",
+        "",
+        "   ",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string").select(
+        extract.normalize_text_col(F.col("text")).alias("text_norm")
+    )
+    got = df.select("text_norm", F.col("text_norm").rlike(extract.ANCHOR_RE)).collect()
+    assert len(got) == len(texts)
+    for norm, kept in got:
+        assert kept == any(a in norm for a in anchors), norm
+
+
 def test_arrow_kernel_matches_pandas_kernel(corpus):
     """The mapInArrow hot-path kernel (RE2 via pyarrow.compute) and the
     pandas oracle kernel (Python re) emit the IDENTICAL triple multiset on

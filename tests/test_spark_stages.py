@@ -298,16 +298,21 @@ def test_fused_run_leaves_nothing_cached(spark, transcripts_df, entity_dict_df, 
     assert _cached_plans(spark) == before
 
 
-@pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs"])
+@pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs", "corpus_curation"])
 def test_lsh_blocking_leaves_nothing_cached(spark, blocking):
-    """Neither MinHash-LSH caller leaves a CacheManager entry behind after
-    its result is collected: nothing could unpersist it afterwards."""
-    from kgpipe import dedup
+    """No MinHash-LSH caller (the two blocking functions, and the curation
+    query that clusters through doc_minhash_pairs) leaves a CacheManager
+    entry behind after its result is collected: nothing could unpersist it
+    afterwards."""
+    from kgpipe import curate, dedup
+    from tools.explain_dump import SF
 
     names = ["grace hopper", "grace hoppe", "alan turing", "alan turin", "zed"]
     before = _cached_plans(spark)
     if blocking == "candidate_pairs":
         df = canon.candidate_pairs(spark.createDataFrame([(n,) for n in names], "surface string"))
+    elif blocking == "corpus_curation":
+        df = curate.curate(spark, SF)
     else:
         docs = spark.createDataFrame(
             [(i, f"{n} wrote the first compiler for the machine") for i, n in enumerate(names)],

@@ -11,6 +11,7 @@ Usage: python tools/explain_dump.py > PLANS.md
 
 from __future__ import annotations
 
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -18,7 +19,8 @@ sys.path.insert(0, ".")
 SF = "/root/testdata/sf0.001"
 
 # query -> (markers that MUST appear, one-line rationale); a marker
-# "Nx name" must appear exactly N times, "!name" not at all
+# "Nx name" must appear exactly N times in the final plan, "Nx name in Node"
+# exactly N times over its Node operators, "!name" not at all
 EXPECTATIONS: dict[str, tuple[list[str], str]] = {
     "scan_parquet": (
         ["PushedFilters: [", "*(1)"],
@@ -56,10 +58,11 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
         "codegen-compiled",
     ),
     "udf_triple_extract": (
-        ["MapInArrow", "!MapInPandas", "Filter"],
-        "JVM anchor prefilter BEFORE the single mapInArrow pass (rows that "
-        "cannot match any rule never reach the kernel); the kernel is "
-        "pure pyarrow.compute/RE2 — no Arrow->pandas conversion "
+        ["MapInArrow", "!MapInPandas", "Filter", "1x regexp_replace in Filter"],
+        "one JVM anchor regex BEFORE the single mapInArrow pass (rows that "
+        "cannot match any rule never reach the kernel), naming the inlined "
+        "normalization once, as the Filter evaluates every reference to it; "
+        "the kernel is pure pyarrow.compute/RE2 — no Arrow->pandas conversion "
         "(BENCH/BASELINE.md §3c: 4.04x over the mapInPandas path)",
     ),
     "ann_bruteforce_blas_topk": (
@@ -140,6 +143,14 @@ def _stage_e_plan(spark):
                    for s in ("B_extract", "D_canon"))
     links = link.stage_link(_entity_dict(spark))
     return pipeline.publish_triples(canon.rewrite(raw, links, labels), 1, 8)
+
+
+def node_lines(plan: str, node: str) -> str:
+    """The lines of a plan string whose operator, after the tree prefix
+    and any codegen stage id `*(n)`, is `node`."""
+    return "\n".join(
+        ln for ln in plan.splitlines() if re.match(rf"[\s:+-]*(\*\(\d+\) )?{node} ", ln)
+    )
 
 
 class _Captured(Exception):
@@ -257,7 +268,8 @@ def main() -> int:
                 ok = m[1:] not in plan
                 label = "absent" if ok else "**PRESENT (must be absent)**"
             elif x and times.isdigit():
-                got = final.count(needle)
+                needle, _, node = needle.partition(" in ")
+                got = (node_lines(final, node) if node else final).count(needle)
                 ok = got == int(times)
                 label = "present" if ok else f"**{got} in the final plan**"
             else:
