@@ -27,7 +27,8 @@ Layout:
   relational.py  SURVEY.md §2 relational operator matrix (queries/oracles)
   dedup.py       document dedup: exact / MinHash-LSH / SimHash / n-gram
   textstats.py   language-id, quality score, token count, fingerprints
-  ann.py         embedding similarity search (brute-force + LSH-bucketed)
+  ann.py         embedding similarity search: exact top-k (brute force, BLAS),
+                 approximate top-k (sign-LSH, IVF), blocked cosine self-join
   multimodal.py  binary-column plumbing for image/audio payloads (decode
                  stubbed — libs absent in sandbox)
   streaming.py   Structured Streaming ingestion of arriving turns

@@ -1,14 +1,20 @@
 """Embedding similarity search (training-data pipeline ops).
 
-Brute-force cosine top-k as the correctness baseline, plus a
-random-hyperplane LSH-bucketed variant as the scale path (bucket key =
-sign pattern over H fixed hyperplanes; candidate generation is an equi-join
-on the bucket key, brute force only within buckets).
+Four top-k operators answer one question, the ANN_TOPK nearest neighbors
+by cosine of each vector in ANN_QUERY_IDS, and all end in one ranking
+window (`_rank`: cosine desc, then neighbor_id):
+  brute_force_topk  exact: the queries broadcast against the corpus
+  blas_topk         exact: one numpy matmul per Arrow batch of the corpus
+  lsh_topk          approximate: multi-table, multi-probe sign-LSH buckets
+  ivf_topk          approximate: a KMeans coarse quantizer's nearest cells
+blocked_cosine_pairs is the exhaustive cosine self-join behind
+dedup_embedding_cosine.
 
-Dot products are sequential-fold builtin expressions (zip_with +
-aggregate in double) so the DuckDB oracle (same left-to-right fold) is
-bit-identical — no Python on the hot path; at real scale the same plan
-vectorizes fine, or swaps to a pandas-UDF BLAS kernel behind the same API.
+Spark-side dot products are sequential-fold builtin expressions (zip_with
++ aggregate in double), so the DuckDB oracle (the same left-to-right fold)
+is bit-identical with no Python on that path; the two numpy kernels
+preselect with BLAS and rescore what they emit with that fold
+(`_fold_cosine`).
 """
 
 from __future__ import annotations
@@ -23,6 +29,20 @@ from .qreg import load, register
 ANN_QUERY_IDS = (0, 1, 2, 3, 4)
 ANN_TOPK = 10
 PLANE_SEED = 20260816
+LSH_TABLES = 8  # OR-amplification: recall = 1-(1-p^bits)^tables
+# bucket fan-out 2^bits per table: grow it with the corpus so per-bucket
+# candidate counts stay bounded (multi-probe's probe count grows O(bits^2)
+# while the bucket count grows 2^bits, so the candidate fraction shrinks)
+LSH_BITS = 5
+IVF_CENTROIDS = 16
+IVF_PROBE = 4  # cells each query scores: ~IVF_PROBE/IVF_CENTROIDS of the corpus
+# The quantizer trains on a seeded sample of this many rows, deliberately
+# below the sandbox corpus size, so the SAMPLED quantizer is the code path
+# the registry entry and the recall-vs-bruteforce pin exercise
+# (tests/test_registry_new.py), not a prod-only branch.
+IVF_FIT_ROWS = 256
+COSINE_BLOCKS = 8  # blocked_cosine_pairs: B blocks -> B(B+1)/2 block-pair tasks
+DEDUP_COSINE = 0.45  # dedup_embedding_cosine's threshold (and its SQL oracle's)
 
 
 def _dot(a, b) -> F.Column:
@@ -45,41 +65,57 @@ def cosine_col(a, b) -> F.Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def brute_force_topk(
-    embeddings: DataFrame, query_ids=ANN_QUERY_IDS, k: int = ANN_TOPK
-) -> DataFrame:
-    """Exact top-k neighbors for the given query vectors.
+def _queries(embeddings: DataFrame) -> DataFrame:
+    return embeddings.filter(F.col("vec_id").isin(*ANN_QUERY_IDS))
 
-    Queries (tiny) are broadcast against the corpus — the scan side streams
-    once; at 100 TB the corpus side stays partitioned and the final top-k is
-    a per-query window, never a global sort."""
-    q = embeddings.filter(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    )
-    c = embeddings.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
+
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine) of (query_id, qv, neighbor_id,
+    embedding) pairs, the cosine rounded to 6 places as the SQL oracle."""
+    return pairs.select(
         "query_id",
         "neighbor_id",
         F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
     )
+
+
+def _rank(scored: DataFrame) -> DataFrame:
+    """The ANN_TOPK rows of each query by (cosine desc, neighbor_id): a
+    per-query window, never a global sort."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= ANN_TOPK)
         .select("query_id", "neighbor_id", "cosine", "rnk")
     )
 
 
-LSH_TABLES = 8  # OR-amplification: recall = 1-(1-p^bits)^tables
-LSH_BITS = 5  # bucket fan-out 2^bits per table; size to n/bucket_target
+def _unit_rows(A: np.ndarray) -> np.ndarray:
+    return A / np.clip(np.linalg.norm(A, axis=1, keepdims=True), 1e-30, None)
 
 
-def lsh_keys(
-    embeddings: DataFrame,
-    n_tables: int = LSH_TABLES,
-    n_bits: int = LSH_BITS,
-    seed: int = PLANE_SEED,
-) -> DataFrame:
+def _fold_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of A and B (B may be one row, broadcast) in the
+    oracle's arithmetic: every sum is np.cumsum's strict running sum, i.e.
+    bit-identical to the left fold both Spark's F.aggregate and DuckDB's
+    LIST_SUM evaluate, which a BLAS matmul's summation order is not."""
+    fold = lambda X: np.cumsum(X, axis=1)[:, -1] if len(X) else np.empty(0)
+    return fold(A * B) / (np.sqrt(fold(A * A)) * np.sqrt(fold(B * B)))
+
+
+def brute_force_topk(embeddings: DataFrame) -> DataFrame:
+    """Exact top-k neighbors of the query vectors.
+
+    Queries (tiny) are broadcast against the corpus — the scan side streams
+    once; at 100 TB the corpus side stays partitioned."""
+    q = _queries(embeddings).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
+    c = embeddings.select(F.col("vec_id").alias("neighbor_id"), "embedding")
+    return _rank(_scored(c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))))
+
+
+def lsh_keys(embeddings: DataFrame) -> DataFrame:
     """(vec_id, tbl, bucket) sign-LSH keys for every vector, multi-table.
 
     One Arrow-batched numpy pass: the (tables*bits, dims) hyperplane matrix
@@ -88,53 +124,48 @@ def lsh_keys(
     literal arrays in the plan, and the whole key computation is one BLAS
     matmul per batch instead of tables*bits interpreted fold expressions.
     Data-independent planes => the same vector always lands in the same
-    bucket at any cluster size / partitioning.
+    bucket at any cluster size / partitioning, whatever rows share its
+    batch (lsh_topk hashes the query rows alone).
     """
     import pandas as pd
 
     def run(batches):
         planes = None
+        weights = 1 << np.arange(LSH_BITS)
         for pdf in batches:
             M = np.array(list(pdf["embedding"]), dtype=np.float64)
             if planes is None:
-                rng = np.random.default_rng(seed)
-                planes = rng.standard_normal((n_tables * n_bits, M.shape[1]))
+                rng = np.random.default_rng(PLANE_SEED)
+                planes = rng.standard_normal((LSH_TABLES * LSH_BITS, M.shape[1]))
             bits = (M @ planes.T) > 0  # (batch, tables*bits)
             ids = pdf["vec_id"].to_numpy()
-            weights = 1 << np.arange(n_bits)
-            outs = []
-            for t in range(n_tables):
-                block = bits[:, t * n_bits : (t + 1) * n_bits]
-                outs.append(
+            yield pd.concat(
+                [
                     pd.DataFrame(
                         {
                             "vec_id": ids,
                             "tbl": t,
-                            "bucket": block @ weights,
+                            "bucket": bits[:, t * LSH_BITS : (t + 1) * LSH_BITS] @ weights,
                         }
                     )
-                )
-            yield pd.concat(outs, ignore_index=True)
+                    for t in range(LSH_TABLES)
+                ],
+                ignore_index=True,
+            )
 
     return embeddings.select("vec_id", "embedding").mapInPandas(
         run, "vec_id long, tbl int, bucket long"
     )
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    query_ids=ANN_QUERY_IDS,
-    k: int = ANN_TOPK,
-    n_tables: int = LSH_TABLES,
-    n_bits: int = LSH_BITS,
-    multiprobe: bool = True,
-) -> DataFrame:
-    """Approximate top-k: candidates = union over n_tables hash tables of
-    the query's bucket — an equi-join on (tbl, bucket), never a scan of the
-    full corpus. Multi-table OR-amplification is the recall knob (a single
-    table has a recall cliff: one flipped plane loses the neighbor); n_bits
-    controls bucket fan-out and should grow with corpus size so per-bucket
-    candidate counts stay bounded.
+def lsh_topk(embeddings: DataFrame) -> DataFrame:
+    """Approximate top-k: candidates = union over LSH_TABLES hash tables of
+    the buckets the query probes — an equi-join on (tbl, bucket), never a
+    scan of the full corpus. Multi-table OR-amplification is the recall
+    knob (a single table has a recall cliff: one flipped plane loses the
+    neighbor). The query side hashes only the query rows: the planes do
+    not depend on the data, so they land in the buckets the corpus pass
+    gives them, and the corpus keys are read once.
 
     MULTI-PROBE (Lv et al., VLDB'07 — public technique): each query also
     probes every bucket within Hamming distance 2 of its own, purely a
@@ -148,53 +179,34 @@ def lsh_topk(
     tests/test_registry_new.py::test_ann_lsh_recall_floor. At 100 TB:
     bucket the corpus table BY (tbl, bucket) so a query probe is partition
     pruning, not a shuffle; candidates/query ~= tables*(1+b+C(b,2))*
-    n/2^bits — grow n_bits with the corpus (probe count grows O(b^2)
-    while bucket count grows 2^b, so the candidate fraction shrinks)."""
-    keys = lsh_keys(embeddings, n_tables, n_bits).persist()
-    q = embeddings.filter(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+    n/2^bits."""
+    b = LSH_BITS
+    masks = [0] + [1 << i for i in range(b)]
+    masks += [(1 << i) | (1 << j) for i in range(b) for j in range(i + 1, b)]
+    queries = _queries(embeddings)
+    qk = lsh_keys(queries).select(
+        F.col("vec_id").alias("query_id"),
+        "tbl",
+        F.explode(F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks])).alias(
+            "bucket"
+        ),
     )
-    qk = keys.filter(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"), "tbl", "bucket"
-    )
-    if multiprobe:
-        masks = [0]
-        masks += [1 << i for i in range(n_bits)]
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(n_bits)
-            for j in range(i + 1, n_bits)
-        ]
-        probes = F.array(
-            *[F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks]
-        )
-        qk = qk.select(
-            "query_id", "tbl", F.explode(probes).alias("bucket")
-        )
     cand = (
-        keys.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket")
+        lsh_keys(embeddings)
+        .select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket")
         .join(F.broadcast(qk), ["tbl", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    scored = (
-        cand.join(
-            embeddings.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
-            "neighbor_id",
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    return _rank(
+        _scored(
+            cand.join(
+                embeddings.select(F.col("vec_id").alias("neighbor_id"), "embedding"),
+                "neighbor_id",
+            ).join(F.broadcast(q), "query_id")
         )
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
     )
 
 
@@ -230,35 +242,23 @@ def ann_lsh_topk(spark, sf):
     return lsh_topk(load(spark, sf, "embeddings"))
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_ids=ANN_QUERY_IDS,
-    k: int = ANN_TOPK,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    fit_sample_rows: int = 256,
-) -> DataFrame:
+def ivf_topk(embeddings: DataFrame) -> DataFrame:
     """IVF (inverted-file) ANN: a KMeans coarse quantizer assigns every
-    vector to a centroid cell; each query probes only its n_probe nearest
-    cells, so the scored candidate set is ~n_probe/n_centroids of the
-    corpus. Centroids are tiny and live on the driver; the probe list is a
-    broadcast join key. At 100 TB: persist centroids as a dim table,
-    partition the corpus BY cell so a probe is a partition pruning, not a
-    shuffle.
+    vector to one of IVF_CENTROIDS cells; each query probes only its
+    IVF_PROBE nearest cells. Centroids are tiny and live on the driver;
+    the probe list is a broadcast join key. At 100 TB: persist centroids
+    as a dim table, partition the corpus BY cell so a probe is a partition
+    pruning, not a shuffle.
 
-    The quantizer trains on a seeded SAMPLE (~fit_sample_rows rows), never
-    the full corpus: a coarse quantizer only needs cluster CENTERS, whose
+    The quantizer trains on a seeded SAMPLE (IVF_FIT_ROWS rows), never the
+    full corpus: a coarse quantizer only needs cluster CENTERS, whose
     estimate converges at O(1/sqrt(sample)) — scanning 100 TB through a
-    driver-coordinated iterative ML fit would dominate the whole query.
-    The default (256 rows, seeded) is deliberately below the sandbox
-    corpus size so the SAMPLED quantizer is the code path the registry
-    entry and the recall-vs-bruteforce pin actually exercise
-    (tests/test_registry_new.py), not a prod-only branch."""
+    driver-coordinated iterative ML fit would dominate the whole query."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     e = embeddings.select(
-        "vec_id",
+        F.col("vec_id").alias("neighbor_id"),
         "embedding",
         array_to_vector(F.col("embedding").cast("array<double>")).alias("fv"),
     )
@@ -267,37 +267,27 @@ def ivf_topk(
     # N-row merge on the driver), deterministic under any partitioning —
     # a fraction-based .sample would need a full count() first just to
     # derive the fraction, i.e. an extra corpus scan per invocation.
-    fit_set = e.orderBy(F.xxhash64("vec_id")).limit(fit_sample_rows)
+    fit_set = e.orderBy(F.xxhash64("neighbor_id")).limit(IVF_FIT_ROWS)
     model = KMeans(
-        k=n_centroids, seed=PLANE_SEED, featuresCol="fv", predictionCol="cell"
+        k=IVF_CENTROIDS, seed=PLANE_SEED, featuresCol="fv", predictionCol="cell"
     ).fit(fit_set)
-    assigned = model.transform(e).select("vec_id", "embedding", "cell")
+    assigned = model.transform(e).select("neighbor_id", "embedding", "cell")
     cents = np.array([c for c in model.clusterCenters()])
-    qrows = embeddings.filter(F.col("vec_id").isin(*query_ids)).collect()
     probe_rows = []
-    for r in qrows:
+    for r in _queries(embeddings).collect():
         qv = np.asarray(r["embedding"], dtype=np.float64)
         d = ((cents - qv) ** 2).sum(axis=1)
-        for cell in np.argsort(d)[:n_probe]:
+        for cell in np.argsort(d)[:IVF_PROBE]:
             probe_rows.append((int(r["vec_id"]), [float(x) for x in qv], int(cell)))
-    spark = embeddings.sparkSession
-    probes = spark.createDataFrame(
+    probes = embeddings.sparkSession.createDataFrame(
         probe_rows, "query_id long, qv array<double>, cell int"
     )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_col(F.col("qv"), F.col("embedding")), 6).alias("cosine"),
+    return _rank(
+        _scored(
+            assigned.join(F.broadcast(probes), "cell").filter(
+                F.col("neighbor_id") != F.col("query_id")
+            )
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
     )
 
 
@@ -306,61 +296,43 @@ def ann_ivf_topk(spark, sf):
     return ivf_topk(load(spark, sf, "embeddings"))
 
 
-def blas_topk(
-    embeddings: DataFrame, query_ids=ANN_QUERY_IDS, k: int = ANN_TOPK
-) -> DataFrame:
-    """Exact top-k via an Arrow-batched numpy kernel: queries (normalized)
-    ship in the closure; each corpus batch computes all query cosines as ONE
-    matrix multiply and emits only its per-batch top-k per query (safe:
-    ordering is (rounded cosine desc, neighbor_id asc), so a row cut by a
-    batch's top-k can never enter the global top-k). The global window then
-    merges ~(batches x queries x k) rows. Same result as brute_force_topk —
-    shares its SQL oracle — but the per-row work is BLAS, not an interpreted
+def blas_topk(embeddings: DataFrame) -> DataFrame:
+    """Exact top-k via an Arrow-batched numpy kernel: queries ship in the
+    closure; each corpus batch computes all query cosines as ONE matrix
+    multiply and emits only its per-batch top-k per query (safe: ordering
+    is (rounded cosine desc, neighbor_id asc), so a row cut by a batch's
+    top-k can never enter the global top-k). The global window then merges
+    ~(batches x queries x k) rows. Same result as brute_force_topk — shares
+    its SQL oracle — but the per-row work is BLAS, not an interpreted
     fold; this is the 100 TB kernel."""
     import pandas as pd
 
-    qrows = sorted(
-        embeddings.filter(F.col("vec_id").isin(*query_ids)).collect(),
-        key=lambda r: r["vec_id"],
-    )
+    qrows = sorted(_queries(embeddings).collect(), key=lambda r: r["vec_id"])
     qids = np.array([r["vec_id"] for r in qrows])
     Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    Qn = _unit_rows(Q)
 
-    MARGIN = 32  # preselect depth beyond k; see fold-rescore note below
+    # The BLAS preselect sums products in a different order than the
+    # oracle's fold, so a cosine within ~1 ulp of a 1e-6 rounding boundary
+    # could round differently and flip the driver's exact value-hash: the
+    # (k+MARGIN) preselected rows are rescored with _fold_cosine and the
+    # per-batch top-k re-ranked on that value. MARGIN covers rows a boundary
+    # flip could promote past; flips need the unrounded value within
+    # ~1e-12 of the grid edge (~1e-6 probability per row).
+    MARGIN = 32
 
     def run(batches):
         for pdf in batches:
             M = np.array(list(pdf["embedding"]), dtype=np.float64)
             ids = pdf["vec_id"].to_numpy()
-            Mn = M / np.clip(np.linalg.norm(M, axis=1, keepdims=True), 1e-30, None)
-            cos = np.round(Mn @ Qn.T, 6)  # (batch, nq) — BLAS preselect
-            # Exact-fold rescore: the BLAS matmul sums products in a
-            # different order than the SQL-oracle's left-to-right fold, so
-            # a cosine within ~1 ulp of a 1e-6 rounding boundary could
-            # round differently and flip the driver's exact value-hash.
-            # The emitted score is therefore recomputed for the (k+MARGIN)
-            # preselected rows with np.cumsum — a strict running sum, i.e.
-            # bit-identical to the left fold both Spark's F.aggregate and
-            # DuckDB's LIST_SUM evaluate — and the final per-batch top-k is
-            # re-ranked on that value. MARGIN covers rows a boundary flip
-            # could promote past; flips need the unrounded value within
-            # ~1e-12 of the grid edge (~1e-6 probability per row).
-            fold_dot = lambda A, v: np.cumsum(A * v[None, :], axis=1)[:, -1]
-            fold_sq = lambda A: np.cumsum(A * A, axis=1)[:, -1]
+            cos = np.round(_unit_rows(M) @ Qn.T, 6)  # (batch, nq)
             outs = []
-            m_norm = np.sqrt(fold_sq(M))
             for j, qid in enumerate(qids):
                 mask = ids != qid
-                cj, ij = cos[mask, j], ids[mask]
-                pre = np.lexsort((ij, -cj))[: k + MARGIN]
+                pre = np.lexsort((ids[mask], -cos[mask, j]))[: ANN_TOPK + MARGIN]
                 rows = np.flatnonzero(mask)[pre]
-                q = Q[j]
-                q_norm = np.sqrt(np.cumsum(q * q)[-1])
-                exact = np.round(
-                    fold_dot(M[rows], q) / (q_norm * m_norm[rows]), 6
-                )
-                order = np.lexsort((ids[rows], -exact))[:k]
+                exact = np.round(_fold_cosine(M[rows], Q[j][None, :]), 6)
+                order = np.lexsort((ids[rows], -exact))[:ANN_TOPK]
                 outs.append(
                     pd.DataFrame(
                         {
@@ -372,14 +344,10 @@ def blas_topk(
                 )
             yield pd.concat(outs, ignore_index=True)
 
-    partial = embeddings.select("vec_id", "embedding").mapInPandas(
-        run, "query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
+    return _rank(
+        embeddings.select("vec_id", "embedding").mapInPandas(
+            run, "query_id long, neighbor_id long, cosine double"
+        )
     )
 
 
@@ -388,11 +356,10 @@ def ann_bruteforce_blas_topk(spark, sf):
     return blas_topk(load(spark, sf, "embeddings"))
 
 
-def blocked_cosine_pairs(
-    embeddings: DataFrame, threshold: float, n_blocks: int = 8
-) -> DataFrame:
+def blocked_cosine_pairs(embeddings: DataFrame) -> DataFrame:
     """Exhaustive cosine-similarity self-join via blocked BLAS — the scale
-    path for LOW similarity thresholds.
+    path for LOW similarity thresholds: every pair at cosine >=
+    DEDUP_COSINE.
 
     Why not LSH here: at this operator's threshold (0.45, angle ~63°) the
     per-hyperplane agreement probability is ~0.65, so ANY sign-LSH banding
@@ -400,27 +367,27 @@ def blocked_cosine_pairs(
     meant to avoid (measured on this corpus: recall-0.99 needs ~24 tables
     of 4 bits => 1.5x all pairs). LSH prefiltering only pays at near-dup
     thresholds (>=0.8); see lsh_topk for that regime. The honest exhaustive
-    plan is the classic triangle block-join: split the corpus into B blocks,
-    replicate each row to the B+1 block-pairs containing its block (O(n*B)
-    shuffle, B chosen so a block pair fits executor memory), and compute
-    each block-pair's cosines as ONE numpy matrix multiply — O(n²) work
-    with a BLAS constant factor, evenly spread over B(B+1)/2 tasks. No
-    BroadcastNestedLoopJoin, no driver involvement.
+    plan is the classic triangle block-join: split the corpus into B
+    (COSINE_BLOCKS) blocks, replicate each row to the B+1 block-pairs
+    containing its block (O(n*B) shuffle, B chosen so a block pair fits
+    executor memory), and compute each block-pair's cosines as ONE numpy
+    matrix multiply — O(n²) work with a BLAS constant factor, evenly spread
+    over B(B+1)/2 tasks. No BroadcastNestedLoopJoin, no driver involvement.
 
-    Emitted values use the same left-to-right fold arithmetic as the
-    DuckDB oracle (np.cumsum rescore of matmul-preselected pairs), so the
-    driver's exact value-hash holds; each unordered pair is computed in
-    exactly one block-pair group, so results are partitioning-independent.
+    Emitted values are _fold_cosine rescores of the matmul-preselected
+    pairs, so the driver's exact value-hash holds; each unordered pair is
+    computed in exactly one block-pair group, so results are
+    partitioning-independent.
     """
     import pandas as pd
 
     spark = embeddings.sparkSession
     bp = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(n_blocks) if i <= j],
+        [(i, j) for i in range(COSINE_BLOCKS) for j in range(COSINE_BLOCKS) if i <= j],
         "bi int, bj int",
     )
     e = embeddings.select(
-        "vec_id", "embedding", F.pmod("vec_id", F.lit(n_blocks)).alias("g")
+        "vec_id", "embedding", F.pmod("vec_id", F.lit(COSINE_BLOCKS)).alias("g")
     )
     left = e.join(F.broadcast(bp), e.g == bp.bi).select(
         "bi", "bj", F.lit("L").alias("side"), "vec_id", "embedding"
@@ -440,22 +407,15 @@ def blocked_cosine_pairs(
         L = np.array(list(lp["embedding"]), dtype=np.float64)
         R = np.array(list(rp["embedding"]), dtype=np.float64)
         lid, rid = lp["vec_id"].to_numpy(), rp["vec_id"].to_numpy()
-        Ln = L / np.clip(np.linalg.norm(L, axis=1, keepdims=True), 1e-30, None)
-        Rn = R / np.clip(np.linalg.norm(R, axis=1, keepdims=True), 1e-30, None)
-        cos = Ln @ Rn.T
-        ii, jj = np.nonzero(cos >= threshold - 1e-9)  # BLAS preselect
+        cos = _unit_rows(L) @ _unit_rows(R).T
+        ii, jj = np.nonzero(cos >= DEDUP_COSINE - 1e-9)  # BLAS preselect
         if diag:
             # upper triangle only: each unordered pair exactly once
             keep = lid[ii] < rid[jj]
             ii, jj = ii[keep], jj[keep]
         # off-diagonal: every L x R pair is unique already (disjoint blocks)
-        # fold-exact rescore (matches DuckDB LIST_SUM / Spark F.aggregate)
-        fold = lambda A: np.cumsum(A, axis=1)[:, -1] if len(A) else np.empty(0)
-        dots = fold(L[ii] * R[jj])
-        nl = np.sqrt(fold(L[ii] * L[ii]))
-        nr = np.sqrt(fold(R[jj] * R[jj]))
-        exact = dots / (nl * nr)
-        ok = exact >= threshold
+        exact = _fold_cosine(L[ii], R[jj])
+        ok = exact >= DEDUP_COSINE
         la, rb = lid[ii][ok], rid[jj][ok]
         return pd.DataFrame(
             {
@@ -472,7 +432,7 @@ def blocked_cosine_pairs(
 
 @register(
     "dedup_embedding_cosine",
-    sql="""WITH e AS (SELECT vec_id, LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
+    sql=f"""WITH e AS (SELECT vec_id, LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
                       FROM embeddings)
            SELECT a.vec_id AS a, b.vec_id AS b,
                   ROUND(
@@ -482,10 +442,11 @@ def blocked_cosine_pairs(
            FROM e a JOIN e b ON a.vec_id < b.vec_id
            WHERE LIST_SUM(LIST_TRANSFORM(LIST_ZIP(a.v, b.v), p -> p[1] * p[2]))
                  / (SQRT(LIST_SUM(LIST_TRANSFORM(a.v, x -> x * x)))
-                    * SQRT(LIST_SUM(LIST_TRANSFORM(b.v, x -> x * x)))) >= 0.45""",
+                    * SQRT(LIST_SUM(LIST_TRANSFORM(b.v, x -> x * x)))) >= {DEDUP_COSINE}""",
 )
 def dedup_embedding_cosine(spark, sf):
-    """Embedding near-dup pairs (cosine >= 0.45 on this corpus): blocked
-    BLAS exhaustive self-join — see blocked_cosine_pairs for why LSH is the
-    wrong prefilter at this threshold and what the 100 TB layout is."""
-    return blocked_cosine_pairs(load(spark, sf, "embeddings"), threshold=0.45)
+    """Embedding near-dup pairs (cosine >= DEDUP_COSINE on this corpus):
+    blocked BLAS exhaustive self-join — see blocked_cosine_pairs for why
+    LSH is the wrong prefilter at this threshold and what the 100 TB
+    layout is."""
+    return blocked_cosine_pairs(load(spark, sf, "embeddings"))

@@ -57,9 +57,7 @@ def cmd_run(args: argparse.Namespace, spark: SparkSession | None) -> int:
     # the input's files, sizes and footer row counts (the path if it is no
     # parquet scan): an input rewritten in place is rebuilt on --resume
     footers = pipeline.input_footers(transcripts) or args.input
-    cfg = pipeline.PipelineConfig(
-        work_dir=args.work, input_fingerprint=args.fingerprint or json.dumps(footers)
-    )
+    cfg = pipeline.PipelineConfig(work_dir=args.work, input_fingerprint=json.dumps(footers))
     t0 = time.time()
     p = pipeline.Pipeline(cfg)
     n = p.run(spark, transcripts, entity_dict, resume=args.resume)["rows"]
@@ -94,7 +92,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     r.add_argument("--work", required=True, help="work dir for checkpoints + sink")
     r.add_argument("--master", default=None)
     r.add_argument("--resume", action="store_true")
-    r.add_argument("--fingerprint", default=None)
 
     args = ap.parse_args(argv)
     if args.cmd == "run":

@@ -411,7 +411,7 @@ def link_score(spark, sf):
         .select(F.col("subj_raw").alias("surface"))
         .distinct()
     )
-    return link.score_candidates(surfaces, d["entity_dict"], topk=1)
+    return link.score_candidates(surfaces, d["entity_dict"])
 
 
 @register("lsh_block", sql=_kg_sql("SELECT a, b, jaccard FROM edges"))

@@ -20,6 +20,8 @@ from pyspark.sql.window import Window
 
 from .extract import normalize_text_col
 
+LINK_TOPK = 1  # score_candidates keeps the best candidate of each surface
+
 
 def alias_table(entity_dict: DataFrame) -> DataFrame:
     """Explode aliases -> one row per normalized alias. Alias norms are
@@ -50,12 +52,12 @@ def stage_link(entity_dict: DataFrame) -> DataFrame:
     )
 
 
-def score_candidates(surfaces: DataFrame, entity_dict: DataFrame, topk: int = 1) -> DataFrame:
+def score_candidates(surfaces: DataFrame, entity_dict: DataFrame) -> DataFrame:
     """U3 general scored linking (queries() surface `link_score`): candidate
     = any alias sharing the surface's first token (blocking key — keeps the
     candidate join an equi-join, not a cross join); score combines exact
     match, levenshtein similarity, and the popularity prior. Deterministic
-    top-k by (score desc, entity_id asc).
+    top-LINK_TOPK by (score desc, entity_id asc).
 
     surfaces: DataFrame[surface: string] (normalized).
     """
@@ -76,6 +78,6 @@ def score_candidates(surfaces: DataFrame, entity_dict: DataFrame, topk: int = 1)
     w = Window.partitionBy("surface").orderBy(F.desc("link_score"), F.asc("entity_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= LINK_TOPK)
         .select("surface", "entity_id", "canonical", "etype", "link_score", "rank")
     )

@@ -53,8 +53,8 @@ def _decode_stub(payload: bytes) -> tuple[str, list[float]]:
     return mt, [n, float(s % 65521), round(mean, 3), round(var, 3)]
 
 
-def extract_media_meta(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
-    """mapInPandas over (id, binary) -> typed metadata + feature vector.
+def extract_media_meta(df: DataFrame) -> DataFrame:
+    """mapInPandas over (doc_id, payload binary) -> typed metadata + feature vector.
     Arrow ships binary columns zero-copy; batches stay bounded by
     spark.sql.execution.arrow.maxRecordsPerBatch."""
 
@@ -62,18 +62,18 @@ def extract_media_meta(df: DataFrame, id_col: str = "doc_id", bin_col: str = "pa
         import zlib
 
         for pdf in batches:
-            metas = [_decode_stub(p) for p in pdf[bin_col]]
+            metas = [_decode_stub(p) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": pdf[bin_col].map(len).astype("int32"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
+                    "n_bytes": pdf["payload"].map(len).astype("int32"),
                     "media_type": [m[0] for m in metas],
-                    "checksum": [zlib.crc32(p) for p in pdf[bin_col]],
+                    "checksum": [zlib.crc32(p) for p in pdf["payload"]],
                     "feature": [m[1] for m in metas],
                 }
             )
 
-    return df.select(id_col, bin_col).mapInPandas(run, MEDIA_META)
+    return df.select("doc_id", "payload").mapInPandas(run, MEDIA_META)
 
 
 @register("multimodal_media_meta", sql=None)  # binary plumbing -> rows-only

@@ -16,7 +16,6 @@ import pandas as pd
 
 from .rules import UnionFind  # noqa: F401  (re-exported: the oracle's union-find)
 from .rules import (
-    JACCARD_THRESHOLD,
     extract_triples_batch,
     normalize_series,
     normalize_surface,
@@ -24,10 +23,10 @@ from .rules import (
 )
 
 
-def cluster_surfaces(surfaces: list[str], threshold: float = JACCARD_THRESHOLD) -> pd.DataFrame:
+def cluster_surfaces(surfaces: list[str]) -> pd.DataFrame:
     """Exact O(n²) Jaccard clustering — ground truth for LSH+CC (small n)."""
     uniq = sorted(set(surfaces))
-    rep = similar_pair_labels(uniq, threshold)
+    rep = similar_pair_labels(uniq)
     return pd.DataFrame({"node": uniq, "component": [rep.get(s, s) for s in uniq]})
 
 

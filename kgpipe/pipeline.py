@@ -547,9 +547,8 @@ def run_simple(
     entity_dict: DataFrame,
     work_dir: str,
     input_fingerprint: str = "adhoc",
-    resume: bool = False,
 ) -> DataFrame:
     """Run the pipeline and return the published sink table."""
     cfg = PipelineConfig(work_dir=work_dir, input_fingerprint=input_fingerprint)
-    Pipeline(cfg).run(spark, transcripts, entity_dict, resume=resume)
+    Pipeline(cfg).run(spark, transcripts, entity_dict)
     return io_tables.read_stage(spark, os.path.join(work_dir, "E_triples"))

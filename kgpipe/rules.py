@@ -287,11 +287,11 @@ MINHASH_HASHES = 32
 JACCARD_THRESHOLD = 0.5
 
 
-def char_shingles(s: str, k: int = SHINGLE_K) -> set[str]:
+def char_shingles(s: str) -> set[str]:
     s = normalize_surface(s)
-    if len(s) < k:
+    if len(s) < SHINGLE_K:
         return {s} if s else set()
-    return {s[i : i + k] for i in range(len(s) - k + 1)}
+    return {s[i : i + SHINGLE_K] for i in range(len(s) - SHINGLE_K + 1)}
 
 
 def jaccard(a: set[str], b: set[str]) -> float:
@@ -334,17 +334,16 @@ def component_labels(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
     return {n: uf.find(n) for n in list(uf.parent)}
 
 
-def similar_pair_labels(
-    surfaces: Iterable[str], threshold: float = JACCARD_THRESHOLD
-) -> dict[str, str]:
+def similar_pair_labels(surfaces: Iterable[str]) -> dict[str, str]:
     """Exact all-pairs char-shingle Jaccard clustering: component labels of
-    every surface with at least one partner at >= threshold. O(n²) — the
-    ground truth for LSH + CC, and Stage D's path for small surface sets."""
+    every surface with at least one partner at >= JACCARD_THRESHOLD. O(n²)
+    — the ground truth for LSH + CC, and Stage D's path for small surface
+    sets."""
     names = sorted(set(surfaces))
     sh = [char_shingles(s) for s in names]
     return component_labels(
         (a, names[j])
         for i, a in enumerate(names)
         for j in range(i + 1, len(names))
-        if jaccard(sh[i], sh[j]) >= threshold
+        if jaccard(sh[i], sh[j]) >= JACCARD_THRESHOLD
     )

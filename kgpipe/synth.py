@@ -20,6 +20,10 @@ import pandas as pd
 from .rules import normalize_surface
 
 SEED = 20260816
+# entities per generated type (tools are a fixed list)
+N_PERSONS, N_ORGS, N_CONCEPTS = 300, 80, 80
+# Zipf exponent of entity popularity: surface picks and the prior they imply
+ZIPF_ALPHA = 1.1
 BASE_TS = np.datetime64("2026-01-01T00:00:00")
 
 _FIRST = (
@@ -76,9 +80,7 @@ def _typo(s: str, rng: np.random.Generator) -> str:
     return out if out != s else s + "x"
 
 
-def build_entity_dict(n_persons: int = 300, n_orgs: int = 80, n_concepts: int = 80,
-                      rng: np.random.Generator | None = None) -> pd.DataFrame:
-    rng = rng or np.random.default_rng(SEED)
+def build_entity_dict(rng: np.random.Generator) -> pd.DataFrame:
     rows = []
     seen_alias: set[str] = set()
 
@@ -102,17 +104,17 @@ def build_entity_dict(n_persons: int = 300, n_orgs: int = 80, n_concepts: int = 
     k = 0
     for ln in _LAST:
         for fn in _FIRST:
-            if k >= n_persons:
+            if k >= N_PERSONS:
                 break
             canonical = f"{fn} {ln}"
             add(canonical, "person", [f"{fn[0]}. {ln}", _typo(canonical, rng)])
             k += 1
-        if k >= n_persons:
+        if k >= N_PERSONS:
             break
     k = 0
     for noun in _ORG_NOUN:
         for adj in _ORG_ADJ:
-            if k >= n_orgs:
+            if k >= N_ORGS:
                 break
             canonical = f"{adj} {noun}"
             add(canonical, "org", [f"the {adj} {noun}", _typo(canonical, rng)])
@@ -122,7 +124,7 @@ def build_entity_dict(n_persons: int = 300, n_orgs: int = 80, n_concepts: int = 
     k = 0
     for noun in _CONCEPT_NOUN:
         for adj in _CONCEPT_ADJ:
-            if k >= n_concepts:
+            if k >= N_CONCEPTS:
                 break
             canonical = f"{adj} {noun}"
             add(canonical, "concept", [_typo(canonical, rng)])
@@ -131,18 +133,18 @@ def build_entity_dict(n_persons: int = 300, n_orgs: int = 80, n_concepts: int = 
     df = pd.DataFrame(rows, columns=["entity_id", "canonical", "aliases", "etype", "prior"])
     # Zipf popularity prior within each etype (hot-entity skew, BASELINE.json:6)
     ranks = df.groupby("etype").cumcount().to_numpy() + 1
-    df["prior"] = 1.0 / ranks ** 1.1
+    df["prior"] = 1.0 / ranks ** ZIPF_ALPHA
     return df
 
 
-def _zipf_pick(rng: np.random.Generator, n_items: int, size: int, alpha: float = 1.1) -> np.ndarray:
-    w = 1.0 / np.arange(1, n_items + 1) ** alpha
+def _zipf_pick(rng: np.random.Generator, n_items: int, size: int) -> np.ndarray:
+    w = 1.0 / np.arange(1, n_items + 1) ** ZIPF_ALPHA
     return rng.choice(n_items, size=size, p=w / w.sum())
 
 
 def generate(n_convs: int = 400, seed: int = SEED) -> Corpus:
     rng = np.random.default_rng(seed)
-    ed = build_entity_dict(rng=np.random.default_rng(seed + 1))
+    ed = build_entity_dict(np.random.default_rng(seed + 1))
 
     # ---- alias matrix per etype for vectorized surface picks -------------
     by_type = {t: ed[ed["etype"] == t].reset_index(drop=True) for t in ("person", "org", "tool", "concept")}
@@ -322,7 +324,7 @@ def scale_for_turns(target_turns: int) -> int:
     return max(8, int(target_turns / 70))
 
 
-def stage_corpus(n_convs: int, seed: int = SEED) -> str:
+def stage_corpus(n_convs: int) -> str:
     """Materialize the deterministic corpus as parquet at a content-keyed
     path shared by every consumer in this environment: the registry
     entries and their SQL oracles, bench.py and BENCH/run_scaling.py.
@@ -340,12 +342,12 @@ def stage_corpus(n_convs: int, seed: int = SEED) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    out = os.path.join(tempfile.gettempdir(), f"kgpipe_corpus_{seed}_{n_convs}")
+    out = os.path.join(tempfile.gettempdir(), f"kgpipe_corpus_{SEED}_{n_convs}")
     t_path = os.path.join(out, "transcripts.parquet")
     e_path = os.path.join(out, "entity_dict.parquet")
     if os.path.exists(t_path) and os.path.exists(e_path):
         return out
-    c = generate(n_convs=n_convs, seed=seed)
+    c = generate(n_convs=n_convs)
     t_schema = pa.schema(
         [
             pa.field("conv_id", pa.string(), False),

@@ -4,6 +4,7 @@ stream_watermark_late."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -66,15 +67,34 @@ def test_stream_watermark_drops_late_windows(spark):
 
 
 def test_ann_blas_equals_bruteforce(spark):
+    """The BLAS kernel's fold-exact rescore emits brute force's rows bit
+    for bit: both entries share one SQL oracle, hashed by value."""
     bf = q("ann_bruteforce_topk")(spark, SF).toPandas()
     bl = q("ann_bruteforce_blas_topk")(spark, SF).toPandas()
     key = ["query_id", "rnk"]
     bf = bf.sort_values(key).reset_index(drop=True)
     bl = bl.sort_values(key).reset_index(drop=True)
-    assert bf[["query_id", "neighbor_id", "rnk"]].equals(
-        bl[["query_id", "neighbor_id", "rnk"]]
-    )
-    assert (bf["cosine"] - bl["cosine"]).abs().max() < 1e-9
+    assert bf.equals(bl)
+
+
+@pytest.mark.parametrize(
+    "name", ["ann_bruteforce_topk", "ann_bruteforce_blas_topk", "ann_lsh_topk", "ann_ivf_topk"]
+)
+def test_ann_topk_ranks_each_query(spark, name):
+    """Every top-k operator gives each query exactly ANN_TOPK neighbors,
+    none of them the query itself, ranked 1..k in (cosine desc,
+    neighbor_id) order."""
+    from kgpipe.ann import ANN_QUERY_IDS, ANN_TOPK
+
+    got = q(name)(spark, SF).toPandas()
+    assert sorted(got["query_id"].unique()) == sorted(ANN_QUERY_IDS)
+    for qid, rows in got.groupby("query_id"):
+        assert len(rows) == ANN_TOPK
+        assert (rows["neighbor_id"] != qid).all()
+        by_rank = rows.sort_values("rnk")
+        assert list(by_rank["rnk"]) == list(range(1, ANN_TOPK + 1))
+        by_order = rows.assign(neg=-rows["cosine"]).sort_values(["neg", "neighbor_id"])
+        assert list(by_order["rnk"]) == list(by_rank["rnk"])
 
 
 def test_ann_ivf_recall_vs_bruteforce(spark):

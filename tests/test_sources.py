@@ -82,3 +82,47 @@ def test_cited_bench_artifacts_exist():
     assert cited
     missing = sorted(c for c in cited if not list((ROOT / "BENCH").glob(c)))
     assert not missing, missing
+
+
+def _defaulted_params(fn: ast.FunctionDef):
+    """(name, positional index or None) of each parameter with a default;
+    the index counts from the first parameter a caller passes, so a
+    method's self or cls is not counted."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+    for i, arg in enumerate(pos[len(pos) - len(a.defaults):], len(pos) - len(a.defaults)):
+        yield arg.arg, i - skip
+    for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            yield arg.arg, None
+
+
+def _passes(call: ast.Call, name: str, index) -> bool:
+    if any(isinstance(x, ast.Starred) for x in call.args):
+        return True
+    if any(k.arg is None or k.arg == name for k in call.keywords):
+        return True
+    return index is not None and len(call.args) > index
+
+
+def test_no_parameter_no_caller_sets():
+    """A defaulted parameter of a kgpipe/ function that no call in the
+    repo's Python sources passes, by keyword or by position, has one value
+    in use: it is a constant. Calls are matched to functions by name; a
+    call that spreads *args or **kwargs passes everything."""
+    calls = collections.defaultdict(list)
+    for text in _python_sources().values():
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Call):
+                f = node.func
+                calls[getattr(f, "id", None) or getattr(f, "attr", None)].append(node)
+    unset = [
+        f"{p.name}:{fn.name}({name})"
+        for p in sorted(ROOT.glob("kgpipe/*.py"))
+        for fn in ast.walk(ast.parse(p.read_text()))
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for name, index in _defaulted_params(fn)
+        if not any(_passes(c, name, index) for c in calls[fn.name])
+    ]
+    assert not unset, unset

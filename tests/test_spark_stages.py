@@ -121,7 +121,7 @@ def test_rewrite_cannot_fan_out_or_touch_node_values(
 
 def test_link_score_topk_deterministic(spark, entity_dict_df):
     surf = spark.createDataFrame([("ada lovelace",), ("ada lovelac",)], "surface string")
-    out = link.score_candidates(surf, entity_dict_df, topk=1).toPandas()
+    out = link.score_candidates(surf, entity_dict_df).toPandas()
     exact = out[out.surface == "ada lovelace"].iloc[0]
     assert exact.entity_id == "E000000" and exact.link_score >= 1.0
     typo = out[out.surface == "ada lovelac"].iloc[0]
@@ -298,13 +298,15 @@ def test_fused_run_leaves_nothing_cached(spark, transcripts_df, entity_dict_df, 
     assert _cached_plans(spark) == before
 
 
-@pytest.mark.parametrize("blocking", ["candidate_pairs", "doc_minhash_pairs", "corpus_curation"])
+@pytest.mark.parametrize(
+    "blocking", ["candidate_pairs", "doc_minhash_pairs", "corpus_curation", "ann_lsh_topk"]
+)
 def test_lsh_blocking_leaves_nothing_cached(spark, blocking):
-    """No MinHash-LSH caller (the two blocking functions, and the curation
-    query that clusters through doc_minhash_pairs) leaves a CacheManager
-    entry behind after its result is collected: nothing could unpersist it
-    afterwards."""
-    from kgpipe import curate, dedup
+    """No LSH caller (the two MinHash blocking functions, the curation
+    query that clusters through doc_minhash_pairs, and the sign-LSH top-k
+    query) leaves a CacheManager entry behind after its result is
+    collected: nothing could unpersist it afterwards."""
+    from kgpipe import ann, curate, dedup
     from tools.explain_dump import SF
 
     names = ["grace hopper", "grace hoppe", "alan turing", "alan turin", "zed"]
@@ -313,6 +315,8 @@ def test_lsh_blocking_leaves_nothing_cached(spark, blocking):
         df = canon.candidate_pairs(spark.createDataFrame([(n,) for n in names], "surface string"))
     elif blocking == "corpus_curation":
         df = curate.curate(spark, SF)
+    elif blocking == "ann_lsh_topk":
+        df = ann.ann_lsh_topk(spark, SF)
     else:
         docs = spark.createDataFrame(
             [(i, f"{n} wrote the first compiler for the machine") for i, n in enumerate(names)],

@@ -101,10 +101,11 @@ EXPECTATIONS: dict[str, tuple[list[str], str]] = {
         "groups + one matmul per group — no nested-loop join anywhere",
     ),
     "ann_lsh_topk": (
-        ["MapInPandas", "BroadcastHashJoin", "!BroadcastNestedLoopJoin"],
-        "multi-table sign-LSH: bucket keys from one Arrow batch pass, "
-        "candidates via (tbl, bucket) equi-join — never a corpus scan per "
-        "query",
+        ["MapInPandas", "BroadcastHashJoin", "!BroadcastNestedLoopJoin", "!InMemoryRelation"],
+        "multi-table sign-LSH: bucket keys from one Arrow batch pass over "
+        "the corpus (read once, nothing cached) and one over the query "
+        "rows, candidates via (tbl, bucket) equi-join — never a corpus "
+        "scan per query",
     ),
 }
 
