@@ -7,7 +7,7 @@ Lifecycle (SURVEY.md §3.2):
   C link     : the dictionary's alias -> entity map (lazy, read by D, E)
   D canon    : unmapped surfaces -> LSH + connected components    [ckpt 2]
   E publish  : one join per triple side against C's map ∪ D's labels,
-               distinct triples + lineage ids + partitioned sink  [final]
+               lineage ids + partitioned sink, no dedup           [final]
 
 Resume (BASELINE.json: "resumable from checkpoint with per-partition lineage
 + metrics"): each checkpoint writes a manifest whose fingerprint chains the
@@ -33,7 +33,7 @@ from . import canon, extract, io_tables, link, rules
 
 SEP = "\x1f"
 # bucket count for part_key = sha2(subj)-derived bucket. Also the parallelism
-# ceiling of the final dedup+write stage — keep >= 2x the largest cluster's
+# ceiling of the final write stage — keep >= 2x the largest cluster's
 # task slots (it's a fixed property of the sink layout, identical at every
 # cluster size, so cross-size runs stay comparable; at 100 TB this would be
 # O(10^3-10^4) Iceberg buckets)
@@ -54,33 +54,36 @@ N_TRIPLE_PARTS = 128
 #               D_canon trial noise; E within ~8% per level).
 # (BENCH/scaling_2v8_ckpt_16M*.md, scaling_2v8_fused_flat_16M*.md.) So the
 # regression attribution was D, not E, and the bucket-aligned count is the
-# uniformly fastest at 1M (profile_ckpt16M.md), 16M, and 64M: one task wave
-# per sink bucket, no balls-in-bins lumping of 128 bucket keys into fewer
-# hash partitions. The count is data-shaped at real scale because
-# N_TRIPLE_PARTS itself grows with the table (DEPLOY.md §2: O(10^3-10^4)
-# Iceberg buckets at 10^12 turns), never with cores.
+# uniformly fastest at 1M (profile_ckpt16M.md), 16M, and 64M. It is not one
+# bucket per task: repartition places a bucket at pmod(murmur3(key), n), so
+# unsalted the 128 buckets land in 78 of 128 tasks (the largest holds 4) and
+# at salt 4 the 512 slots in 324 of 512 tasks (measured at 1.15M turns; the
+# placement fix is ROADMAP's Ambitious direction 3). The count is
+# data-shaped at real scale because N_TRIPLE_PARTS itself grows with the
+# table (DEPLOY.md §2: O(10^3-10^4) Iceberg buckets at 10^12 turns), never
+# with cores.
 PUBLISH_ROWS_PER_TASK = 500_000  # small-corpus task sizing (publish_task_count)
 
 # Hot-bucket salting for the publish stage (round-4 event-log finding, log
 # not committed): part_key = hash(subj) concentrates the
 # Zipf-hot subjects' triples into single buckets — at 16M turns the hottest
-# of the 128 dedup+write tasks carried 11.5% of the stage's work (10.6 s
+# of the 128 publish tasks carried 11.5% of the stage's work (10.6 s
 # vs 0.34 s median at local[8]), a straggler that is invisible at 2 cores
 # (hidden under 46 s/core of work) but caps the 4N level's stage span, and
 # it grows linearly with corpus size — the measured Amdahl "serial"
 # component behind the 64M scaling FAILs (S ~8 s at 16M -> ~138 s at 64M,
-# scaling_2v8_*_64M.md). The salt is a hash of the FULL dedup key, so a
-# single hot subject still splits evenly, identical rows still co-locate
-# (distinct stays one-shuffle-correct), and the sink layout contract
+# scaling_2v8_*_64M.md). The salt is a hash of the full row, so a single
+# hot subject still splits evenly, and the sink layout contract
 # (partitionBy part_key dirs) is unchanged — each bucket dir just gets up
 # to `salt` files, which is what any real multi-executor writer produces.
 # Sized by data volume (rows / PUBLISH_SALT_ROWS), floor 1 so the 1M bench
 # plan is byte-identical to round 3's.
 PUBLISH_SALT_ROWS = 5_000_000
 PUBLISH_MAX_SALT = 32
-# pre-dedup triples per turn on the synthetic corpus (measured: 17.8M/16M,
-# 71.2M/64M); only used to size the salt factor, order-of-magnitude is fine
-TRIPLES_PER_TURN_EST = 1.15
+# triples per turn on the synthetic corpus (measured by the 16M ckpt gate:
+# 12,168,957 / 15,999,970); only used to size the salt factor,
+# order-of-magnitude is fine
+TRIPLES_PER_TURN_EST = 0.76
 
 
 # Below this many estimated triples, Stage-E task-scheduling overhead
@@ -228,14 +231,15 @@ def lineage_col() -> F.Column:
 
 def publish_triples(canoned: DataFrame, salt: int, n_tasks: int) -> DataFrame:
     """Stage E before the sink anti-join: part_key, optional salt, ONE
-    shuffle on (part_key[, _salt]), hash-aggregate dedup, lineage ids
-    (single shuffle pinned by tests/test_plans.py). The partitioned write
-    then fans out to (buckets x salt) clean files instead of (tasks x
-    partitions) small ones."""
+    shuffle on (part_key[, _salt]), lineage ids (single shuffle pinned by
+    tests/test_plans.py). No dedup: (conv_id, turn_idx, rule_id, pred) is a
+    key of the triples (pinned by tests/test_rules.py and
+    tests/test_properties.py), so no published row can repeat. The
+    partitioned write then fans out to (buckets x salt) clean files instead
+    of (tasks x partitions) small ones."""
     with_key = canoned.withColumn("part_key", part_key_col())
     if salt > 1:
-        # full-key hash: a single hot subject still splits evenly;
-        # identical rows still co-locate, so dedup is unaffected
+        # full-row hash: a single hot subject still splits evenly
         with_key = with_key.withColumn(
             "_salt",
             F.pmod(
@@ -243,21 +247,9 @@ def publish_triples(canoned: DataFrame, salt: int, n_tasks: int) -> DataFrame:
                 F.lit(salt),
             ).cast("int"),
         )
-        with_key = with_key.repartition(n_tasks, "part_key", "_salt")
+        triples = with_key.repartition(n_tasks, "part_key", "_salt").drop("_salt")
     else:
-        with_key = with_key.repartition(n_tasks, "part_key")
-    # dedup as a hash aggregate over the full key: part_key (and _salt,
-    # itself a function of key columns) are in the grouping set, so the
-    # existing partitioning satisfies the aggregate's clustering
-    # requirement — no second shuffle — and a HashAggregate beats the
-    # previous sort-based window dedup (row_number over a 7-column sort)
-    # by skipping the O(n log n) multi-string sort entirely; the
-    # partitioned write only re-sorts by part_key, not the whole key. All
-    # columns are key columns, so distinct == keep-any, same as
-    # row_number()=1.
-    triples = with_key.distinct()
-    if salt > 1:
-        triples = triples.drop("_salt")
+        triples = with_key.repartition(n_tasks, "part_key")
     return triples.withColumn("lineage_id", lineage_col())
 
 

@@ -35,11 +35,13 @@ def test_pr_gate(final_triples, corpus):
 
 
 def test_spark_matches_pandas_oracle(final_triples, corpus):
+    """The sink as a multiset: no row published twice, and its rows are
+    the oracle's."""
     want = oracle.run_pipeline(corpus.transcripts, corpus.entity_dict)
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "rule_id"]
-    got_set = set(map(tuple, final_triples[cols].drop_duplicates().itertuples(index=False)))
-    want_set = set(map(tuple, want[cols].drop_duplicates().itertuples(index=False)))
-    assert got_set == want_set
+    rows = list(final_triples[cols].itertuples(index=False, name=None))
+    assert len(rows) == len(set(rows))
+    assert set(rows) == set(want[cols].itertuples(index=False, name=None))
 
 
 def test_text_equality_invariant(spark, corpus, transcripts_df):
@@ -319,7 +321,7 @@ def test_salted_publish_matches_unsalted(
 ):
     """Hot-bucket salting (the large-corpus default, forced here on the
     fixture): identical triple set + lineage + part_key. That the salted
-    dedup stays a single shuffle is pinned in
+    publish stays a single shuffle is pinned in
     tests/test_plans.py::test_stage_e_is_single_shuffle."""
     monkeypatch.setattr(pipeline, "publish_salt_factor", lambda rows: 4)
     out = pipeline.run_simple(
@@ -417,8 +419,8 @@ def test_publish_salt_sizing():
     assert f(1_000_000) == 1
     assert f(pipeline.PUBLISH_SALT_ROWS) == 1
     assert f(pipeline.PUBLISH_SALT_ROWS + 1) == 2
-    assert f(18_000_000) == 4   # ~16M-turn corpus
-    assert f(74_000_000) == 15  # ~64M-turn corpus
+    assert f(18_000_000) == 4   # 18M estimated triples (~24M turns)
+    assert f(74_000_000) == 15  # 74M estimated triples (~97M turns)
     assert f(10**12) == pipeline.PUBLISH_MAX_SALT
     assert pipeline.publish_task_count(18_000_000, 8) == 512
     assert pipeline.publish_task_count(None, 8) == 128

@@ -56,12 +56,13 @@ def test_topk_no_global_sort(spark):
 
 
 def test_stage_e_is_single_shuffle(spark):
-    """Final dedup+partition, planned from Stage E's own code
+    """Stage E's publish, planned from its own code
     (pipeline.publish_triples), unsalted and salted: exactly ONE Exchange
-    — the (part_key[, _salt]) repartition; the hash-aggregate dedup must
-    ride it (both partition columns are in the grouping set, so the
-    clustering requirement is met), and there must be no sort in the
-    dedup itself."""
+    — the (part_key[, _salt]) repartition — and no HashAggregate and no
+    Sort: (conv_id, turn_idx, rule_id, pred) is a key of the triples
+    (test_rules.py::test_extract_emits_one_row_per_key,
+    test_properties.py::test_triple_key_is_unique_after_rewrite), so
+    there is nothing to dedup."""
     from kgpipe import pipeline
 
     canoned = spark.createDataFrame(
@@ -71,7 +72,7 @@ def test_stage_e_is_single_shuffle(spark):
     for salt in (1, 4):
         plan = plan_of(pipeline.publish_triples(canoned, salt, 64 * salt))
         assert plan.count("Exchange") == 1, plan
-        assert "HashAggregate" in plan
+        assert "HashAggregate" not in plan
         assert "Sort" not in plan
 
 

@@ -165,3 +165,69 @@ def test_component_labels_match_bfs(edges):
             comp.update(frontier)
         want.update(dict.fromkeys(comp, min(comp)))
     assert rules.component_labels(edges) == want
+
+
+_NAMES = st.sampled_from(
+    ["ada lovelace", "Alan  LOVELACE", "g. lovelace", "zed quux", "zed qux"]
+)
+
+
+@st.composite
+def _sentence(draw) -> str:
+    a, b, c = draw(_NAMES), draw(_NAMES), draw(_NAMES)
+    return draw(st.sampled_from([
+        f"{a} works with {b} on {c}.",
+        f"{a} is a member of {b}.",
+        f"{a} created {b}.",
+        f"mentioned that {a} leads {b}.",
+        f"called {draw(st.sampled_from(['search_web', 'run_sql']))}(q1) -> ok",
+    ]))
+
+
+@st.composite
+def _turn_text(draw) -> str:
+    """One to three sentences, the first one repeated: every turn repeats
+    an anchor."""
+    s = draw(st.lists(_sentence(), min_size=1, max_size=3))
+    return " ".join(s + s[:1])
+
+
+@settings(max_examples=6, deadline=None)
+@given(st.data())
+def test_triple_key_is_unique_after_rewrite(spark, entity_dict_df, data):
+    """(conv_id, turn_idx, rule_id, pred) is a key of what Stage E
+    publishes: turns with repeated anchors, some re-sent under the same
+    (conv_id, turn_idx) with a later ts and other text, go through
+    stage_ingest -> stage_extract -> canon.rewrite and no key repeats, on
+    Stage A's clean, broadcast-repair and full-shuffle plans."""
+    from datetime import datetime, timedelta
+    from unittest import mock
+
+    from kgpipe import canon, extract, link, pipeline, schemas
+
+    n = data.draw(st.integers(min_value=1, max_value=12))
+    t0 = datetime(2026, 1, 1)
+    r1 = "ada lovelace works with zed quux on zed qux."
+    clean = [("c0", 0, "user", f"{r1} {r1}", None, t0)] + [
+        (f"c{i % 3}", i // 3, data.draw(st.sampled_from(["user", "assistant", "tool"])),
+         data.draw(_turn_text()), None, t0 + timedelta(seconds=i))
+        for i in range(1, n)
+    ]
+    resent = [
+        row[:3] + (data.draw(_turn_text()), None, row[5] + timedelta(hours=1))
+        for row in data.draw(st.lists(st.sampled_from(clean), min_size=1, max_size=4))
+    ]
+    links = link.stage_link(entity_dict_df)
+
+    def keys(rows) -> list[tuple]:
+        df = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
+        raw = extract.stage_extract(pipeline.stage_ingest(df)).persist()
+        out = canon.rewrite(raw, links, canon.stage_canon(raw, links)).collect()
+        raw.unpersist()
+        return [(r.conv_id, r.turn_idx, r.rule_id, r.pred) for r in out]
+
+    want = keys(clean)
+    assert want and len(want) == len(set(want))
+    assert sorted(keys(clean + resent)) == sorted(want)
+    with mock.patch.object(pipeline, "DEDUP_BCAST_MAX", 0):
+        assert sorted(keys(clean + resent)) == sorted(want)

@@ -246,3 +246,37 @@ def test_arrow_kernel_empty_batch():
          "role": pa.array(["user"]), "text_norm": pa.array(["plain chatter"])}
     )
     assert rules.extract_triples_arrow(no_hit) is None
+
+
+def test_rule_emits_carry_distinct_preds():
+    """A rule emits at most one row per pred per match, so with one match
+    per rule per turn, (conv_id, turn_idx, rule_id, pred) is a key."""
+    for rule in rules.RULES:
+        preds = [pred for _, pred, _ in rule.emits]
+        assert len(preds) == len(set(preds)), rule.rule_id
+
+
+def test_extract_emits_one_row_per_key():
+    """extract_regex keeps a turn's first match of each rule, so turns that
+    repeat an anchor still emit one row per (conv_id, turn_idx, rule_id,
+    pred) — the key that lets Stage E publish without a dedup."""
+    import pyarrow as pa
+
+    turns = [
+        ("user", "ada works with alan on graphs. bob works with eve on logic."),
+        ("assistant", "ada works with alan on graphs. ada works with alan on graphs."),
+        ("tool", "called a(1) -> ok; called b(2) -> ok"),
+        ("user", "mentioned that ada leads acme. mentioned that bob leads initech."),
+        ("assistant", "ada created x. ada created y. ada is a member of a. ada is a member of b."),
+    ]
+    batch = pa.RecordBatch.from_pydict({
+        "conv_id": pa.array(["c1"] * len(turns)),
+        "turn_idx": pa.array(range(len(turns)), pa.int32()),
+        "role": pa.array([r for r, _ in turns]),
+        "text_norm": pa.array([t for _, t in turns]),
+    })
+    out = rules.extract_triples_arrow(batch).to_pandas()
+    assert set(out.rule_id) == {r.rule_id for r in rules.RULES}
+    keys = list(out[["conv_id", "turn_idx", "rule_id", "pred"]].itertuples(index=False))
+    assert len(keys) == len(set(keys)), out
+    assert list(out[out.rule_id == "R5"].obj_raw) == ["a"]

@@ -212,14 +212,14 @@ SPECIAL: dict = {
     ),
     "Stage E (rewrite + publish over the B and D checkpoints)": (
         _stage_e_plan,
-        ["2x BroadcastHashJoin", "ReusedExchange", "!SortMergeJoin"],
+        ["2x BroadcastHashJoin", "ReusedExchange", "!SortMergeJoin", "!HashAggregate"],
         "both triple sides probe one broadcast (the second a reused "
         "exchange) of the alias map ∪ the label checkpoint; the triples "
-        "cross one shuffle, the part_key repartition",
+        "cross one shuffle, the part_key repartition, and no dedup",
     ),
     "Stage E, fused, loop labels": (
         _fused_loop_plan,
-        ["2x BroadcastHashJoin", "!SortMergeJoin"],
+        ["2x BroadcastHashJoin", "!SortMergeJoin", "!HashAggregate"],
         "the loop's label checkpoint holds at most DRIVER_CC_MAX_EDGES "
         "rows, so rewrite broadcasts it with the alias map as it does the "
         "all-pairs table: Spark plans the two broadcast joins up front "
